@@ -8,7 +8,7 @@ import org.apache.spark.sql.SparkSession
 /** Probe-side shuffle-volume meter: accumulates shuffle read/write bytes
   * across all tasks while attached. Local wall-clock hides shuffled-VOLUME
   * asymmetry (memory-speed exchanges), so maintenance-fold probes
-  * (TriIncProbe, LabelLoopProbe) report bytes next to seconds — the
+  * (TriIncProbe) report bytes next to seconds — the
   * quantity that becomes the bottleneck on a network-bound cluster. */
 class ShuffleMeter extends SparkListener {
   val read = new AtomicLong

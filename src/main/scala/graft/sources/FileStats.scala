@@ -370,7 +370,7 @@ object FileStats {
     * 9.6 s at those counts vs 0.8 s / 4.4 s trusted — an object-store
     * LIST at ~1M files is minutes and money) while guarding only against
     * OUT-OF-BAND writes; a manifest maintained transactionally
-    * (ManifestLoop folds its stats in the same foreachBatch that lands
+    * (ManifestLoop folds its stats in the same micro-batch that lands
     * the files; [[update]] after every append) cannot drift from the
     * directory unless something else writes there. Trusting shifts
     * staleness protection to that writer discipline: a trusted STALE

@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
@@ -19,9 +19,7 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * impossible to promise). Read-time accessors surface doubles (H2: raw
   * decimals are driver/pandas-hostile).
   *
-  * Same [[VersionedState]] machinery and exactly-once posture as the
-  * other loops: deterministic overwrite per batch id, GC below the
-  * version read. Unlike HLL union, a double-fold of the same batch WOULD
+  * Commits through [[FoldLoop]]'s replace-version mode. Unlike HLL union, a double-fold of the same batch WOULD
   * double-count — the versioned overwrite (replay rewrites from the same
   * prior base) is what makes replay safe.
   */
@@ -108,28 +106,16 @@ object AggLoop {
   private[streaming] def foldBatch(batch: DataFrame, batchId: Long,
                                    groupCols: Seq[String], valueCols: Seq[String],
                                    stateDir: String): Unit = {
-    val spark = batch.sparkSession
-    val priorV = VersionedState.priorVersion(stateDir, batchId)
     val batchTable = aggTable(batch, groupCols, valueCols)
-    val folded = priorV match {
-      case Some(v) => merge(
-        Seq(VersionedState.read(spark, stateDir, v), batchTable), groupCols, valueCols)
-      case None => batchTable
+    VersionedState.commit(batch.sparkSession, stateDir, batchId) { prior =>
+      Some(prior.fold(batchTable)(p => merge(Seq(p, batchTable), groupCols, valueCols)))
     }
-    VersionedState.write(folded, stateDir, batchId + 1)
-    priorV.foreach(VersionedState.gcBelow(stateDir, _))
   }
 
   /** Start the incremental-rollup loop over `stream`. */
   def run(stream: DataFrame, groupCols: Seq[String], valueCols: Seq[String],
           stateDir: String, checkpointDir: String,
-          trigger: Option[Trigger] = None): StreamingQuery = {
-    val w = stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        foldBatch(batch, batchId, groupCols, valueCols, stateDir)
-      }
-    trigger.foreach(w.trigger)
-    w.start()
-  }
+          trigger: Option[Trigger] = None): StreamingQuery =
+    FoldLoop.start(stream, checkpointDir, trigger)(
+      foldBatch(_, _, groupCols, valueCols, stateDir))
 }

@@ -35,11 +35,9 @@ import graft.ops.Ann
   * Tombstone debt is takedown-bounded; clear it offline with
   * [[graft.ops.Ann.compactIvfIndex]] between runs.
   *
-  * Crash posture: the report is deterministic Overwrite per batch id;
-  * the append is guarded by a physical-presence check, so a checkpoint
-  * replay (only the LAST batch ever replays) recomputes the IDENTICAL
-  * report — prior counts always exclude the batch's own ids — and
-  * skips the append; a partial append fails loudly. */
+  * Crash posture: [[FoldLoop]]'s guarded-append commit — a replay
+  * recomputes the IDENTICAL report (prior counts always exclude the
+  * batch's own ids) and skips the append. */
 object AnnLoop {
 
   /** Seed the index from a batch-era gallery before the stream starts. */
@@ -50,7 +48,7 @@ object AnnLoop {
       table, path, buckets)
 
   /** One micro-batch — exposed for direct replay tests; [[run]] wires it
-    * into foreachBatch. */
+    * into [[FoldLoop]]. */
   private[streaming] def foldBatch(batch: DataFrame, batchId: Long,
                                    idCol: String, vecCol: String,
                                    removedCol: String,
@@ -58,79 +56,46 @@ object AnnLoop {
                                    table: String, path: String,
                                    outDir: String, buckets: Int = 32): Unit = {
     val spark = batch.sparkSession
-    val rm =
-      if (removedCol.nonEmpty && batch.columns.contains(removedCol))
-        coalesce(col(removedCol).cast("boolean"), lit(false))
-      else lit(false)
-    val marked = batch.withColumn("__rm", rm).localCheckpoint()
-    val removals = marked.where(col("__rm"))
-      .select(col(idCol).cast("long").as("g_id"))
-      .where(col("g_id").isNotNull).distinct().localCheckpoint()
-    // Same-batch remove+add resolves to deleted; so does a re-add of an
-    // id tombstoned in ANY earlier batch (its physical row still exists
-    // — re-admitting would wedge the all-or-none presence guard on a
-    // mixed batch; re-ingest under a new id or compact the index first,
-    // the appendIvfIndex clash-guard contract).
-    val dead = Ann.ivfTombstones(spark, path).select(col("g_id").as("__dead"))
-    val additions = marked.where(!col("__rm")).drop("__rm")
-      .join(removals.select(col("g_id").as("__rmid")),
-        col(idCol).cast("long") === col("__rmid"), "left_anti")
-      .join(dead, col(idCol).cast("long") === col("__dead"), "left_anti")
-      .localCheckpoint()
-    val Array(nRows, nIds, nDistinct) = additions
-      .agg(count(lit(1)), count(col(idCol)), countDistinct(col(idCol))).head()
-      .toSeq.map(_.asInstanceOf[Long]).toArray
-    require(nRows == nIds,
-      s"AnnLoop: ${nRows - nIds} NULL id row(s) in batch $batchId")
-    require(nIds == nDistinct,
-      s"AnnLoop: ${nIds - nDistinct} duplicate id value(s) in batch $batchId")
+    val td = FoldLoop.takedowns("AnnLoop", batch, batchId, idCol, removedCol,
+      "g_id", Ann.ivfTombstones(spark, path))
+    val out = s"$outDir/batch=$batchId"
     // The batch's index rows (g_id, cid, g_q) under the frozen centroids
     // — identical to what appendIvfIndex would write.
-    val newIdx = Ann.ivfIndex(additions, centroids, idCol, vecCol)
+    val newIdx = Ann.ivfIndex(td.additions, centroids, idCol, vecCol)
       .localCheckpoint()
-
-    val (fs, root) = graft.sources.LakeFs.resolve(path)
-    if (!fs.exists(root)) {
-      // GENESIS: the batch becomes the index; prior counts are all zero.
-      newIdx.groupBy("cid").agg(count(lit(1)).as("appended_n"))
-        .select(col("cid"), lit(0L).as("prior_n"), col("appended_n"),
-          lit(1.0).as("growth"))
-        .write.mode(SaveMode.Overwrite).parquet(s"$outDir/batch=$batchId")
-      Ann.persistIvfIndex(newIdx, table, path, buckets, mode = SaveMode.Overwrite)
-      if (removals.limit(1).count() > 0)
-        Ann.deleteFromIvfIndex(spark, table, path, removals, buckets)
-      return
-    }
-
-    // Retract FIRST: a takedown in this batch must stop being
-    // retrievable even if nothing else arrives.
-    if (removals.limit(1).count() > 0)
-      Ann.deleteFromIvfIndex(spark, table, path, removals, buckets)
-
-    val phys = Ann.loadIvfIndex(spark, table, path, buckets)
-    val batchIds = newIdx.select(col("g_id")).distinct().localCheckpoint()
-    val present = phys.select(col("g_id"))
-      .join(batchIds, Seq("g_id"), "left_semi").count()
-    require(present == 0L || present == nDistinct,
-      s"AnnLoop: index holds $present of $nDistinct batch-$batchId ids — " +
-        "partial append (out-of-band writer?); rebuild or compact the index")
-    // Prior counts EXCLUDE the batch's own ids so a replay that finds
-    // the batch appended still reports pre-batch state.
-    val prior = phys.select(col("cid"), col("g_id"))
-      .join(broadcast(batchIds), Seq("g_id"), "left_anti")
-      .groupBy("cid").agg(count(lit(1)).as("prior_n"))
-    newIdx.groupBy("cid").agg(count(lit(1)).as("appended_n"))
-      .join(prior, Seq("cid"), "full_outer")
-      .select(col("cid"),
-        coalesce(col("prior_n"), lit(0L)).as("prior_n"),
-        coalesce(col("appended_n"), lit(0L)).as("appended_n"),
-        (coalesce(col("appended_n"), lit(0L)) /
-          (coalesce(col("prior_n"), lit(0L)) +
-            coalesce(col("appended_n"), lit(0L)))).as("growth"))
-      .localCheckpoint()
-      .write.mode(SaveMode.Overwrite).parquet(s"$outDir/batch=$batchId")
-    if (present == 0L)
-      graft.sources.Bucketed.appendRegistered(newIdx, table, "cid", buckets)
+    lazy val phys = Ann.loadIvfIndex(spark, table, path, buckets)
+    lazy val batchIds = newIdx.select(col("g_id")).distinct().localCheckpoint()
+    FoldLoop.appendCommit("AnnLoop", batchId, td, path)(
+      retract = Ann.deleteFromIvfIndex(spark, table, path, _, buckets),
+      genesis = () => {
+        // The batch becomes the index; prior counts are all zero.
+        newIdx.groupBy("cid").agg(count(lit(1)).as("appended_n"))
+          .select(col("cid"), lit(0L).as("prior_n"), col("appended_n"),
+            lit(1.0).as("growth"))
+          .write.mode(SaveMode.Overwrite).parquet(out)
+        Ann.persistIvfIndex(newIdx, table, path, buckets, mode = SaveMode.Overwrite)
+      },
+      present = () => phys.select(col("g_id"))
+        .join(batchIds, Seq("g_id"), "left_semi").count(),
+      emit = fresh => {
+        // Prior counts EXCLUDE the batch's own ids so a replay that finds
+        // the batch appended still reports pre-batch state.
+        val prior = phys.select(col("cid"), col("g_id"))
+          .join(broadcast(batchIds), Seq("g_id"), "left_anti")
+          .groupBy("cid").agg(count(lit(1)).as("prior_n"))
+        newIdx.groupBy("cid").agg(count(lit(1)).as("appended_n"))
+          .join(prior, Seq("cid"), "full_outer")
+          .select(col("cid"),
+            coalesce(col("prior_n"), lit(0L)).as("prior_n"),
+            coalesce(col("appended_n"), lit(0L)).as("appended_n"),
+            (coalesce(col("appended_n"), lit(0L)) /
+              (coalesce(col("prior_n"), lit(0L)) +
+                coalesce(col("appended_n"), lit(0L)))).as("growth"))
+          .localCheckpoint()
+          .write.mode(SaveMode.Overwrite).parquet(out)
+        if (fresh)
+          graft.sources.Bucketed.appendRegistered(newIdx, table, "cid", buckets)
+      })
   }
 
   /** Start the loop over an embedding stream carrying `idCol`/`vecCol`
@@ -142,14 +107,8 @@ object AnnLoop {
           removedCol: String, centroids: DataFrame,
           table: String, path: String,
           outDir: String, checkpointDir: String,
-          buckets: Int = 32, trigger: Option[Trigger] = None): StreamingQuery = {
-    val w = stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        foldBatch(batch, batchId, idCol, vecCol, removedCol, centroids,
-          table, path, outDir, buckets)
-      }
-    trigger.foreach(w.trigger)
-    w.start()
-  }
+          buckets: Int = 32, trigger: Option[Trigger] = None): StreamingQuery =
+    FoldLoop.start(stream, checkpointDir, trigger)(
+      foldBatch(_, _, idCol, vecCol, removedCol, centroids, table, path,
+        outDir, buckets))
 }

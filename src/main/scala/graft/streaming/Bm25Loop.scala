@@ -23,11 +23,13 @@ import graft.ops.SketchOps
   * df/avgdl statistics from this trigger on; an id both removed and
   * added in one batch resolves to deleted.
   *
-  * Crash posture: a per-batch marker dir makes the fold idempotent —
-  * the index append, the stats delta, and the marker are written only
-  * when the marker is absent, so a checkpoint replay (only the LAST
-  * batch ever replays) skips the whole fold instead of double-counting
-  * postings or stats. Tombstone appends dedup on read. The emitted
+  * Crash posture: [[FoldLoop]]'s guarded-append commit, wrapped in a
+  * per-batch marker dir — the index append, the stats delta, and the
+  * marker are written only when the marker is absent, so a checkpoint
+  * replay (only the LAST batch ever replays) skips the whole fold
+  * instead of double-counting postings or stats; a replay that finds
+  * the batch appended but unmarked audits the stats delta instead of
+  * appending. Tombstone appends dedup on read. The emitted
   * per-batch stats snapshot (`outDir/batch=<id>`) is deterministic
   * Overwrite. */
 object Bm25Loop {
@@ -43,96 +45,62 @@ object Bm25Loop {
     s"${path}_applied/batch=$batchId"
 
   /** One micro-batch — exposed for direct replay tests; [[run]] wires it
-    * into foreachBatch. */
+    * into [[FoldLoop]]. */
   private[streaming] def foldBatch(batch: DataFrame, batchId: Long,
                                    idCol: String, textCol: String,
                                    removedCol: String,
                                    table: String, path: String,
                                    outDir: String, buckets: Int = 32): Unit = {
     val spark = batch.sparkSession
-    val rm =
-      if (removedCol.nonEmpty && batch.columns.contains(removedCol))
-        coalesce(col(removedCol).cast("boolean"), lit(false))
-      else lit(false)
-    val marked = batch.withColumn("__rm", rm).localCheckpoint()
-    val removals = marked.where(col("__rm"))
-      .select(col(idCol).cast("long").as("doc_id"))
-      .where(col("doc_id").isNotNull).distinct().localCheckpoint()
-    // Same-batch remove+add resolves to deleted; so does a re-add of an
-    // id tombstoned in ANY earlier batch (appendBm25Index refuses
-    // tombstoned ids — without this filter a mixed batch would throw on
-    // every checkpoint replay; re-ingest under a new id or
-    // compactBm25Index first).
-    val dead = SketchOps.bm25Tombstones(spark, path)
-      .select(col("doc_id").as("__dead"))
-    val additions = marked.where(!col("__rm")).drop("__rm")
-      .join(removals.select(col("doc_id").as("__rmid")),
-        col(idCol).cast("long") === col("__rmid"), "left_anti")
-      .join(dead, col(idCol).cast("long") === col("__dead"), "left_anti")
-      .localCheckpoint()
-    val Array(nRows, nIds, nDistinct) = additions
-      .agg(count(lit(1)), count(col(idCol)), countDistinct(col(idCol))).head()
-      .toSeq.map(_.asInstanceOf[Long]).toArray
-    require(nRows == nIds,
-      s"Bm25Loop: ${nRows - nIds} NULL id row(s) in batch $batchId")
-    require(nIds == nDistinct,
-      s"Bm25Loop: ${nIds - nDistinct} duplicate id value(s) in batch $batchId")
-
+    // appendBm25Index refuses tombstoned ids, so without the prelude's
+    // tombstone filter a mixed batch would throw on every replay.
+    val td = FoldLoop.takedowns("Bm25Loop", batch, batchId, idCol, removedCol,
+      "doc_id", SketchOps.bm25Tombstones(spark, path))
+    val additions = td.additions
+    lazy val (po, dl) = SketchOps.loadBm25Index(spark, table, path, buckets)
+    lazy val batchIds = additions.select(col(idCol).cast("long").as("doc_id"))
+      .distinct().localCheckpoint()
     val (fs, marker) = graft.sources.LakeFs.resolve(markerDir(path, batchId))
-    val (fsRoot, root) = graft.sources.LakeFs.resolve(s"${path}_dl")
     if (!fs.exists(marker)) {
-      if (!fsRoot.exists(root)) {
-        // GENESIS: the batch becomes the index (Overwrite repairs a
-        // partial genesis persist on replay — marker still absent).
-        SketchOps.persistBm25Index(
+      FoldLoop.appendCommit("Bm25Loop", batchId, td, s"${path}_dl")(
+        retract = SketchOps.deleteFromBm25Index(spark, table, path, _, buckets),
+        genesis = () => SketchOps.persistBm25Index(
           SketchOps.buildBm25Index(additions, col(idCol), col(textCol)),
-          table, path, buckets, mode = SaveMode.Overwrite)
-        if (removals.limit(1).count() > 0)
-          SketchOps.deleteFromBm25Index(spark, table, path, removals, buckets)
-      } else {
-        // Retract FIRST (tombstone appends dedup — idempotent on replay),
-        // then append unless a pre-marker crash already landed the batch:
-        // all-or-none presence, the sibling loops' loud-partial posture
-        // (compactBm25Index is the repair tool).
-        if (removals.limit(1).count() > 0)
-          SketchOps.deleteFromBm25Index(spark, table, path, removals, buckets)
-        val (po, dl) = SketchOps.loadBm25Index(spark, table, path, buckets)
-        val batchIds = additions.select(col(idCol).cast("long").as("doc_id"))
-          .distinct().localCheckpoint()
-        // Presence must be checked in BOTH tables: appendBm25Index writes
-        // postings before lengths, so a crash between them leaves batch
-        // ids in _po but not _dl — a lengths-only check would read 0 and
-        // re-append, silently doubling every posting in the batch.
-        val present = batchIds
-          .join(dl.select(col("doc_id")), Seq("doc_id"), "left_semi").count()
-        val presentPo = batchIds
-          .join(po.select(col("doc_id")), Seq("doc_id"), "left_semi").count()
-        require((present == 0L && presentPo == 0L) ||
-          (present == nDistinct && presentPo == nDistinct),
-          s"Bm25Loop: index holds $presentPo/$present of $nDistinct " +
-            s"batch-$batchId ids in postings/lengths — partial append " +
-            "(crash inside the fold?); compactBm25Index to a fresh path " +
-            "and restart")
-        if (present == 0L)
-          SketchOps.appendBm25Index(spark, table, path, additions,
-            col(idCol), col(textCol), buckets)
-        else {
-          // Replay-only audit of the one silent crash window: the batch's
-          // lengths landed but its stats delta may not have (the delta is
-          // the append's LAST write) — a missing one skews avgdl forever.
-          // One column-pruned count, paid only after a crash.
-          val (nDocs, _) = SketchOps.bm25Stats(spark, path)
-          val liveDocs = dl.join(
-            broadcast(SketchOps.bm25Tombstones(spark, path)),
-            Seq("doc_id"), "left_anti").count()
-          require(nDocs == liveDocs,
-            s"Bm25Loop: stats log counts $nDocs live docs but the index " +
-              s"holds $liveDocs — a fold crashed between the length append " +
-              "and its stats delta; compactBm25Index to a fresh path and restart")
-        }
-      }
+          table, path, buckets, mode = SaveMode.Overwrite),
+        present = () => {
+          // Presence must agree across BOTH tables: appendBm25Index
+          // writes postings before lengths, so a crash between them
+          // leaves batch ids in _po but not _dl — a lengths-only check
+          // would read 0 and re-append, doubling every posting.
+          val inDl = batchIds.join(dl.select(col("doc_id")), Seq("doc_id"), "left_semi").count()
+          val inPo = batchIds.join(po.select(col("doc_id")), Seq("doc_id"), "left_semi").count()
+          require(inDl == inPo,
+            s"Bm25Loop: index holds $inPo/$inDl of ${td.nIds} batch-$batchId " +
+              "ids in postings/lengths — partial append (crash inside the " +
+              "fold?); compactBm25Index to a fresh path and restart")
+          inDl
+        },
+        emit = fresh =>
+          if (fresh)
+            SketchOps.appendBm25Index(spark, table, path, additions,
+              col(idCol), col(textCol), buckets)
+          else {
+            // Replay-only audit of the one silent crash window: the
+            // batch's lengths landed but its stats delta may not have
+            // (the delta is the append's LAST write) — a missing one
+            // skews avgdl forever. One column-pruned count, paid only
+            // after a crash.
+            val (nDocs, _) = SketchOps.bm25Stats(spark, path)
+            val liveDocs = dl.join(
+              broadcast(SketchOps.bm25Tombstones(spark, path)),
+              Seq("doc_id"), "left_anti").count()
+            require(nDocs == liveDocs,
+              s"Bm25Loop: stats log counts $nDocs live docs but the index " +
+                s"holds $liveDocs — a fold crashed between the length append " +
+                "and its stats delta; compactBm25Index to a fresh path and restart")
+          })
       // The marker is the commit point: a crash before this line replays
-      // the fold (guards above make that safe); after it, the replay
+      // the fold (the guards above make that safe); after it, the replay
       // skips every state mutation.
       fs.mkdirs(marker)
     }
@@ -149,14 +117,7 @@ object Bm25Loop {
   def run(stream: DataFrame, idCol: String, textCol: String,
           removedCol: String, table: String, path: String,
           outDir: String, checkpointDir: String,
-          buckets: Int = 32, trigger: Option[Trigger] = None): StreamingQuery = {
-    val w = stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        foldBatch(batch, batchId, idCol, textCol, removedCol,
-          table, path, outDir, buckets)
-      }
-    trigger.foreach(w.trigger)
-    w.start()
-  }
+          buckets: Int = 32, trigger: Option[Trigger] = None): StreamingQuery =
+    FoldLoop.start(stream, checkpointDir, trigger)(
+      foldBatch(_, _, idCol, textCol, removedCol, table, path, outDir, buckets))
 }

@@ -24,8 +24,8 @@ import graft.ops.LinearClassifier
   * rounds per batch track the moving optimum as labels accumulate.
   * Output after batch b is EXACTLY `train(store so far, init = prior,
   * iters)` — deterministic given partition-order-stable sums, and
-  * content-replayable under checkpoint recovery ([[VersionedState]]
-  * overwrite-write posture). Node-scale state: `dim+1` floats, one
+  * content-replayable under checkpoint recovery ([[FoldLoop]]'s
+  * replace-version commit). Node-scale state: `dim+1` floats, one
   * binary row per version.
   *
   * [[currentModel]] hands the live model to the serving side
@@ -41,11 +41,10 @@ object ClassifierLoop {
   /** The latest maintained model (None until a batch ran). */
   def currentModel(spark: SparkSession,
                    stateDir: String): Option[LinearClassifier.Model] =
-    VersionedState.validVersions(stateDir).lastOption.map { v =>
-      LinearClassifier.Model.fromBytes(
-        VersionedState.read(spark, stateDir, v, Some(stateSchema))
-          .head().getAs[Array[Byte]](0))
-    }
+    VersionedState.latest(spark, stateDir, Some(stateSchema)).map(modelOf)
+
+  private def modelOf(state: DataFrame): LinearClassifier.Model =
+    LinearClassifier.Model.fromBytes(state.head().getAs[Array[Byte]](0))
 
   /** One micro-batch fold — exposed for direct replay tests. */
   private[streaming] def foldBatch(batch: DataFrame, batchId: Long,
@@ -59,20 +58,14 @@ object ClassifierLoop {
       .localCheckpoint()
     rows.write.mode(SaveMode.Overwrite).parquet(s"$labelDir/batch=$batchId")
     val store = spark.read.parquet(labelDir)
-    val prior = VersionedState.priorVersion(stateDir, batchId).map { v =>
-      LinearClassifier.Model.fromBytes(
-        VersionedState.read(spark, stateDir, v, Some(stateSchema))
-          .head().getAs[Array[Byte]](0))
+    VersionedState.commit(spark, stateDir, batchId, Some(stateSchema)) { state =>
+      val prior = state.map(modelOf)
+      prior.foreach(m => require(m.dim == dim,
+        s"persisted model dim ${m.dim} != configured dim $dim"))
+      val model = LinearClassifier.train(store, col("t"), col("y"),
+        dim = dim, iters = iterations, init = prior)
+      Some(spark.createDataFrame(java.util.List.of(Row(model.toBytes)), stateSchema))
     }
-    prior.foreach(m => require(m.dim == dim,
-      s"persisted model dim ${m.dim} != configured dim $dim"))
-    val model = LinearClassifier.train(store, col("t"), col("y"),
-      dim = dim, iters = iterations, init = prior)
-    val out = spark.createDataFrame(
-      java.util.List.of(Row(model.toBytes)), stateSchema)
-    VersionedState.write(out, stateDir, batchId + 1)
-    VersionedState.priorVersion(stateDir, batchId)
-      .foreach(VersionedState.gcBelow(stateDir, _))
   }
 
   /** Start the retrain loop over a labeled stream carrying `textCol` +
@@ -82,14 +75,7 @@ object ClassifierLoop {
   def run(stream: DataFrame, textCol: String, labelCol: String,
           stateDir: String, labelDir: String, checkpointDir: String,
           dim: Int = 1 << 17, iterations: Int = 5,
-          trigger: Option[Trigger] = None): StreamingQuery = {
-    val w = stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        foldBatch(batch, batchId, textCol, labelCol, stateDir, labelDir,
-          dim, iterations)
-      }
-    trigger.foreach(w.trigger)
-    w.start()
-  }
+          trigger: Option[Trigger] = None): StreamingQuery =
+    FoldLoop.start(stream, checkpointDir, trigger)(
+      foldBatch(_, _, textCol, labelCol, stateDir, labelDir, dim, iterations))
 }

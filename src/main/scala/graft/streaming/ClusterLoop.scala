@@ -36,8 +36,9 @@ import org.apache.spark.sql.types.{StringType, StructField, StructType}
   * (the cadence-amortized O(graph) moment, the [[LabelLoop]]
   * discipline).
   *
-  * Crash posture: output/state writes are deterministic Overwrite per
-  * batch id ([[VersionedState]]); the CC fold itself is IDEMPOTENT
+  * Crash posture: output writes are deterministic Overwrite per batch
+  * id and state commits through [[FoldLoop]]'s replace-version mode;
+  * the CC fold itself is IDEMPOTENT
   * under re-applied batches (re-adding a present edge and re-removing
   * an absent one are no-ops), so a replay that finds the store
   * already updated — even already compacted — reaches identical
@@ -73,22 +74,18 @@ object ClusterLoop {
     SignedEdgeStore.compact(spark, edgesDir, batchId, "lo", "hi")
 
   /** One micro-batch — exposed for direct replay tests; [[run]] wires
-    * it into foreachBatch. `removedCol` (when non-empty) names a
+    * it into [[FoldLoop]]. `removedCol` (when non-empty) names a
     * boolean column marking removal events; rows where it is true (and
     * not re-added in the same batch) delete their edge. */
-  private[graft] def foldBatch(batch: DataFrame, batchId: Long,
-                               d1: String, d2: String, removedCol: String,
-                               stateDir: String, edgesDir: String,
-                               outDir: String, maxIter: Int = 30,
-                               compactEvery: Int = 0): Unit = {
+  private[streaming] def foldBatch(batch: DataFrame, batchId: Long,
+                                   d1: String, d2: String, removedCol: String,
+                                   stateDir: String, edgesDir: String,
+                                   outDir: String, maxIter: Int = 30,
+                                   compactEvery: Int = 0): Unit = {
     val spark = batch.sparkSession
-    val rm =
-      if (removedCol.nonEmpty && batch.columns.contains(removedCol))
-        coalesce(col(removedCol).cast("boolean"), lit(false))
-      else lit(false)
     val canonEvents = batch
       .select(col(d1).cast("string").as("a"), col(d2).cast("string").as("b"),
-        rm.as("__rm"))
+        FoldLoop.removedFlag(batch, removedCol).as("__rm"))
       .where(col("a").isNotNull && col("b").isNotNull && col("a") =!= col("b"))
       .select(least(col("a"), col("b")).as("lo"),
         greatest(col("a"), col("b")).as("hi"), col("__rm"))
@@ -102,32 +99,29 @@ object ClusterLoop {
     val remU = canon.where(col("__allrm") === 1).select(col("lo"), col("hi"))
     SignedEdgeStore.writeBatch(canon, "lo", "hi", edgesDir, batchId)
 
-    val priorV = VersionedState.priorVersion(stateDir, batchId)
-    val prior = priorV
-      .map(v => VersionedState.read(spark, stateDir, v, Some(stateSchema)))
-      .getOrElse(emptyState(spark))
-      .localCheckpoint()
-    // Old edges reach the fold ONLY through the cone restriction; the
-    // last-action-wins netting group-by runs on the cone slice. The
-    // store is enumerated WITHOUT this batch's dir — oldEdges is the
-    // pre-batch set — but a replay that finds a compacted store
-    // (containing this batch) still folds to identical labels: the CC
-    // fold is idempotent under re-applied batches.
-    // readStore restricts to the store's OWNED batch dirs (foreign dirs
-    // ignored) and refuses a pre-signed-format store loudly.
-    val priorStore = SignedEdgeStore.readStore(spark, edgesDir, "lo", "hi",
-      excludeName = Some(s"batch=$batchId"))
-    val coneExtract = (coneNodes: DataFrame) =>
-      SignedEdgeStore.net(
-        priorStore.join(coneNodes.select(col("doc").as("__cn")),
-          col("lo") === col("__cn"), "left_semi"),
-        "lo", "hi")
-    val labels = graft.ops.DedupOps.ccIncCore(
-        prior, addU, remU, coneExtract, maxIter)
-      .localCheckpoint()
-    labels.write.mode(SaveMode.Overwrite).parquet(s"$outDir/batch=$batchId")
-    VersionedState.write(labels, stateDir, batchId + 1)
-    priorV.foreach(VersionedState.gcBelow(stateDir, _))
+    VersionedState.commit(spark, stateDir, batchId, Some(stateSchema)) { state =>
+      val prior = state.getOrElse(emptyState(spark)).localCheckpoint()
+      // Old edges reach the fold ONLY through the cone restriction; the
+      // last-action-wins netting group-by runs on the cone slice. The
+      // store is enumerated WITHOUT this batch's dir — oldEdges is the
+      // pre-batch set — but a replay that finds a compacted store
+      // (containing this batch) still folds to identical labels: the CC
+      // fold is idempotent under re-applied batches.
+      // readStore restricts to the store's OWNED batch dirs (foreign dirs
+      // ignored) and refuses a pre-signed-format store loudly.
+      val priorStore = SignedEdgeStore.readStore(spark, edgesDir, "lo", "hi",
+        excludeName = Some(s"batch=$batchId"))
+      val coneExtract = (coneNodes: DataFrame) =>
+        SignedEdgeStore.net(
+          priorStore.join(coneNodes.select(col("doc").as("__cn")),
+            col("lo") === col("__cn"), "left_semi"),
+          "lo", "hi")
+      val labels = graft.ops.DedupOps.ccIncCore(
+          prior, addU, remU, coneExtract, maxIter)
+        .localCheckpoint()
+      labels.write.mode(SaveMode.Overwrite).parquet(s"$outDir/batch=$batchId")
+      Some(labels)
+    }
     if (compactEvery > 0 && batchId > 0 && batchId % compactEvery == 0)
       compactEdgeStore(spark, edgesDir, batchId)
   }
@@ -140,14 +134,8 @@ object ClusterLoop {
   def run(stream: DataFrame, d1: String, d2: String, removedCol: String,
           stateDir: String, edgesDir: String, outDir: String,
           checkpointDir: String, trigger: Option[Trigger] = None,
-          maxIter: Int = 30, compactEvery: Int = 64): StreamingQuery = {
-    val w = stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        foldBatch(batch, batchId, d1, d2, removedCol, stateDir, edgesDir,
-          outDir, maxIter, compactEvery)
-      }
-    trigger.foreach(w.trigger)
-    w.start()
-  }
+          maxIter: Int = 30, compactEvery: Int = 64): StreamingQuery =
+    FoldLoop.start(stream, checkpointDir, trigger)(
+      foldBatch(_, _, d1, d2, removedCol, stateDir, edgesDir, outDir,
+        maxIter, compactEvery))
 }

@@ -7,27 +7,20 @@ import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType
 
 import graft.ops.DedupOps
 
-/** The CLOSED streaming dedup loop (VERDICT r4 missing #1): a foreachBatch
+/** The CLOSED streaming dedup loop (VERDICT r4 missing #1): a [[FoldLoop]]
   * sink that, per micro-batch, BOTH filters the batch against the
   * persisted fingerprint state AND folds the batch's signatures back into
   * it — continuous ingestion never needs a batch interlude.
   * ([[StreamOps.incrementalDedupFilter]] is the read-only half: it prunes
   * against a static prior but never updates it.)
   *
-  * State layout (local filesystem, like [[graft.sources.Maintenance]]):
-  * `stateDir/v<N>` holds the fingerprint table after folding batches
-  * `0..N-1` (plus any [[seedState]]); a version is VALID only with its
-  * `_SUCCESS` marker, so a crash mid-write leaves an ignorable partial.
-  * Batch N reads the latest valid version ≤ N, writes `v<N+1>`
-  * (Overwrite — deterministic content, so checkpoint replay of an
-  * uncommitted batch rewrites the same bytes), emits survivors to
-  * `outDir/batch=<N>` (also Overwrite — replay cannot duplicate output),
-  * then garbage-collects versions older than the one it read. Never
-  * in-place: the version being read is never the one being written.
-  *
-  * Exactly-once: idempotent per-batch writes + Spark's checkpointed batch
-  * ids give end-to-end exactly-once from a replayable source, the same
-  * contract CheckpointRestartSpec pins for plain file sinks.
+  * State: the fingerprint table under [[FoldLoop]]'s replace-version
+  * commit ([[VersionedState]]) — `stateDir/v<N>` holds it after folding
+  * batches `0..N-1` (plus any [[seedState]]); survivors go to
+  * `outDir/batch=<N>` (Overwrite — replay cannot duplicate output).
+  * Idempotent per-batch writes + Spark's checkpointed batch ids give
+  * end-to-end exactly-once from a replayable source, the same contract
+  * CheckpointRestartSpec pins for plain file sinks.
   *
   * Semantics match the batch q91 chain run per micro-batch:
   * keeper(sig) = min(prior keeper, batch min); a batch doc survives iff
@@ -58,7 +51,7 @@ object DedupLoop {
       .getOrElse(emptyState(spark))
 
   /** One micro-batch of the loop — exposed for direct idempotency tests;
-    * [[run]] wires it into foreachBatch. When `manifest` is set, the
+    * [[run]] wires it into [[FoldLoop]]. When `manifest` is set, the
     * just-written survivors also fold into a [[ManifestLoop]]-style
     * stats manifest, so the dedup'd lake stays pruning-ready as it
     * grows.
@@ -83,40 +76,31 @@ object DedupLoop {
                                     manifest: Option[(Seq[String], String)] = None,
                                     removedCol: String = ""): Unit = {
     val spark = batch.sparkSession
-    val priorV = VersionedState.priorVersion(stateDir, batchId)
-    val prior = priorV
-      .map(v => VersionedState.read(spark, stateDir, v, Some(stateSchema)))
-      .getOrElse(emptyState(spark))
+    VersionedState.commit(spark, stateDir, batchId, Some(stateSchema)) { state =>
+      val prior = state.getOrElse(emptyState(spark))
+      val marked = batch.withColumn("__rm", FoldLoop.removedFlag(batch, removedCol))
+        .localCheckpoint()
+      val retractions = marked.where(col("__rm"))
+        .select(col(idCol).cast("long").as("__rid")).distinct()
+      val additions = marked.where(!col("__rm")).drop("__rm")
+      // Retract FIRST: state rows anchored by taken-down docs leave before
+      // the batch's additions compete, so a same-batch duplicate of
+      // retracted content wins its signature fresh.
+      val priorLive = prior
+        .join(retractions, prior("keep_id") === col("__rid"), "left_anti")
+        .localCheckpoint()
 
-    val rm =
-      if (removedCol.nonEmpty && batch.columns.contains(removedCol))
-        coalesce(col(removedCol).cast("boolean"), lit(false))
-      else lit(false)
-    val marked = batch.withColumn("__rm", rm).localCheckpoint()
-    val retractions = marked.where(col("__rm"))
-      .select(col(idCol).cast("long").as("__rid")).distinct()
-    val additions = marked.where(!col("__rm")).drop("__rm")
-    // Retract FIRST: state rows anchored by taken-down docs leave before
-    // the batch's additions compete, so a same-batch duplicate of
-    // retracted content wins its signature fresh.
-    val priorLive = prior
-      .join(retractions, prior("keep_id") === col("__rid"), "left_anti")
-      .localCheckpoint()
-
-    val keys = DedupOps.sigKeysFast(additions, col(idCol), col(textCol), k)
-    val keepIds = DedupOps.incrementalDedupKeys(keys, priorLive)
-      .where(!col("is_dup")).select(col("doc_id").as("__keep_id"))
-    additions.join(keepIds, additions(idCol) === col("__keep_id"), "left_semi")
-      .write.mode(SaveMode.Overwrite).parquet(s"$outDir/batch=$batchId")
-    manifest.foreach { case (statsCols, manifestStateDir) =>
-      ManifestLoop.foldDirStats(spark, outDir, batchId, statsCols, manifestStateDir)
+      val keys = DedupOps.sigKeysFast(additions, col(idCol), col(textCol), k)
+      val keepIds = DedupOps.incrementalDedupKeys(keys, priorLive)
+        .where(!col("is_dup")).select(col("doc_id").as("__keep_id"))
+      additions.join(keepIds, additions(idCol) === col("__keep_id"), "left_semi")
+        .write.mode(SaveMode.Overwrite).parquet(s"$outDir/batch=$batchId")
+      manifest.foreach { case (statsCols, manifestStateDir) =>
+        ManifestLoop.foldDirStats(spark, outDir, batchId, statsCols, manifestStateDir)
+      }
+      Some(priorLive.unionByName(keys.groupBy("sigkey").agg(min(col("doc_id")).as("keep_id")))
+        .groupBy("sigkey").agg(min(col("keep_id")).as("keep_id")))
     }
-
-    VersionedState.write(
-      priorLive.unionByName(keys.groupBy("sigkey").agg(min(col("doc_id")).as("keep_id")))
-        .groupBy("sigkey").agg(min(col("keep_id")).as("keep_id")),
-      stateDir, batchId + 1)
-    priorV.foreach(VersionedState.gcBelow(stateDir, _))
   }
 
   /** Start the loop over `stream` (must carry `idCol` and `textCol`).
@@ -129,14 +113,7 @@ object DedupLoop {
           stateDir: String, outDir: String, checkpointDir: String,
           k: Int = 8, trigger: Option[Trigger] = None,
           manifest: Option[(Seq[String], String)] = None,
-          removedCol: String = ""): StreamingQuery = {
-    val w = stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        dedupBatch(batch, batchId, idCol, textCol, stateDir, outDir, k,
-          manifest, removedCol)
-      }
-    trigger.foreach(w.trigger)
-    w.start()
-  }
+          removedCol: String = ""): StreamingQuery =
+    FoldLoop.start(stream, checkpointDir, trigger)(
+      dedupBatch(_, _, idCol, textCol, stateDir, outDir, k, manifest, removedCol))
 }

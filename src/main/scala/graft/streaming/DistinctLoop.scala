@@ -22,9 +22,7 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * true distinct-pair cardinality — that is the price of exactness, and
   * the reason [[SketchLoop]] exists for the unbounded case.
   *
-  * Same [[VersionedState]] machinery and exactly-once posture as the
-  * other loops: deterministic overwrite per batch id, GC below the
-  * version read, `_SUCCESS`-gated versions.
+  * Commits through [[FoldLoop]]'s replace-version mode.
   */
 object DistinctLoop {
 
@@ -61,27 +59,16 @@ object DistinctLoop {
   private[streaming] def foldBatch(batch: DataFrame, batchId: Long,
                                    groupCols: Seq[String], valueCol: String,
                                    stateDir: String): Unit = {
-    val spark = batch.sparkSession
-    val priorV = VersionedState.priorVersion(stateDir, batchId)
     val batchPairs = pairTable(batch, groupCols, valueCol)
-    val folded = priorV match {
-      case Some(v) => merge(Seq(VersionedState.read(spark, stateDir, v), batchPairs))
-      case None => batchPairs
+    VersionedState.commit(batch.sparkSession, stateDir, batchId) { prior =>
+      Some(prior.fold(batchPairs)(p => merge(Seq(p, batchPairs))))
     }
-    VersionedState.write(folded, stateDir, batchId + 1)
-    priorV.foreach(VersionedState.gcBelow(stateDir, _))
   }
 
   /** Start the incremental exact-distinct loop over `stream`. */
   def run(stream: DataFrame, groupCols: Seq[String], valueCol: String,
           stateDir: String, checkpointDir: String,
-          trigger: Option[Trigger] = None): StreamingQuery = {
-    val w = stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        foldBatch(batch, batchId, groupCols, valueCol, stateDir)
-      }
-    trigger.foreach(w.trigger)
-    w.start()
-  }
+          trigger: Option[Trigger] = None): StreamingQuery =
+    FoldLoop.start(stream, checkpointDir, trigger)(
+      foldBatch(_, _, groupCols, valueCol, stateDir))
 }

@@ -56,16 +56,15 @@ import org.apache.spark.sql.types.{StringType, StructField, StructType}
   * a spuriously-affected node recomputes its unchanged label and stops
   * the cascade); the netting group-by that actually resolves presence
   * runs on the affected slice only, never the store. Measured honestly
-  * (LabelLoopProbe, SURVEY §6): at local[32] 1M–4M edges the fold and
+  * (SURVEY §6): at local[32] 1M–4M edges the fold and
   * the cold sweep are at PARITY (±20% — local shuffles are
   * memory-speed, and the fold pays ~10 job barriers of node-scale state
   * maintenance plus the persisted store read the in-memory sweep
   * skips); the incremental form's win is the shuffled-volume asymmetry
   * (O(affected cone) vs O(E·k)), which pays on network-bound clusters
-  * and dense graphs, not on a single box. Same [[VersionedState]]
-  * exactly-once posture as the other loops: deterministic Overwrite per
-  * batch id for output, edge store, and state; GC below the version
-  * read. */
+  * and dense graphs, not on a single box. Output and edge store are
+  * deterministic Overwrite per batch id; state commits through
+  * [[FoldLoop]]'s replace-version mode. */
 object LabelLoop {
 
   private def stateSchema(iterations: Int) = StructType(
@@ -97,28 +96,25 @@ object LabelLoop {
                                       batchId: Long): Unit =
     SignedEdgeStore.compact(spark, edgesDir, batchId, "src", "dst")
 
-  /** One micro-batch — exposed for direct replay tests and
-    * [[graft.LabelLoopProbe]]; [[run]] wires it into foreachBatch.
+  /** One micro-batch — exposed for direct replay tests; [[run]] wires
+    * it into [[FoldLoop]].
     * `removedCol` (when non-empty) names a boolean column marking
     * removal events; rows where it is true (and not re-added in the
     * same batch) delete their edge. `compactEvery` > 0 compacts the
     * signed store every that many batches ([[compactEdgeStore]]) —
     * without it a long-running stream accumulates one parquet dir per
     * batch forever and listing/scan cost grows unboundedly. */
-  private[graft] def foldBatch(batch: DataFrame, batchId: Long,
-                               src: String, dst: String, removedCol: String,
-                               iterations: Int,
-                               stateDir: String, edgesDir: String,
-                               outDir: String, compactEvery: Int = 0): Unit = {
+  private[streaming] def foldBatch(batch: DataFrame, batchId: Long,
+                                   src: String, dst: String, removedCol: String,
+                                   iterations: Int,
+                                   stateDir: String, edgesDir: String,
+                                   outDir: String, compactEvery: Int = 0): Unit = {
     require(iterations >= 1, s"iterations must be >= 1, got $iterations")
     val spark = batch.sparkSession
-    val rm =
-      if (removedCol.nonEmpty && batch.columns.contains(removedCol))
-        coalesce(col(removedCol).cast("boolean"), lit(false))
-      else lit(false)
     val canon = SignedEdgeStore.canonBatch(
         batch.select(col(src).cast("string").as("src"),
-            col(dst).cast("string").as("dst"), rm.as("__rm"))
+            col(dst).cast("string").as("dst"),
+            FoldLoop.removedFlag(batch, removedCol).as("__rm"))
           .where(col("src").isNotNull && col("dst").isNotNull),
         "src", "dst")
       .localCheckpoint()
@@ -129,8 +125,8 @@ object LabelLoop {
       compactEdgeStore(spark, edgesDir, batchId)
     // Full signed store, read LAZILY — never materialized or globally
     // netted per batch (that would be O(graph) work on every fold,
-    // swamping a small batch's cone; LabelLoopProbe measured the first
-    // draft losing to the cold sweep on exactly that). Presence is
+    // swamping a small batch's cone; the first draft measurably lost to
+    // the cold sweep on exactly that). Presence is
     // resolved on the AFFECTED slice below, where the batch operator's
     // `distinct` semantics are actually consumed; the read INCLUDES this
     // batch's dir, so a crash replay nets to the same current set.
@@ -138,115 +134,112 @@ object LabelLoop {
     // ignored) and refuses a pre-signed-format store loudly.
     val store = SignedEdgeStore.readStore(spark, edgesDir, "src", "dst")
 
-    val priorV = VersionedState.priorVersion(stateDir, batchId)
-    val prior = priorV
-      .map(v => VersionedState.read(spark, stateDir, v, Some(stateSchema(iterations))))
-      .getOrElse(emptyState(spark, iterations))
-      .localCheckpoint()
+    VersionedState.commit(spark, stateDir, batchId, Some(stateSchema(iterations))) { state =>
+      val prior = state.getOrElse(emptyState(spark, iterations)).localCheckpoint()
 
-    // The node universe is maintained from STATE + batch (the prior
-    // trajectory covers every node the graph had), not re-derived from
-    // an edge-store scan: new nodes enter through ADD pairs; endpoints
-    // of net-removed pairs leave when no live incident edge remains
-    // (the candidate-restricted liveness check below) — the cold
-    // sweep's nodes-from-edges universe, maintained incrementally.
-    // explode, not union: a Union under the anti-join makes Spark's
-    // union-constraint rewrite look up attributes that the checkpointed
-    // prior no longer exposes (NoSuchElementException at optimization
-    // time); toDF re-aliases so prior's own attributes never flow into
-    // the later self-joins.
-    val addNodes = addDelta
-      .select(explode(array(col("src"), col("dst"))).as("node")).distinct()
-    val newNodes = addNodes.join(prior, Seq("node"), "left_anti")
-      .localCheckpoint().toDF("node")
-    // Removal-death candidates: endpoints of net-removed pairs. Restrict
-    // the store to rows touching a candidate (two semi joins — per-pair
-    // consistent, since a pair's rows share src and share dst; a pair
-    // matched through both sides just duplicates identical rows, which
-    // last-action netting absorbs), net THAT slice, and keep candidates
-    // that still carry a live edge. The slice includes this batch's add
-    // rows, so a candidate that lost one edge and gained another stays.
-    val remNodes = remDelta
-      .select(explode(array(col("src"), col("dst"))).as("node")).distinct()
-      .localCheckpoint()
-    val deadNodes =
-      if (remNodes.limit(1).count() == 0) remNodes.limit(0)
-      else {
-        val srcSlice = store.join(remNodes.select(col("node").as("__c")),
-          col("src") === col("__c"), "left_semi")
-        val dstSlice = store.join(remNodes.select(col("node").as("__c")),
-          col("dst") === col("__c"), "left_semi")
-        val live = SignedEdgeStore.net(srcSlice.unionAll(dstSlice), "src", "dst")
-        val liveEnds = live.select(col("src").as("node"))
-          .unionAll(live.select(col("dst").as("node"))).distinct()
-        remNodes.join(liveEnds, Seq("node"), "left_anti")
-          .localCheckpoint().toDF("node")
+      // The node universe is maintained from STATE + batch (the prior
+      // trajectory covers every node the graph had), not re-derived from
+      // an edge-store scan: new nodes enter through ADD pairs; endpoints
+      // of net-removed pairs leave when no live incident edge remains
+      // (the candidate-restricted liveness check below) — the cold
+      // sweep's nodes-from-edges universe, maintained incrementally.
+      // explode, not union: a Union under the anti-join makes Spark's
+      // union-constraint rewrite look up attributes that the checkpointed
+      // prior no longer exposes (NoSuchElementException at optimization
+      // time); toDF re-aliases so prior's own attributes never flow into
+      // the later self-joins.
+      val addNodes = addDelta
+        .select(explode(array(col("src"), col("dst"))).as("node")).distinct()
+      val newNodes = addNodes.join(prior, Seq("node"), "left_anti")
+        .localCheckpoint().toDF("node")
+      // Removal-death candidates: endpoints of net-removed pairs. Restrict
+      // the store to rows touching a candidate (two semi joins — per-pair
+      // consistent, since a pair's rows share src and share dst; a pair
+      // matched through both sides just duplicates identical rows, which
+      // last-action netting absorbs), net THAT slice, and keep candidates
+      // that still carry a live edge. The slice includes this batch's add
+      // rows, so a candidate that lost one edge and gained another stays.
+      val remNodes = remDelta
+        .select(explode(array(col("src"), col("dst"))).as("node")).distinct()
+        .localCheckpoint()
+      val deadNodes =
+        if (remNodes.limit(1).count() == 0) remNodes.limit(0)
+        else {
+          val srcSlice = store.join(remNodes.select(col("node").as("__c")),
+            col("src") === col("__c"), "left_semi")
+          val dstSlice = store.join(remNodes.select(col("node").as("__c")),
+            col("dst") === col("__c"), "left_semi")
+          val live = SignedEdgeStore.net(srcSlice.unionAll(dstSlice), "src", "dst")
+          val liveEnds = live.select(col("src").as("node"))
+            .unionAll(live.select(col("dst").as("node"))).distinct()
+          remNodes.join(liveEnds, Seq("node"), "left_anti")
+            .localCheckpoint().toDF("node")
+        }
+      val nodes = prior.select("node").unionAll(newNodes.select("node"))
+        .join(deadNodes.select(col("node").as("__d")),
+          col("node") === col("__d"), "left_anti")
+        .localCheckpoint().toDF("node")
+      // Always-dirty vote sources: a source of ANY changed pair — added
+      // or removed — re-votes every round (its vote set changed).
+      val deltaSrcs = addDelta.select(col("src").as("node"))
+        .unionAll(remDelta.select(col("src").as("node"))).distinct()
+      // Round-0 labels are definitionally the node ids — no state needed.
+      var cur = nodes.select(col("node"), col("node").as("lbl"))
+      // Nodes whose PREVIOUS-round label differs from the persisted
+      // trajectory: at round 0 only new nodes (old l0 never changes) —
+      // dead nodes dropped from `cur` stop mattering because their live
+      // in-edges were necessarily removed this batch, making those
+      // sources always-dirty.
+      var changed = newNodes
+      val w = Window.partitionBy("node").orderBy(col("c").desc, col("lbl"))
+      var trajCols = Seq.empty[(Int, DataFrame)]
+      for (r <- 1 to iterations) {
+        // Affected sources this round: changed-label in-neighbors + the
+        // always-dirty sets. The frontier expansion walks the RAW signed
+        // store, so srcs of net-removed edges over-include — conservative
+        // (they recompute an unchanged label and stop cascading).
+        val affected = store
+          .join(changed.select(col("node").as("__c")), col("dst") === col("__c"), "left_semi")
+          .select(col("src").as("node"))
+          .union(deltaSrcs).union(newNodes.select("node"))
+          .distinct().localCheckpoint()
+        // Presence resolution happens HERE, on the affected slice only —
+        // last-action netting collapses cross-batch re-sent edges exactly
+        // like the batch operator's global `distinct` AND drops removed
+        // pairs, without an O(graph) netting per fold.
+        val votes = SignedEdgeStore.net(
+            store.join(affected.select(col("node").as("__a")),
+              col("src") === col("__a"), "left_semi"),
+            "src", "dst")
+          .join(cur.select(col("node").as("__n"), col("lbl")), col("__n") === col("dst"))
+          .groupBy(col("src").as("node"), col("lbl"))
+          .agg(count(lit(1)).as("c"))
+        val winner = votes.withColumn("rn", row_number().over(w))
+          .where(col("rn") === 1)
+          .select(col("node"), col("lbl").as("__wl"))
+        // Recomputed labels for the affected set (voteless keep round-r−1).
+        val rec = affected
+          .join(winner, Seq("node"), "left")
+          .join(cur.select(col("node"), col("lbl").as("__prev")), Seq("node"), "left")
+          .select(col("node"), coalesce(col("__wl"), col("__prev")).as("__rl"))
+          .localCheckpoint()
+        val priorR = prior.select(col("node"), col(s"l$r").as("__pl"))
+        cur = nodes
+          .join(priorR, Seq("node"), "left")
+          .join(rec, Seq("node"), "left")
+          .select(col("node"), coalesce(col("__rl"), col("__pl")).as("lbl"))
+          .localCheckpoint()
+        changed = rec.join(priorR, Seq("node"), "left")
+          .where(col("__pl").isNull || col("__rl") =!= col("__pl"))
+          .select("node")
+        trajCols = trajCols :+ (r -> cur)
       }
-    val nodes = prior.select("node").unionAll(newNodes.select("node"))
-      .join(deadNodes.select(col("node").as("__d")),
-        col("node") === col("__d"), "left_anti")
-      .localCheckpoint().toDF("node")
-    // Always-dirty vote sources: a source of ANY changed pair — added
-    // or removed — re-votes every round (its vote set changed).
-    val deltaSrcs = addDelta.select(col("src").as("node"))
-      .unionAll(remDelta.select(col("src").as("node"))).distinct()
-    // Round-0 labels are definitionally the node ids — no state needed.
-    var cur = nodes.select(col("node"), col("node").as("lbl"))
-    // Nodes whose PREVIOUS-round label differs from the persisted
-    // trajectory: at round 0 only new nodes (old l0 never changes) —
-    // dead nodes dropped from `cur` stop mattering because their live
-    // in-edges were necessarily removed this batch, making those
-    // sources always-dirty.
-    var changed = newNodes
-    val w = Window.partitionBy("node").orderBy(col("c").desc, col("lbl"))
-    var trajCols = Seq.empty[(Int, DataFrame)]
-    for (r <- 1 to iterations) {
-      // Affected sources this round: changed-label in-neighbors + the
-      // always-dirty sets. The frontier expansion walks the RAW signed
-      // store, so srcs of net-removed edges over-include — conservative
-      // (they recompute an unchanged label and stop cascading).
-      val affected = store
-        .join(changed.select(col("node").as("__c")), col("dst") === col("__c"), "left_semi")
-        .select(col("src").as("node"))
-        .union(deltaSrcs).union(newNodes.select("node"))
-        .distinct().localCheckpoint()
-      // Presence resolution happens HERE, on the affected slice only —
-      // last-action netting collapses cross-batch re-sent edges exactly
-      // like the batch operator's global `distinct` AND drops removed
-      // pairs, without an O(graph) netting per fold.
-      val votes = SignedEdgeStore.net(
-          store.join(affected.select(col("node").as("__a")),
-            col("src") === col("__a"), "left_semi"),
-          "src", "dst")
-        .join(cur.select(col("node").as("__n"), col("lbl")), col("__n") === col("dst"))
-        .groupBy(col("src").as("node"), col("lbl"))
-        .agg(count(lit(1)).as("c"))
-      val winner = votes.withColumn("rn", row_number().over(w))
-        .where(col("rn") === 1)
-        .select(col("node"), col("lbl").as("__wl"))
-      // Recomputed labels for the affected set (voteless keep round-r−1).
-      val rec = affected
-        .join(winner, Seq("node"), "left")
-        .join(cur.select(col("node"), col("lbl").as("__prev")), Seq("node"), "left")
-        .select(col("node"), coalesce(col("__wl"), col("__prev")).as("__rl"))
-        .localCheckpoint()
-      val priorR = prior.select(col("node"), col(s"l$r").as("__pl"))
-      cur = nodes
-        .join(priorR, Seq("node"), "left")
-        .join(rec, Seq("node"), "left")
-        .select(col("node"), coalesce(col("__rl"), col("__pl")).as("lbl"))
-        .localCheckpoint()
-      changed = rec.join(priorR, Seq("node"), "left")
-        .where(col("__pl").isNull || col("__rl") =!= col("__pl"))
-        .select("node")
-      trajCols = trajCols :+ (r -> cur)
+      cur.write.mode(SaveMode.Overwrite).parquet(s"$outDir/batch=$batchId")
+      val traj = trajCols.foldLeft(nodes) { case (acc, (r, lr)) =>
+        acc.join(lr.select(col("node"), col("lbl").as(s"l$r")), Seq("node"), "left")
+      }
+      Some(traj)
     }
-    cur.write.mode(SaveMode.Overwrite).parquet(s"$outDir/batch=$batchId")
-    val traj = trajCols.foldLeft(nodes) { case (acc, (r, lr)) =>
-      acc.join(lr.select(col("node"), col("lbl").as(s"l$r")), Seq("node"), "left")
-    }
-    VersionedState.write(traj, stateDir, batchId + 1)
-    priorV.foreach(VersionedState.gcBelow(stateDir, _))
   }
 
   /** Start the label-maintenance loop over an edge-event stream carrying
@@ -257,14 +250,8 @@ object LabelLoop {
   def run(stream: DataFrame, src: String, dst: String, iterations: Int,
           stateDir: String, edgesDir: String, outDir: String,
           checkpointDir: String, trigger: Option[Trigger] = None,
-          compactEvery: Int = 64, removedCol: String = ""): StreamingQuery = {
-    val w = stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        foldBatch(batch, batchId, src, dst, removedCol, iterations,
-          stateDir, edgesDir, outDir, compactEvery)
-      }
-    trigger.foreach(w.trigger)
-    w.start()
-  }
+          compactEvery: Int = 64, removedCol: String = ""): StreamingQuery =
+    FoldLoop.start(stream, checkpointDir, trigger)(
+      foldBatch(_, _, src, dst, removedCol, iterations, stateDir, edgesDir,
+        outDir, compactEvery))
 }

@@ -6,7 +6,7 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.sources.FileStats
 
-/** Streaming ingestion that lands a PRUNING-READY lake: a foreachBatch
+/** Streaming ingestion that lands a PRUNING-READY lake: a [[FoldLoop]]
   * sink that writes each micro-batch under `outDir/batch=<id>` AND keeps
   * the [[FileStats]] manifest current — so a reader can
   * `FileStats.prunedRead(..., partitioned = true)` against live-ingested
@@ -15,8 +15,8 @@ import graft.sources.FileStats
   * only and unioned onto the prior manifest (the same O(new-data)
   * contract as [[FileStats.update]], driven by the stream).
   *
-  * Same [[VersionedState]] machinery and exactly-once posture as the
-  * other loops ([[FileStats.prunedRead]] pins the basePath, so the
+  * Commits through [[FoldLoop]]'s replace-version mode
+  * ([[FileStats.prunedRead]] pins the basePath, so the
   * `batch` partition column survives pruned reads over the live lake).
   * Replay detail: rewriting `batch=<id>` gives the files
   * NEW uuid names, so the fold also DROPS any prior manifest rows under
@@ -49,19 +49,10 @@ object ManifestLoop {
     val hasFiles = graft.sources.LakeFs
       .listFiles(batchDir, skipHiddenDirs = true)
       .exists(_._1.endsWith(".parquet"))
-    val priorV = VersionedState.priorVersion(stateDir, batchId)
-    val prior = priorV.map(v =>
-      VersionedState.read(spark, stateDir, v)
-        .where(!col("file").contains(s"/batch=$batchId/")))
-    val folded = (prior, hasFiles) match {
-      case (Some(p), true) => Some(p.unionByName(FileStats.collect(spark, batchDir, statsCols)))
-      case (Some(p), false) => Some(p)
-      case (None, true) => Some(FileStats.collect(spark, batchDir, statsCols))
-      case (None, false) => None
-    }
-    folded.foreach { f =>
-      VersionedState.write(f, stateDir, batchId + 1)
-      priorV.foreach(VersionedState.gcBelow(stateDir, _))
+    VersionedState.commit(spark, stateDir, batchId) { state =>
+      val prior = state.map(_.where(!col("file").contains(s"/batch=$batchId/")))
+      lazy val batchStats = FileStats.collect(spark, batchDir, statsCols)
+      if (hasFiles) Some(prior.fold(batchStats)(_.unionByName(batchStats))) else prior
     }
   }
 
@@ -88,13 +79,7 @@ object ManifestLoop {
   def run(stream: DataFrame, outDir: String, statsCols: Seq[String],
           stateDir: String, checkpointDir: String,
           trigger: Option[Trigger] = None,
-          refreshTable: Option[String] = None): StreamingQuery = {
-    val w = stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        foldBatch(batch, batchId, outDir, statsCols, stateDir, refreshTable)
-      }
-    trigger.foreach(w.trigger)
-    w.start()
-  }
+          refreshTable: Option[String] = None): StreamingQuery =
+    FoldLoop.start(stream, checkpointDir, trigger)(
+      foldBatch(_, _, outDir, statsCols, stateDir, refreshTable))
 }

@@ -39,21 +39,14 @@ import graft.ops.DedupOps
   * against the doc are downstream state (retract their cluster edges
   * via [[ClusterLoop]]'s own `removedCol`).
   *
-  * Crash posture: pair output is deterministic Overwrite per batch id;
-  * tombstone appends dedup on read; the index append is guarded by a
-  * physical-presence check, so a checkpoint replay (Spark replays only
-  * the LAST, possibly-uncommitted batch — later batches cannot have
-  * appended yet) that finds the batch already in the index recomputes
-  * IDENTICAL pairs (the old side always excludes the batch's own ids)
-  * and skips the append — content-stable replay, the [[UpsertLoop]]
-  * posture. A partial append (some batch ids
-  * present, some not — impossible under Spark's job-commit atomicity,
-  * possible only with an out-of-band writer) fails loudly rather than
-  * double-counting. Unlike the versioned-state loops there is no
-  * in-loop compaction: tombstone debt is bounded by takedown volume;
-  * clear it offline with
-  * [[graft.ops.DedupOps.compactNearDupIndex]] between runs (a fresh
-  * path swap — the loop then points at the compacted (table, path)). */
+  * Crash posture: [[FoldLoop]]'s guarded-append commit — a replay
+  * that finds the batch already in the index recomputes IDENTICAL pairs
+  * (the old side always excludes the batch's own ids) and skips the
+  * append. Unlike the versioned-state loops there is no in-loop
+  * compaction: tombstone debt is bounded by takedown volume; clear it
+  * offline with [[graft.ops.DedupOps.compactNearDupIndex]] between runs
+  * (a fresh path swap — the loop then points at the compacted (table,
+  * path)). */
 object NearDupLoop {
 
   /** Seed the index from a batch-era corpus before the stream starts
@@ -66,7 +59,7 @@ object NearDupLoop {
       table, path, buckets)
 
   /** One micro-batch — exposed for direct replay tests; [[run]] wires it
-    * into foreachBatch. Emits the batch's verified pairs to
+    * into [[FoldLoop]]. Emits the batch's verified pairs to
     * `outDir/batch=<id>` (Overwrite). */
   private[streaming] def foldBatch(batch: DataFrame, batchId: Long,
                                    idCol: String, textCol: String,
@@ -76,89 +69,52 @@ object NearDupLoop {
                                    k: Int, bands: Int, threshold: Double,
                                    buckets: Int = 32): Unit = {
     val spark = batch.sparkSession
-    val rm =
-      if (removedCol.nonEmpty && batch.columns.contains(removedCol))
-        coalesce(col(removedCol).cast("boolean"), lit(false))
-      else lit(false)
-    val marked = batch.withColumn("__rm", rm).localCheckpoint()
-    val removals = marked.where(col("__rm"))
-      .select(col(idCol).cast("long").as("doc_id"))
-      .where(col("doc_id").isNotNull).distinct().localCheckpoint()
-    // Removed-and-added in one batch resolves to deleted: the addition
-    // is dropped here AND the id is tombstoned below. A previously-
-    // tombstoned id (ANY earlier batch) stays deleted too — its physical
-    // rows still exist, so re-admitting it would wedge the all-or-none
-    // presence guard on a mixed batch and emit pairs for a doc the live
-    // index denies; re-ingest restored content under a NEW id, or
-    // compact the index first (the appendNearDup clash-guard contract).
-    val dead = DedupOps.nearDupTombstones(spark, path)
-      .select(col("doc_id").as("__dead"))
-    val additions = marked.where(!col("__rm")).drop("__rm")
-      .join(removals.select(col("doc_id").as("__rmid")),
-        col(idCol).cast("long") === col("__rmid"), "left_anti")
-      .join(dead, col(idCol).cast("long") === col("__dead"), "left_anti")
-      .localCheckpoint()
-    val Array(nRows, nIds, nDistinct) = additions
-      .agg(count(lit(1)), count(col(idCol)), countDistinct(col(idCol))).head()
-      .toSeq.map(_.asInstanceOf[Long]).toArray
-    require(nRows == nIds,
-      s"NearDupLoop: ${nRows - nIds} NULL id row(s) in batch $batchId")
-    require(nIds == nDistinct,
-      s"NearDupLoop: ${nIds - nDistinct} duplicate id value(s) in batch $batchId")
-
-    val (fs, tkRoot) = graft.sources.LakeFs.resolve(s"${path}_tk")
-    if (!fs.exists(tkRoot)) {
-      // GENESIS: no index yet. Internal pairs only; the batch becomes the
-      // index. A replay lands in the steady-state branch (the index now
-      // exists, every id present → append skipped) and recomputes the
-      // same pairs because the old side excludes the batch's own ids.
-      DedupOps.minhashLshDocs(additions, col(idCol), col(textCol),
-          k, bands, threshold)
-        .write.mode(SaveMode.Overwrite).parquet(s"$outDir/batch=$batchId")
-      // Overwrite: a crash between the pair's two table writes (_bk
-      // lands, _tk doesn't) re-enters genesis on replay — the rewrite
-      // repairs the partial persist with identical content.
-      DedupOps.persistNearDupIndex(
-        DedupOps.buildNearDupIndex(additions, col(idCol), col(textCol), k, bands),
-        table, path, buckets, mode = SaveMode.Overwrite)
-      if (removals.limit(1).count() > 0)
-        DedupOps.deleteFromNearDupIndex(spark, table, path, removals, buckets)
-      return
-    }
-
-    // Retract FIRST: tombstoned docs must not pair from this batch on.
-    if (removals.limit(1).count() > 0)
-      DedupOps.deleteFromNearDupIndex(spark, table, path, removals, buckets)
-
-    val (physKeys, physToks) = DedupOps.loadNearDupIndex(spark, table, path, buckets)
-    val batchIds = additions.select(col(idCol).cast("long").as("doc_id"))
+    val td = FoldLoop.takedowns("NearDupLoop", batch, batchId, idCol, removedCol,
+      "doc_id", DedupOps.nearDupTombstones(spark, path))
+    val additions = td.additions
+    val out = s"$outDir/batch=$batchId"
+    lazy val (physKeys, physToks) = DedupOps.loadNearDupIndex(spark, table, path, buckets)
+    lazy val batchIds = additions.select(col(idCol).cast("long").as("doc_id"))
       .distinct().localCheckpoint()
-    val present = physToks.select(col("doc_id"))
-      .join(batchIds, Seq("doc_id"), "left_semi").count()
-    require(present == 0L || present == nDistinct,
-      s"NearDupLoop: index holds $present of $nDistinct batch-$batchId ids — " +
-        "partial append (out-of-band writer?); rebuild or compact the index")
-    // Re-read tombstones AFTER this batch's retraction so they hide its
-    // takedowns too; the old side also excludes the batch's own ids so
-    // a replay that finds the batch appended still computes
-    // pre-batch-state pairs.
-    val deadNow = broadcast(
-      DedupOps.nearDupTombstones(spark, path).select(col("doc_id")))
-    val oldKeys = physKeys.join(deadNow, Seq("doc_id"), "left_anti")
-      .join(broadcast(batchIds), Seq("doc_id"), "left_anti")
-    val oldToks = physToks.join(deadNow, Seq("doc_id"), "left_anti")
-      .join(broadcast(batchIds), Seq("doc_id"), "left_anti")
-    val (newKeys0, newToks0) = DedupOps.buildNearDupIndex(
-      additions, col(idCol), col(textCol), k, bands)
-    val newKeys = newKeys0.localCheckpoint()
-    val newToks = newToks0.localCheckpoint()
-    DedupOps.nearDupPairsCore(oldKeys, oldToks, newKeys, newToks, threshold)
-      .localCheckpoint()
-      .write.mode(SaveMode.Overwrite).parquet(s"$outDir/batch=$batchId")
-    if (present == 0L) {
-      graft.sources.Bucketed.appendRegistered(newKeys, s"${table}_bk", "bk", buckets)
-      graft.sources.Bucketed.appendRegistered(newToks, s"${table}_tk", "doc_id", buckets)
+    lazy val (newKeys, newToks) = {
+      val (keys, toks) = DedupOps.buildNearDupIndex(
+        additions, col(idCol), col(textCol), k, bands)
+      (keys.localCheckpoint(), toks.localCheckpoint())
     }
+    FoldLoop.appendCommit("NearDupLoop", batchId, td, s"${path}_tk")(
+      retract = DedupOps.deleteFromNearDupIndex(spark, table, path, _, buckets),
+      genesis = () => {
+        // Internal pairs only, from the same kernel as every later batch
+        // (against an empty old side), so a replay that lands in the
+        // steady state rewrites identical output; the batch becomes the
+        // index (a crash between its two table writes re-enters genesis).
+        DedupOps.nearDupPairsCore(newKeys.limit(0), newToks.limit(0),
+            newKeys, newToks, threshold)
+          .write.mode(SaveMode.Overwrite).parquet(out)
+        DedupOps.persistNearDupIndex((newKeys, newToks), table, path, buckets,
+          mode = SaveMode.Overwrite)
+      },
+      present = () => physToks.select(col("doc_id"))
+        .join(batchIds, Seq("doc_id"), "left_semi").count(),
+      emit = fresh => {
+        // Tombstones are read AFTER this batch's retraction so they hide
+        // its takedowns too; the old side also excludes the batch's own
+        // ids so a replay that finds the batch appended still computes
+        // pre-batch-state pairs.
+        val deadNow = broadcast(
+          DedupOps.nearDupTombstones(spark, path).select(col("doc_id")))
+        val oldKeys = physKeys.join(deadNow, Seq("doc_id"), "left_anti")
+          .join(broadcast(batchIds), Seq("doc_id"), "left_anti")
+        val oldToks = physToks.join(deadNow, Seq("doc_id"), "left_anti")
+          .join(broadcast(batchIds), Seq("doc_id"), "left_anti")
+        DedupOps.nearDupPairsCore(oldKeys, oldToks, newKeys, newToks, threshold)
+          .localCheckpoint()
+          .write.mode(SaveMode.Overwrite).parquet(out)
+        if (fresh) {
+          graft.sources.Bucketed.appendRegistered(newKeys, s"${table}_bk", "bk", buckets)
+          graft.sources.Bucketed.appendRegistered(newToks, s"${table}_tk", "doc_id", buckets)
+        }
+      })
   }
 
   /** Start the loop over a document stream carrying `idCol`/`textCol`
@@ -169,14 +125,8 @@ object NearDupLoop {
           removedCol: String, table: String, path: String,
           outDir: String, checkpointDir: String,
           k: Int = 8, bands: Int = 4, threshold: Double = 0.8,
-          buckets: Int = 32, trigger: Option[Trigger] = None): StreamingQuery = {
-    val w = stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        foldBatch(batch, batchId, idCol, textCol, removedCol,
-          table, path, outDir, k, bands, threshold, buckets)
-      }
-    trigger.foreach(w.trigger)
-    w.start()
-  }
+          buckets: Int = 32, trigger: Option[Trigger] = None): StreamingQuery =
+    FoldLoop.start(stream, checkpointDir, trigger)(
+      foldBatch(_, _, idCol, textCol, removedCol, table, path, outDir,
+        k, bands, threshold, buckets))
 }

@@ -24,10 +24,9 @@ import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType
   * Scale shape: per batch, one window partitioned by stream (batch-sized,
   * not corpus-sized — the global window the batch form avoids stays
   * avoided here), one null-safe join against stream-scale state
-  * (rows = distinct streams, typically tiny), one state fold. Same
-  * [[VersionedState]] machinery and exactly-once posture as the other
-  * loops: deterministic Overwrite per batch id for both output
-  * (`outDir/batch=<N>`) and state (`v<N+1>`), GC below the version read.
+  * (rows = distinct streams, typically tiny), one state fold. Output
+  * is deterministic Overwrite per batch id (`outDir/batch=<N>`); state
+  * commits through [[FoldLoop]]'s replace-version mode.
   */
 object PackLoop {
 
@@ -51,44 +50,41 @@ object PackLoop {
       .getOrElse(emptyState(spark))
 
   /** One micro-batch — exposed for direct replay tests; [[run]] wires it
-    * into foreachBatch. */
+    * into [[FoldLoop]]. */
   private[streaming] def packBatch(batch: DataFrame, batchId: Long,
                                    streamCol: String, orderCol: String,
                                    nTok: Column, budget: Int,
                                    stateDir: String, outDir: String): Unit = {
     val spark = batch.sparkSession
-    val priorV = VersionedState.priorVersion(stateDir, batchId)
-    val prior = priorV
-      .map(v => VersionedState.read(spark, stateDir, v, Some(stateSchema)))
-      .getOrElse(emptyState(spark))
+    VersionedState.commit(spark, stateDir, batchId, Some(stateSchema)) { state =>
+      val prior = state.getOrElse(emptyState(spark))
 
-    // Same arithmetic as the batch packer, with the carried base added to
-    // the per-batch cumsum: __start = base + Σ earlier-in-batch n_tok.
-    val w = Window.partitionBy(col("__stream")).orderBy(col(orderCol))
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val b = batch
-      .withColumn("n_tok", nTok.cast("bigint"))
-      .withColumn("__stream", col(streamCol).cast("string"))
-    val packed = b
-      .join(prior.select(col("stream").as("__ps"), col("base").as("__base")),
-        col("__stream") <=> col("__ps"), "left")
-      .withColumn("__start",
-        coalesce(col("__base"), lit(0L)) +
-          coalesce(sum(col("n_tok")).over(w), lit(0L)))
-      .withColumn("pack_id", floor(col("__start") / budget.toDouble).cast("bigint"))
-      .withColumn("pack_off", (col("__start") % budget).cast("bigint"))
-      .withColumn("crosses", col("pack_off") + col("n_tok") > budget)
-      .drop("__ps", "__base", "__start", "__stream")
-    packed.write.mode(SaveMode.Overwrite).parquet(s"$outDir/batch=$batchId")
+      // Same arithmetic as the batch packer, with the carried base added to
+      // the per-batch cumsum: __start = base + Σ earlier-in-batch n_tok.
+      val w = Window.partitionBy(col("__stream")).orderBy(col(orderCol))
+        .rowsBetween(Window.unboundedPreceding, -1)
+      val b = batch
+        .withColumn("n_tok", nTok.cast("bigint"))
+        .withColumn("__stream", col(streamCol).cast("string"))
+      val packed = b
+        .join(prior.select(col("stream").as("__ps"), col("base").as("__base")),
+          col("__stream") <=> col("__ps"), "left")
+        .withColumn("__start",
+          coalesce(col("__base"), lit(0L)) +
+            coalesce(sum(col("n_tok")).over(w), lit(0L)))
+        .withColumn("pack_id", floor(col("__start") / budget.toDouble).cast("bigint"))
+        .withColumn("pack_off", (col("__start") % budget).cast("bigint"))
+        .withColumn("crosses", col("pack_off") + col("n_tok") > budget)
+        .drop("__ps", "__base", "__start", "__stream")
+      packed.write.mode(SaveMode.Overwrite).parquet(s"$outDir/batch=$batchId")
 
-    val batchTotals = b.groupBy(col("__stream").as("__bs"))
-      .agg(sum(col("n_tok")).as("__add"))
-    val folded = prior
-      .join(batchTotals, col("stream") <=> col("__bs"), "full")
-      .select(coalesce(col("stream"), col("__bs")).as("stream"),
-        (coalesce(col("base"), lit(0L)) + coalesce(col("__add"), lit(0L))).as("base"))
-    VersionedState.write(folded, stateDir, batchId + 1)
-    priorV.foreach(VersionedState.gcBelow(stateDir, _))
+      val batchTotals = b.groupBy(col("__stream").as("__bs"))
+        .agg(sum(col("n_tok")).as("__add"))
+      Some(prior
+        .join(batchTotals, col("stream") <=> col("__bs"), "full")
+        .select(coalesce(col("stream"), col("__bs")).as("stream"),
+          (coalesce(col("base"), lit(0L)) + coalesce(col("__add"), lit(0L))).as("base")))
+    }
   }
 
   /** Start the packing loop over `stream` (must carry `streamCol`,
@@ -99,12 +95,7 @@ object PackLoop {
           stateDir: String, outDir: String, checkpointDir: String,
           trigger: Option[Trigger] = None): StreamingQuery = {
     require(budget > 0, s"budget must be positive, got $budget")
-    val w = stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        packBatch(batch, batchId, streamCol, orderCol, nTok, budget, stateDir, outDir)
-      }
-    trigger.foreach(w.trigger)
-    w.start()
+    FoldLoop.start(stream, checkpointDir, trigger)(
+      packBatch(_, _, streamCol, orderCol, nTok, budget, stateDir, outDir))
   }
 }

@@ -34,9 +34,9 @@ import graft.ops.GraphOps
   * measured sweet spot for ~1% changes), and the loop's output after
   * batch b is EXACTLY `pageRankWarm(netted edge set, prior state,
   * iterations)` — deterministic, so crash replay of a batch rewrites
-  * identical bytes (the [[VersionedState]] exactly-once posture shared
-  * by every loop). A converged maintained run agrees with a converged
-  * cold [[GraphOps.pageRank]] over the netted set to within one
+  * identical bytes ([[FoldLoop]]'s replace-version commit). A
+  * converged maintained run agrees with a converged cold
+  * [[GraphOps.pageRank]] over the netted set to within one
   * micro-unit per node — integer quantization leaves a ±1 plateau of
   * stationary points, and different starting vectors may settle on
   * adjacent ones. RankLoopSpec pins the fold equality, the plateau
@@ -74,24 +74,21 @@ object RankLoop {
     SignedEdgeStore.current(spark, edgesDir, "src", "dst")
 
   /** One micro-batch — exposed for direct replay tests; [[run]] wires it
-    * into foreachBatch. `removedCol` (when non-empty) names a boolean
+    * into [[FoldLoop]]. `removedCol` (when non-empty) names a boolean
     * column marking removal events; rows where it is true (and not
     * re-added in the same batch) delete their edge. */
-  private[graft] def foldBatch(batch: DataFrame, batchId: Long,
-                               src: String, dst: String, removedCol: String,
-                               iterations: Int,
-                               stateDir: String, edgesDir: String,
-                               outDir: String, compactEvery: Int = 0,
-                               damping: Double = 0.85): Unit = {
+  private[streaming] def foldBatch(batch: DataFrame, batchId: Long,
+                                   src: String, dst: String, removedCol: String,
+                                   iterations: Int,
+                                   stateDir: String, edgesDir: String,
+                                   outDir: String, compactEvery: Int = 0,
+                                   damping: Double = 0.85): Unit = {
     require(iterations >= 1, s"iterations must be >= 1, got $iterations")
     val spark = batch.sparkSession
-    val rm =
-      if (removedCol.nonEmpty && batch.columns.contains(removedCol))
-        coalesce(col(removedCol).cast("boolean"), lit(false))
-      else lit(false)
     val canon = SignedEdgeStore.canonBatch(
         batch.select(col(src).cast("string").as("src"),
-            col(dst).cast("string").as("dst"), rm.as("__rm"))
+            col(dst).cast("string").as("dst"),
+            FoldLoop.removedFlag(batch, removedCol).as("__rm"))
           .where(col("src").isNotNull && col("dst").isNotNull),
         "src", "dst")
       .localCheckpoint()
@@ -101,17 +98,16 @@ object RankLoop {
     // The netted CURRENT edge set — includes this batch's actions (the
     // dir was just written), so a crash replay nets to the same set.
     val store = currentEdges(spark, edgesDir)
-    val priorV = VersionedState.priorVersion(stateDir, batchId)
-    val ranks = (priorV match {
-      case Some(v) =>
-        val prior = VersionedState.read(spark, stateDir, v, Some(stateSchema))
-        GraphOps.pageRankWarm(store, prior, iterations = iterations, damping = damping)
-      case None =>
-        GraphOps.pageRank(store, iterations = iterations, damping = damping)
-    }).localCheckpoint()
-    ranks.write.mode(SaveMode.Overwrite).parquet(s"$outDir/batch=$batchId")
-    VersionedState.write(ranks.select(col("node"), col("r")), stateDir, batchId + 1)
-    priorV.foreach(VersionedState.gcBelow(stateDir, _))
+    VersionedState.commit(spark, stateDir, batchId, Some(stateSchema)) { prior =>
+      val ranks = (prior match {
+        case Some(p) =>
+          GraphOps.pageRankWarm(store, p, iterations = iterations, damping = damping)
+        case None =>
+          GraphOps.pageRank(store, iterations = iterations, damping = damping)
+      }).localCheckpoint()
+      ranks.write.mode(SaveMode.Overwrite).parquet(s"$outDir/batch=$batchId")
+      Some(ranks.select(col("node"), col("r")))
+    }
   }
 
   /** Start the rank-maintenance loop over an edge-event stream carrying
@@ -124,14 +120,8 @@ object RankLoop {
           stateDir: String, edgesDir: String, outDir: String,
           checkpointDir: String, trigger: Option[Trigger] = None,
           compactEvery: Int = 64, damping: Double = 0.85,
-          removedCol: String = ""): StreamingQuery = {
-    val w = stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        foldBatch(batch, batchId, src, dst, removedCol, iterations,
-          stateDir, edgesDir, outDir, compactEvery, damping)
-      }
-    trigger.foreach(w.trigger)
-    w.start()
-  }
+          removedCol: String = ""): StreamingQuery =
+    FoldLoop.start(stream, checkpointDir, trigger)(
+      foldBatch(_, _, src, dst, removedCol, iterations, stateDir, edgesDir,
+        outDir, compactEvery, damping))
 }

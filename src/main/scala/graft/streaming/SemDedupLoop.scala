@@ -41,15 +41,12 @@ import graft.ops.Ann
   * in one batch resolves to deleted. Honest scope: admission control —
   * verdicts already emitted are downstream state and never retract.
   *
-  * Crash posture: drop output is deterministic Overwrite per batch id;
-  * tombstone appends dedup on read; the state append is guarded by a
-  * physical-presence check, so a checkpoint replay (only the LAST batch
-  * ever replays) that finds the batch already in the state recomputes
-  * IDENTICAL verdicts (the old side always excludes the batch's own
-  * ids) and skips the append — content-stable replay, the
-  * [[NearDupLoop]] posture. A partial append fails loudly. No in-loop
-  * compaction: tombstone debt is takedown-bounded; clear it offline
-  * with [[graft.ops.Ann.compactSemDedupState]] between runs. */
+  * Crash posture: [[FoldLoop]]'s guarded-append commit — a replay
+  * that finds the batch already in the state recomputes IDENTICAL
+  * verdicts (the old side always excludes the batch's own ids) and
+  * skips the append. No in-loop compaction: tombstone debt is
+  * takedown-bounded; clear it offline with
+  * [[graft.ops.Ann.compactSemDedupState]] between runs. */
 object SemDedupLoop {
 
   /** Seed the state from a batch-era corpus before the stream starts
@@ -65,7 +62,7 @@ object SemDedupLoop {
       table, path, buckets)
 
   /** One micro-batch — exposed for direct replay tests; [[run]] wires
-    * it into foreachBatch. Emits the batch's drop ids `(doc_id)` to
+    * it into [[FoldLoop]]. Emits the batch's drop ids `(doc_id)` to
     * `outDir/batch=<id>` (Overwrite). */
   private[streaming] def foldBatch(batch: DataFrame, batchId: Long,
                                    idCol: String, vecCol: String,
@@ -75,101 +72,53 @@ object SemDedupLoop {
                                    outDir: String, threshold: Double,
                                    buckets: Int = 32): Unit = {
     val spark = batch.sparkSession
-    val rm =
-      if (removedCol.nonEmpty && batch.columns.contains(removedCol))
-        coalesce(col(removedCol).cast("boolean"), lit(false))
-      else lit(false)
-    val marked = batch.withColumn("__rm", rm).localCheckpoint()
-    // try_cast throughout: under ANSI a malformed string id would abort
-    // the batch with a raw cast error before the loud guard below runs;
-    // removal events whose id cannot be a long can never match state
-    // rows (the cast guard keeps such ids out of the state), so they net
-    // to no-ops here.
-    val removals = marked.where(col("__rm"))
-      .select(col(idCol).try_cast("long").as("doc_id"))
-      .where(col("doc_id").isNotNull).distinct().localCheckpoint()
-    // Removed-and-added in one batch resolves to deleted: the addition
-    // is dropped here AND the id is tombstoned below. A previously-
-    // tombstoned id (ANY earlier batch) stays deleted too — its physical
-    // state row still exists, so re-admitting it would wedge the
-    // all-or-none presence guard on a mixed batch; re-ingest under a
-    // NEW id or compact the state first (the monotone-id contract means
-    // old ids are never reusable anyway).
-    val dead = Ann.semDedupTombstones(spark, path)
-      .select(col("doc_id").as("__dead"))
-    val additions = marked.where(!col("__rm")).drop("__rm")
-      .join(removals.select(col("doc_id").as("__rmid")),
-        col(idCol).try_cast("long") === col("__rmid"), "left_anti")
-      .join(dead, col(idCol).try_cast("long") === col("__dead"), "left_anti")
+    // The prelude's long-cast guard mirrors appendSemDedup's:
+    // buildSemDedupState silently drops cast-null ids, so non-numeric
+    // string ids would otherwise yield an empty state and no verdicts.
+    val td = FoldLoop.takedowns("SemDedupLoop", batch, batchId, idCol, removedCol,
+      "doc_id", Ann.semDedupTombstones(spark, path))
+    val out = s"$outDir/batch=$batchId"
+    val batchState = Ann.buildSemDedupState(td.additions, centroids, idCol, vecCol)
       .localCheckpoint()
-    val Array(nRows, nIds, nDistinct, nLong) = additions
-      .agg(count(lit(1)), count(col(idCol)), countDistinct(col(idCol)),
-        count(col(idCol).try_cast("long"))).head()
-      .toSeq.map(_.asInstanceOf[Long]).toArray
-    require(nRows == nIds,
-      s"SemDedupLoop: ${nRows - nIds} NULL id row(s) in batch $batchId")
-    require(nIds == nDistinct,
-      s"SemDedupLoop: ${nIds - nDistinct} duplicate id value(s) in batch $batchId")
-    // Mirror appendSemDedup's cast guard: buildSemDedupState silently
-    // drops cast-null ids, so non-numeric string ids would yield an empty
-    // state and no verdicts while passing the guards above.
-    require(nIds == nLong,
-      s"SemDedupLoop: ${nIds - nLong} id value(s) in batch $batchId not " +
-        "castable to long — the persisted state keys on integer ids (the " +
-        "monotone contract); map string ids to a stable long upstream")
-    val batchState = Ann.buildSemDedupState(additions, centroids, idCol, vecCol)
-      .localCheckpoint()
-
-    val (fs, root) = graft.sources.LakeFs.resolve(path)
-    if (!fs.exists(root)) {
-      // GENESIS: no state yet. Internal verdicts only; the batch becomes
-      // the state. A replay lands in the steady-state branch (every id
-      // present → append skipped) and recomputes the same verdicts
-      // because the old side excludes the batch's own ids.
-      Ann.semDedupDropsCore(batchState.limit(0), batchState, threshold)
-        .write.mode(SaveMode.Overwrite).parquet(s"$outDir/batch=$batchId")
-      Ann.persistSemDedupState(batchState, table, path, buckets,
-        mode = SaveMode.Overwrite)
-      if (removals.limit(1).count() > 0)
-        Ann.deleteFromSemDedupState(spark, table, path, removals, buckets)
-      return
-    }
-
-    // Retract FIRST: tombstoned docs must not dominate this batch.
-    if (removals.limit(1).count() > 0)
-      Ann.deleteFromSemDedupState(spark, table, path, removals, buckets)
-
-    val physState = Ann.loadSemDedupState(spark, table, path, buckets)
-    val batchIds = batchState.select(col("doc_id")).distinct().localCheckpoint()
-    val present = physState.select(col("doc_id"))
-      .join(batchIds, Seq("doc_id"), "left_semi").count()
-    require(present == 0L || present == nDistinct,
-      s"SemDedupLoop: state holds $present of $nDistinct batch-$batchId ids — " +
-        "partial append (out-of-band writer?); rebuild or compact the state")
-    if (present == 0L) {
-      // First delivery only: the replay case has the batch inside the
-      // physical max, which the monotone contract tolerates because the
-      // ids are the batch's own (excluded from the probe below).
-      val maxOld = physState.agg(max(col("doc_id"))).head()
-      val minNew = batchIds.agg(min(col("doc_id"))).head()
-      if (!maxOld.isNullAt(0) && !minNew.isNullAt(0))
-        require(minNew.getLong(0) > maxOld.getLong(0),
-          s"SemDedupLoop: batch $batchId min id ${minNew.getLong(0)} <= " +
-            s"state max ${maxOld.getLong(0)} — ids must be monotone across " +
-            "batches (an out-of-order id would retroactively drop an " +
-            "already-emitted verdict)")
-    }
-    // The old side excludes the batch's own ids so a replay that finds
-    // the batch appended still computes pre-batch-state verdicts; live
-    // filter so tombstoned docs stop dominating now.
-    val oldState = physState
-      .join(broadcast(Ann.semDedupTombstones(spark, path)), Seq("doc_id"), "left_anti")
-      .join(broadcast(batchIds), Seq("doc_id"), "left_anti")
-    Ann.semDedupDropsCore(oldState, batchState, threshold)
-      .localCheckpoint()
-      .write.mode(SaveMode.Overwrite).parquet(s"$outDir/batch=$batchId")
-    if (present == 0L)
-      graft.sources.Bucketed.appendRegistered(batchState, table, "cid", buckets)
+    lazy val physState = Ann.loadSemDedupState(spark, table, path, buckets)
+    lazy val batchIds = batchState.select(col("doc_id")).distinct().localCheckpoint()
+    FoldLoop.appendCommit("SemDedupLoop", batchId, td, path)(
+      retract = Ann.deleteFromSemDedupState(spark, table, path, _, buckets),
+      genesis = () => {
+        // Internal verdicts only; the batch becomes the state.
+        Ann.semDedupDropsCore(batchState.limit(0), batchState, threshold)
+          .write.mode(SaveMode.Overwrite).parquet(out)
+        Ann.persistSemDedupState(batchState, table, path, buckets,
+          mode = SaveMode.Overwrite)
+      },
+      present = () => physState.select(col("doc_id"))
+        .join(batchIds, Seq("doc_id"), "left_semi").count(),
+      emit = fresh => {
+        if (fresh) {
+          // First delivery only: the replay case has the batch inside the
+          // physical max, which the monotone contract tolerates because
+          // the ids are the batch's own (excluded from the probe below).
+          val maxOld = physState.agg(max(col("doc_id"))).head()
+          val minNew = batchIds.agg(min(col("doc_id"))).head()
+          if (!maxOld.isNullAt(0) && !minNew.isNullAt(0))
+            require(minNew.getLong(0) > maxOld.getLong(0),
+              s"SemDedupLoop: batch $batchId min id ${minNew.getLong(0)} <= " +
+                s"state max ${maxOld.getLong(0)} — ids must be monotone across " +
+                "batches (an out-of-order id would retroactively drop an " +
+                "already-emitted verdict)")
+        }
+        // The old side excludes the batch's own ids so a replay that
+        // finds the batch appended still computes pre-batch-state
+        // verdicts; live filter so tombstoned docs stop dominating now.
+        val oldState = physState
+          .join(broadcast(Ann.semDedupTombstones(spark, path)), Seq("doc_id"), "left_anti")
+          .join(broadcast(batchIds), Seq("doc_id"), "left_anti")
+        Ann.semDedupDropsCore(oldState, batchState, threshold)
+          .localCheckpoint()
+          .write.mode(SaveMode.Overwrite).parquet(out)
+        if (fresh)
+          graft.sources.Bucketed.appendRegistered(batchState, table, "cid", buckets)
+      })
   }
 
   /** Start the loop over a document stream carrying `idCol`/`vecCol`
@@ -182,14 +131,8 @@ object SemDedupLoop {
           table: String, path: String,
           outDir: String, checkpointDir: String,
           threshold: Double = 0.95,
-          buckets: Int = 32, trigger: Option[Trigger] = None): StreamingQuery = {
-    val w = stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        foldBatch(batch, batchId, idCol, vecCol, removedCol, centroids,
-          table, path, outDir, threshold, buckets)
-      }
-    trigger.foreach(w.trigger)
-    w.start()
-  }
+          buckets: Int = 32, trigger: Option[Trigger] = None): StreamingQuery =
+    FoldLoop.start(stream, checkpointDir, trigger)(
+      foldBatch(_, _, idCol, vecCol, removedCol, centroids, table, path,
+        outDir, threshold, buckets))
 }

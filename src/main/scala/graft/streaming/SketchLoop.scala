@@ -1,19 +1,19 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.ops.SketchOps
 
-/** Continuous distinct-census: a foreachBatch loop that folds each
+/** Continuous distinct-census: a [[FoldLoop]] loop that folds each
   * micro-batch's per-group HLL sketches into a persisted, reaggregatable
   * sketch table ([[SketchOps.hllSketchTable]]'s streaming twin) — the
   * only way a live "distinct users by (day, type)" stays answerable from
   * kilobytes without re-reading the raw stream.
   *
-  * Same versioned-state machinery as [[DedupLoop]] (see
-  * [[VersionedState]]): batch N reads the latest valid state ≤ N, unions
+  * [[FoldLoop]]'s replace-version commit ([[VersionedState]]): batch N
+  * reads the latest valid state ≤ N, unions
   * in its own sketch table via `hll_union_agg`, overwrites `v<N+1>`,
   * GCs what no replay can need. HLL union is register-wise max — a SET
   * operation — so folding a replayed batch is IDEMPOTENT by construction
@@ -50,19 +50,12 @@ object SketchLoop {
   private[streaming] def sketchBatch(batch: DataFrame, batchId: Long,
                                      itemCol: String, groupCols: Seq[String],
                                      stateDir: String): Unit = {
-    val spark = batch.sparkSession
-    val priorV = VersionedState.priorVersion(stateDir, batchId)
     val batchTable = SketchOps.hllSketchTable(batch, itemCol, groupCols: _*)
-    val folded = priorV match {
-      case Some(v) =>
-        VersionedState.read(spark, stateDir, v)
-          .unionByName(batchTable)
-          .groupBy(groupCols.map(col): _*)
-          .agg(hll_union_agg(col("hll")).as("hll"))
-      case None => batchTable
+    VersionedState.commit(batch.sparkSession, stateDir, batchId) { prior =>
+      Some(prior.fold(batchTable)(_.unionByName(batchTable)
+        .groupBy(groupCols.map(col): _*)
+        .agg(hll_union_agg(col("hll")).as("hll"))))
     }
-    VersionedState.write(folded, stateDir, batchId + 1)
-    priorV.foreach(VersionedState.gcBelow(stateDir, _))
   }
 
   /** Start the census loop over `stream` (must carry `itemCol` and
@@ -71,12 +64,7 @@ object SketchLoop {
           stateDir: String, checkpointDir: String,
           trigger: Option[Trigger] = None): StreamingQuery = {
     require(groupCols.nonEmpty, "groupCols must be non-empty (use a literal group for a global census)")
-    val w = stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        sketchBatch(batch, batchId, itemCol, groupCols, stateDir)
-      }
-    trigger.foreach(w.trigger)
-    w.start()
+    FoldLoop.start(stream, checkpointDir, trigger)(
+      sketchBatch(_, _, itemCol, groupCols, stateDir))
   }
 }

@@ -27,8 +27,7 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * unique per group (typically the row id). Ties on `orderCol` resolve to
   * the LOWEST tiebreak value, forever, across restarts.
   *
-  * Same [[VersionedState]] machinery and exactly-once posture as the
-  * other loops. A naive re-fold of the same batch would double rows and
+  * Commits through [[FoldLoop]]'s replace-version mode. A naive re-fold of the same batch would double rows and
   * let one row occupy two of the k slots; the versioned overwrite (replay
   * rewrites `v<N+1>` from the same prior base) is what makes replay safe.
   */
@@ -73,29 +72,17 @@ object TopKLoop {
                                    groupCols: Seq[String], orderCol: String,
                                    tiebreakCol: String, k: Int, descending: Boolean,
                                    stateDir: String): Unit = {
-    val spark = batch.sparkSession
-    val priorV = VersionedState.priorVersion(stateDir, batchId)
     val batchTop = topK(batch, groupCols, orderCol, tiebreakCol, k, descending)
-    val folded = priorV match {
-      case Some(v) => merge(
-        Seq(VersionedState.read(spark, stateDir, v), batchTop),
-        groupCols, orderCol, tiebreakCol, k, descending)
-      case None => batchTop
+    VersionedState.commit(batch.sparkSession, stateDir, batchId) { prior =>
+      Some(prior.fold(batchTop)(p =>
+        merge(Seq(p, batchTop), groupCols, orderCol, tiebreakCol, k, descending)))
     }
-    VersionedState.write(folded, stateDir, batchId + 1)
-    priorV.foreach(VersionedState.gcBelow(stateDir, _))
   }
 
   /** Start the incremental top-k loop over `stream`. */
   def run(stream: DataFrame, groupCols: Seq[String], orderCol: String,
           tiebreakCol: String, k: Int, stateDir: String, checkpointDir: String,
-          descending: Boolean = true, trigger: Option[Trigger] = None): StreamingQuery = {
-    val w = stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        foldBatch(batch, batchId, groupCols, orderCol, tiebreakCol, k, descending, stateDir)
-      }
-    trigger.foreach(w.trigger)
-    w.start()
-  }
+          descending: Boolean = true, trigger: Option[Trigger] = None): StreamingQuery =
+    FoldLoop.start(stream, checkpointDir, trigger)(
+      foldBatch(_, _, groupCols, orderCol, tiebreakCol, k, descending, stateDir))
 }

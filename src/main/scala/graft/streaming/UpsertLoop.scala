@@ -20,8 +20,9 @@ import graft.sources.{FileStats, Maintenance}
   * and within one batch all change rows for a key replace the key's
   * prior rows.
   *
-  * The manifest rides [[VersionedState]] (version = batchId + 1, GC
-  * below the prior version) so every batch's merge plans its candidate
+  * The manifest rides [[FoldLoop]]'s replace-version commit (version =
+  * batchId + 1, GC below the prior version unless `retainHistory`) so
+  * every batch's merge plans its candidate
   * files from stats — never a full table scan. First batch with no
   * seeded state: an existing non-empty table pays a ONE-TIME
   * [[FileStats.collect]] (document the cost at 100 TB: seed from the
@@ -82,30 +83,24 @@ object UpsertLoop {
     }
     val dirHasData = graft.sources.LakeFs
       .listFiles(dir, skipHiddenDirs = true).exists(_._1.endsWith(".parquet"))
-    val priorV = VersionedState.priorVersion(stateDir, batchId)
-    val prior = priorV.map(v => VersionedState.read(spark, stateDir, v))
-    val manifest = (prior, dirHasData) match {
-      case (Some(m), true) if FileStats.isFresh(spark, dir, m) => Some(m)
-      // Stale state (crash inside a prior swap window) or a manifest
-      // predating out-of-band writes: repair with one stats pass.
-      case (_, true) => Some(FileStats.collect(spark, dir, statsCols))
-      case (_, false) => None
-    }
-    val folded = manifest match {
-      case Some(m) =>
-        val (_, m2) = Maintenance.upsert(spark, dir, m, changes, key, deletes,
-          retainHistory = retainHistory, evolveSchema = evolveSchema)
-        m2
-      case None =>
-        // Table genesis: the first batch IS the table (delete markers
-        // can only refer to rows that don't exist — dropped already).
-        changes.write.mode(SaveMode.Overwrite).parquet(dir)
-        FileStats.collect(spark, dir, statsCols)
-    }
-    VersionedState.write(folded, stateDir, batchId + 1)
     // With history retained, every manifest version IS a readable
     // snapshot — keep them all; vacuumHistory owns retention.
-    if (!retainHistory) priorV.foreach(VersionedState.gcBelow(stateDir, _))
+    VersionedState.commit(spark, stateDir, batchId, gc = !retainHistory) { prior =>
+      def upsert(manifest: DataFrame): DataFrame =
+        Maintenance.upsert(spark, dir, manifest, changes, key, deletes,
+          retainHistory = retainHistory, evolveSchema = evolveSchema)._2
+      Some((prior, dirHasData) match {
+        case (Some(m), true) if FileStats.isFresh(spark, dir, m) => upsert(m)
+        // Stale state (crash inside a prior swap window) or a manifest
+        // predating out-of-band writes: repair with one stats pass.
+        case (_, true) => upsert(FileStats.collect(spark, dir, statsCols))
+        case (_, false) =>
+          // Table genesis: the first batch IS the table (delete markers
+          // can only refer to rows that don't exist — dropped already).
+          changes.write.mode(SaveMode.Overwrite).parquet(dir)
+          FileStats.collect(spark, dir, statsCols)
+      })
+    }
   }
 
   /** Start the CDC apply loop over `stream`. `statsCols` are the
@@ -125,13 +120,8 @@ object UpsertLoop {
           evolveSchema: Boolean = false): StreamingQuery = {
     val stats = if (statsCols.nonEmpty) statsCols else Seq(key)
     require(stats.contains(key), s"statsCols must include the merge key `$key`")
-    val w = stream.writeStream
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        foldBatch(batch, batchId, dir, key, stats, stateDir, deleteCol,
-          retainHistory, evolveSchema)
-      }
-    trigger.foreach(w.trigger)
-    w.start()
+    FoldLoop.start(stream, checkpointDir, trigger)(
+      foldBatch(_, _, dir, key, stats, stateDir, deleteCol, retainHistory,
+        evolveSchema))
   }
 }

@@ -7,14 +7,17 @@ import org.apache.spark.sql.types.StructType
 
 import graft.sources.LakeFs
 
-/** The versioned-directory state store shared by the streaming state
-  * loops ([[DedupLoop]], [[SketchLoop]]): `stateDir/v<N>` holds the state
-  * after folding batches `0..N-1`; a version is VALID only with its
-  * `_SUCCESS` marker (a crash mid-write leaves an ignorable partial);
-  * batch N reads the latest valid version ≤ N, overwrites `v<N+1>`
-  * (replay of an uncommitted batch rewrites it), and garbage-collects
-  * versions older than the one it read — which no replay can need, since
-  * a replayed batch id is never below the current one. All listing and
+/** The versioned-directory state store behind [[FoldLoop]]'s
+  * replace-version commit mode, used by the twelve loops whose state is
+  * rewritten per batch (Agg, Classifier, Cluster, Dedup, Distinct,
+  * Label, Manifest, Pack, Rank, Sketch, TopK, Upsert): `stateDir/v<N>`
+  * holds the state after folding batches `0..N-1`; a version is VALID
+  * only with its `_SUCCESS` marker (a crash mid-write leaves an
+  * ignorable partial); batch N reads the latest valid version ≤ N,
+  * overwrites `v<N+1>` (replay of an uncommitted batch rewrites it), and
+  * garbage-collects versions older than the one it read — which no
+  * replay can need, since a replayed batch id is never below the
+  * current one ([[commit]] is that whole step). All listing and
   * deletion goes through the Hadoop `FileSystem` API ([[LakeFs]]), so the
   * state dir may live on the local filesystem, `hdfs://`, or `s3a://` —
   * the same stores the streams themselves checkpoint to. */
@@ -22,7 +25,9 @@ private[streaming] object VersionedState {
 
   def versionPath(stateDir: String, v: Long): String = s"$stateDir/v$v"
 
-  /** Versions with a `_SUCCESS` marker — complete, readable state. */
+  /** Versions with a `_SUCCESS` marker — complete, readable state —
+    * ascending (listing order is the store's: byte order puts `v10`
+    * before `v9`). */
   def validVersions(stateDir: String): Seq[Long] = {
     val (fs, root) = LakeFs.resolve(stateDir)
     if (!fs.exists(root) || !fs.getFileStatus(root).isDirectory) Nil
@@ -32,7 +37,7 @@ private[streaming] object VersionedState {
           n.startsWith("v") && n.drop(1).nonEmpty && n.drop(1).forall(_.isDigit) &&
           fs.exists(new Path(st.getPath, "_SUCCESS"))) Some(n.drop(1).toLong)
       else None
-    }
+    }.sorted
   }
 
   /** Latest valid version at or below `maxVersion` (the one batch
@@ -66,6 +71,22 @@ private[streaming] object VersionedState {
   def latest(spark: SparkSession, stateDir: String,
              schema: Option[StructType] = None): Option[DataFrame] =
     validVersions(stateDir).maxOption.map(read(spark, stateDir, _, schema))
+
+  /** The replace-version commit of batch `batchId`: hand the latest
+    * valid version ≤ `batchId` (None before any state or seed exists) to
+    * `next`, overwrite `v<batchId+1>` with what it returns, then GC the
+    * versions below the one read (skipped with `gc = false`, for loops
+    * whose old versions are readable history). `next` may write the
+    * batch's own outputs first; returning None writes and GCs nothing. */
+  def commit(spark: SparkSession, stateDir: String, batchId: Long,
+             schema: Option[StructType] = None, gc: Boolean = true)
+            (next: Option[DataFrame] => Option[DataFrame]): Unit = {
+    val priorV = priorVersion(stateDir, batchId)
+    next(priorV.map(read(spark, stateDir, _, schema))).foreach { df =>
+      write(df, stateDir, batchId + 1)
+      if (gc) priorV.foreach(gcBelow(stateDir, _))
+    }
+  }
 
   /** Delete valid versions strictly below `keepFrom`. */
   def gcBelow(stateDir: String, keepFrom: Long): Unit =

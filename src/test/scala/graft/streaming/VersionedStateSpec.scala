@@ -64,4 +64,14 @@ class VersionedStateSpec extends AnyFunSuite {
     fs.create(new org.apache.hadoop.fs.Path(root, "v9")).close() // a FILE, not a dir
     assert(VersionedState.validVersions(dir) == Seq(0L))
   }
+
+  test("validVersions is ascending whatever order the store lists v0..v11 in") {
+    val dir = tmp("order")
+    val (fs, root) = graft.sources.LakeFs.resolve(dir)
+    Seq(11L, 9L, 10L, 2L, 0L, 7L, 1L, 8L, 5L, 3L, 6L, 4L).foreach { v =>
+      fs.create(new org.apache.hadoop.fs.Path(root, s"v$v/_SUCCESS")).close()
+    }
+    assert(VersionedState.validVersions(dir) == (0L to 11L))
+    assert(VersionedState.priorVersion(dir, 10L).contains(10L))
+  }
 }
