@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Round-15 optimization experiment harness (diagnosis tooling, not part of
@@ -16,23 +15,14 @@ object Exp15 {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = graft.engine.Graft.cpus
 
-    val b = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName(s"graft-exp15-$mode")
-      .withExtensions(new graft.functions.GraftExtensions()(_))
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-    graft.engine.Graft.sessionConfs.foreach { case (k, v) => b.config(k, v) }
+    val spark = graft.engine.Graft.session(s"graft-exp15-$mode")
     if (mode.contains("cbo") || mode == "all") {
-      b.config("spark.sql.cbo.enabled", "true")
+      spark.conf.set("spark.sql.cbo.enabled", "true")
       if (!mode.contains("nr"))
-        b.config("spark.sql.cbo.joinReorder.enabled", "true")
+        spark.conf.set("spark.sql.cbo.joinReorder.enabled", "true")
     }
     if (mode.contains("shj") || mode == "all")
-      b.config("spark.sql.join.preferSortMergeJoin", "false")
-    val spark = b.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.engine.Graft.configure(spark)
+      spark.conf.set("spark.sql.join.preferSortMergeJoin", "false")
 
     val fan = mode.contains("fan") || mode == "all"
     val analyzed = mode.contains("cbo") || mode.contains("stats") || mode == "all"
