@@ -6,8 +6,8 @@ import org.apache.spark.sql.SparkSession
 
 /** Dump `.explain("formatted")` of every bench entry (headline suite +
   * extras) to `<outDir>/<name>_<tag>.txt` — the optimization-round evidence
-  * artifact (plans/rNN/). Diagnosis tooling like PlanProbe, not part of the
-  * driver contract.
+  * artifact (plans/rNN/). Diagnosis tooling like [[XProbe]], not part of
+  * the driver contract.
   *
   * Usage: runMain graft.PlanDump <outDir> <tag> [namePrefix,...]
   */

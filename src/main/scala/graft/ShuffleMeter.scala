@@ -5,11 +5,11 @@ import java.util.concurrent.atomic.AtomicLong
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 
-/** Probe-side shuffle-volume meter: accumulates shuffle read/write bytes
-  * across all tasks while attached. Local wall-clock hides shuffled-VOLUME
-  * asymmetry (memory-speed exchanges), so maintenance-fold probes
-  * (TriIncProbe) report bytes next to seconds — the
-  * quantity that becomes the bottleneck on a network-bound cluster. */
+/** [[XProbe]]'s shuffle-volume meter: accumulates shuffle read/write
+  * bytes across all tasks while attached. Local wall-clock hides
+  * shuffled-VOLUME asymmetry (memory-speed exchanges), so XProbe reports
+  * bytes next to seconds — the quantity that becomes the bottleneck on a
+  * network-bound cluster. */
 class ShuffleMeter extends SparkListener {
   val read = new AtomicLong
   val write = new AtomicLong

@@ -1,36 +1,70 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.QueryPlanningTracker
 
-/** Round-15 probe: run selected Bench extras in isolation with the bench's
-  * warm + median-of-N protocol plus a shuffle meter — per-extra before/after
-  * evidence without the full suite. Diagnosis tooling, not driver contract.
+/** The ad-hoc diagnosis driver: run selected bench entries — headline
+  * [[Bench.suite]] queries or [[Bench.extras]] — in isolation with the
+  * bench's warm + median-of-N protocol. Per name it prints the median
+  * wall seconds, the median shuffle read/write MB ([[ShuffleMeter]]) and
+  * the median analysis / optimization / planning ms that Spark's own
+  * `QueryPlanningTracker` recorded for each timed run. The phases are
+  * those of the entry's final DataFrame: actions an entry runs while
+  * building it (an iterative loop's checkpoints) are in the seconds and
+  * the shuffle bytes but not in the phase times. Diagnosis tooling, not
+  * driver contract; [[PlanDump]] is its plan-text twin.
   *
   * Usage: runMain graft.XProbe <name[,name...]> [samples]
+  * (the scale directory comes from SPARK_GRAFT_SF_DIR, as for [[Bench]])
   */
 object XProbe {
+  private val phases = Seq(QueryPlanningTracker.ANALYSIS,
+    QueryPlanningTracker.OPTIMIZATION, QueryPlanningTracker.PLANNING)
+
   def main(args: Array[String]): Unit = {
-    val names = args(0).split(",").toSeq
-    val samples = if (args.length > 1) args(1).toInt else 5
+    val suite = Bench.suite.toMap
+    // Every extra is pinned in extraReference, so its keys name the
+    // extras without building their fixtures (which needs a session).
+    val extraNames = Bench.extraReference.keySet
+    val names = args.headOption.toSeq.flatMap(_.split(",")).filter(_.nonEmpty)
+    val samples = args.lift(1).fold(5)(_.toIntOption.getOrElse(0))
+    val unknown = names.filterNot(n => suite.contains(n) || extraNames(n))
+    if (names.isEmpty || unknown.nonEmpty || args.length > 2 || samples < 1) {
+      if (unknown.nonEmpty) System.err.println(s"unknown name(s): ${unknown.mkString(",")}")
+      System.err.println("usage: runMain graft.XProbe <name[,name...]> [samples >= 1]")
+      System.err.println(s"suite: ${Bench.suite.map(_._1).mkString(",")}")
+      System.err.println(s"extras: ${extraNames.toSeq.sorted.mkString(",")}")
+      sys.exit(2)
+    }
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val spark: SparkSession = graft.engine.Graft.session("graft-xprobe")
     graft.sources.Catalog.register(spark, sfDir)
-    val extras = Bench.extras(spark).toMap
+    lazy val extras = Bench.extras(spark).toMap
     def median(xs: Seq[Double]): Double = xs.sorted.apply(xs.size / 2)
     names.foreach { name =>
-      val thunk = extras(name)
-      println(s"XPROBE $name first-run rows: " +
-        thunk().collect().map(_.toString).mkString("; ")) // warm + result echo
+      val thunk: () => DataFrame = suite.get(name) match {
+        case Some(sql) => () => spark.sql(sql)
+        case None => extras(name)
+      }
+      val rows = thunk().collect() // warm + result echo
+      println(s"XPROBE $name first-run ${rows.length} rows: " +
+        rows.take(5).map(_.toString).mkString("; "))
       val timed = Seq.fill(samples) {
         ShuffleMeter.measure(spark) {
           val t0 = System.nanoTime()
-          thunk().collect()
-          (System.nanoTime() - t0) / 1e9
+          val df = thunk()
+          df.collect()
+          val wall = (System.nanoTime() - t0) / 1e9
+          val tracked = df.queryExecution.tracker.phases
+          (wall, phases.map(p => tracked(p).durationMs.toDouble))
         }
       }
-      val (ts, rds, wrs) = (timed.map(_._1), timed.map(_._2), timed.map(_._3))
+      val (runs, reads, writes) = timed.unzip3
+      val ts = runs.map(_._1)
+      val phaseMs = phases.indices.map(i => f"${phases(i)} ${median(runs.map(_._2(i)))}%.0f ms")
       println(f"XPROBE $name median ${median(ts)}%.3f s (samples ${ts.map(t => f"$t%.3f").mkString(",")}) " +
-        f"shuffle read ${median(rds)}%.1f MB written ${median(wrs)}%.1f MB")
+        f"shuffle read ${median(reads)}%.1f MB written ${median(writes)}%.1f MB " +
+        phaseMs.mkString(" "))
     }
     spark.stop()
   }

@@ -311,17 +311,6 @@ object Pipelines {
     }
   }
 
-  /** Span-level exact dedup decisions (q92 semantics): boilerplate shared
-    * INSIDE otherwise-distinct documents, at `spanWords` granularity.
-    * With `salts` and `autoHotMinCount`, corpus-wide boilerplate spans are
-    * auto-detected (count-min heavy hitters) and hot-key-salted — the
-    * measured skew mitigation with no caller-supplied hot list. */
-  def spanDuplicates(docs: DataFrame, id: Column, text: Column,
-                     spanWords: Int = 20, salts: Int = 0,
-                     hotSpans: Seq[String] = Nil,
-                     autoHotMinCount: Long = 0L): DataFrame =
-    DedupOps.spanDedup(docs, id, text, spanWords, salts, hotSpans, autoHotMinCount)
-
   /** REAL image decode → pooled-RGB feature vectors (JDK ImageIO — no
     * external codec libraries). Undecodable assets are row-absent; audit
     * them by anti-joining asset_id. */
@@ -443,7 +432,8 @@ object Pipelines {
     * edges — extracted DIRECTLY from the raw URL rather than through
     * the full canonicalizer, because path/query normalization cannot
     * change the host and the canonicalizer's expression tree is
-    * measured poison inside a reused projection (LinkCostProbe: the
+    * measured poison inside a reused projection (round-12 web-graph
+    * extraction probe, SURVEY §6: the
     * canonical-tree form of this projection ran 11.7 s against 0.45 s
     * for the direct extraction at sf0.1 — Column reuse duplicates
     * subtrees symbolically, and wrapping the ~10²-node canon tree in
@@ -571,9 +561,9 @@ object Pipelines {
     * (doc, label) cluster map. Appends merge clusters, removals SPLIT
     * them — the event the append-only warm start cannot absorb — and
     * each batch recomputes only the affected components' cone
-    * ([[graft.ops.DedupOps.connectedComponentsInc]]'s core; CcIncProbe:
-    * 0.03–0.04× the cold recompute's shuffled bytes). Read the live
-    * map any time with [[graft.streaming.ClusterLoop.latestLabels]]. */
+    * ([[graft.ops.DedupOps.connectedComponentsInc]]'s core; round 13,
+    * SURVEY §6: 0.03–0.04× the cold recompute's shuffled bytes). Read
+    * the live map any time with [[graft.streaming.ClusterLoop.latestLabels]]. */
   def streamClusterMap(pairEvents: DataFrame, d1: String, d2: String,
                        removedCol: String, stateDir: String, edgesDir: String,
                        outDir: String, checkpointDir: String,
@@ -1012,19 +1002,6 @@ object Pipelines {
       classifierScores(docs, id, text, model)
         .where(col("score") >= floor).select(col("doc_id").as("__keep")),
       id === col("__keep"), "left_semi")
-
-  /** CCNet/Gopher-style LM quality scores in one call: train the char
-    * n-gram model over `reference` (usually a trusted slice of the
-    * corpus) and score every `docs` row under it — (doc_id, score,
-    * oov_rate, n_grams), higher score = more in-distribution. Gibberish
-    * and wrong-charset text fall to the OOV floor. Train the model once
-    * and reuse via [[graft.ops.TextOps.ngramScore]] when scoring many
-    * batches. */
-  def lmQualityScores(docs: DataFrame, id: Column, text: Column,
-                      reference: DataFrame, refText: Column,
-                      n: Int = 3): DataFrame =
-    TextOps.ngramScore(docs, id, text,
-      TextOps.ngramModel(reference, refText, n), n)
 
   /** Corpus docs sharing any word 3-gram with a held-out eval set — EXACT
     * (Bloom prefilter + exact semi join; see SketchOps.bloomSemiJoin). The

@@ -22,7 +22,8 @@ import org.apache.spark.sql.types.{ArrayType, ByteType, DataType, DoubleType, Fl
   * allocating an intermediate array — no per-element lambda dispatch, no
   * allocation, whole-stage codegen friendly. The int8 arm exists because
   * the COARSE rank of the quantized search paths scores every candidate
-  * pair — AnnCostProbe (SURVEY §6) measured the coarse-cut stage at
+  * pair — the round-10 ANN fixed-cost breakdown (SURVEY §6) measured the
+  * coarse-cut stage at
   * 4.4× (1.06 s → 0.24 s of rank work) and the whole fused IVF probe at
   * 2.3s → 1.36s once the codes stopped paying the three-pass HOF. */
 case class CosineSimilarity(left: Expression, right: Expression)
@@ -160,7 +161,8 @@ case class DotProduct(left: Expression, right: Expression)
   * either array is empty (the HOF's `when(bound < 1, 0.0)` guard) and
   * NULL when a consumed element is null. Exists because the interpreted
   * HOF fold was the measured cost of LSH bucket keys
-  * (graft.NearDupCostProbe): one fused codegen loop per (vector, plane)
+  * (round-13 embed-near-dup cost decomposition, SURVEY §6): one fused
+  * codegen loop per (vector, plane)
   * instead of per-element Catalyst eval + a materialized sequence
   * array. */
 case class DotPrefix(left: Expression, right: Expression)

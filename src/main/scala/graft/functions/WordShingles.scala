@@ -18,7 +18,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * shingle is a byte-range SUBSTRING of the input, so the pass walks
   * the UTF-8 bytes once for token boundaries (0x20 never occurs inside
   * a multi-byte sequence) and emits zero-copy slices — no token array,
-  * no per-shingle slice/concat allocations. AnnCostProbe discipline:
+  * no per-shingle slice/concat allocations. Round-10 shingle-generation
+  * fix (SURVEY §6):
   * the bloom-semijoin bench extra was 100% shingle-generation-bound
   * (1.8 s of HOF churn over a 0.22 s split).
   */

@@ -309,8 +309,8 @@ object Ann {
     // 6dp-rounded sign contract is untouched (LocalVerify q60 gate;
     // FunctionsSpec pins native ≡ HOF pairwise). The HOF form paid
     // per-element Catalyst eval + a materialized sequence array per
-    // (vector, plane) — the measured cost of LSH bucket keys
-    // (graft.NearDupCostProbe).
+    // (vector, plane) — the measured cost of LSH bucket keys (round-13
+    // embed-near-dup cost decomposition, SURVEY §6).
     call_function("dot_prefix", vec,
       lit(planeWeights(j, dims).map(_.toFloat)))
 
@@ -880,26 +880,6 @@ object Ann {
       .withColumn("rn", row_number().over(wCoarse))
       .where(col("rn") <= overfetch * k)
       .select("p_id", "g_id")
-  }
-
-  /** Diagnostic prefixes of the probe path for [[graft.AnnCostProbe]]:
-    * stage 1 = cell pick, 2 = + candidate join (pre-cut), 3 = + coarse
-    * cut. Not part of the public contract. */
-  private[graft] def probeStage(probes: DataFrame, index: DataFrame,
-                                centroids: DataFrame, k: Int,
-                                nprobe: Int = 2, overfetch: Int = 4,
-                                id: String = "vec_id", vec: String = "embedding",
-                                stage: Int): DataFrame = {
-    val p = probes.select(col(id).as("p_id"), col(vec).as("p_emb"))
-    val cents = collectedCentroids(centroids, id, vec)
-    stage match {
-      case 1 => probeCells(p, centroids, cents, nprobe, id, vec)
-      case 2 =>
-        probeCells(p, centroids, cents, nprobe, id, vec)
-          .join(index.select(col("g_id"), col("cid"), col("g_q")), "cid")
-          .withColumn("cs", round(VectorOps.cosineInt8Native(col("p_q"), col("g_q")), 6))
-      case _ => probeCand(p, index, centroids, cents, k, nprobe, overfetch, id, vec)
-    }
   }
 
   /** Element-wise per-cluster centroid (the k-means recenter / IVF centroid

@@ -76,8 +76,9 @@ object DedupOps {
     * rows spread over `salts` reduce buckets — decisions are
     * order-independent (min is associative), results identical. With
     * `hotSpans` also given, ONLY those span texts salt and the cold
-    * majority joins plain: `graft.SkewProbe` measured that full salting
-    * replicates the whole keeper and loses 5× exactly in the
+    * majority joins plain: the round-6 skew probe (SURVEY §6) measured
+    * that full salting replicates the whole keeper and loses 5× exactly
+    * in the
     * huge-keeper regime that needs salting at all — feed the hot list
     * from [[SketchOps]]' count-min heavy hitters over the span relation,
     * or set `autoHotMinCount` and this does exactly that itself: spans
@@ -314,7 +315,8 @@ object DedupOps {
     * When the input is a DOC table (id, text) rather than an existing
     * token relation, use [[minhashLshDocs]]: output-identical, but
     * signatures become a projection and the verify a merge walk — ~3× this
-    * pipeline on the dense bench slice (MinhashCostProbe, round 12). */
+    * pipeline on the dense bench slice (round-12 MinHash-LSH
+    * decomposition, SURVEY §6). */
   def minhashLsh(tokens: DataFrame, k: Int, bands: Int, threshold: Double): DataFrame = {
     // bands > k would give 0 rows per band — every doc in ONE bucket, the
     // all-pairs quadratic blowup this operator exists to avoid; a k not
@@ -331,7 +333,7 @@ object DedupOps {
     * signature's 48-bit minima are the numeric values of the hex-string
     * minima, a bijection, so band co-habitation is unchanged; same exact
     * Jaccard math and 4dp rounding), but restructured around per-row
-    * native expressions (round 12, MinhashCostProbe):
+    * native expressions (round-12 MinHash-LSH decomposition, SURVEY §6):
     *
     *  - signatures are a PROJECTION (`minhash_sig` over the token array) —
     *    no token explode, no k-way min aggregation, no signature shuffle;

@@ -86,7 +86,8 @@ object GraphOps {
     * seeded uniform, stale mass on grown graphs) decays geometrically at
     * rate d. A small append moves the fixpoint little, so the prior
     * ranks start near it and re-convergence takes a fraction of the
-    * cold rounds (measured, `graft.PrIncProbe` at 1M edges + 1% append
+    * cold rounds (measured in the round-10 incremental-PageRank probe,
+    * SURVEY §6, at 1M edges + 1% append
     * + a new hub: ONE warm round lands at L1 0.022 of total mass from
     * the fixpoint — already past cold's EIGHT rounds at 0.051, with
     * cold-1 at 0.68; per-round cost is identical, so warm maintenance
@@ -160,7 +161,8 @@ object GraphOps {
     // byte per round; above it, the shuffle-join shape is unchanged and
     // scales to any graph. Pure bigint arithmetic, so the plan change
     // cannot move a single output bit (q169/q170/q182 stay hash-exact;
-    // GraphProbe 1M edges/100k nodes at 10 iterations, same session:
+    // OPTIMIZATION_r15.md §7, 1M edges/100k nodes at 10 iterations,
+    // same session:
     // shuffle 50.8 → 17.4 MB — the ~3.6 MB/iteration edge re-shuffle
     // drops to ~0.2 — and 8.0 → 5.8 s wall; identical mass).
     val small = nn <= loopBroadcastMaxNodes
@@ -172,8 +174,9 @@ object GraphOps {
     // Checkpoint EVERY round, not every few: the dangling-mass term is a
     // per-iteration ACTION, and over an un-checkpointed rank it would
     // re-execute every round since the last cut — quadratic cost inside
-    // the window (GraphProbe measured 0.24 s/iter right after a cut
-    // rising to 1.5 s/iter late in a 4-round window). The checkpoint is
+    // the window (the round-8 graph probe, SURVEY §6, measured
+    // 0.24 s/iter right after a cut rising to 1.5 s/iter late in a
+    // 4-round window). The checkpoint is
     // node-scale, the cheapest table in the loop.
     val uniform = round(lit(scale.toDouble) / lit(nn)).cast("bigint")
     var rank = (prior match {
@@ -368,13 +371,15 @@ object GraphOps {
     // single checkpoint at the end — per-half-step checkpoints were a
     // driver job each. The in-loop frames are checkpointed/derived RDDs
     // whose stats the planner cannot see (and under AQE a checkpoint
-    // does not even keep its physical partitioning — CoPartProbe: a
+    // does not even keep its physical partitioning — OPTIMIZATION_r15.md
+    // §5: a
     // co-partitioned variant re-exchanged every round and shuffled MORE,
     // 51.8 vs 41.6 MB), so the broadcast is an explicit size-GATED
     // choice, not a hint-always: above `loopBroadcastMaxNodes` nodes it
     // falls back to the previous shuffle-join + checkpoint-per-half-step
     // shape, which scales to any node count. Measured on the bench graph
-    // (240k edges, 21k nodes, 3 iterations, HitsOptProbe/XProbe medians):
+    // (240k edges, 21k nodes, 3 iterations, XProbe medians,
+    // OPTIMIZATION_r15.md §5):
     // 41.6 → 9.7 MB shuffled (the rest is the loop-invariant edge
     // distinct + node-scale agg exchanges) and 2.83 → 2.22 s.
     val small = ns <= loopBroadcastMaxNodes

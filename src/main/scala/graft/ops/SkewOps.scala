@@ -118,11 +118,12 @@ object SkewOps {
     * actually scales when the dim side is itself too large to broadcast
     * (the only regime with a skew problem at all: a broadcastable dim
     * never shuffles, so its hot keys are handled map-side — measured in
-    * `graft.SkewProbe`). Full salting replicates the WHOLE dim `salts`×,
-    * which loses exactly when the dim is big; here only the `hotKeys`
-    * rows are replicated (|hot|·salts extra rows — constant-ish) and the
-    * cold majority joins plain, so the straggler task disappears at the
-    * cost of nothing measurable. Hot keys come cheap from
+    * the round-6 skew probe, SURVEY §6). Full salting replicates the
+    * WHOLE dim `salts`×, which loses exactly when the dim is big; here
+    * only the `hotKeys` rows are replicated (|hot|·salts extra rows —
+    * constant-ish) and the cold majority joins plain, so the straggler
+    * task disappears at the cost of nothing measurable. Hot keys come
+    * cheap from
     * [[SketchOps]]' count-min heavy hitters or any frequency pass.
     * Result is row-identical to the plain inner join. */
   def saltedJoinHot(fact: DataFrame, dim: DataFrame, key: String, salts: Int,

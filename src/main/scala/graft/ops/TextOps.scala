@@ -204,8 +204,9 @@ object TextOps {
     * projection it is fine (q178, the URL-dedup key); WRAPPING it in
     * further expressions that reference it more than once multiplies
     * the tree past what codegen subexpression elimination amortizes —
-    * LinkCostProbe measured 11.7 s vs 0.45 s for a host-extraction
-    * projection built this way vs directly. If you only need a PIECE of
+    * the round-12 web-graph extraction probe (SURVEY §6) measured
+    * 11.7 s vs 0.45 s for a host-extraction projection built this way
+    * vs directly. If you only need a PIECE of
     * the canonical form (the host, the scheme), extract that piece from
     * the raw URL with the same fold rules instead (see
     * [[graft.api.Pipelines.linkGraph]]). */

@@ -94,7 +94,8 @@ object VectorOps {
     * order, tinyint→double element promotion, NaN on zero norms (0/0; a
     * nonzero/0 cannot occur) — in ONE fused codegen loop. The coarse rank
     * of every quantized search path scores candidate×code pairs with
-    * this; the three-pass HOF was its measured hot spot (AnnCostProbe:
+    * this; the three-pass HOF was its measured hot spot (round-10 ANN
+    * fixed-cost breakdown, SURVEY §6:
     * coarse-cut rank work 1.06 s → 0.24 s, whole fused IVF probe
     * 2.3 s → 1.36 s). Requires a Graft session (the extension registers
     * `cosine_sim`). */

@@ -354,8 +354,9 @@ object Warc {
     "&(amp|lt|gt|quot|apos|nbsp|#x[0-9a-fA-F]{1,6}|#[0-9]{1,7});".r
   // Hoisted patterns for the per-record hot path: `String.replaceAll` /
   // inline `.r` re-compile their pattern on EVERY call, and the
-  // whitespace collapse below runs once per LINE — measured by
-  // WarcCostProbe as a real slice of crawl-ingest cost at sf0.1.
+  // whitespace collapse below runs once per LINE — measured as a real
+  // slice of crawl-ingest cost at sf0.1 (round-13 WARC-ingest cost
+  // decomposition, SURVEY §6).
   private val sourceWsRun = java.util.regex.Pattern.compile("[\\r\\n\\t]+")
   private val blockTags = java.util.regex.Pattern.compile(
     "(?i)<(br|/p|/div|/h[1-6]|/li|/tr|/title)\\b[^>]*>")
@@ -373,7 +374,8 @@ object Warc {
     * stream have no comments, and many no entities), while the three
     * structural passes (source-ws collapse + block-tag newlines,
     * generic tag strip, line normalize) are fused manual scans —
-    * WarcCostProbe measured the regex forms of those passes as the
+    * the round-13 WARC-ingest decomposition (SURVEY §6) measured the
+    * regex forms of those passes as the
     * bulk of per-record HTML cost, and crawl ingest pays this on every
     * page. [[htmlToTextReference]] keeps the original regex cascade;
     * WarcSpec pins output identity on randomized adversarial markup. */
@@ -671,23 +673,6 @@ object Warc {
     sb.toString
   }
 
-  /** Probe surface (WarcCostProbe): the individual [[htmlToText]] passes,
-    * each as input→output so per-pass cost is measurable in isolation
-    * (regex reference forms suffixed _re). */
-  private[graft] def textPasses: Seq[(String, String => String)] = Seq(
-    "p_script" -> (s => scriptStyle.replaceAllIn(s, " ")),
-    "p_comment" -> (s => comments.replaceAllIn(s, " ")),
-    "p_srcws_re" -> (s => sourceWsRun.matcher(s).replaceAll(" ")),
-    "p_block_re" -> (s => blockTags.matcher(s).replaceAll("\n")),
-    "p_tags_re" -> (s => tags.replaceAllIn(s, " ")),
-    "p_entity" -> (s => decodeEntities(s)),
-    "p_lines_re" -> (s => s.split('\n').iterator
-      .map(l => lineWsRun.matcher(l).replaceAll(" ").trim)
-      .filter(_.nonEmpty).mkString("\n")),
-    "p_markup" -> (s => stripMarkup(s)),
-    "p_tags" -> (s => stripTags(s)),
-    "p_lines" -> (s => collapseLines(s)))
-
   /** Single-pass HTML entity decode (the common named set plus all
     * numeric forms); control/surrogate/invalid codepoints become a
     * space. Shared by [[htmlToText]] and href extraction — `&amp;` is
@@ -814,7 +799,8 @@ object Warc {
     * parallelism equals file count; an ingest tail, a small crawl
     * segment, or a local test with fewer files than cores would parse
     * serially while every other core idles — and parse+extract is
-    * 5–10× the decompress cost (WarcCostProbe), so the idle cores are
+    * 5–10× the decompress cost (round 13, SURVEY §6), so the idle
+    * cores are
     * the bottleneck. Bounded so it cannot hurt at scale: only inputs
     * whose optimizer size estimate is under 64 MB × defaultParallelism
     * redistribute; a real crawl volume (files ≫ cores, TBs of payload)

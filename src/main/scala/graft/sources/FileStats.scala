@@ -261,8 +261,8 @@ object FileStats {
   /** Disk-side set fingerprint: (file count, order-independent XOR of the
     * 60-bit md5 path prefixes). One Hadoop listing — driver-side
     * O(files), exactly what Spark's own file index materializes for any
-    * scan. Exposed for [[graft.ManifestProbe]]. */
-  private[graft] def probeDiskFingerprint(dir: String): (Int, Long) = {
+    * scan. */
+  private def probeDiskFingerprint(dir: String): (Int, Long) = {
     val onDisk = diskPaths(dir)
     (onDisk.size, onDisk.foldLeft(0L)(_ ^ pathHash(_)))
   }
@@ -285,9 +285,9 @@ object FileStats {
   /** Steady-state memo #2 — the full-directory read schema per
     * (normalized dir, disk fingerprint): per-probe `spark.read.parquet`
     * schema inference is a footer read + file-index build (~0.1 s of
-    * every probe, measured by [[graft.ManifestProbe]]); the schema is a
-    * pure function of the file set, so the disk XOR in the key
-    * invalidates it on any append/rewrite. Inference uses the FULL
+    * every probe, round-8 manifest-probe breakdown, SURVEY §6); the
+    * schema is a pure function of the file set, so the disk XOR in the
+    * key invalidates it on any append/rewrite. Inference uses the FULL
     * directory (not the survivors), so partition-column TYPES are
     * inferred from all partition values — bit-identical to what the
     * unpruned scan would produce. */
@@ -347,9 +347,8 @@ object FileStats {
   }
 
   /** Manifest-side half of the probe: ONE aggregation returning
-    * (rows, distinct paths, path-set XOR, sorted surviving files).
-    * Exposed for [[graft.ManifestProbe]]. */
-  private[graft] def probeManifestAgg(manifest: DataFrame,
+    * (rows, distinct paths, path-set XOR, sorted surviving files). */
+  private def probeManifestAgg(manifest: DataFrame,
       preds: Seq[FilePredicate]): (Long, Long, Long, Seq[String]) = {
     val row = manifest
       .select(col("file"), survives(preds).as("keep"),
@@ -365,11 +364,12 @@ object FileStats {
 
   /** `trustManifest = true` skips the per-probe directory re-listing and
     * staleness check. The listing is the probe's dominant FIXED cost and
-    * grows with file count (LakeScaleProbe, local fs, SURVEY §6: 1.0 s
-    * at 16k files, 4.2 s at 131k; the verified range probe runs 1.5 s /
-    * 9.6 s at those counts vs 0.8 s / 4.4 s trusted — an object-store
-    * LIST at ~1M files is minutes and money) while guarding only against
-    * OUT-OF-BAND writes; a manifest maintained transactionally
+    * grows with file count (round-10 many-files regime, local fs,
+    * SURVEY §6: 1.0 s at 16k files, 4.2 s at 131k; the verified range
+    * probe runs 1.5 s / 9.6 s at those counts vs 0.8 s / 4.4 s trusted —
+    * an object-store LIST at ~1M files is minutes and money) while
+    * guarding only against OUT-OF-BAND writes; a manifest maintained
+    * transactionally
     * (ManifestLoop folds its stats in the same micro-batch that lands
     * the files; [[update]] after every append) cannot drift from the
     * directory unless something else writes there. Trusting shifts

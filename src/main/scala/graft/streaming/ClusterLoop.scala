@@ -21,7 +21,8 @@ import org.apache.spark.sql.types.{StringType, StructField, StructType}
   * [[graft.ops.DedupOps.connectedComponentsInc]]'s affected-cone core:
   * labels recompute cold ONLY inside components an added/removed edge
   * touches; every untouched component rides from the persisted state
-  * (CcIncProbe: 0.03–0.04× the cold recompute's shuffled bytes).
+  * (round-13 deletion-aware connected-components probe, SURVEY §6:
+  * 0.03–0.04× the cold recompute's shuffled bytes).
   *
   * Edge store: SIGNED batch dirs `edgesDir/batch=<id>` carrying
   * `(lo, hi, sign, b)` — one row per canonical pair per batch, sign

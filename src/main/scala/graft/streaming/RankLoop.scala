@@ -19,7 +19,8 @@ import graft.ops.GraphOps
   * still ITERATES over the full current edge set. What the persisted
   * state buys is ROUNDS: warm-starting from the prior fixpoint after a
   * small change needs a fraction of the cold iteration count at equal
-  * accuracy (PrIncProbe: one warm round beats eight cold rounds at 1M
+  * accuracy (round-10 incremental-PageRank probe, SURVEY §6: one warm
+  * round beats eight cold rounds at 1M
   * edges + 1% append — per-round cost identical), because the fixpoint
   * is init-independent (damping < 1 contraction) and a small change
   * moves it little. THIS is why takedowns are nearly free here: unlike

@@ -71,8 +71,9 @@ class PlanSpec extends AnyFunSuite {
     // join. The equi-height histogram knows the mass sits at 0, prices
     // the filter at ~0.5%, and the filtered side becomes provably
     // broadcastable AT PLAN TIME. Both aggregates touch every column so
-    // pruning cannot shrink either estimate (the CboProbe wideSql
-    // discipline) — the histogram is the ONLY thing that changes.
+    // pruning cannot shrink either estimate (the round-6 CBO probe's
+    // wideSql discipline, SURVEY §6) — the histogram is the ONLY thing
+    // that changes.
     val keep = Seq("spark.sql.adaptive.enabled", "spark.sql.cbo.enabled")
       .map(k => k -> spark.conf.get(k))
     val dir = java.nio.file.Files.createTempDirectory("graft_histo")
@@ -335,7 +336,8 @@ class PlanSpec extends AnyFunSuite {
         .select(countDistinct("salt")).head().getLong(0)
       assert(spread == 8, s"content salt spread only $spread/8 buckets")
 
-      // Hot-key-only salting (the huge-keeper regime per SkewProbe):
+      // Hot-key-only salting (the huge-keeper regime per the round-6 skew
+      // probe, SURVEY §6):
       // identical decisions with just the named span replicated.
       val hotOnly = graft.ops.DedupOps.spanDedup(docs, col("doc_id"), col("text"),
         salts = 8, hotSpans = Seq(hot))

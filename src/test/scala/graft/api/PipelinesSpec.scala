@@ -130,6 +130,31 @@ class PipelinesSpec extends AnyFunSuite {
     } finally spark.sql("DROP TABLE IF EXISTS `pipe_idx_w`")
   }
 
+  test("PQ facades are cosine: per-row positive rescaling leaves train + search top-k ids unchanged") {
+    val emb = TestSpark.table("embeddings")
+    // Power-of-two factors scale a float exactly, so each rescaled row
+    // L2-normalizes to the bit-identical unit vector; without the
+    // facades' normalization, ADC ranks by raw dot and the big rows win.
+    def rescaled(df: org.apache.spark.sql.DataFrame, mod: Int) = {
+      val f = pow(lit(2.0), (col("vec_id") % mod - mod / 2).cast("double"))
+      df.withColumn("embedding", transform(col("embedding"), x => (x * f).cast("float")))
+    }
+    val probes = emb.where(col("vec_id") < 20)
+    val centroids = Pipelines.trainCentroids(emb, k = 8, iters = 2).localCheckpoint()
+    def ids(df: org.apache.spark.sql.DataFrame) = df.collect()
+      .map(r => (r.getLong(0), r.getInt(3), r.getLong(1))).sorted.toSeq
+    def searches(p: org.apache.spark.sql.DataFrame, g: org.apache.spark.sql.DataFrame) = {
+      val cb = Pipelines.trainPqCodebook(g, m = 8, k = 64, iters = 4)
+      (ids(Pipelines.similaritySearchPq(p, g, cb, k = 10)),
+        ids(Pipelines.similaritySearchIvfPq(p, g, centroids, cb, k = 10)))
+    }
+    val (pq, ivfPq) = searches(probes, emb)
+    val (pqScaled, ivfPqScaled) = searches(rescaled(probes, 7), rescaled(emb, 5))
+    assert(pq.size == 10 * 20 && ivfPq.nonEmpty)
+    assert(pqScaled == pq, "similaritySearchPq top-k moved under row rescaling")
+    assert(ivfPqScaled == ivfPq, "similaritySearchIvfPq top-k moved under row rescaling")
+  }
+
   test("canonicalDocs: one best representative per near-dup cluster, singletons pass") {
     val docs = TestSpark.table("documents")
     val kept = Pipelines.canonicalDocs(docs, col("doc_id"), col("text"))

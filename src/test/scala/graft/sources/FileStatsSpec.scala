@@ -175,7 +175,7 @@ class FileStatsSpec extends AnyFunSuite {
     // On a fresh manifest the trusted probe is the SAME plan over the
     // same survivors — results identical, just without the per-probe
     // directory re-listing (the fixed cost that grows linearly with file
-    // count; LakeScaleProbe's regime table).
+    // count; the round-10 many-files regime table, SURVEY §6).
     val verified = FileStats.prunedRead(spark, d, manifest, bounds)
     val trusted = FileStats.prunedRead(spark, d, manifest, bounds,
       trustManifest = true)
