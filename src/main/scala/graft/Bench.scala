@@ -79,6 +79,12 @@ object Bench {
     * the BASELINE-aligned total: BASELINE.md defines 12 queries, so the
     * headline `value` stays comparable across rounds. */
   def extras(spark: SparkSession): Seq[(String, () => DataFrame)] = {
+    lazy val fixtureRoot = {
+      // One parent dir for every on-disk fixture below, gone at JVM exit.
+      val root = java.nio.file.Files.createTempDirectory("graft-bench")
+      sys.addShutdownHook(org.apache.commons.io.FileUtils.deleteQuietly(root.toFile))
+      root
+    }
     def docs = spark.table("documents")
     val entries = Seq(
       "x_minhash_dedup_keep" -> (() =>
@@ -205,7 +211,7 @@ object Bench {
       // selective range probe on a sorted lake.
       "x_manifest_prune" -> {
         import graft.sources.{ColumnBounds, FileStats}
-        val dir = java.nio.file.Files.createTempDirectory("graft-bench-manifest")
+        val dir = java.nio.file.Files.createTempDirectory(fixtureRoot, "manifest")
           .toString + "/orders"
         spark.table("orders")
           .repartitionByRange(32, col("o_orderkey"))
@@ -283,7 +289,7 @@ object Bench {
       // protocol can re-run it (the append itself is an O(batch) bucketed
       // file write).
       "x_neardup_fold" -> {
-        val dir = java.nio.file.Files.createTempDirectory("graft-bench-ndidx")
+        val dir = java.nio.file.Files.createTempDirectory(fixtureRoot, "ndidx")
           .toString + "/idx"
         // 2000-doc index / 500-doc batch: the synthetic corpus is near-dup
         // DENSE (see x_minhash_lsh_pairs_1k), so pair volume — not the
@@ -314,7 +320,7 @@ object Bench {
         val n = e.agg(max(col("vec_id"))).head().getLong(0) + 1
         val cents = graft.ops.Ann.kmeans(
           e, graft.ops.Ann.semDedupKFor(n), iters = 2).localCheckpoint()
-        val dir = java.nio.file.Files.createTempDirectory("graft-bench-sdst")
+        val dir = java.nio.file.Files.createTempDirectory(fixtureRoot, "sdst")
           .toString + "/st"
         val cut = n - n / 5 // batch = the newest fifth (400 of sf0.1's 2000)
         graft.ops.Ann.persistSemDedupState(

@@ -998,15 +998,9 @@ object DedupOps {
             Seq("u"), "left")
           .select(col("u"), coalesce(col("__pl"), col("u")).as("label"))
     })
-    // Gated node-scale broadcasts (round 15, the GraphOps loop pattern):
-    // every in-loop join pairs the loop-invariant edge table or another
-    // node-scale frame with the label table, whose checkpointed-RDD stats
-    // the planner cannot see — below the node-count gate the label-side
-    // frames broadcast and the edges never re-shuffle; above it the
-    // shuffle-join shape is unchanged. min/least label propagation is
-    // plan-order independent, so q72/q189 stay hash-exact.
-    val small = labels.count() <= graft.ops.GraphOps.loopBroadcastMaxNodes
-    def bc(df: DataFrame): DataFrame = if (small) broadcast(df) else df
+    // GraphOps' loop gate on the label-side frames; min/least label
+    // propagation is plan-order independent, so q72/q189 stay hash-exact.
+    val bc = GraphOps.loopGate(labels.count())
     var converged = false
     var i = 0
     try {
@@ -1033,28 +1027,30 @@ object DedupOps {
         converged = changed == 0
         i += 1
       }
+      if (!converged)
+        throw new IllegalStateException(
+          s"connectedComponents: labels still changing after $maxIter rounds — " +
+            "a component with diameter > maxIter would get silently split " +
+            "labels; raise maxIter (rounds needed ~ worst component diameter)")
+      // Warm-start premise check (append-only edge set): labels only ever
+      // DECREASE, so a stale seed label from a node no longer in the graph
+      // survives to the fixpoint looking exactly like a correct answer —
+      // one node-scale anti-join catches the common violation (a rewritten
+      // or shrunk pair set). A label that is still a node but no longer
+      // the component min (an edge REMOVED between runs) is undetectable
+      // short of a cold recompute; append-only remains the caller contract.
+      // Runs before the `finally`: with a `checkpointDir` that deletes the
+      // edge cut's files.
+      if (warmStart.isDefined) {
+        val ghost = labels.select(col("label").as("u")).distinct()
+          .join(e.select(col("u")).distinct(), Seq("u"), "left_anti")
+          .limit(1).count()
+        require(ghost == 0L,
+          "connectedComponents: warmStart labels reference node ids absent " +
+            "from `pairs` — the edge set is not a superset of the prior " +
+            "run's (warm start requires append-only edges); re-run cold")
+      }
     } finally drop(ePath)
-    if (!converged)
-      throw new IllegalStateException(
-        s"connectedComponents: labels still changing after $maxIter rounds — " +
-          "a component with diameter > maxIter would get silently split " +
-          "labels; raise maxIter (rounds needed ~ worst component diameter)")
-    // Warm-start premise check (append-only edge set): labels only ever
-    // DECREASE, so a stale seed label from a node no longer in the graph
-    // survives to the fixpoint looking exactly like a correct answer —
-    // one node-scale anti-join catches the common violation (a rewritten
-    // or shrunk pair set). A label that is still a node but no longer
-    // the component min (an edge REMOVED between runs) is undetectable
-    // short of a cold recompute; append-only remains the caller contract.
-    if (warmStart.isDefined) {
-      val ghost = labels.select(col("label").as("u")).distinct()
-        .join(e.select(col("u")).distinct(), Seq("u"), "left_anti")
-        .limit(1).count()
-      require(ghost == 0L,
-        "connectedComponents: warmStart labels reference node ids absent " +
-          "from `pairs` — the edge set is not a superset of the prior " +
-          "run's (warm start requires append-only edges); re-run cold")
-    }
     labels.select(col("u").as("doc"), col("label"))
   }
 
@@ -1099,25 +1095,12 @@ object DedupOps {
     // Old cone edges: one keyed pass over the store; distinct on the
     // cone only. (An old edge's endpoints share a prior label, so the
     // lo-side membership test finds every cone edge.)
+    def und(df: DataFrame): DataFrame = GraphOps.undirected(df, col("d1"), col("d2"))
     val coneExtract = (coneNodes: DataFrame) =>
-      oldEdges.select(col("d1").as("a"), col("d2").as("b"))
-        .where(col("a").isNotNull && col("b").isNotNull && col("a") =!= col("b"))
-        .select(least(col("a"), col("b")).as("lo"),
-          greatest(col("a"), col("b")).as("hi"))
-        .join(coneNodes, col("lo") === col("doc"), "left_semi")
-        .distinct()
-    ccIncCore(prior, undirected(addedEdges), undirected(removedEdges),
+      und(oldEdges).join(coneNodes, col("lo") === col("doc"), "left_semi").distinct()
+    ccIncCore(prior, und(addedEdges).distinct(), und(removedEdges).distinct(),
       coneExtract, maxIter, checkpointDir)
   }
-
-  /** `(d1, d2)` → canonical undirected `(lo, hi)` pairs: nulls and self
-    * loops drop, both orientations fold, duplicates collapse. */
-  private def undirected(df: DataFrame): DataFrame = df
-    .select(col("d1").as("a"), col("d2").as("b"))
-    .where(col("a").isNotNull && col("b").isNotNull && col("a") =!= col("b"))
-    .select(least(col("a"), col("b")).as("lo"),
-      greatest(col("a"), col("b")).as("hi"))
-    .distinct()
 
   /** The affected-cone fold shared by [[connectedComponentsInc]] and
     * [[graft.streaming.ClusterLoop]] (whose edge store is SIGNED, so it
@@ -1139,10 +1122,7 @@ object DedupOps {
     // Remove+re-add in one batch cancels BEFORE touching anything.
     val remNet = remU0.join(addU, Seq("lo", "hi"), "left_anti")
       .localCheckpoint()
-    val frontier = addU.select(col("lo").as("n"))
-      .union(addU.select(col("hi").as("n")))
-      .union(remNet.select(col("lo").as("n")))
-      .union(remNet.select(col("hi").as("n"))).distinct().localCheckpoint()
+    val frontier = GraphOps.endpoints(addU, remNet).localCheckpoint()
     // Affected component labels (batch-scale; broadcast the frontier).
     val affected = prior
       .join(broadcast(frontier), col("doc") === col("n"), "left_semi")

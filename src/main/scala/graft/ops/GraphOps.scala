@@ -1,6 +1,8 @@
 package graft.ops
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** Iterative graph operators on edge tables — the OTHER classic MapReduce
@@ -8,12 +10,38 @@ import org.apache.spark.sql.functions._
   * wordcount is the canonical single job; [[DedupOps.connectedComponents]]
   * covers the reachability side).
   *
-  * Scale shape: each iteration is one equi join (ranks onto edges) + one
-  * hash aggregation (contributions per destination, partial-aggregated
-  * map-side) — the rank table (one row per NODE, not per edge) is the
-  * only state carried between rounds, and lineage is cut with
-  * `localCheckpoint` every few rounds (the connectedComponents
-  * discipline — without it the plan doubles per iteration).
+  * Scale shape: each iteration is one equi join (node-scale state onto
+  * edges) + one hash aggregation (per destination, partial-aggregated
+  * map-side) — the node-scale table, not the edge table, is the only state
+  * carried between rounds, and lineage is cut with `localCheckpoint`
+  * (without it the plan doubles per iteration).
+  *
+  * Every operator is assembled from the same few pieces, each defined once:
+  *
+  *  - [[directedGraph]], the directed-edge prelude of [[pageRank]] (all
+  *    three entry points and [[personalizedPageRank]]), [[hits]],
+  *    [[hitsCounts]] and [[labelPropagation]]: rename to (src, dst), drop
+  *    null endpoints, collapse multi-edges and cut; then ONE exploded
+  *    aggregation over the cut edges yields the node set and every node's
+  *    out-degree, hence the dangling set (round 16, guide §2.4: one edge
+  *    pass and one exchange where the prelude used to run three jobs —
+  *    node distinct, degree aggregation, dangling anti join).
+  *  - [[loopGate]], the broadcast gate of every in-loop join (these loops
+  *    and [[DedupOps.connectedComponents]]): each in-loop join pairs the
+  *    loop-invariant edge table with node-scale state whose
+  *    checkpointed-RDD stats the planner cannot see, so at or below
+  *    [[loopBroadcastMaxNodes]] nodes the node-scale side is broadcast
+  *    explicitly and no edge byte moves per round; above it the
+  *    shuffle-join shapes stay, which scale to any node count (round 15,
+  *    guide §2.4/§3.1). Measured: PageRank at 1M edges / 100k nodes / 10
+  *    iterations shuffled 50.8 → 17.4 MB and ran 8.0 → 5.8 s
+  *    (OPTIMIZATION_r15.md §7); HITS on the bench graph (240k edges, 21k
+  *    nodes, 3 iterations) 41.6 → 9.7 MB and 2.83 → 2.22 s (§5). The gate
+  *    chooses a plan over exact arithmetic, so no output bit moves (the
+  *    declared q169–q173, q182, q184, q72 and q189 stay hash-pinned).
+  *  - [[undirected]], the canonical (lo, hi) edge form the triangle family,
+  *    [[DedupOps]]' connected-components folds and
+  *    [[graft.streaming.ClusterLoop]] read edges through.
   */
 object GraphOps {
 
@@ -49,7 +77,7 @@ object GraphOps {
   def pageRank(edges: DataFrame, src: String = "src", dst: String = "dst",
                iterations: Int = 10, damping: Double = 0.85,
                scale: Long = 1000000000L): DataFrame =
-    pageRankFrom(edges, None, src, dst, iterations, damping, scale, None)
+    pageRankFrom(edges, None, None, src, dst, iterations, damping, scale, None)
 
   /** WEIGHTED PageRank: each node's vote splits over its out-edges in
     * proportion to edge weight — `r'(v)` sums `round(r(u)·w(u,v)/W(u))`
@@ -66,167 +94,44 @@ object GraphOps {
                        src: String = "src", dst: String = "dst",
                        iterations: Int = 10, damping: Double = 0.85,
                        scale: Long = 1000000000L): DataFrame =
-    pageRankFrom(edges, None, src, dst, iterations, damping, scale, Some(weight))
+    pageRankFrom(edges, None, None, src, dst, iterations, damping, scale, Some(weight))
 
   /** WARM-START PageRank — the O(new-data) maintenance posture for ANY
-    * edge change, appends AND removals (the graph twin of
-    * [[graft.sources.FileStats.update]] / `Ann.appendIvfIndex`):
-    * instead of re-converging from uniform after every batch, persist
-    * the converged `(node, r)` table and restart the SAME iteration
-    * from it. Unlike [[graft.ops.DedupOps.connectedComponents]]'s
-    * label seeding — where a monotone iteration makes stale labels
-    * from removed edges UNDETECTABLE and deletions need the
-    * affected-cone fold — PageRank needs no append-only contract at
-    * all: for damping < 1 the iteration is a contraction with a unique
-    * fixpoint that does not depend on the starting vector (a takedown
-    * batch that removes edges just moves the fixpoint slightly; the
-    * prior ranks still start near it — OpsSpec pins warm ≡ cold after
-    * a removal-only batch). Per round, total mass follows
-    * `total' = (1−d)·scale + d·total`, so any init imbalance (new nodes
-    * seeded uniform, stale mass on grown graphs) decays geometrically at
-    * rate d. A small append moves the fixpoint little, so the prior
-    * ranks start near it and re-convergence takes a fraction of the
-    * cold rounds (measured in the round-10 incremental-PageRank probe,
-    * SURVEY §6, at 1M edges + 1% append
-    * + a new hub: ONE warm round lands at L1 0.022 of total mass from
-    * the fixpoint — already past cold's EIGHT rounds at 0.051, with
-    * cold-1 at 0.68; per-round cost is identical, so warm maintenance
-    * is ≥8× cheaper than the cold rerun at equal accuracy). Nodes
-    * absent from `prior` (newly appeared) seed at the
-    * uniform `round(scale/N)`; prior rows for nodes no longer in the
-    * graph are ignored. `prior` must carry `(node, r)` — exactly what
-    * [[pageRank]] returns. Same exact-integer contract: a warm run and
-    * a cold run that have both reached the integer fixpoint are
-    * bit-identical. */
+    * edge change, appends AND removals: persist the converged `(node, r)`
+    * table and restart the SAME iteration from it instead of from uniform.
+    * Unlike [[graft.ops.DedupOps.connectedComponents]]'s label seeding —
+    * whose monotone iteration makes stale labels from removed edges
+    * UNDETECTABLE — no append-only contract is needed: for damping < 1
+    * the iteration is a contraction with a unique fixpoint independent of
+    * the starting vector (OpsSpec pins warm ≡ cold after a removal-only
+    * batch), and total mass follows `total' = (1−d)·scale + d·total`, so
+    * any init imbalance decays geometrically at rate d. A small append
+    * moves the fixpoint little, so re-convergence takes a fraction of the
+    * cold rounds (round-10 incremental-PageRank probe, SURVEY §6, 1M
+    * edges + 1% append + a new hub: ONE warm round lands at L1 0.022 of
+    * total mass from the fixpoint — past cold's EIGHT rounds at 0.051,
+    * cold-1 at 0.68; same per-round cost, so ≥8× cheaper at equal
+    * accuracy). Nodes absent from `prior` seed at the uniform
+    * `round(scale/N)`; prior rows for departed nodes are ignored. `prior`
+    * must carry `(node, r)` — what [[pageRank]] returns. Warm and cold
+    * runs that both reached the integer fixpoint are bit-identical. */
   def pageRankWarm(edges: DataFrame, prior: DataFrame,
                    src: String = "src", dst: String = "dst",
                    iterations: Int = 10, damping: Double = 0.85,
                    scale: Long = 1000000000L): DataFrame =
-    pageRankFrom(edges, Some(prior), src, dst, iterations, damping, scale, None)
-
-  private def pageRankFrom(edges: DataFrame, prior: Option[DataFrame],
-                           src: String, dst: String, iterations: Int,
-                           damping: Double, scale: Long,
-                           weight: Option[String]): DataFrame = {
-    require(iterations >= 1, s"iterations must be >= 1, got $iterations")
-    require(damping > 0 && damping < 1, s"damping must be in (0,1), got $damping")
-    require(scale >= 1000000L, s"scale under 1e6 loses ranking granularity, got $scale")
-    // Weighted edges pre-sum parallel rows (distinct would silently keep
-    // weight-variant duplicates apart); the unweighted spelling below is
-    // kept verbatim — it is the declared q169 contract.
-    val e = (weight match {
-      case Some(w) => edges
-        .select(col(src).as("src"), col(dst).as("dst"),
-          col(w).cast("double").as("w"))
-        .where(col("src").isNotNull && col("dst").isNotNull && col("w") > 0)
-        .groupBy("src", "dst").agg(sum(col("w")).as("w"))
-      case None => edges.select(col(src).as("src"), col(dst).as("dst"))
-        .where(col("src").isNotNull && col("dst").isNotNull)
-        .distinct()
-    }).localCheckpoint()
-    // Round 16 (guide §2.4 "two operations keyed the same way can share
-    // one exchange"): the prelude used THREE jobs over the checkpointed
-    // edge table — the node-set distinct, the out-degree aggregation, and
-    // the dangling anti-join — two full edge passes plus a node-scale
-    // join, each with its own exchange and checkpoint. One exploded
-    // aggregation computes all three in a single edge pass / single
-    // exchange: every edge contributes (src, vote) and (dst, 0); the
-    // per-node vote sum yields the node set (every endpoint appears),
-    // the out-degree (vote = 1 unweighted / w weighted — same type, same
-    // values as before: the dst rows add exact 0 terms), and the
-    // dangling set (outd = 0). Integer-exact unweighted; q169/q170/q182
-    // stay hash-pinned.
-    val zero = weight match { case Some(_) => lit(0.0); case None => lit(0L) }
-    val nodeStats = e.select(col("src").as("node"),
-        (weight match { case Some(_) => col("w"); case None => lit(1L) }).as("__vote"))
-      .unionAll(e.select(col("dst").as("node"), zero.as("__vote")))
-      .groupBy("node").agg(sum(col("__vote")).as("outd"))
-      .localCheckpoint()
-    val nodes = nodeStats.select("node")
-    val nn = nodeStats.count()
-    require(nn > 0, "empty graph")
-    val deg = nodeStats.where(col("outd") > 0)
-      .select(col("node").as("src"), col("outd"))
-    // The dangling node SET is iteration-invariant (only their RANKS
-    // change): a filter over the one checkpointed node table, and graphs
-    // without sinks (the declared q169 symmetric graph) skip the
-    // per-iteration mass action entirely.
-    val danglingNodes = nodeStats.where(col("outd") <= 0).select("node")
-    val hasDangling = danglingNodes.limit(1).count() > 0
-    // Round 15 (guide §2.4/§3.1, the [[hits]] pattern): every in-loop
-    // join pairs the loop-invariant EDGE table with node-scale state
-    // (rank, out-degrees, the contrib aggregate) whose checkpointed-RDD
-    // stats the planner cannot see — so below the node-count gate,
-    // broadcast the node-scale side explicitly and never shuffle an edge
-    // byte per round; above it, the shuffle-join shape is unchanged and
-    // scales to any graph. Pure bigint arithmetic, so the plan change
-    // cannot move a single output bit (q169/q170/q182 stay hash-exact;
-    // OPTIMIZATION_r15.md §7, 1M edges/100k nodes at 10 iterations,
-    // same session:
-    // shuffle 50.8 → 17.4 MB — the ~3.6 MB/iteration edge re-shuffle
-    // drops to ~0.2 — and 8.0 → 5.8 s wall; identical mass).
-    val small = nn <= loopBroadcastMaxNodes
-    def bc(df: DataFrame): DataFrame = if (small) broadcast(df) else df
-    // (1 − d) SPELLED AS A SUBTRACTION, matching the declared SQL text:
-    // the double `1 - 0.85` differs from the literal `0.15` in the last
-    // ulp, and the contract is bit-reproducibility.
-    val base = (lit(1.0) - lit(damping)) * lit(scale.toDouble) / lit(nn)
-    // Checkpoint EVERY round, not every few: the dangling-mass term is a
-    // per-iteration ACTION, and over an un-checkpointed rank it would
-    // re-execute every round since the last cut — quadratic cost inside
-    // the window (the round-8 graph probe, SURVEY §6, measured
-    // 0.24 s/iter right after a cut rising to 1.5 s/iter late in a
-    // 4-round window). The checkpoint is
-    // node-scale, the cheapest table in the loop.
-    val uniform = round(lit(scale.toDouble) / lit(nn)).cast("bigint")
-    var rank = (prior match {
-      case None => nodes.select(col("node"), uniform.as("r"))
-      case Some(p) =>
-        // Prior ranks onto the CURRENT node set: new nodes seed uniform,
-        // departed nodes' prior rows drop via the join.
-        val pr = p.select(col("node").as("__pn"), col("r").cast("bigint").as("__pr"))
-        nodes.join(pr, nodes("node") === col("__pn"), "left")
-          .select(nodes("node"), coalesce(col("__pr"), uniform).as("r"))
-    }).localCheckpoint()
-    var i = 0
-    while (i < iterations) {
-      val dangling =
-        if (!hasDangling) 0L
-        else rank.join(bc(danglingNodes.select(col("node").as("__dn"))),
-            rank("node") === col("__dn"), "left_semi")
-          .agg(coalesce(sum(col("r")), lit(0L))).head().getLong(0)
-      val share = math.round(dangling.toDouble / nn)
-      val share1 = weight match {
-        case Some(_) => round(col("r") * col("w") / col("outd"))
-        case None => round(col("r") / col("outd"))
-      }
-      val contrib = e.join(bc(rank), rank("node") === e("src"))
-        .join(bc(deg), "src")
-        .groupBy("dst")
-        .agg(sum(share1.cast("bigint")).as("m"))
-      rank = nodes.join(bc(contrib), nodes("node") === contrib("dst"), "left")
-        .select(nodes("node"),
-          round(base + lit(damping) * (coalesce(col("m"), lit(0L)) + lit(share)))
-            .cast("bigint").as("r"))
-        .localCheckpoint()
-      i += 1
-    }
-    rank.select(col("node"), col("r"),
-      (col("r").cast("double") * nn / scale).as("nrank"))
-  }
+    pageRankFrom(edges, Some(prior), None, src, dst, iterations, damping, scale, None)
 
   /** PERSONALIZED PageRank: teleport mass lands on a SEED set instead of
     * uniformly on all nodes — the retrieval / graph-dedup form ("rank the
-    * graph from these documents' point of view"). Same exact integer
-    * micro-rank contract, machinery, and per-iteration cost shape as
-    * [[pageRank]] (one equi join + one partial-aggregated hash agg over
-    * node-scale state, lineage cut every round); the ONLY changes are
-    * where the (1−d) base and the dangling mass go:
+    * graph from these documents' point of view"). It is [[pageRank]]'s
+    * loop with the teleport set narrowed from every node to the seeds;
+    * the ONLY changes are where the (1−d) base and the dangling mass go:
     *
     * `r'(v) = round((1−d)·scale·p(v) + d·(Σ_{u→v} round(r(u)/outdeg(u))
     * + dangling·p(v)))` with `p(v) = 1/|S|` for seeds, 0 otherwise —
     * non-seed nodes receive ONLY propagated mass, so rank decays with
-    * distance from the seed set.
+    * distance from the seed set. Seeding every node is exactly
+    * [[pageRank]] (spec-pinned).
     *
     * `seeds` is a one-column node-id frame (extra columns ignored); seeds
     * absent from the graph are dropped (they can neither receive nor
@@ -236,47 +141,67 @@ object GraphOps {
   def personalizedPageRank(edges: DataFrame, seeds: DataFrame,
                            src: String = "src", dst: String = "dst",
                            iterations: Int = 10, damping: Double = 0.85,
-                           scale: Long = 1000000000L): DataFrame = {
+                           scale: Long = 1000000000L): DataFrame =
+    pageRankFrom(edges, None, Some(seeds), src, dst, iterations, damping, scale, None)
+
+  /** The one PageRank loop. The teleport set is every node (`seeds` None
+    * — no seed join, no flag column) or the seeds, flagged on the node
+    * table as the prelude cuts it. */
+  private def pageRankFrom(edges: DataFrame, prior: Option[DataFrame],
+                           seeds: Option[DataFrame], src: String, dst: String,
+                           iterations: Int, damping: Double, scale: Long,
+                           weight: Option[String]): DataFrame = {
     require(iterations >= 1, s"iterations must be >= 1, got $iterations")
     require(damping > 0 && damping < 1, s"damping must be in (0,1), got $damping")
     require(scale >= 1000000L, s"scale under 1e6 loses ranking granularity, got $scale")
-    val e = edges.select(col(src).as("src"), col(dst).as("dst"))
-      .where(col("src").isNotNull && col("dst").isNotNull)
-      .distinct().localCheckpoint()
-    val seedSet = seeds.select(col(seeds.columns.head).as("__seed"))
-      .where(col("__seed").isNotNull).distinct()
-    // Nodes carry their seed flag through every iteration's left join —
-    // one extra boolean on the node-scale table, no extra join in the loop.
-    // Round 16 (guide §2.4, the [[pageRankFrom]] fusion): node set,
-    // out-degrees, and the dangling set come from ONE exploded
-    // aggregation over the edge table (plus the seed-flag attach) instead
-    // of three separate jobs/checkpoints — integer-exact, q170 stays
-    // hash-pinned.
-    val nodes = e.select(col("src").as("node"), lit(1L).as("__vote"))
-      .unionAll(e.select(col("dst").as("node"), lit(0L).as("__vote")))
-      .groupBy("node").agg(sum(col("__vote")).as("outd"))
-      .join(seedSet, col("node") === col("__seed"), "left")
-      .select(col("node"), col("__seed").isNotNull.as("is_seed"), col("outd"))
-      .localCheckpoint()
-    val nn = nodes.count()
+    def seedFlag(ns: DataFrame): DataFrame = seeds.fold(ns) { s =>
+      val seedSet = s.select(col(s.columns.head).as("__seed"))
+        .where(col("__seed").isNotNull).distinct()
+      ns.join(seedSet, col("node") === col("__seed"), "left")
+        .select(col("node"), col("__seed").isNotNull.as("is_seed"), col("outd"))
+    }
+    val g = directedGraph(edges, src, dst, weight, seedFlag)
+    val (e, nodes, nn) = (g.edges, g.nodes, g.n)
     require(nn > 0, "empty graph")
-    val ns = nodes.where(col("is_seed")).count()
-    require(ns > 0, "no seed is present in the graph")
+    val (teleport, nt) =
+      if (seeds.isEmpty) (lit(true), nn)
+      else (col("is_seed"), nodes.where(col("is_seed")).count())
+    require(nt > 0, "no seed is present in the graph")
     val deg = nodes.where(col("outd") > 0)
       .select(col("node").as("src"), col("outd"))
+    // The dangling node SET is iteration-invariant (only their RANKS
+    // change): a filter over the one checkpointed node table, and graphs
+    // without sinks (the declared q169 symmetric graph) skip the
+    // per-iteration mass action entirely.
     val danglingNodes = nodes.where(col("outd") <= 0).select("node")
     val hasDangling = danglingNodes.limit(1).count() > 0
-    // Gated node-scale broadcasts, same rationale as [[pageRankFrom]]
-    // (round 15): bigint arithmetic keeps q170 hash-exact under the
-    // plan change.
-    val small = nn <= loopBroadcastMaxNodes
-    def bc(df: DataFrame): DataFrame = if (small) broadcast(df) else df
-    // (1 − d) spelled as the subtraction — the q169/q170 bit-contract.
-    val base = (lit(1.0) - lit(damping)) * lit(scale.toDouble) / lit(ns)
-    var rank = nodes.select(col("node"),
-      when(col("is_seed"), round(lit(scale.toDouble) / lit(ns)).cast("bigint"))
-        .otherwise(lit(0L)).as("r"))
-      .localCheckpoint()
+    val bc = loopGate(nn)
+    // (1 − d) SPELLED AS A SUBTRACTION, matching the declared SQL text:
+    // the double `1 - 0.85` differs from the literal `0.15` in the last
+    // ulp, and the contract is bit-reproducibility.
+    val base = (lit(1.0) - lit(damping)) * lit(scale.toDouble) / lit(nt)
+    // Checkpoint EVERY round, not every few: the dangling-mass term is a
+    // per-iteration ACTION, and over an un-checkpointed rank it would
+    // re-execute every round since the last cut — quadratic cost inside
+    // the window (the round-8 graph probe, SURVEY §6, measured
+    // 0.24 s/iter right after a cut rising to 1.5 s/iter late in a
+    // 4-round window). The checkpoint is node-scale, the cheapest table
+    // in the loop.
+    val uniform = round(lit(scale.toDouble) / lit(nt)).cast("bigint")
+    var rank = (prior match {
+      case None => nodes.select(col("node"), when(teleport, uniform).otherwise(lit(0L)).as("r"))
+      case Some(p) =>
+        // Prior ranks onto the CURRENT node set: new nodes seed uniform,
+        // departed nodes' prior rows drop via the join.
+        val pr = p.select(col("node").as("__pn"), col("r").cast("bigint").as("__pr"))
+        nodes.join(pr, nodes("node") === col("__pn"), "left")
+          .select(nodes("node"), coalesce(col("__pr"), uniform).as("r"))
+    }).localCheckpoint()
+    val share1 = weight match {
+      case Some(_) => round(col("r") * col("w") / col("outd"))
+      case None => round(col("r") / col("outd"))
+    }
+    val m = coalesce(col("m"), lit(0L))
     var i = 0
     while (i < iterations) {
       val dangling =
@@ -284,16 +209,15 @@ object GraphOps {
         else rank.join(bc(danglingNodes.select(col("node").as("__dn"))),
             rank("node") === col("__dn"), "left_semi")
           .agg(coalesce(sum(col("r")), lit(0L))).head().getLong(0)
-      val share = math.round(dangling.toDouble / ns)
+      val share = math.round(dangling.toDouble / nt)
       val contrib = e.join(bc(rank), rank("node") === e("src"))
         .join(bc(deg), "src")
         .groupBy("dst")
-        .agg(sum(round(col("r") / col("outd")).cast("bigint")).as("m"))
+        .agg(sum(share1.cast("bigint")).as("m"))
       rank = nodes.join(bc(contrib), nodes("node") === contrib("dst"), "left")
         .select(nodes("node"),
-          when(nodes("is_seed"),
-              round(base + lit(damping) * (coalesce(col("m"), lit(0L)) + lit(share))))
-            .otherwise(round(lit(damping) * coalesce(col("m"), lit(0L))))
+          when(teleport, round(base + lit(damping) * (m + lit(share))))
+            .otherwise(round(lit(damping) * m))
             .cast("bigint").as("r"))
         .localCheckpoint()
       i += 1
@@ -312,18 +236,18 @@ object GraphOps {
     * and the hub side finds the catalog/aggregator hosts a frontier
     * scheduler treats differently.
     *
-    * Per iteration: two (equi join + partial-agg'd hash agg) halves over
-    * node-scale state — exactly [[pageRank]]'s cost shape. In-loop
-    * frames stay SPARSE and UNNORMALIZED (normalization only rescales
-    * the direction the final L1 division fixes, and per-half-step
-    * scalar aggs are driver barriers — measured 6.35 → 4.5 s on the
-    * bench graph); a periodic rescale every 8 rounds bounds double
-    * magnitude for deep iteration counts, and lineage is cut every
-    * round. Multi-edges collapse (`distinct`); nodes with no out-edge
-    * have hub 0 after the first round, no in-edge → authority 0 — scores,
-    * not mass, so nothing needs redistributing (the dangling machinery
-    * PageRank requires does not exist here). Returns (node, hub, auth)
-    * doubles, each column summing to 1.
+    * Per iteration: two [[hitsStep]] half-steps over node-scale state —
+    * exactly [[pageRank]]'s cost shape, and [[hitsCounts]]' kernel in
+    * doubles (for `iterations` ≤ 8 the result is [[hitsCounts]]' counts
+    * over their column sums, spec-pinned). In-loop frames stay SPARSE
+    * (only nonzero scores carry rows) and UNNORMALIZED: per-step L1
+    * division only rescales the direction the final normalization fixes,
+    * but costs a driver agg barrier per half-step (measured 6.35 → 4.5 s
+    * on the bench graph). A periodic rescale every 8 rounds bounds double
+    * magnitude for deep iteration counts. Multi-edges collapse; nodes
+    * with no out-edge have hub 0 after the first round, no in-edge →
+    * authority 0 — scores, not mass, so nothing needs redistributing.
+    * Returns (node, hub, auth) doubles, each column summing to 1.
     *
     * Float caveat: normalized scores are double quotients and carry the
     * usual last-ulp order dependence — fine for ranking, not for a hash
@@ -332,70 +256,32 @@ object GraphOps {
   def hits(edges: DataFrame, src: String = "src", dst: String = "dst",
            iterations: Int = 5): DataFrame = {
     require(iterations >= 1, s"iterations must be >= 1, got $iterations")
-    val e = edges.select(col(src).as("src"), col(dst).as("dst"))
-      .where(col("src").isNotNull && col("dst").isNotNull)
-      .distinct().localCheckpoint()
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct().localCheckpoint()
-    // Full count, not limit(1): it both guards the empty graph and feeds
-    // the broadcast-vs-shuffle gate below; nodes is a checkpointed RDD,
-    // so this is a metadata-speed pass.
-    val ns = nodes.count()
-    require(ns > 0, "empty graph")
-    def l1norm(df: DataFrame, c: String): DataFrame = {
-      val s = Option(df.agg(sum(col(c))).head().get(0))
-        .fold(0.0)(_.asInstanceOf[Double])
-      // All-zero vector (possible only on degenerate graphs where no
-      // edge survives): keep zeros rather than divide by zero.
-      if (s == 0.0) df else df.select(col("node"), (col(c) / lit(s)).as(c))
+    val g = directedGraph(edges, src, dst)
+    require(g.n > 0, "empty graph")
+    // Column `c` over its L1 sum `total` (a null or 0 sum — an all-zero
+    // vector, possible only on degenerate graphs — keeps the zeros).
+    def scaled(c: String, total: Any): Column = {
+      val t = Option(total).fold(0.0)(_.asInstanceOf[Double])
+      (if (t == 0.0) col(c) else col(c) / lit(t)).as(c)
     }
-    // In-loop frames stay SPARSE (only nonzero scores carry rows — the
-    // matvec inner joins ignore zeros anyway) and UNNORMALIZED: per-step
-    // L1 division only rescales the direction the final normalization
-    // fixes, but costs a driver agg barrier per half-step, and the
-    // node-completion left join only matters for the returned frame.
-    // Dropping both cuts the per-iteration work to the two matvec
-    // shuffles (measured 6.4 s → ~2 s on the bench's 240k-edge graph at
-    // 3 iterations). Magnitudes grow ~(avg in-deg · avg out-deg) per
-    // round, so a periodic rescale (every 8 rounds — far inside double
-    // range for any real graph) bounds them for deep iteration counts.
-    //
-    // Round 15 (guide §2.4/§3.1): in every matvec the EDGE table is the
-    // heavy side and the score frame is node-scale — so when the node
-    // count is broadcastable, ship the scores and never move an edge
-    // byte: each half-step becomes broadcast-build + map-side hash join
-    // over the checkpointed edge partitions + partial agg + one
-    // node-scale Exchange, and the WHOLE loop stays one lazy plan
-    // (ReuseExchange dedups each round's broadcast between the next
-    // matvec and the completion join, so nothing recomputes) with a
-    // single checkpoint at the end — per-half-step checkpoints were a
-    // driver job each. The in-loop frames are checkpointed/derived RDDs
-    // whose stats the planner cannot see (and under AQE a checkpoint
-    // does not even keep its physical partitioning — OPTIMIZATION_r15.md
-    // §5: a
-    // co-partitioned variant re-exchanged every round and shuffled MORE,
-    // 51.8 vs 41.6 MB), so the broadcast is an explicit size-GATED
-    // choice, not a hint-always: above `loopBroadcastMaxNodes` nodes it
-    // falls back to the previous shuffle-join + checkpoint-per-half-step
-    // shape, which scales to any node count. Measured on the bench graph
-    // (240k edges, 21k nodes, 3 iterations, XProbe medians,
-    // OPTIMIZATION_r15.md §5):
-    // 41.6 → 9.7 MB shuffled (the rest is the loop-invariant edge
-    // distinct + node-scale agg exchanges) and 2.83 → 2.22 s.
-    val small = ns <= loopBroadcastMaxNodes
-    def bc(df: DataFrame): DataFrame =
-      if (small) broadcast(df) else df.hint("shuffle_hash")
-    // Lineage: the small path cuts it only at the 8-round rescale (and
-    // once at the end); the shuffle path cuts every half-step as before.
-    def cut(df: DataFrame): DataFrame = if (small) df else df.localCheckpoint()
-    var hub = cut(nodes.select(col("node"), lit(1.0).as("hub")))
+    def l1norm(df: DataFrame, c: String): DataFrame =
+      df.select(col("node"), scaled(c, df.agg(sum(col(c))).head().get(0)))
+    // Below the gate the WHOLE loop stays one lazy plan (ReuseExchange
+    // dedups each round's broadcast between the next half-step and the
+    // completion join) cut once at the end — per-half-step checkpoints
+    // were a driver job each. The checkpointed scores could not be
+    // co-partitioned instead: under AQE a checkpoint does not keep its
+    // physical partitioning, and that variant re-exchanged every round
+    // and shuffled MORE (51.8 vs 41.6 MB, OPTIMIZATION_r15.md §5). Above
+    // the gate: shuffle-hash joins, cut every half-step.
+    val bc = loopGate(g.n, _.hint("shuffle_hash"))
+    def cut(df: DataFrame): DataFrame = if (bc.small) df else df.localCheckpoint()
+    var hub = cut(g.nodes.select(col("node"), lit(1.0).as("hub")))
     var auth = hub.select(col("node"), col("hub").as("auth")).limit(0)
     var i = 0
     while (i < iterations) {
-      auth = cut(e.join(bc(hub), hub("node") === e("src"))
-        .groupBy(e("dst").as("node")).agg(sum(col("hub")).as("auth")))
-      hub = cut(e.join(bc(auth), auth("node") === e("dst"))
-        .groupBy(e("src").as("node")).agg(sum(col("auth")).as("hub")))
+      auth = cut(hitsStep(g.edges, bc, hub, "hub", "auth"))
+      hub = cut(hitsStep(g.edges, bc, auth, "auth", "hub"))
       i += 1
       if (i % 8 == 0 && i < iterations) {
         auth = l1norm(auth.localCheckpoint(), "auth")
@@ -405,29 +291,20 @@ object GraphOps {
     // One completion pass: attach both scores to the node set, checkpoint
     // ONCE (the only materialization of the small path's lazy chain),
     // then read the two L1 sums off the materialized rows and divide.
-    val combined = nodes.join(bc(auth), Seq("node"), "left")
+    val combined = g.nodes.join(bc(auth), Seq("node"), "left")
       .join(bc(hub), Seq("node"), "left")
       .select(col("node"),
         coalesce(col("hub"), lit(0.0)).as("hub"),
         coalesce(col("auth"), lit(0.0)).as("auth"))
       .localCheckpoint()
     val sums = combined.agg(sum(col("hub")), sum(col("auth"))).head()
-    def s(i: Int): Double =
-      Option(sums.get(i)).fold(0.0)(_.asInstanceOf[Double])
-    val (sh, sa) = (s(0), s(1))
-    combined.select(col("node"),
-      (if (sh == 0.0) col("hub") else col("hub") / lit(sh)).as("hub"),
-      (if (sa == 0.0) col("auth") else col("auth") / lit(sa)).as("auth"))
+    combined.select(col("node"), scaled("hub", sums.get(0)), scaled("auth", sums.get(1)))
   }
 
-  /** Node-count gate for the iterative loops' in-loop broadcast of
-    * node-scale state ([[hits]]/[[hitsCounts]] scores, [[pageRank]]
-    * ranks/degrees, [[labelPropagation]] labels,
-    * [[graft.ops.DedupOps.connectedComponents]] labels): a
-    * (long, double) hashed relation of 4M rows is ~150 MB — comfortable
-    * executor/driver territory — while graph deployments past it fall
-    * back to the shuffle-join loop shapes that scale to any node
-    * count. */
+  /** Node-count threshold of [[loopGate]]: a (long, double) hashed
+    * relation of 4M rows is ~150 MB — comfortable executor/driver
+    * territory — while graph deployments past it fall back to the
+    * shuffle-join loop shapes that scale to any node count. */
   val loopBroadcastMaxNodes: Long = 4L * 1000 * 1000
 
   /** The EXACT-INTEGER unnormalized HITS kernel — the q184 cross-engine
@@ -444,33 +321,35 @@ object GraphOps {
   def hitsCounts(edges: DataFrame, src: String = "src", dst: String = "dst",
                  iterations: Int = 2): DataFrame = {
     require(iterations >= 1, s"iterations must be >= 1, got $iterations")
-    val e = edges.select(col(src).as("src"), col(dst).as("dst"))
-      .where(col("src").isNotNull && col("dst").isNotNull)
-      .distinct().localCheckpoint()
-    val nodes = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct().localCheckpoint()
-    // Gated node-scale broadcasts (round 15, the [[hits]]/[[pageRankFrom]]
-    // pattern): bigint sums keep the q184 hash exact under the plan change.
-    val small = nodes.count() <= loopBroadcastMaxNodes
-    def bc(df: DataFrame): DataFrame = if (small) broadcast(df) else df
-    var hub = nodes.select(col("node"), lit(1L).as("hub")).localCheckpoint()
-    var auth = nodes.select(col("node"), lit(0L).as("auth"))
+    val g = directedGraph(edges, src, dst)
+    val bc = loopGate(g.n)
+    // Dense completion onto the node set and a cut every half-step.
+    def complete(scores: DataFrame, c: String): DataFrame =
+      g.nodes.join(bc(scores), Seq("node"), "left")
+        .select(col("node"), coalesce(col(c), lit(0L)).as(c))
+        .localCheckpoint()
+    var hub = g.nodes.select(col("node"), lit(1L).as("hub")).localCheckpoint()
+    var auth = g.nodes.select(col("node"), lit(0L).as("auth"))
     var i = 0
     while (i < iterations) {
-      val a = e.join(bc(hub), hub("node") === e("src"))
-        .groupBy(e("dst").as("node")).agg(sum(col("hub")).as("auth"))
-      auth = nodes.join(bc(a), Seq("node"), "left")
-        .select(col("node"), coalesce(col("auth"), lit(0L)).as("auth"))
-        .localCheckpoint()
-      val h = e.join(bc(auth), auth("node") === e("dst"))
-        .groupBy(e("src").as("node")).agg(sum(col("auth")).as("hub"))
-      hub = nodes.join(bc(h), Seq("node"), "left")
-        .select(col("node"), coalesce(col("hub"), lit(0L)).as("hub"))
-        .localCheckpoint()
+      auth = complete(hitsStep(g.edges, bc, hub, "hub", "auth"), "auth")
+      hub = complete(hitsStep(g.edges, bc, auth, "auth", "hub"), "hub")
       i += 1
     }
     hub.join(bc(auth), Seq("node"))
       .select(col("node"), col("hub"), col("auth"))
+  }
+
+  /** One HITS half-step of [[hits]] and [[hitsCounts]] over the
+    * [[directedGraph]] edges: push each node's `from` score along its
+    * edges and sum it at the other end as `to` — authorities from hubs
+    * along src→dst, hubs from authorities back along dst→src. Only nodes
+    * with an edge on that side get a row. */
+  private def hitsStep(e: DataFrame, bc: LoopGate, scores: DataFrame,
+                       from: String, to: String): DataFrame = {
+    val (tail, head) = if (to == "auth") ("src", "dst") else ("dst", "src")
+    e.join(bc(scores), scores("node") === e(tail))
+      .groupBy(e(head).as("node")).agg(sum(col(from)).as(to))
   }
 
   /** SYNCHRONOUS label propagation (the classic community-detection
@@ -478,47 +357,33 @@ object GraphOps {
     * HITS and connected components): every node starts labeled with its own
     * id, and each round SIMULTANEOUSLY adopts the label most frequent
     * among its out-neighbors' labels, ties broken to the SMALLEST label
-    * — the deterministic variant (plain LPA tie-breaks randomly, which
-    * is neither reproducible across engines nor across task retries).
-    * Unlike connected components this does NOT converge to one label
-    * per component; bounded rounds yield bounded-radius communities —
-    * the graph-dedup/cohort form real pipelines use.
+    * ([[lpaWinners]]) — the deterministic variant (plain LPA tie-breaks
+    * randomly, which is neither reproducible across engines nor across
+    * task retries). Unlike connected components this does NOT converge to
+    * one label per component; bounded rounds yield bounded-radius
+    * communities — the graph-dedup/cohort form real pipelines use.
     *
     * Per round: one equi join (labels onto edges) + one partial-agg'd
-    * hash count per (node, label) + one per-node top-1 (row_number
-    * lowers to WindowGroupLimit — pre-shuffle truncation), all over
-    * node/edge-scale state, lineage cut every round like [[pageRank]].
-    * Multi-edges are collapsed (`distinct` — one neighbor, one vote);
-    * nodes with no out-edge keep their current label (the declared q171
-    * SQL twin inner-joins and is equivalent on graphs where every node
-    * has an out-edge — the symmetric construction guarantees it).
+    * hash count per (node, label) + one per-node top-1, lineage cut every
+    * round like [[pageRank]]. Multi-edges are collapsed (one neighbor,
+    * one vote); nodes with no out-edge keep their current label (the
+    * declared q171 SQL twin inner-joins and is equivalent on graphs where
+    * every node has an out-edge — the symmetric construction guarantees
+    * it).
     *
     * Returns (node, lbl). */
   def labelPropagation(edges: DataFrame, src: String = "src", dst: String = "dst",
                        iterations: Int = 2): DataFrame = {
     require(iterations >= 1, s"iterations must be >= 1, got $iterations")
-    val e = edges.select(col(src).as("src"), col(dst).as("dst"))
-      .where(col("src").isNotNull && col("dst").isNotNull)
-      .distinct().localCheckpoint()
-    var labels = e.select(col("src").as("node"))
-      .union(e.select(col("dst").as("node"))).distinct()
-      .select(col("node"), col("node").as("lbl")).localCheckpoint()
-    // Gated node-scale broadcasts (round 15, the [[hits]] pattern): the
-    // vote join's edge side stays put and only the (node, lbl) frame
-    // ships; the count/top-1 winner is deterministic either way, so the
-    // q171 hash is unchanged.
-    val small = labels.count() <= loopBroadcastMaxNodes
-    def bc(df: DataFrame): DataFrame = if (small) broadcast(df) else df
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy("node").orderBy(col("c").desc, col("lbl"))
+    val g = directedGraph(edges, src, dst)
+    val e = g.edges
+    val bc = loopGate(g.n)
+    var labels = g.nodes.select(col("node"), col("node").as("lbl"))
     var i = 0
     while (i < iterations) {
-      val votes = e.join(bc(labels.select(col("node").as("__n"), col("lbl"))),
-          col("__n") === e("dst"))
-        .groupBy(e("src").as("node"), col("lbl"))
-        .agg(count(lit(1)).as("c"))
-      val winner = votes.withColumn("rn", row_number().over(w))
-        .where(col("rn") === 1)
+      val winner = lpaWinners(
+          e.join(bc(labels.select(col("node").as("__n"), col("lbl"))),
+            col("__n") === e("dst")))
         .select(col("node").as("__wn"), col("lbl").as("__wl"))
       labels = labels.join(bc(winner), labels("node") === col("__wn"), "left")
         .select(labels("node"), coalesce(col("__wl"), labels("lbl")).as("lbl"))
@@ -526,6 +391,88 @@ object GraphOps {
       i += 1
     }
     labels
+  }
+
+  /** The LPA winner rule of [[labelPropagation]] and
+    * [[graft.streaming.LabelLoop]]: `votes` carries one (src, lbl) row per
+    * out-edge (an edge's head label voting for its tail); per node, the
+    * label with the most votes wins, ties to the SMALLEST label. The
+    * row_number top-1 lowers to WindowGroupLimit (pre-shuffle
+    * truncation). Returns (node, lbl) for every node with a vote. */
+  private[graft] def lpaWinners(votes: DataFrame): DataFrame =
+    votes.groupBy(col("src").as("node"), col("lbl"))
+      .agg(count(lit(1)).as("c"))
+      .withColumn("rn", row_number().over(
+        Window.partitionBy("node").orderBy(col("c").desc, col("lbl"))))
+      .where(col("rn") === 1)
+      .select(col("node"), col("lbl"))
+
+  /** The directed graph every directed operator iterates over. `edges`:
+    * the cut (src, dst) table — plus `w`, the summed positive weight, when
+    * weighted; `nodes`: the cut (node, outd) table (plus the caller's
+    * `nodeFlags` columns); `n`: its row count. */
+  private[graft] final case class DirectedGraph(edges: DataFrame, nodes: DataFrame, n: Long)
+
+  /** The directed-edge prelude: edges renamed to (src, dst), null
+    * endpoints dropped, multi-edges collapsed — `distinct`, or for a
+    * `weight` column a pre-sum of parallel rows over positive weights
+    * (`distinct` would keep weight-variant duplicates apart) — and cut.
+    * Then ONE exploded aggregation over the cut edges: every edge
+    * contributes (src, vote) and (dst, 0), so the per-node sum yields
+    * the node set (every endpoint appears) and the out-degree (vote 1, or
+    * `w` weighted; outd 0 = dangling). `nodeFlags` may join extra
+    * node-scale columns on before the node table is cut (the
+    * personalized PageRank seed flag) — no extra job. The unweighted
+    * spelling is the declared q169 contract. */
+  private[graft] def directedGraph(edges: DataFrame, src: String, dst: String,
+                                   weight: Option[String] = None,
+                                   nodeFlags: DataFrame => DataFrame = df => df): DirectedGraph = {
+    val e = (weight match {
+      case Some(w) => edges
+        .select(col(src).as("src"), col(dst).as("dst"), col(w).cast("double").as("w"))
+        .where(col("src").isNotNull && col("dst").isNotNull && col("w") > 0)
+        .groupBy("src", "dst").agg(sum(col("w")).as("w"))
+      case None => edges.select(col(src).as("src"), col(dst).as("dst"))
+        .where(col("src").isNotNull && col("dst").isNotNull)
+        .distinct()
+    }).localCheckpoint()
+    val (vote, zero) = if (weight.isDefined) (col("w"), lit(0.0)) else (lit(1L), lit(0L))
+    val nodes = nodeFlags(e.select(col("src").as("node"), vote.as("__vote"))
+        .unionAll(e.select(col("dst").as("node"), zero.as("__vote")))
+        .groupBy("node").agg(sum(col("__vote")).as("outd")))
+      .localCheckpoint()
+    DirectedGraph(e, nodes, nodes.count())
+  }
+
+  /** [[loopGate]]'s choice for one loop: `apply` broadcasts a node-scale
+    * frame when `small`, else applies the loop's shuffle-path shape. */
+  private[graft] final class LoopGate(val small: Boolean, large: DataFrame => DataFrame) {
+    def apply(df: DataFrame): DataFrame = if (small) broadcast(df) else large(df)
+  }
+
+  /** The broadcast gate of every iterative graph loop (see the object
+    * doc): broadcast node-scale state at or below [[loopBroadcastMaxNodes]]
+    * `nodes`, else `large` (default: leave the join to the planner). */
+  private[graft] def loopGate(nodes: Long,
+                              large: DataFrame => DataFrame = df => df): LoopGate =
+    new LoopGate(nodes <= loopBroadcastMaxNodes, large)
+
+  /** The distinct endpoints `n` of canonical (lo, hi) edge frames. */
+  private[graft] def endpoints(edges: DataFrame*): DataFrame =
+    edges.flatMap(e => Seq(e.select(col("lo").as("n")), e.select(col("hi").as("n"))))
+      .reduce(_ union _).distinct()
+
+  /** The canonical undirected form of an edge frame: endpoints `a` and
+    * `b` become (lo, hi) by value, rows with a null endpoint or a self
+    * loop drop, and `carry` columns ride along unchanged. No `distinct`:
+    * callers collapse duplicates where (and after whatever restriction)
+    * their scale shape wants. */
+  private[graft] def undirected(df: DataFrame, a: Column, b: Column,
+                                carry: Column*): DataFrame = {
+    val ab = df.select(a.as("a") +: b.as("b") +: carry: _*)
+      .where(col("a").isNotNull && col("b").isNotNull && col("a") =!= col("b"))
+    ab.select(least(col("a"), col("b")).as("lo") +:
+      greatest(col("a"), col("b")).as("hi") +: ab.columns.toSeq.drop(2).map(col): _*)
   }
 
   /** Per-node TRIANGLE COUNT over an undirected simple graph (edges in
@@ -568,10 +515,13 @@ object GraphOps {
     nodes.join(perNodeTriangles(lazyClosed.localCheckpoint()), Seq("node"), "left")
       .join(deg, Seq("node"))
       .select(col("node"), t.as("triangles"), col("d").as("degree"),
-        round(when(col("d") >= 2,
-            lit(2.0) * t / (col("d") * (col("d") - lit(1.0))))
-          .otherwise(lit(0.0)), 4).as("clustering"))
+        clustering(t, col("d")))
   }
+
+  /** `2·T/(d·(d−1))` on the 4dp grid, 0 below degree 2. */
+  private def clustering(t: Column, d: Column): Column =
+    round(when(d >= 2, lit(2.0) * t / (d * (d - lit(1.0))))
+      .otherwise(lit(0.0)), 4).as("clustering")
 
   /** Fold an edge APPEND into persisted per-node triangle counts — the
     * q172 maintenance twin of [[pageRankWarm]]/`connectedComponents
@@ -582,11 +532,12 @@ object GraphOps {
     *
     * Soundness: appends only ADD triangles, and every added triangle
     * contains at least one truly-new edge — so the delta is exactly the
-    * triangles of the union graph with ≥1 new edge. Each such triangle is
-    * found once per new edge it contains via common-neighbor
-    * intersection, then deduplicated on the sorted node triple before
-    * counting. For batches that also REMOVE edges, use the
-    * deletion-aware overload (extra `removedEdges` frame).
+    * triangles of the union graph with ≥1 new edge, which is the
+    * deletion-aware fold's delta with an empty removal frame (an empty
+    * `limit(0)` frame: the optimizer prunes the whole removal side, so
+    * the append path runs no removal-side job). For batches that also
+    * REMOVE edges, use the deletion-aware overload (extra `removedEdges`
+    * frame).
     *
     * Scale shape — the LabelLoop posture: the old edge store is touched
     * only through a frontier-cone semi join (directed adjacency rows
@@ -600,42 +551,22 @@ object GraphOps {
     * old endpoints cannot invalidate anything. */
   def triangleCountInc(prior: DataFrame, oldEdges: DataFrame, newEdges: DataFrame,
                        src: String = "src", dst: String = "dst"): DataFrame = {
-    val (frontier, _, deltaCounts) = triangleDelta(oldEdges, newEdges, src, dst)
-    val allNodes = prior.select(col("node"))
-      .union(frontier.select(col("n").as("node"))).distinct()
-    allNodes
-      .join(prior.select(col("node"), col("triangles").as("__pt")), Seq("node"), "left")
-      .join(deltaCounts, Seq("node"), "left")
-      .select(col("node"),
-        (coalesce(col("__pt"), lit(0L)) + coalesce(col("__dt"), lit(0L))).as("triangles"))
+    val d = signedTriangleDelta(oldEdges, newEdges, newEdges.limit(0), src, dst)
+    foldTriangles(prior, d.triDelta, prior.select(col("node"))
+      .union(d.frontier.select(col("n").as("node"))).distinct())
   }
 
   /** [[clusteringCoefficientInc]]: fold an edge append into a persisted
     * [[clusteringCoefficient]] output (node, triangles, degree,
-    * clustering). Triangle deltas as in [[triangleCountInc]]; degrees
-    * fold as prior + per-node count of truly-new incident edges (both
-    * node-scale); the 4dp-grid division is recomputed — equal to the
-    * cold run on the union graph (OpsSpec-pinned). */
+    * clustering) — the deletion-aware overload with an empty removal
+    * frame, as in [[triangleCountInc]]. Degrees fold as prior + per-node
+    * count of truly-new incident edges (both node-scale); the 4dp-grid
+    * division is recomputed — equal to the cold run on the union graph
+    * (OpsSpec-pinned). */
   def clusteringCoefficientInc(prior: DataFrame, oldEdges: DataFrame,
                                newEdges: DataFrame, src: String = "src",
-                               dst: String = "dst"): DataFrame = {
-    val (frontier, delta, deltaCounts) = triangleDelta(oldEdges, newEdges, src, dst)
-    val deltaDeg = delta.select(col("lo").as("node"))
-      .unionAll(delta.select(col("hi").as("node")))
-      .groupBy("node").agg(count(lit(1)).as("__dd"))
-    val allNodes = prior.select(col("node"))
-      .union(frontier.select(col("n").as("node"))).distinct()
-    val t = coalesce(col("__pt"), lit(0L)) + coalesce(col("__dt"), lit(0L))
-    val d = coalesce(col("__pd"), lit(0L)) + coalesce(col("__dd"), lit(0L))
-    allNodes
-      .join(prior.select(col("node"), col("triangles").as("__pt"),
-        col("degree").as("__pd")), Seq("node"), "left")
-      .join(deltaCounts, Seq("node"), "left")
-      .join(deltaDeg, Seq("node"), "left")
-      .select(col("node"), t.as("triangles"), d.as("degree"),
-        round(when(d >= 2, lit(2.0) * t / (d * (d - lit(1.0))))
-          .otherwise(lit(0.0)), 4).as("clustering"))
-  }
+                               dst: String = "dst"): DataFrame =
+    clusteringCoefficientInc(prior, oldEdges, newEdges, newEdges.limit(0), src, dst)
 
   /** Deletion-aware [[triangleCountInc]]: fold a mixed edge batch —
     * `addedEdges` AND `removedEdges` — into persisted per-node triangle
@@ -653,7 +584,8 @@ object GraphOps {
     * provably disjoint (a subtracted triangle contains a removed edge,
     * which no new-graph triangle can), so no cross-pass dedup is
     * needed; within each pass the sorted-triple `distinct` dedups
-    * multi-delta triangles exactly as in the append-only fold.
+    * multi-delta triangles (a triangle is found once per delta edge it
+    * contains).
     *
     * Nodes left ISOLATED by the batch (every incident edge removed) are
     * DROPPED, and new nodes appear — matching the cold recompute's
@@ -671,14 +603,9 @@ object GraphOps {
     val frontierKept = d.frontier
       .join(d.coneDeg, Seq("n"), "left").join(d.degDelta, Seq("n"), "left")
       .where(newDeg > 0).select(col("n").as("node"))
-    val allNodes = prior.select(col("node"))
+    foldTriangles(prior, d.triDelta, prior.select(col("node"))
       .join(d.frontier, col("node") === col("n"), "left_anti")
-      .union(frontierKept)
-    allNodes
-      .join(prior.select(col("node"), col("triangles").as("__pt")), Seq("node"), "left")
-      .join(d.triDelta, Seq("node"), "left")
-      .select(col("node"),
-        (coalesce(col("__pt"), lit(0L)) + coalesce(col("__dt"), lit(0L))).as("triangles"))
+      .union(frontierKept))
   }
 
   def triangleCountInc(prior: DataFrame, oldEdges: DataFrame, addedEdges: DataFrame,
@@ -705,14 +632,22 @@ object GraphOps {
       .join(dd.triDelta, Seq("node"), "left")
       .join(dd.degDelta.select(col("n").as("node"), col("__di")), Seq("node"), "left")
       .where(d > 0)
-      .select(col("node"), t.as("triangles"), d.as("degree"),
-        round(when(d >= 2, lit(2.0) * t / (d * (d - lit(1.0))))
-          .otherwise(lit(0.0)), 4).as("clustering"))
+      .select(col("node"), t.as("triangles"), d.as("degree"), clustering(t, d))
   }
 
   def clusteringCoefficientInc(prior: DataFrame, oldEdges: DataFrame,
                                addedEdges: DataFrame, removedEdges: DataFrame): DataFrame =
     clusteringCoefficientInc(prior, oldEdges, addedEdges, removedEdges, "src", "dst")
+
+  /** Per-node triangle counts over `nodes`: `prior`'s count plus the
+    * signed delta (node, __dt). */
+  private def foldTriangles(prior: DataFrame, triDelta: DataFrame,
+                            nodes: DataFrame): DataFrame =
+    nodes
+      .join(prior.select(col("node"), col("triangles").as("__pt")), Seq("node"), "left")
+      .join(triDelta, Seq("node"), "left")
+      .select(col("node"),
+        (coalesce(col("__pt"), lit(0L)) + coalesce(col("__dt"), lit(0L))).as("triangles"))
 
   /** The pieces of the signed (add + remove) triangle delta. `frontier`
     * = endpoints of either batch frame (`n`); `triDelta` = signed
@@ -722,37 +657,38 @@ object GraphOps {
   private case class SignedDelta(frontier: DataFrame, triDelta: DataFrame,
                                  degDelta: DataFrame, coneDeg: DataFrame)
 
-  /** Signed delta machinery of the deletion-aware fold. Net semantics
-    * first — `rnet` = requested removals minus re-adds, intersected with
-    * the old graph; `anet` = requested additions absent from the old
-    * graph (an existing edge that is both removed and re-added nets to
-    * untouched) — then two enumeration passes over ONE shared frontier
-    * cone: removed triangles close through OLD adjacency (they existed
-    * before the batch), added triangles through NEW adjacency
-    * (cone ∖ rnet ∪ anet). Store bytes never shuffle — the cone pays
-    * the canonical distinct, exactly as in the append-only fold. */
+  /** The one triangle delta of the incremental triangle family. Net
+    * semantics first — `rnet` = requested removals minus re-adds,
+    * intersected with the old graph; `anet` = requested additions absent
+    * from the old graph (an existing edge that is both removed and
+    * re-added nets to untouched) — then two enumeration passes over ONE
+    * shared frontier cone: removed triangles close through OLD adjacency
+    * (they existed before the batch), added triangles through NEW
+    * adjacency (cone ∖ rnet ∪ anet). Store bytes never shuffle. The
+    * removal-side cuts are skipped for a removal frame the optimizer
+    * proves empty, so the append-only fold runs exactly the append
+    * path's jobs. */
   private def signedTriangleDelta(oldEdges: DataFrame, addedEdges: DataFrame,
                                   removedEdges: DataFrame, src: String,
                                   dst: String): SignedDelta = {
-    def und(df: DataFrame): DataFrame = df
-      .select(col(src).as("a"), col(dst).as("b"))
-      .where(col("a").isNotNull && col("b").isNotNull && col("a") =!= col("b"))
-      .select(least(col("a"), col("b")).as("lo"), greatest(col("a"), col("b")).as("hi"))
-      .distinct()
+    def und(df: DataFrame): DataFrame = undirected(df, col(src), col(dst)).distinct()
     val addU = und(addedEdges).localCheckpoint()
     // Removals re-added in the same batch cancel BEFORE touching the
     // store: for an existing edge the pair is a no-op (add wins), and
     // netting first keeps both enumeration passes delta-sized.
-    val remReq = und(removedEdges).join(addU, Seq("lo", "hi"), "left_anti")
-      .localCheckpoint()
-    val frontier = addU.select(col("lo").as("n"))
-      .union(addU.select(col("hi").as("n")))
-      .union(remReq.select(col("lo").as("n")))
-      .union(remReq.select(col("hi").as("n"))).distinct().localCheckpoint()
-    val oldCanon = oldEdges.select(col(src).as("a"), col(dst).as("b"))
-      .where(col("a").isNotNull && col("b").isNotNull && col("a") =!= col("b"))
-      .select(least(col("a"), col("b")).as("lo"), greatest(col("a"), col("b")).as("hi"))
-    val adjOldCone = oldCanon
+    val remReq = cutUnlessEmpty(und(removedEdges).join(addU, Seq("lo", "hi"), "left_anti"))
+    val frontier = endpoints(addU, remReq).localCheckpoint()
+    // Directed-adjacency CONE of the old store: rows whose tail is a
+    // frontier node — the only part of the old graph the fold reads. The
+    // broadcast semi join restricts the store BEFORE any wide operation
+    // (the canonical `distinct` runs on the cone, not the store — running
+    // it store-first was a full-E shuffle that made the fold LOSE to the
+    // cold recompute on the 1M-edge probe). The cone IS distinct'd: raw
+    // edge lists carry duplicate/reversed edges, and leaving them in
+    // inflates the candidate fan-out by the duplicity factor (measured
+    // +50% fold shuffle on the 1M-edge probe). Cut once: every later
+    // pass reads it.
+    val adjOldCone = undirected(oldEdges, col(src), col(dst))
       .select(explode(array(
           struct(col("lo").as("u"), col("hi").as("w")),
           struct(col("hi").as("u"), col("lo").as("w")))).as("e"))
@@ -761,20 +697,22 @@ object GraphOps {
       .distinct().localCheckpoint()
     // Both endpoints of every batch edge are frontier nodes, so the cone
     // suffices for presence tests against the old graph.
-    val rnet = remReq.join(adjOldCone,
-        col("lo") === col("u") && col("hi") === col("w"), "left_semi")
-      .localCheckpoint()
+    val rnet = cutUnlessEmpty(remReq.join(adjOldCone,
+        col("lo") === col("u") && col("hi") === col("w"), "left_semi"))
     val anet = addU.join(adjOldCone,
         col("lo") === col("u") && col("hi") === col("w"), "left_anti")
       .localCheckpoint()
-    // Delete pass: triangles of the OLD graph with >= 1 rnet edge.
-    val remTris = rnet.join(adjOldCone.as("ra"), col("ra.u") === col("lo"))
-      .select(col("lo").as("ta"), col("hi").as("tb"), col("ra.w").as("cw"))
-      .join(adjOldCone.as("rb"),
-        col("rb.u") === col("tb") && col("rb.w") === col("cw"))
-      .select(array_sort(array(col("ta"), col("tb"), col("cw"))).as("tri"))
-      .distinct()
-    // Add pass: triangles of the NEW graph with >= 1 anet edge.
+    // Triangles with >= 1 delta edge: for delta edge (lo, hi), a common
+    // neighbor w of both endpoints in `adj` closes one; dedup on the
+    // sorted triple.
+    def tris(delta: DataFrame, adj: DataFrame): DataFrame =
+      delta.join(adj.as("na"), col("na.u") === col("lo"))
+        .select(col("lo").as("ta"), col("hi").as("tb"), col("na.w").as("cw"))
+        .join(adj.as("nb"), col("nb.u") === col("tb") && col("nb.w") === col("cw"))
+        .select(array_sort(array(col("ta"), col("tb"), col("cw"))).as("tri"))
+        .distinct()
+    // Delete pass over OLD adjacency; add pass over NEW adjacency.
+    val remTris = tris(rnet, adjOldCone)
     val adjNew = adjOldCone
       .join(rnet.select(col("lo").as("u"), col("hi").as("w"))
           .unionAll(rnet.select(col("hi").as("u"), col("lo").as("w"))),
@@ -782,12 +720,7 @@ object GraphOps {
       .unionAll(anet.select(col("lo").as("u"), col("hi").as("w")))
       .unionAll(anet.select(col("hi").as("u"), col("lo").as("w")))
       .localCheckpoint()
-    val addTris = anet.join(adjNew.as("na"), col("na.u") === col("lo"))
-      .select(col("lo").as("ta"), col("hi").as("tb"), col("na.w").as("cw"))
-      .join(adjNew.as("nb"),
-        col("nb.u") === col("tb") && col("nb.w") === col("cw"))
-      .select(array_sort(array(col("ta"), col("tb"), col("cw"))).as("tri"))
-      .distinct()
+    val addTris = tris(anet, adjNew)
     val triDelta = addTris.select(explode(col("tri")).as("node"), lit(1L).as("s"))
       .unionAll(remTris.select(explode(col("tri")).as("node"), lit(-1L).as("s")))
       .groupBy("node").agg(sum(col("s")).as("__dt"))
@@ -800,66 +733,15 @@ object GraphOps {
     SignedDelta(frontier, triDelta, degDelta, coneDeg)
   }
 
-  /** Shared delta machinery of the incremental triangle family:
-    * (frontier nodes `n`, truly-new canonical edges (lo, hi), per-node
-    * triangle deltas (node, __dt)). */
-  private def triangleDelta(oldEdges: DataFrame, newEdges: DataFrame,
-                            src: String, dst: String): (DataFrame, DataFrame, DataFrame) = {
-    def und(df: DataFrame): DataFrame = df
-      .select(col(src).as("a"), col(dst).as("b"))
-      .where(col("a").isNotNull && col("b").isNotNull && col("a") =!= col("b"))
-      .select(least(col("a"), col("b")).as("lo"), greatest(col("a"), col("b")).as("hi"))
-      .distinct()
-    val newU = und(newEdges).localCheckpoint()
-    val frontier = newU.select(col("lo").as("n"))
-      .union(newU.select(col("hi").as("n"))).distinct().localCheckpoint()
-    // Directed-adjacency CONE of the old store: rows whose tail is a
-    // frontier node — the only part of the old graph the fold reads. The
-    // broadcast semi join restricts the store BEFORE any wide operation
-    // (the canonical `distinct` runs on the cone, not the store — running
-    // it store-first was a full-E shuffle that made the fold LOSE to the
-    // cold recompute on the 1M-edge probe), so store bytes never shuffle.
-    val oldCanon = oldEdges.select(col(src).as("a"), col(dst).as("b"))
-      .where(col("a").isNotNull && col("b").isNotNull && col("a") =!= col("b"))
-      .select(least(col("a"), col("b")).as("lo"), greatest(col("a"), col("b")).as("hi"))
-    // Cut once: both the duplicate-filtering anti join and the closing
-    // adjacency reference the cone — lazy, each reference would re-scan
-    // the store.
-    // The cone IS distinct'd (cone-sized exchange, not store-sized): raw
-    // edge lists carry duplicate/reversed edges, and leaving them in
-    // inflates the candidate fan-out by the duplicity factor (measured
-    // +50% fold shuffle on the 1M-edge probe) even though the sorted-
-    // triple dedup would keep counts correct.
-    val adjOldCone = oldCanon
-      .select(explode(array(
-          struct(col("lo").as("u"), col("hi").as("w")),
-          struct(col("hi").as("u"), col("lo").as("w")))).as("e"))
-      .select(col("e.u").as("u"), col("e.w").as("w"))
-      .join(broadcast(frontier), col("u") === col("n"), "left_semi")
-      .distinct().localCheckpoint()
-    // Truly-new edges: appended minus already-present (duplicates of old
-    // edges add nothing). Both endpoints of a duplicate are frontier
-    // nodes, so the cone suffices for the anti join.
-    val delta = newU.join(adjOldCone,
-        col("lo") === col("u") && col("hi") === col("w"), "left_anti")
-      .localCheckpoint()
-    val adjU = adjOldCone
-      .unionAll(delta.select(col("lo").as("u"), col("hi").as("w")))
-      .unionAll(delta.select(col("hi").as("u"), col("lo").as("w")))
-      .localCheckpoint()
-    // Triangles with >= 1 new edge: for new edge (lo, hi), a common
-    // neighbor w of both endpoints closes one. Found once per new edge a
-    // triangle contains — dedup on the sorted triple.
-    val cand = delta.join(adjU.as("na"), col("na.u") === col("lo"))
-      .select(col("lo").as("ta"), col("hi").as("tb"), col("na.w").as("cw"))
-    val tris = cand.join(adjU.as("nb"),
-        col("nb.u") === col("tb") && col("nb.w") === col("cw"))
-      .select(array_sort(array(col("ta"), col("tb"), col("cw"))).as("tri"))
-      .distinct()
-    val deltaCounts = tris.select(explode(col("tri")).as("node"))
-      .groupBy("node").agg(count(lit(1)).as("__dt"))
-    (frontier, delta, deltaCounts)
-  }
+  /** `localCheckpoint`, except for a frame the optimizer already proved
+    * empty (an empty removal frame): cutting it would run a job for
+    * nothing and hide the emptiness every downstream union and join
+    * prunes at plan time. */
+  private def cutUnlessEmpty(df: DataFrame): DataFrame =
+    df.queryExecution.optimizedPlan match {
+      case r: LocalRelation if r.data.isEmpty => df
+      case _ => df.localCheckpoint()
+    }
 
   private def perNodeTriangles(closed: DataFrame): DataFrame =
     closed.select(col("apex").as("node"))
@@ -875,11 +757,7 @@ object GraphOps {
     * with apex→x, apex→y, x→y all oriented edges. */
   private[graft] def triangleParts(edges: DataFrame, src: String,
                                    dst: String): (DataFrame, DataFrame, DataFrame) = {
-    // Canonical undirected edge set: (lo, hi) by node id, once.
-    val und = edges.select(col(src).as("a"), col(dst).as("b"))
-      .where(col("a").isNotNull && col("b").isNotNull && col("a") =!= col("b"))
-      .select(least(col("a"), col("b")).as("lo"), greatest(col("a"), col("b")).as("hi"))
-      .distinct().localCheckpoint()
+    val und = undirected(edges, col(src), col(dst)).distinct().localCheckpoint()
     val nodes = und.select(col("lo").as("node"))
       .union(und.select(col("hi").as("node"))).distinct()
     val deg = und.select(col("lo").as("node"))

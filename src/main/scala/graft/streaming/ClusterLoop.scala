@@ -84,12 +84,9 @@ object ClusterLoop {
                                    outDir: String, maxIter: Int = 30,
                                    compactEvery: Int = 0): Unit = {
     val spark = batch.sparkSession
-    val canonEvents = batch
-      .select(col(d1).cast("string").as("a"), col(d2).cast("string").as("b"),
-        FoldLoop.removedFlag(batch, removedCol).as("__rm"))
-      .where(col("a").isNotNull && col("b").isNotNull && col("a") =!= col("b"))
-      .select(least(col("a"), col("b")).as("lo"),
-        greatest(col("a"), col("b")).as("hi"), col("__rm"))
+    val canonEvents = graft.ops.GraphOps.undirected(batch,
+      col(d1).cast("string"), col(d2).cast("string"),
+      FoldLoop.removedFlag(batch, removedCol).as("__rm"))
     // Within one batch, an upsert beats a removal of the same pair
     // (the Debezium-shaped convention UpsertLoop uses) —
     // SignedEdgeStore.canonBatch's contract; the signed dir write is

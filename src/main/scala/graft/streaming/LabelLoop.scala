@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
@@ -191,7 +190,6 @@ object LabelLoop {
       // in-edges were necessarily removed this batch, making those
       // sources always-dirty.
       var changed = newNodes
-      val w = Window.partitionBy("node").orderBy(col("c").desc, col("lbl"))
       var trajCols = Seq.empty[(Int, DataFrame)]
       for (r <- 1 to iterations) {
         // Affected sources this round: changed-label in-neighbors + the
@@ -207,15 +205,11 @@ object LabelLoop {
         // last-action netting collapses cross-batch re-sent edges exactly
         // like the batch operator's global `distinct` AND drops removed
         // pairs, without an O(graph) netting per fold.
-        val votes = SignedEdgeStore.net(
+        val winner = graft.ops.GraphOps.lpaWinners(SignedEdgeStore.net(
             store.join(affected.select(col("node").as("__a")),
               col("src") === col("__a"), "left_semi"),
             "src", "dst")
-          .join(cur.select(col("node").as("__n"), col("lbl")), col("__n") === col("dst"))
-          .groupBy(col("src").as("node"), col("lbl"))
-          .agg(count(lit(1)).as("c"))
-        val winner = votes.withColumn("rn", row_number().over(w))
-          .where(col("rn") === 1)
+          .join(cur.select(col("node").as("__n"), col("lbl")), col("__n") === col("dst")))
           .select(col("node"), col("lbl").as("__wl"))
         // Recomputed labels for the affected set (voteless keep round-r−1).
         val rec = affected

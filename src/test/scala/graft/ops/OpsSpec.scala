@@ -340,6 +340,27 @@ class OpsSpec extends AnyFunSuite {
     intercept[IllegalArgumentException] { GraphOps.hits(edges, iterations = 0) }
   }
 
+  test("hits ≡ hitsCounts over their column sums while no rescale runs") {
+    import spark.implicits._
+    // Both operators run the same half-step from h0 = 1; below 9 rounds
+    // hits never rescales, so normalizing the exact counts at the end
+    // must give its scores. A cycle keeps every count nonzero somewhere.
+    val edges = Seq("h1" -> "a1", "h1" -> "a2", "h2" -> "a1", "h3" -> "a1",
+      "a1" -> "h2", "a2" -> "x", "x" -> "h1", "h2" -> "a1").toDF("src", "dst")
+    for (it <- Seq(3, 8)) {
+      val counts = GraphOps.hitsCounts(edges, iterations = it)
+        .collect().map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
+      val sh = counts.values.map(_._1).sum.toDouble
+      val sa = counts.values.map(_._2).sum.toDouble
+      val scores = GraphOps.hits(edges, iterations = it)
+        .collect().map(r => r.getString(0) -> (r.getDouble(1), r.getDouble(2))).toMap
+      assert(scores.keySet == counts.keySet)
+      assert(scores.forall { case (n, (hb, au)) =>
+        math.abs(hb - counts(n)._1 / sh) < 1e-12 && math.abs(au - counts(n)._2 / sa) < 1e-12 },
+        s"$it rounds: hits $scores vs hitsCounts $counts")
+    }
+  }
+
   test("pageRankWeighted: equal weights ≡ unweighted; heavier edges pull more rank") {
     import spark.implicits._
     val e = ((1 to 5).map(i => (s"spoke$i", "hub")) ++
@@ -783,6 +804,32 @@ class OpsSpec extends AnyFunSuite {
       DedupOps.connectedComponents(chainOnly, warmStart = Some(merged)).collect()
     }
     assert(g.getMessage.contains("not a superset"))
+  }
+
+  test("connectedComponents warm start with a checkpoint dir: ≡ cold, one cut left") {
+    import spark.implicits._
+    // The warm-start fixture above, cut through a reliable directory: the
+    // warm-start premise check must still find the edge cut it reads.
+    val chain = (100L until 140L).map(i => (i, i + 1))
+    val blob = Seq((0L, 1L), (0L, 2L), (1L, 2L), (2L, 3L))
+    val prior = DedupOps.connectedComponents((chain ++ blob).toDF("d1", "d2"))
+    val appended = (chain ++ blob ++ Seq((3L, 120L), (200L, 201L))).toDF("d1", "d2")
+    def m(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val dir = java.nio.file.Files.createTempDirectory("graft-ccp-warm").toFile
+    try {
+      val warm = m(DedupOps.connectedComponents(appended,
+        checkpointDir = Some(dir.toString), warmStart = Some(prior)))
+      // The cold labels: the append merges the chain into the blob (min 0)
+      // and adds the island {200, 201}.
+      val cold = ((0L to 3L) ++ (100L to 140L)).map(_ -> 0L).toMap ++
+        Map(200L -> 200L, 201L -> 200L)
+      assert(warm == cold, "warm start through a checkpoint dir must reach the cold labels")
+      val runDir = dir.listFiles().filter(_.isDirectory)
+      assert(runDir.length == 1, s"expected one run dir, got ${runDir.toSeq}")
+      assert(runDir.head.listFiles().count(_.isDirectory) == 1,
+        s"expected only the final cut to remain: ${runDir.head.listFiles().toSeq}")
+    } finally org.apache.commons.io.FileUtils.deleteQuietly(dir)
   }
 
   test("appendNearDup: folded batches emit exactly the one-shot LSH pair set") {
