@@ -1060,15 +1060,11 @@ object Pipelines {
     * so a removed document stops being retrievable, stops generating
     * candidate pairs, stops dominating semantic near-twins, and leaves
     * the corpus statistics — NOW, in one audited action, instead of
-    * per-family calls a caller can forget one of. Each family keeps its
-    * own contract (marks not rewrites, broadcast-anti live views,
-    * idempotent re-delete, stats correction on BM25 — the
-    * [[graft.ops.Tombstones]] kernel); this composes them. Returns the
-    * audit frame `(family, live_removed)` — the number of the batch's
-    * ids that were LIVE in each physical index (0 = no-op there), the
-    * same count each `deleteFrom*` returns. Honest scope: admission
-    * control + retrieval — results already emitted downstream are
-    * downstream state; delete stored CONTENT with the lake tools
+    * per-family calls a caller can forget one of. Every family runs the
+    * one takedown contract of the [[graft.ops.IndexStore]] (BM25 adds
+    * its stats correction). Returns the audit frame `(family,
+    * live_removed)` — each `deleteFrom*`'s count of the batch's ids live
+    * in that index (0 = no-op there). Delete stored CONTENT with the lake tools
     * ([[graft.sources.Maintenance.upsert]] deleteKeys), retract
     * batch-era fingerprint anchors with
     * [[graft.ops.DedupOps.retractFingerprints]], and feed removal
@@ -1076,20 +1072,17 @@ object Pipelines {
     * accumulated tombstone debt with each family's compact*. */
   def takedown(spark: org.apache.spark.sql.SparkSession, ids: DataFrame,
                targets: TakedownTargets): DataFrame = {
-    val b = targets.buckets
-    val rows: Seq[(String, Long)] =
-      targets.ivf.map { case (t, p) =>
-        "ivf" -> graft.ops.Ann.deleteFromIvfIndex(spark, t, p, ids, b) }.toSeq ++
-      targets.lsh.map { case (t, p) =>
-        "lsh" -> graft.ops.Ann.deleteFromLshIndex(spark, t, p, ids, b) } ++
-      targets.pq.map { case (t, p) =>
-        "pq" -> graft.ops.Pq.deleteFromPqIndex(spark, t, p, ids, b) } ++
-      targets.nearDup.map { case (t, p) =>
-        "near_dup" -> graft.ops.DedupOps.deleteFromNearDupIndex(spark, t, p, ids, b) } ++
-      targets.semDedup.map { case (t, p) =>
-        "sem_dedup" -> graft.ops.Ann.deleteFromSemDedupState(spark, t, p, ids, b) } ++
-      targets.bm25.map { case (t, p) =>
-        "bm25" -> graft.ops.SketchOps.deleteFromBm25Index(spark, t, p, ids, b) }
+    import graft.ops.{Ann, DedupOps, Pq, SketchOps}
+    val families: Seq[(String, Option[(String, String)],
+        (org.apache.spark.sql.SparkSession, String, String, DataFrame, Int) => Long)] = Seq(
+      ("ivf", targets.ivf, Ann.deleteFromIvfIndex),
+      ("lsh", targets.lsh, Ann.deleteFromLshIndex),
+      ("pq", targets.pq, Pq.deleteFromPqIndex),
+      ("near_dup", targets.nearDup, DedupOps.deleteFromNearDupIndex),
+      ("sem_dedup", targets.semDedup, Ann.deleteFromSemDedupState),
+      ("bm25", targets.bm25, SketchOps.deleteFromBm25Index))
+    val rows = for ((family, target, delete) <- families; (t, p) <- target)
+      yield family -> delete(spark, t, p, ids, targets.buckets)
     import spark.implicits._
     rows.toDF("family", "live_removed")
   }

@@ -517,20 +517,20 @@ object Ann {
                       buckets: Int = 32,
                       mode: org.apache.spark.sql.SaveMode =
                         org.apache.spark.sql.SaveMode.ErrorIfExists): Unit =
-    graft.sources.Bucketed.write(index, table, path, "cid", buckets, mode)
+    IndexStore.persist(IndexStore.ivf, Seq(index), table, path, buckets, mode)
 
   /** Re-attach a persisted bucketed [[ivfIndex]]; `buckets` must match
     * the write. */
   def loadIvfIndex(spark: org.apache.spark.sql.SparkSession, table: String,
                    path: String, buckets: Int = 32): DataFrame =
-    graft.sources.Bucketed.register(spark, table, path, "cid", buckets)
+    IndexStore.attach(spark, IndexStore.ivf, table, path, buckets).head
 
   /** O(new-vectors) maintenance for a persisted bucketed [[ivfIndex]]:
     * assign `newVectors` under the FROZEN `centroids` (the exact
     * [[ivfIndex]] assignment, so appended ≡ fresh-build over the union
     * gallery by construction), append the new rows into the bucketed
-    * table ([[graft.sources.Bucketed.append]] — layout validated, probe
-    * joins stay Exchange-free), and return a per-cluster drift report:
+    * table (layout validated, probe joins stay Exchange-free), and
+    * return a per-cluster drift report:
     *
     * `(cid, prior_n, appended_n, growth, mean_assign_sim)` — `growth` =
     * appended/(prior+appended); `mean_assign_sim` = mean cosine of each
@@ -540,57 +540,26 @@ object Ann {
     * or mean_assign_sim falls well below the build-time assignment
     * similarity, retrain ([[kmeans]]) and rebuild to a fresh path.
     *
-    * Cost: one narrow pass over `newVectors` (broadcast centroids), plus
-    * two metadata-scale reads of the EXISTING index — a g_id-column scan
-    * for the duplicate-id guard (a silent duplicate would double a
-    * vector's rows, breaking the ≡-fresh-build contract) and a
-    * cid-column count for `prior_n` — both column-pruned, never touching
-    * the int8 payload; nothing rereads the gallery vectors. */
+    * Ids pass the [[IndexStore]] guard. Cost: one narrow pass over
+    * `newVectors` plus one column-pruned pass over the EXISTING index
+    * for both the clash count and `prior_n`. */
   def appendIvfIndex(spark: org.apache.spark.sql.SparkSession, table: String,
                      path: String, newVectors: DataFrame, centroids: DataFrame,
                      buckets: Int = 32,
                      id: String = "vec_id", vec: String = "embedding"): DataFrame = {
     val existing = loadIvfIndex(spark, table, path, buckets)
-    // ONE pass over the (column-pruned) existing index serves both the
-    // duplicate-id guard and the per-cluster prior counts, materialized
-    // BEFORE the append (the table scan is lazy — an un-materialized
-    // read after the write would see the post-append file set). The new
-    // batch's id set rides the join's small side (typically broadcast).
+    IndexStore.requireIds("appendIvfIndex", newVectors, col(id), longIds = false)
+    val newIds = newVectors.select(col(id).as("g_id"))
+    // Materialized BEFORE the append: the table scan is lazy, and a read
+    // after the write would see the post-append file set.
     val prior = existing.select(col("cid"), col("g_id"))
-      .join(newVectors.select(col(id).as("g_id")).withColumn("__new", lit(true)),
-        Seq("g_id"), "left")
+      .join(newIds.withColumn("__new", lit(true)), Seq("g_id"), "left")
       .groupBy("cid")
       .agg(count(lit(1)).as("prior_n"),
         sum(when(col("__new"), 1L).otherwise(0L)).as("__clashes"))
       .localCheckpoint()
-    val clash = prior.agg(sum(col("__clashes"))).head().getLong(0)
-    // The guard is over PHYSICAL rows deliberately: a tombstoned twin is
-    // invisible to the live view, but re-appending its id would leave
-    // two physical rows that the tombstone filter then kills BOTH of.
-    require(clash == 0L, {
-      val dead = ivfTombstones(spark, path)
-        .join(newVectors.select(col(id).as("g_id")), Seq("g_id"), "left_semi")
-        .count()
-      s"appendIvfIndex: $clash new $id value(s) already exist in `$table` — " +
-        "appending would silently duplicate vectors; dedup the batch first" +
-        (if (dead > 0) s" ($dead of them are tombstoned deletions — " +
-          "compactIvfIndex makes deleted ids re-appendable)" else "")
-    })
-    // The guard above only sees new-vs-existing clashes; a duplicate id
-    // WITHIN the batch would also append duplicate rows (the arg-min
-    // groupBy collapses it in `best`, but the join back against `gal`
-    // re-expands both copies). NULL ids slip both guards (count/
-    // countDistinct skip them, null never equi-joins), so they are
-    // rejected explicitly. One batch-scale agg closes both holes.
-    val Array(batchRows, batchN, batchDistinct) = newVectors
-      .agg(count(lit(1)), count(col(id)), countDistinct(col(id))).head()
-      .toSeq.map(_.asInstanceOf[Long]).toArray
-    require(batchRows == batchN,
-      s"appendIvfIndex: newVectors carries ${batchRows - batchN} NULL $id " +
-        "row(s) — every vector needs an id")
-    require(batchN == batchDistinct,
-      s"appendIvfIndex: newVectors carries ${batchN - batchDistinct} " +
-        s"duplicate $id value(s) within the batch — dedup the batch first")
+    IndexStore.requireNew("appendIvfIndex", IndexStore.ivf, table, path, existing, newIds,
+      Some(prior.agg(sum(col("__clashes"))).head().getLong(0)))
     val gal = newVectors.select(col(id).as("g_id"), col(vec).as("g_emb"))
     // Same arg-min key as ivfAssign/ivfIndex — identical cid per vector —
     // with the winning similarity kept for the drift report.
@@ -609,82 +578,47 @@ object Ann {
     }
     val newIdx = gal.join(best, "g_id")
       .select(col("g_id"), col("cid"), VectorOps.quantizeInt8(col("g_emb")).as("g_q"))
-    // loadIvfIndex above already register-validated the attachment; the
-    // registered-append path skips re-validating per batch.
-    graft.sources.Bucketed.appendRegistered(newIdx, table, "cid", buckets)
-    best.groupBy("cid")
-      .agg(count(lit(1)).as("appended_n"), avg(col("sim")).as("mean_assign_sim"))
-      .join(prior.drop("__clashes"), Seq("cid"), "full_outer")
-      .select(col("cid"),
-        coalesce(col("prior_n"), lit(0L)).as("prior_n"),
-        coalesce(col("appended_n"), lit(0L)).as("appended_n"),
-        (coalesce(col("appended_n"), lit(0L)) /
-          (coalesce(col("prior_n"), lit(0L)) + coalesce(col("appended_n"), lit(0L))))
-          .as("growth"),
-        col("mean_assign_sim"))
+    IndexStore.append(IndexStore.ivf, Seq(newIdx), table, buckets)
+    ivfGrowth(best.groupBy("cid")
+      .agg(count(lit(1)).as("appended_n"), avg(col("sim")).as("mean_assign_sim")),
+      prior.drop("__clashes"))
   }
 
-  /** Where [[deleteFromIvfIndex]] records removed ids: a small parquet
-    * id list beside the index (append-only; reads dedup). */
-  def ivfTombstoneDir(path: String): String = Tombstones.dir(path)
+  /** The per-cluster growth report of [[appendIvfIndex]] and
+    * [[graft.streaming.AnnLoop]]: `appended` `(cid, appended_n, extra…)`
+    * against `prior` `(cid, prior_n)`, as `(cid, prior_n, appended_n,
+    * growth, extra…)`. */
+  private[graft] def ivfGrowth(appended: DataFrame, prior: DataFrame): DataFrame = {
+    val n = (c: String) => coalesce(col(c), lit(0L))
+    val extra = appended.columns.filterNot(Set("cid", "appended_n")).map(col).toSeq
+    appended.join(prior, Seq("cid"), "full_outer")
+      .select(Seq(col("cid"), n("prior_n").as("prior_n"), n("appended_n").as("appended_n"),
+        (n("appended_n") / (n("prior_n") + n("appended_n"))).as("growth")) ++ extra: _*)
+  }
 
-  /** The current tombstone id set of a persisted [[ivfIndex]] (empty
-    * frame when none have been recorded). */
+  /** The current tombstone id set (see [[IndexStore]]). */
   def ivfTombstones(spark: org.apache.spark.sql.SparkSession,
                     path: String): DataFrame =
-    Tombstones.ids(spark, path, "g_id")
+    IndexStore.tombstones(spark, IndexStore.ivf, path)
 
-  /** TOMBSTONE deletion for a persisted bucketed [[ivfIndex]] — the ANN
-    * takedown path (a removed document's embedding must stop being
-    * retrievable NOW, not at the next index rebuild). The standard ANN
-    * deletion posture: deletes are MARKS, not rewrites — a bucketed
-    * table cannot rewrite single files without breaking Spark's
-    * bucket-file naming contract, and takedown batches are tiny against
-    * the index — so ids append to a side list (`<path>_tombstones`,
-    * append-only ⇒ crash-safe and idempotent: reads dedup) and
-    * [[loadIvfIndexLive]] filters them with a broadcast anti join that
-    * leaves the bucketed layout (and the Exchange-free probe join)
-    * intact. Bound the tombstone set with [[compactIvfIndex]] when
-    * deletions accumulate. Returns the number of ids in the batch that
-    * are present (live) in the physical index — 0 means the batch was
-    * a no-op (already deleted or never indexed); the tombstones are
-    * recorded regardless, so delete-then-append races resolve to
-    * deleted. NULL ids are dropped (they cannot match an indexed row). */
+  /** Tombstone `ids`; returns how many were live (see [[IndexStore]]). */
   def deleteFromIvfIndex(spark: org.apache.spark.sql.SparkSession,
                          table: String, path: String, ids: DataFrame,
                          buckets: Int = 32): Long =
-    Tombstones.recordDeletes(spark, path, "g_id",
-      Tombstones.normalize(ids, "g_id", castLong = false),
-      loadIvfIndex(spark, table, path, buckets).select(col("g_id")))
+    IndexStore.delete(spark, IndexStore.ivf, table, path, ids, buckets).collect().length
 
-  /** The LIVE view of a persisted [[ivfIndex]]: the bucketed attachment
-    * minus tombstoned ids. The anti join broadcasts the (takedown-
-    * bounded) tombstone set, so the index's `cid` bucketing — and every
-    * Exchange-free probe join over it — survives the filter. Feed this
-    * to [[topKQuantizedIvfWithIndex]] wherever deletions may exist. */
+  /** The LIVE view: tombstoned ids filtered (see [[IndexStore]]). */
   def loadIvfIndexLive(spark: org.apache.spark.sql.SparkSession,
                        table: String, path: String,
                        buckets: Int = 32): DataFrame =
-    Tombstones.liveFilter(loadIvfIndex(spark, table, path, buckets),
-      spark, path, "g_id")
+    IndexStore.attachLive(spark, IndexStore.ivf, table, path, buckets).head
 
-  /** Rewrite the live rows to a FRESH bucketed index (never in place —
-    * the [[graft.sources.Maintenance.compact]] rule), clearing the
-    * tombstone debt: after compaction the new path has no tombstones,
-    * every physical row is live, and previously-deleted ids become
-    * appendable again (see [[appendIvfIndex]]'s duplicate guard, which
-    * must check PHYSICAL rows precisely because the live filter would
-    * hide a tombstoned twin of a re-added id). Swap consumers to the
-    * new (table, path) and drop the old directory when convenient. */
+  /** Compact the live rows to a FRESH path (see [[IndexStore]]). */
   def compactIvfIndex(spark: org.apache.spark.sql.SparkSession,
                       table: String, path: String,
                       newTable: String, newPath: String,
-                      buckets: Int = 32): DataFrame = {
-    Tombstones.requireFreshPath(path, newPath, "compactIvfIndex")
-    persistIvfIndex(loadIvfIndexLive(spark, table, path, buckets),
-      newTable, newPath, buckets)
-    loadIvfIndex(spark, newTable, newPath, buckets)
-  }
+                      buckets: Int = 32): DataFrame =
+    IndexStore.compact(spark, IndexStore.ivf, table, path, newTable, newPath, buckets)().head
 
   /** Probe-side/gallery-side LSH bucket keys: `tables` hash tables of
     * `nBits` sign bits over disjoint hyperplane ranges. */
@@ -714,13 +648,13 @@ object Ann {
                       buckets: Int = 32,
                       mode: org.apache.spark.sql.SaveMode =
                         org.apache.spark.sql.SaveMode.ErrorIfExists): Unit =
-    graft.sources.Bucketed.write(index, table, path, "bucket", buckets, mode)
+    IndexStore.persist(IndexStore.lsh, Seq(index), table, path, buckets, mode)
 
   /** Re-attach a persisted bucketed [[lshIndex]]; `buckets` must match
     * the write. */
   def loadLshIndex(spark: org.apache.spark.sql.SparkSession, table: String,
                    path: String, buckets: Int = 32): DataFrame =
-    graft.sources.Bucketed.register(spark, table, path, "bucket", buckets)
+    IndexStore.attach(spark, IndexStore.lsh, table, path, buckets).head
 
   /** LSH top-k over a prebuilt (possibly persisted) [[lshIndex]] — the
     * steady-state q60 shape: probes bucket narrowly (nBits·tables sign
@@ -761,54 +695,30 @@ object Ann {
       .select("p_id", "g_id", "s", "rn")
   }
 
-  /** Where [[deleteFromLshIndex]] records removed ids: a small parquet
-    * id list beside the index (append-only; reads dedup). */
-  def lshTombstoneDir(path: String): String = Tombstones.dir(path)
-
-  /** The current tombstone id set of a persisted [[lshIndex]] (empty
-    * frame when none have been recorded). */
+  /** The current tombstone id set (see [[IndexStore]]). */
   def lshTombstones(spark: org.apache.spark.sql.SparkSession,
                     path: String): DataFrame =
-    Tombstones.ids(spark, path, "g_id")
+    IndexStore.tombstones(spark, IndexStore.lsh, path)
 
-  /** TOMBSTONE deletion for a persisted [[lshIndex]] — the
-    * [[deleteFromIvfIndex]] posture on the last index family without it
-    * (a gallery vector carries `tables` index rows, one per hash table;
-    * the mark hides them ALL): ids append to a side list (reads dedup,
-    * idempotent), [[loadLshIndexLive]] filters with a broadcast anti
-    * join that leaves the bucket-keyed layout (and its Exchange-free
-    * probe join) intact. Returns the number of DISTINCT batch ids live
-    * in the physical index (0 = no-op); tombstones are recorded
-    * regardless. Bound the debt with [[compactLshIndex]]. */
+  /** Tombstone `ids`; returns how many were live (see [[IndexStore]]). */
   def deleteFromLshIndex(spark: org.apache.spark.sql.SparkSession,
                          table: String, path: String, ids: DataFrame,
                          buckets: Int = 32): Long =
-    // distinct physical ids: a gallery vector carries `tables` index rows.
-    Tombstones.recordDeletes(spark, path, "g_id",
-      Tombstones.normalize(ids, "g_id", castLong = false),
-      loadLshIndex(spark, table, path, buckets).select(col("g_id")).distinct())
+    IndexStore.delete(spark, IndexStore.lsh, table, path, ids, buckets).collect().length
 
-  /** The LIVE view of a persisted [[lshIndex]]: the bucketed attachment
-    * minus tombstoned ids. Feed to [[topKLshWithIndex]] wherever
-    * deletions may exist (and filter the re-rank `gallery` the same way,
-    * or a deleted doc resurfaces with a float score). */
+  /** The LIVE view (see [[IndexStore]]); filter the re-rank `gallery`
+    * the same way, or a deleted doc resurfaces with a float score. */
   def loadLshIndexLive(spark: org.apache.spark.sql.SparkSession,
                        table: String, path: String,
                        buckets: Int = 32): DataFrame =
-    Tombstones.liveFilter(loadLshIndex(spark, table, path, buckets),
-      spark, path, "g_id")
+    IndexStore.attachLive(spark, IndexStore.lsh, table, path, buckets).head
 
-  /** Rewrite the live rows to a FRESH bucketed index (never in place),
-    * clearing the tombstone debt. */
+  /** Compact the live rows to a FRESH path (see [[IndexStore]]). */
   def compactLshIndex(spark: org.apache.spark.sql.SparkSession,
                       table: String, path: String,
                       newTable: String, newPath: String,
-                      buckets: Int = 32): DataFrame = {
-    Tombstones.requireFreshPath(path, newPath, "compactLshIndex")
-    persistLshIndex(loadLshIndexLive(spark, table, path, buckets),
-      newTable, newPath, buckets)
-    loadLshIndex(spark, newTable, newPath, buckets)
-  }
+                      buckets: Int = 32): DataFrame =
+    IndexStore.compact(spark, IndexStore.lsh, table, path, newTable, newPath, buckets)().head
 
   /** [[topKQuantizedIvf]] over a prebuilt (possibly persisted) [[ivfIndex]]
     * — the steady-state shape: the index is read, never recomputed;
@@ -1034,11 +944,8 @@ object Ann {
   def buildSemDedupState(emb: DataFrame, centroids: DataFrame,
                          id: String = "vec_id",
                          vec: String = "embedding"): DataFrame =
-    // try_cast, not cast: under ANSI a malformed string id would abort the
-    // whole build with a raw CAST_INVALID_INPUT from deep inside the plan;
-    // here non-castable ids fold to null and drop, and the append/loop
-    // paths guard the drop loudly with the count check (ADVICE posture:
-    // the refusal names the contract, not the codegen site).
+    // try_cast, not cast: non-castable ids fold to null and drop here; the
+    // append and loop paths refuse them loudly first (IndexStore guard).
     withAssignedCid(emb, centroids, id, vec)
       .select(col("__cid").as("cid"), col(id).try_cast("long").as("doc_id"),
         col(vec).as("vec"))
@@ -1050,15 +957,14 @@ object Ann {
                            buckets: Int = 32,
                            mode: org.apache.spark.sql.SaveMode =
                              org.apache.spark.sql.SaveMode.ErrorIfExists): Unit =
-    graft.sources.Bucketed.write(state.select(col("cid"), col("doc_id"), col("vec")),
-      table, path, "cid", buckets, mode)
+    IndexStore.persist(IndexStore.semDedup, Seq(state), table, path, buckets, mode)
 
   /** Re-attach a persisted SemDeDup state; `buckets` must match the
     * write. */
   def loadSemDedupState(spark: org.apache.spark.sql.SparkSession,
                         table: String, path: String,
                         buckets: Int = 32): DataFrame =
-    graft.sources.Bucketed.register(spark, table, path, "cid", buckets)
+    IndexStore.attach(spark, IndexStore.semDedup, table, path, buckets).head
 
   /** O(new-batch) SemDeDup maintenance — the [[graft.ops.DedupOps]]
     * `appendNearDup` posture applied to the semantic prune: a NEW batch's
@@ -1072,19 +978,15 @@ object Ann {
     * batch×batch.
     *
     * Soundness needs MONOTONE ids: every batch id must exceed every
-    * indexed id. Otherwise the union-batch contract would drop an
-    * ALREADY-INGESTED doc (a verdict this fold has already emitted and
-    * cannot retract) — enforced loudly, alongside the appendIvfIndex id
-    * hygiene (non-null, batch-unique). Centroids must also be the ones
-    * the state was built with (assignment drift would split clusters
-    * invisibly); persist them next to the state like any index artifact.
-    * The probe runs against the LIVE state (physical minus
-    * [[semDedupTombstones]]): a taken-down doc stops dominating new
-    * content immediately, while the monotone guard stays PHYSICAL — a
-    * tombstoned max id keeps blocking smaller ids until
-    * [[compactSemDedupState]] clears it (ids are never reusable while
-    * their physical row exists). Returns the batch's drop ids
-    * `(doc_id)`. */
+    * indexed id, or the union-batch contract would drop an
+    * ALREADY-INGESTED doc (a verdict this fold has already emitted) —
+    * enforced loudly after the [[IndexStore]] id guard (long-castable:
+    * [[buildSemDedupState]] would silently drop a non-numeric id).
+    * Centroids must be the ones the state was built with; persist them
+    * beside it. The probe runs against the LIVE state, so a taken-down
+    * doc stops dominating at once, while the monotone guard stays
+    * PHYSICAL until [[compactSemDedupState]]. Returns the batch's drop
+    * ids `(doc_id)`. */
   def appendSemDedup(spark: org.apache.spark.sql.SparkSession,
                      table: String, path: String,
                      newBatch: DataFrame, centroids: DataFrame,
@@ -1092,38 +994,37 @@ object Ann {
                      id: String = "vec_id", vec: String = "embedding",
                      buckets: Int = 32): DataFrame = {
     val state = loadSemDedupState(spark, table, path, buckets)
+    IndexStore.requireIds("appendSemDedup", newBatch, col(id), longIds = true)
     val batch = buildSemDedupState(newBatch, centroids, id, vec).localCheckpoint()
-    val Array(nRows, nIds, nDistinct, nLong) = newBatch
-      .agg(count(lit(1)), count(col(id)), countDistinct(col(id)),
-        count(col(id).try_cast("long"))).head()
-      .toSeq.map(_.asInstanceOf[Long]).toArray
-    require(nRows == nIds,
-      s"appendSemDedup: ${nRows - nIds} NULL id row(s) — every vector needs an id")
-    require(nIds == nDistinct,
-      s"appendSemDedup: ${nIds - nDistinct} duplicate id value(s) within the batch")
-    // The state keys on LONG ids (the monotone contract needs an integer
-    // order); buildSemDedupState drops cast-null rows silently, which for a
-    // batch of non-numeric string ids would pass the guards above yet
-    // contribute an EMPTY state and emit no verdicts — refuse loudly
-    // instead (the family's posture).
-    require(nIds == nLong,
-      s"appendSemDedup: ${nIds - nLong} id value(s) not castable to long — " +
-        "the persisted SemDeDup state keys on integer ids (the monotone " +
-        "contract); map string ids to a stable long upstream")
+    requireMonotone("appendSemDedup", state, batch)
+    semDedupFold(state, table, path, buckets, batch, threshold, None, append = true)
+  }
+
+  /** The monotone-id guard of [[appendSemDedup]] and
+    * [[graft.streaming.SemDedupLoop]]: every `doc_id` of `batch` must
+    * exceed the physical `state`'s max (`where` names the batch). */
+  private[graft] def requireMonotone(op: String, state: DataFrame, batch: DataFrame,
+                                     where: String = ""): Unit = {
     val maxOld = state.agg(max(col("doc_id"))).head()
     val minNew = batch.agg(min(col("doc_id"))).head()
     if (!maxOld.isNullAt(0) && !minNew.isNullAt(0))
       require(minNew.getLong(0) > maxOld.getLong(0),
-        s"appendSemDedup: batch min id ${minNew.getLong(0)} <= indexed max " +
+        s"$op: batch$where min id ${minNew.getLong(0)} <= indexed max " +
           s"${maxOld.getLong(0)} — ids must be monotone across batches (an " +
           "out-of-order id would retroactively drop an already-ingested doc, " +
           "a verdict this fold has already emitted)")
-    // Probe the LIVE state: a tombstoned (taken-down) doc must stop
-    // dominating new content immediately — see [[deleteFromSemDedupState]].
-    val liveState = state
-      .join(broadcast(semDedupTombstones(spark, path)), Seq("doc_id"), "left_anti")
-    val drops = semDedupDropsCore(liveState, batch, threshold).localCheckpoint()
-    graft.sources.Bucketed.appendRegistered(batch, table, "cid", buckets)
+  }
+
+  /** The SemDeDup append body of [[appendSemDedup]] and
+    * [[graft.streaming.SemDedupLoop]]: the batch's drop verdicts
+    * (materialized) against the live physical `state` minus `except`,
+    * then the batch appended iff `append`. */
+  private[graft] def semDedupFold(state: DataFrame, table: String, path: String,
+                                  buckets: Int, batch: DataFrame, threshold: Double,
+                                  except: Option[DataFrame], append: Boolean): DataFrame = {
+    val Seq(old) = IndexStore.live(IndexStore.semDedup, path, Seq(state), except)
+    val drops = semDedupDropsCore(old, batch, threshold).localCheckpoint()
+    if (append) IndexStore.append(IndexStore.semDedup, Seq(batch), table, buckets)
     drops
   }
 
@@ -1151,63 +1052,29 @@ object Ann {
     vsOld.unionAll(vsNew).distinct()
   }
 
-  /** Where [[deleteFromSemDedupState]] records removed ids: a small
-    * parquet id list beside the state (append-only; reads dedup). */
-  def semDedupTombstoneDir(path: String): String = Tombstones.dir(path)
-
-  /** The current tombstone id set of a persisted SemDeDup state (empty
-    * frame when none have been recorded). */
+  /** The current tombstone id set (see [[IndexStore]]). */
   def semDedupTombstones(spark: org.apache.spark.sql.SparkSession,
                          path: String): DataFrame =
-    Tombstones.ids(spark, path, "doc_id")
+    IndexStore.tombstones(spark, IndexStore.semDedup, path)
 
-  /** TOMBSTONE deletion for a persisted SemDeDup state — the semantic-
-    * dedup takedown path (the [[deleteFromIvfIndex]] posture): a removed
-    * document must stop DOMINATING future near-twins NOW — without it, a
-    * fresh copy of taken-down content would be silently dropped against
-    * a document that no longer exists, making the takedown
-    * self-defeating (the content stays unreachable AND unreplaceable).
-    * Deletes are MARKS on an append-only side list (crash-safe,
-    * idempotent: reads dedup); [[appendSemDedup]] probes the LIVE state
-    * so tombstoned docs stop issuing verdicts immediately, and
-    * [[loadSemDedupStateLive]] filters them with a broadcast anti join
-    * that leaves the `cid` bucketing (and the Exchange-free probe join)
-    * intact. Honest scope: admission control — drop verdicts already
-    * emitted against the doc are downstream state and are NOT retracted
-    * (the one-pass greedy contract never retracts; re-ingest dropped
-    * content as a NEW id if it must come back). Returns the number of
-    * batch ids live in the physical state — 0 means no-op (already
-    * deleted or never ingested); tombstones are recorded regardless.
-    * Bound the debt with [[compactSemDedupState]]. */
+  /** Tombstone `ids`; returns how many were live (see [[IndexStore]]). */
   def deleteFromSemDedupState(spark: org.apache.spark.sql.SparkSession,
                               table: String, path: String, ids: DataFrame,
                               buckets: Int = 32): Long =
-    Tombstones.recordDeletes(spark, path, "doc_id",
-      Tombstones.normalize(ids, "doc_id", castLong = true),
-      loadSemDedupState(spark, table, path, buckets).select(col("doc_id")))
+    IndexStore.delete(spark, IndexStore.semDedup, table, path, ids, buckets).collect().length
 
-  /** The LIVE view of a persisted SemDeDup state: the bucketed
-    * attachment minus tombstoned ids (broadcast anti join — the
-    * takedown-bounded set never disturbs the bucketing). */
+  /** The LIVE view: tombstoned ids filtered (see [[IndexStore]]). */
   def loadSemDedupStateLive(spark: org.apache.spark.sql.SparkSession,
                             table: String, path: String,
                             buckets: Int = 32): DataFrame =
-    Tombstones.liveFilter(loadSemDedupState(spark, table, path, buckets),
-      spark, path, "doc_id")
+    IndexStore.attachLive(spark, IndexStore.semDedup, table, path, buckets).head
 
-  /** Rewrite the live rows to a FRESH bucketed state (never in place —
-    * the [[compactIvfIndex]] rule), clearing the tombstone debt. Note
-    * the monotone-id contract survives compaction: the physical max id
-    * can only DROP (deleted ids leave), so any batch the old state
-    * would admit, the compacted state admits too. Swap consumers to the
-    * new (table, path) and drop the old directory when convenient. */
+  /** Compact the live rows to a FRESH path (see [[IndexStore]]); the
+    * monotone-id contract survives (the physical max can only drop). */
   def compactSemDedupState(spark: org.apache.spark.sql.SparkSession,
                            table: String, path: String,
                            newTable: String, newPath: String,
-                           buckets: Int = 32): DataFrame = {
-    Tombstones.requireFreshPath(path, newPath, "compactSemDedupState")
-    persistSemDedupState(loadSemDedupStateLive(spark, table, path, buckets),
-      newTable, newPath, buckets)
-    loadSemDedupState(spark, newTable, newPath, buckets)
-  }
+                           buckets: Int = 32): DataFrame =
+    IndexStore.compact(spark, IndexStore.semDedup, table, path, newTable, newPath,
+      buckets)().head
 }

@@ -649,86 +649,42 @@ object DedupOps {
   def persistNearDupIndex(index: (DataFrame, DataFrame), table: String,
                           path: String, buckets: Int = 32,
                           mode: org.apache.spark.sql.SaveMode =
-                            org.apache.spark.sql.SaveMode.ErrorIfExists): Unit = {
-    graft.sources.Bucketed.write(index._1, s"${table}_bk", s"${path}_bk",
-      "bk", buckets, mode)
-    graft.sources.Bucketed.write(index._2, s"${table}_tk", s"${path}_tk",
-      "doc_id", buckets, mode)
-  }
+                            org.apache.spark.sql.SaveMode.ErrorIfExists): Unit =
+    IndexStore.persist(IndexStore.nearDup, Seq(index._1, index._2), table, path,
+      buckets, mode)
 
   /** Re-attach a persisted near-dup index; `buckets` must match the
     * write. */
   def loadNearDupIndex(spark: org.apache.spark.sql.SparkSession,
                        table: String, path: String,
                        buckets: Int = 32): (DataFrame, DataFrame) =
-    (graft.sources.Bucketed.register(spark, s"${table}_bk", s"${path}_bk",
-      "bk", buckets),
-      graft.sources.Bucketed.register(spark, s"${table}_tk", s"${path}_tk",
-        "doc_id", buckets))
+    IndexStore.attach(spark, IndexStore.nearDup, table, path, buckets) match {
+      case Seq(keys, toks) => (keys, toks) }
 
-  /** Where [[deleteFromNearDupIndex]] records removed doc ids: a small
-    * parquet id list beside the index (append-only; reads dedup) — the
-    * [[graft.ops.Ann.ivfTombstoneDir]] posture. */
-  def nearDupTombstoneDir(path: String): String = Tombstones.dir(path)
-
-  /** The current tombstone id set of a persisted near-dup index (empty
-    * frame when none have been recorded). */
+  /** The current tombstone id set (see [[IndexStore]]). */
   def nearDupTombstones(spark: org.apache.spark.sql.SparkSession,
                         path: String): DataFrame =
-    Tombstones.ids(spark, path, "doc_id")
+    IndexStore.tombstones(spark, IndexStore.nearDup, path)
 
-  /** TOMBSTONE deletion for a persisted near-dup index — the takedown
-    * path (a removed document must stop generating candidate pairs NOW,
-    * not at the next rebuild). Deletes are MARKS, not rewrites (the
-    * [[graft.ops.Ann.deleteFromIvfIndex]] posture: bucketed tables
-    * cannot rewrite single files without breaking the bucket-file
-    * naming contract, and takedown batches are tiny against the index):
-    * ids append to a side list and [[appendNearDup]] /
-    * [[loadNearDupIndexLive]] filter them with a broadcast anti join
-    * that leaves both bucketed layouts intact. Scope is ADMISSION
-    * control, like [[graft.streaming.DedupLoop]] retractions: pairs
-    * ALREADY emitted against the doc are downstream state and are not
-    * retracted here. Returns the number of batch ids live in the
-    * physical index (0 = no-op batch: never indexed or already
-    * deleted); tombstones are recorded regardless, so
-    * delete-then-append races resolve to deleted. NULL ids drop. */
+  /** Tombstone `ids`; returns how many were live (see [[IndexStore]]). */
   def deleteFromNearDupIndex(spark: org.apache.spark.sql.SparkSession,
                              table: String, path: String, ids: DataFrame,
-                             buckets: Int = 32): Long = {
-    val (_, toks) = loadNearDupIndex(spark, table, path, buckets)
-    Tombstones.recordDeletes(spark, path, "doc_id",
-      Tombstones.normalize(ids, "doc_id", castLong = true),
-      toks.select(col("doc_id")))
-  }
+                             buckets: Int = 32): Long =
+    IndexStore.delete(spark, IndexStore.nearDup, table, path, ids, buckets).collect().length
 
-  /** The LIVE view of a persisted near-dup index: both attachments minus
-    * tombstoned docs. The anti joins broadcast the (takedown-bounded)
-    * tombstone set, so the band-key and doc-id bucketing — and the
-    * Exchange-free probes over them — survive the filter. */
+  /** The LIVE view: tombstoned ids filtered (see [[IndexStore]]). */
   def loadNearDupIndexLive(spark: org.apache.spark.sql.SparkSession,
                            table: String, path: String,
-                           buckets: Int = 32): (DataFrame, DataFrame) = {
-    val (keys, toks) = loadNearDupIndex(spark, table, path, buckets)
-    (Tombstones.liveFilter(keys, spark, path, "doc_id"),
-      Tombstones.liveFilter(toks, spark, path, "doc_id"))
-  }
+                           buckets: Int = 32): (DataFrame, DataFrame) =
+    IndexStore.attachLive(spark, IndexStore.nearDup, table, path, buckets) match {
+      case Seq(keys, toks) => (keys, toks) }
 
-  /** Rewrite the live rows to a FRESH index pair (never in place — the
-    * [[graft.sources.Maintenance.compact]] rule), clearing the tombstone
-    * debt: the new path has no tombstones, every physical row is live,
-    * and previously-deleted ids become appendable again (see
-    * [[appendNearDup]]'s clash guard, which checks PHYSICAL rows
-    * precisely because the live filter would hide a tombstoned twin of
-    * a re-added id). Swap consumers to the new (table, path) and drop
-    * the old directories when convenient. */
+  /** Compact the live rows to a FRESH path (see [[IndexStore]]). */
   def compactNearDupIndex(spark: org.apache.spark.sql.SparkSession,
                           table: String, path: String,
                           newTable: String, newPath: String,
-                          buckets: Int = 32): Unit = {
-    Tombstones.requireFreshPath(path, newPath, "compactNearDupIndex")
-    persistNearDupIndex(loadNearDupIndexLive(spark, table, path, buckets),
-      newTable, newPath, buckets)
-  }
+                          buckets: Int = 32): Unit =
+    IndexStore.compact(spark, IndexStore.nearDup, table, path, newTable, newPath, buckets)()
 
   /** O(new-batch) near-dup maintenance: the pairs a NEW document batch
     * forms — against the persisted index AND within itself — verified
@@ -739,51 +695,45 @@ object DedupOps {
     * each call's wide work is sized by the batch: candidate generation
     * probes the bucketed band table (index side Exchange-free, only
     * batch keys shuffle), token attaches probe the bucketed token
-    * table, and the batch self-join is batch×batch. Same id hygiene as
-    * [[graft.ops.Ann.appendIvfIndex]]: ids must be non-null and
+    * table, and the batch self-join is batch×batch. Ids pass the
+    * [[IndexStore]] guard (non-null, batch-unique, long-castable, and
     * globally fresh — a duplicate would re-emit old pairs on every
-    * later batch — enforced with a column-pruned scan of the token
-    * table plus a batch-scale agg. Returns `(d1, d2, j)` with
-    * `d1 < d2`. */
+    * later batch); tombstoned docs do not pair. Returns `(d1, d2, j)`
+    * with `d1 < d2`. */
   def appendNearDup(spark: org.apache.spark.sql.SparkSession,
                     table: String, path: String,
                     newDocs: DataFrame, id: Column, text: Column,
                     k: Int, bands: Int, threshold: Double,
                     buckets: Int = 32): DataFrame = {
-    // Probe the LIVE state: tombstoned docs must not generate pairs. The
-    // clash guard below still checks PHYSICAL rows (a tombstoned twin is
-    // invisible live, but re-appending its id would leave two physical
-    // rows the live filter then kills BOTH of).
-    val (physKeys, physToks) = loadNearDupIndex(spark, table, path, buckets)
-    val dead = broadcast(nearDupTombstones(spark, path))
-    val oldKeys = physKeys.join(dead, Seq("doc_id"), "left_anti")
-    val oldToks = physToks.join(dead, Seq("doc_id"), "left_anti")
-    val (newKeys0, newToks0) = buildNearDupIndex(newDocs, id, text, k, bands)
-    val newKeys = newKeys0.localCheckpoint()
-    val newToks = newToks0.localCheckpoint()
-    val Array(nRows, nIds, nDistinct) = newDocs
-      .agg(count(lit(1)), count(id), countDistinct(id)).head()
-      .toSeq.map(_.asInstanceOf[Long]).toArray
-    require(nRows == nIds,
-      s"appendNearDup: ${nRows - nIds} NULL id row(s) — every doc needs an id")
-    require(nIds == nDistinct,
-      s"appendNearDup: ${nIds - nDistinct} duplicate id value(s) within the batch")
-    val clashIds = physToks.select(col("doc_id"))
-      .join(newToks.select(col("doc_id")), Seq("doc_id"), "left_semi")
-    val clash = clashIds.count()
-    if (clash != 0L) {
-      val deadClash = clashIds
-        .join(nearDupTombstones(spark, path), Seq("doc_id"), "left_semi").count()
-      throw new IllegalArgumentException(
-        s"appendNearDup: $clash batch id(s) already indexed — re-appending " +
-          "would re-emit their pairs on every later batch; dedup the batch first" +
-          (if (deadClash > 0) s" ($deadClash of them are tombstoned deletions — " +
-            "compactNearDupIndex makes deleted ids re-appendable)" else ""))
-    }
-    val pairs = nearDupPairsCore(oldKeys, oldToks, newKeys, newToks, threshold)
+    val phys = loadNearDupIndex(spark, table, path, buckets)
+    IndexStore.requireIds("appendNearDup", newDocs, id, longIds = true)
+    val batch = nearDupBatch(newDocs, id, text, k, bands)
+    IndexStore.requireNew("appendNearDup", IndexStore.nearDup, table, path, phys._2,
+      batch._2.select(col("doc_id")))
+    nearDupFold(phys, table, path, buckets, batch, threshold, None, append = true)
+  }
+
+  /** [[buildNearDupIndex]] of a fold batch, materialized once. */
+  private[graft] def nearDupBatch(docs: DataFrame, id: Column, text: Column,
+                                  k: Int, bands: Int): (DataFrame, DataFrame) = {
+    val (keys, toks) = buildNearDupIndex(docs, id, text, k, bands)
+    (keys.localCheckpoint(), toks.localCheckpoint())
+  }
+
+  /** The near-dup append body of [[appendNearDup]] and
+    * [[graft.streaming.NearDupLoop]]: the pairs (materialized) the
+    * checkpointed `batch` (keys, tokens) forms against the live physical
+    * index `phys` minus `except`, then the batch appended iff `append`. */
+  private[graft] def nearDupFold(phys: (DataFrame, DataFrame), table: String,
+                                 path: String, buckets: Int,
+                                 batch: (DataFrame, DataFrame), threshold: Double,
+                                 except: Option[DataFrame], append: Boolean): DataFrame = {
+    val Seq(oldKeys, oldToks) =
+      IndexStore.live(IndexStore.nearDup, path, Seq(phys._1, phys._2), except)
+    val pairs = nearDupPairsCore(oldKeys, oldToks, batch._1, batch._2, threshold)
       .localCheckpoint()
-    graft.sources.Bucketed.appendRegistered(newKeys, s"${table}_bk", "bk", buckets)
-    graft.sources.Bucketed.appendRegistered(newToks, s"${table}_tk", "doc_id", buckets)
+    if (append)
+      IndexStore.append(IndexStore.nearDup, Seq(batch._1, batch._2), table, buckets)
     pairs
   }
 

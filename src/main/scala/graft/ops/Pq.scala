@@ -294,97 +294,61 @@ object Pq {
                      buckets: Int = 32,
                      mode: org.apache.spark.sql.SaveMode =
                        org.apache.spark.sql.SaveMode.ErrorIfExists): Unit =
-    graft.sources.Bucketed.write(index.select(col("g_id"), col("cid"), col("codes")),
-      table, path, "cid", buckets, mode)
+    IndexStore.persist(IndexStore.pq, Seq(index), table, path, buckets, mode)
 
   /** Re-attach a persisted [[pqIvfIndex]]; `buckets` must match the
     * write. Feed to [[pqTopKIvf]] via `galleryIndex`. */
   def loadPqIndex(spark: org.apache.spark.sql.SparkSession,
                   table: String, path: String, buckets: Int = 32): DataFrame =
-    graft.sources.Bucketed.register(spark, table, path, "cid", buckets)
+    IndexStore.attach(spark, IndexStore.pq, table, path, buckets).head
 
   /** O(new-vectors) PQ index maintenance — the [[Ann.appendIvfIndex]]
     * posture under a FROZEN codebook AND frozen centroids (either
     * drifting would split the quantization invisibly; persist both
     * beside the index): assign + encode the batch (narrow), append into
     * the bucketed table (hash placement still matches — probe joins stay
-    * Exchange-free). Same id hygiene: a batch id already physically in
-    * the index, a duplicate within the batch, or a NULL id refuses
-    * loudly. Returns the per-cluster appended counts (the drift signal's
-    * growth side). */
+    * Exchange-free). Ids pass the [[IndexStore]] guard: a NULL, an
+    * in-batch duplicate, a non-long id, or one already physically in the
+    * index refuses loudly. Returns the per-cluster appended counts (the
+    * drift signal's growth side). */
   def appendPqIndex(spark: org.apache.spark.sql.SparkSession,
                     table: String, path: String,
                     newVectors: DataFrame, centroids: DataFrame, cb: PqCodebook,
                     buckets: Int = 32,
                     id: String = "vec_id", vec: String = "embedding"): DataFrame = {
     val existing = loadPqIndex(spark, table, path, buckets)
-    val clash = existing.select(col("g_id"))
-      .join(newVectors.select(col(id).cast("long").as("g_id")), Seq("g_id"), "left_semi")
-      .count()
-    require(clash == 0L,
-      s"appendPqIndex: $clash new $id value(s) already exist in `$table` — " +
-        "appending would silently duplicate vectors; dedup the batch first")
-    val Array(nRows, nIds, nDistinct) = newVectors
-      .agg(count(lit(1)), count(col(id)), countDistinct(col(id))).head()
-      .toSeq.map(_.asInstanceOf[Long]).toArray
-    require(nRows == nIds,
-      s"appendPqIndex: ${nRows - nIds} NULL $id row(s) — every vector needs an id")
-    require(nIds == nDistinct,
-      s"appendPqIndex: ${nIds - nDistinct} duplicate $id value(s) within the batch")
+    IndexStore.requireIds("appendPqIndex", newVectors, col(id), longIds = true)
+    IndexStore.requireNew("appendPqIndex", IndexStore.pq, table, path, existing,
+      newVectors.select(col(id).cast("long").as("g_id")))
     val newIdx = pqIvfIndex(newVectors, centroids, cb, id, vec).localCheckpoint()
-    graft.sources.Bucketed.appendRegistered(newIdx, table, "cid", buckets)
+    IndexStore.append(IndexStore.pq, Seq(newIdx), table, buckets)
     newIdx.groupBy("cid").agg(count(lit(1)).as("appended_n"))
   }
 
-  /** Where [[deleteFromPqIndex]] records removed ids: a small parquet id
-    * list beside the index (append-only; reads dedup). */
-  def pqTombstoneDir(path: String): String = Tombstones.dir(path)
-
-  /** The current tombstone id set of a persisted PQ index (empty frame
-    * when none have been recorded). */
+  /** The current tombstone id set (see [[IndexStore]]). */
   def pqTombstones(spark: org.apache.spark.sql.SparkSession,
                    path: String): DataFrame =
-    Tombstones.ids(spark, path, "g_id")
+    IndexStore.tombstones(spark, IndexStore.pq, path)
 
-  /** TOMBSTONE deletion for a persisted PQ index — the
-    * [[Ann.deleteFromIvfIndex]] posture (a taken-down document's codes
-    * must stop being retrievable NOW, and a bucketed table cannot
-    * rewrite single files): ids append to a side list, reads dedup
-    * (idempotent), [[loadPqIndexLive]] filters with a broadcast anti
-    * join that leaves the cid bucketing intact. Returns the live count
-    * of the batch in the physical index (0 = no-op); tombstones are
-    * recorded regardless so delete-then-append races resolve to
-    * deleted. Bound the debt with [[compactPqIndex]]. */
+  /** Tombstone `ids`; returns how many were live (see [[IndexStore]]). */
   def deleteFromPqIndex(spark: org.apache.spark.sql.SparkSession,
                         table: String, path: String, ids: DataFrame,
                         buckets: Int = 32): Long =
-    Tombstones.recordDeletes(spark, path, "g_id",
-      Tombstones.normalize(ids, "g_id", castLong = true),
-      loadPqIndex(spark, table, path, buckets).select(col("g_id")))
+    IndexStore.delete(spark, IndexStore.pq, table, path, ids, buckets).collect().length
 
-  /** The LIVE view of a persisted PQ index: the bucketed attachment
-    * minus tombstoned ids — feed to [[pqTopKIvf]]'s `galleryIndex`
-    * wherever deletions may exist (remember the GALLERY side of the
-    * re-rank needs the same filter, or a deleted doc resurfaces with a
-    * float score). */
+  /** The LIVE view (see [[IndexStore]]); filter the re-rank `gallery`
+    * the same way, or a deleted doc resurfaces with a float score. */
   def loadPqIndexLive(spark: org.apache.spark.sql.SparkSession,
                       table: String, path: String,
                       buckets: Int = 32): DataFrame =
-    Tombstones.liveFilter(loadPqIndex(spark, table, path, buckets),
-      spark, path, "g_id")
+    IndexStore.attachLive(spark, IndexStore.pq, table, path, buckets).head
 
-  /** Rewrite the live rows to a FRESH bucketed index (never in place),
-    * clearing the tombstone debt and making deleted ids re-appendable
-    * (the [[appendPqIndex]] clash guard checks PHYSICAL rows). */
+  /** Compact the live rows to a FRESH path (see [[IndexStore]]). */
   def compactPqIndex(spark: org.apache.spark.sql.SparkSession,
                      table: String, path: String,
                      newTable: String, newPath: String,
-                     buckets: Int = 32): DataFrame = {
-    Tombstones.requireFreshPath(path, newPath, "compactPqIndex")
-    persistPqIndex(loadPqIndexLive(spark, table, path, buckets),
-      newTable, newPath, buckets)
-    loadPqIndex(spark, newTable, newPath, buckets)
-  }
+                     buckets: Int = 32): DataFrame =
+    IndexStore.compact(spark, IndexStore.pq, table, path, newTable, newPath, buckets)().head
 
   /** Top-k per probe with IVF candidate generation fused into the PQ
     * coarse pass — FAISS's IVFPQ layout re-expressed as a Spark plan

@@ -196,11 +196,10 @@ object SketchOps {
   // — the normalization join touches only matching docs, Exchange-free on
   // the bucketed side. Corpus scalars (n_docs, total_dl) live in an
   // APPEND-ONLY delta log (tiny parquet rows; read = sum), so appends and
-  // deletions adjust them without rewriting state (retries never
-  // double-count; each mutation's one crash window is detected by
-  // Bm25Loop's replay audit and repaired by compactBm25Index) — the same
-  // marks-not-rewrites posture as every other index family (deletions are
-  // doc_id tombstones + a negative stats delta). The contract is
+  // deletions adjust them without rewriting state (each mutation's one
+  // crash window is detected by Bm25Loop's replay audit and repaired by
+  // compactBm25Index); deletions are IndexStore tombstones plus a
+  // negative stats delta. The contract is
   // EXACTNESS, not approximation: indexed query ≡ the ad-hoc bm25Rank
   // over the live corpus (spec-pinned after builds, appends, and
   // deletions).
@@ -219,13 +218,11 @@ object SketchOps {
   }
 
   private def bm25StatsDir(path: String): String = s"${path}_stats"
-  /** Where [[deleteFromBm25Index]] records removed ids. */
-  def bm25TombstoneDir(path: String): String = Tombstones.dir(path)
 
-  /** The current tombstone id set (empty frame when none recorded). */
+  /** The current tombstone id set (see [[IndexStore]]). */
   def bm25Tombstones(spark: org.apache.spark.sql.SparkSession,
                      path: String): DataFrame =
-    Tombstones.ids(spark, path, "doc_id")
+    IndexStore.tombstones(spark, IndexStore.bm25, path)
 
   private def appendStatsDelta(spark: org.apache.spark.sql.SparkSession,
                                path: String, lengths: DataFrame,
@@ -250,46 +247,33 @@ object SketchOps {
                        path: String, buckets: Int = 32,
                        mode: org.apache.spark.sql.SaveMode =
                          org.apache.spark.sql.SaveMode.ErrorIfExists): Unit = {
-    val (postings, lengths) = index
-    graft.sources.Bucketed.write(postings.select(col("w"), col("doc_id"), col("tf")),
-      s"${table}_po", s"${path}_po", "w", buckets, mode)
-    graft.sources.Bucketed.write(lengths.select(col("doc_id"), col("dl")),
-      s"${table}_dl", s"${path}_dl", "doc_id", buckets, mode)
-    val spark = postings.sparkSession
-    if (mode == org.apache.spark.sql.SaveMode.Overwrite) {
-      val (fs, p) = graft.sources.LakeFs.resolve(bm25StatsDir(path))
-      if (fs.exists(p)) fs.delete(p, true)
-      val (fs2, p2) = graft.sources.LakeFs.resolve(bm25TombstoneDir(path))
-      if (fs2.exists(p2)) fs2.delete(p2, true)
-    }
-    appendStatsDelta(spark,
-      path, graft.sources.Bucketed.register(spark, s"${table}_dl",
-        s"${path}_dl", "doc_id", buckets), sign = 1)
+    IndexStore.persist(IndexStore.bm25, Seq(index._1, index._2), table, path, buckets, mode)
+    if (mode == org.apache.spark.sql.SaveMode.Overwrite) IndexStore.drop(bm25StatsDir(path))
+    // The lengths just written, read through the catalog entry the write
+    // made (no re-registration).
+    appendStatsDelta(index._1.sparkSession, path,
+      index._1.sparkSession.table(s"`${table}_dl`"), sign = 1)
   }
 
   /** Re-attach a persisted index: `(postings, lengths)`. */
   def loadBm25Index(spark: org.apache.spark.sql.SparkSession, table: String,
                     path: String, buckets: Int = 32): (DataFrame, DataFrame) =
-    (graft.sources.Bucketed.register(spark, s"${table}_po", s"${path}_po", "w", buckets),
-      graft.sources.Bucketed.register(spark, s"${table}_dl", s"${path}_dl", "doc_id", buckets))
+    IndexStore.attach(spark, IndexStore.bm25, table, path, buckets) match {
+      case Seq(po, dl) => (po, dl) }
 
   /** O(new-docs) maintenance: tokenize + append the batch's postings and
     * lengths (hash placement matches — probe joins stay Exchange-free)
-    * and log the stats delta. Standard id hygiene: a batch id already
-    * physically indexed, an in-batch duplicate, or a NULL id refuses
-    * loudly. */
+    * and log the stats delta. Ids pass the [[IndexStore]] guard (non-NULL,
+    * batch-unique, long-castable, not physically indexed) and must not
+    * be tombstoned. */
   def appendBm25Index(spark: org.apache.spark.sql.SparkSession,
                       table: String, path: String,
                       newDocs: DataFrame, id: Column, text: Column,
                       buckets: Int = 32): Unit = {
     val (_, dl) = loadBm25Index(spark, table, path, buckets)
+    IndexStore.requireIds("appendBm25Index", newDocs, id, longIds = true)
     val batchIds = newDocs.select(id.cast("long").as("doc_id"))
-    val clash = dl.select(col("doc_id"))
-      .join(batchIds, Seq("doc_id"), "left_semi")
-      .count()
-    require(clash == 0L,
-      s"appendBm25Index: $clash new id value(s) already exist in `$table` — " +
-        "appending would double-count their term stats; dedup the batch first")
+    IndexStore.requireNew("appendBm25Index", IndexStore.bm25, table, path, dl, batchIds)
     // Tombstoned ids refuse too, even when never physically ingested: the
     // query path anti-joins them out FOREVER, so appending one would add
     // an unsearchable doc that still counts in n_docs/avgdl — silently
@@ -300,50 +284,36 @@ object SketchOps {
       s"appendBm25Index: $dead new id value(s) are tombstoned in `$table` — " +
         "they would be invisible to queries yet counted in the statistics; " +
         "compactBm25Index makes deleted ids re-appendable")
-    val Array(nRows, nIds, nDistinct) = newDocs
-      .agg(count(lit(1)), count(id), countDistinct(id)).head()
-      .toSeq.map(_.asInstanceOf[Long]).toArray
-    require(nRows == nIds,
-      s"appendBm25Index: ${nRows - nIds} NULL id row(s) — every doc needs an id")
-    require(nIds == nDistinct,
-      s"appendBm25Index: ${nIds - nDistinct} duplicate id value(s) within the batch")
-    val (po, ln) = buildBm25Index(newDocs, id, text)
-    val poC = po.localCheckpoint(); val lnC = ln.localCheckpoint()
-    graft.sources.Bucketed.appendRegistered(poC, s"${table}_po", "w", buckets)
-    graft.sources.Bucketed.appendRegistered(lnC, s"${table}_dl", "doc_id", buckets)
+    bm25Fold(spark, table, path, buckets, newDocs, id, text)
+  }
+
+  /** The BM25 append body of [[appendBm25Index]] and
+    * [[graft.streaming.Bm25Loop]]: postings, then lengths, then the
+    * stats delta (attached tables; ids already guarded). */
+  private[graft] def bm25Fold(spark: org.apache.spark.sql.SparkSession,
+                              table: String, path: String, buckets: Int,
+                              docs: DataFrame, id: Column, text: Column): Unit = {
+    val (po, ln) = buildBm25Index(docs, id, text)
+    val lnC = ln.localCheckpoint()
+    IndexStore.append(IndexStore.bm25, Seq(po.localCheckpoint(), lnC), table, buckets)
     appendStatsDelta(spark, path, lnC, sign = 1)
   }
 
-  /** TOMBSTONE deletion — the takedown posture shared by every index
-    * family (marks, not rewrites): ids append to a side list, the query
-    * path anti-joins them out of postings AND document-frequency counts,
-    * and a NEGATIVE stats delta keeps (n_docs, avgdl) true for the live
-    * corpus — so a post-deletion query still equals the ad-hoc ranker
-    * over the surviving docs (spec-pinned). Returns the live batch count
-    * (0 = no-op); idempotent. */
+  /** Tombstone `ids` (see [[IndexStore]]) and log a NEGATIVE stats delta
+    * for the live ones, so queries still equal the ad-hoc ranker over the
+    * surviving docs. Returns the live count. */
   def deleteFromBm25Index(spark: org.apache.spark.sql.SparkSession,
                           table: String, path: String, ids: DataFrame,
                           buckets: Int = 32): Long = {
-    // The kernel's normalize, but NOT recordDeletes: BM25's takedown
-    // interleaves a stats correction between the liveness probe and the
-    // mark write (see the ordering note below), so the composition stays
-    // here while the layout/hygiene pieces are shared.
-    val batch = Tombstones.normalize(ids, "doc_id", castLong = true)
-    val (_, dl) = loadBm25Index(spark, table, path, buckets)
-    val liveRows = dl
-      .join(bm25Tombstones(spark, path), Seq("doc_id"), "left_anti")
-      .join(batch, Seq("doc_id"), "left_semi").localCheckpoint()
-    val live = liveRows.count()
-    // Tombstones FIRST, the negative delta second: the liveness probe
-    // above flips exactly when the tombstones land, so a RETRY after a
-    // crash between the two writes finds live = 0 and never
-    // double-decrements; the one skew a crash can leave (doc hidden,
-    // stats still counting it) reads as n_docs > live docs and is
-    // repaired by compactBm25Index (Bm25Loop's replay audit checks it).
-    batch.write.mode(org.apache.spark.sql.SaveMode.Append)
-      .parquet(bm25TombstoneDir(path))
-    if (live > 0) appendStatsDelta(spark, path, liveRows, sign = -1)
-    live
+    // Tombstones FIRST, the negative delta second: a RETRY after a crash
+    // between the two finds nothing live and never double-decrements; the
+    // one skew a crash can leave (n_docs > live docs) is repaired by
+    // compactBm25Index (Bm25Loop's replay audit checks it).
+    val live = IndexStore.delete(spark, IndexStore.bm25, table, path, ids, buckets)
+    val n = live.collect().length
+    if (n > 0) appendStatsDelta(spark, path, spark.table(s"`${table}_dl`")
+      .join(broadcast(live), Seq("doc_id"), "left_semi"), sign = -1)
+    n
   }
 
   /** BM25 query over the persisted index — the steady-state retrieval
@@ -359,44 +329,37 @@ object SketchOps {
                        buckets: Int = 32): DataFrame = {
     require(terms.nonEmpty, "no query terms")
     require(k1 > 0 && b >= 0 && b <= 1, s"need k1 > 0, 0 <= b <= 1; got k1=$k1 b=$b")
-    val (po, dl) = loadBm25Index(spark, table, path, buckets)
-    val dead = broadcast(bm25Tombstones(spark, path))
+    val Seq(po, dl) = IndexStore.attachLive(spark, IndexStore.bm25, table, path, buckets)
     val hits = po.where(col("w").isin(terms: _*))
-      .join(dead, Seq("doc_id"), "left_anti")
     val dfT = hits.groupBy("w").agg(count(lit(1)).as("df"))
     val (nDocs, totalDl) = bm25Stats(spark, path)
     require(nDocs > 0, "empty (or fully deleted) index")
     val avgdl = totalDl.toDouble / nDocs
     val idf = log((lit(nDocs) - col("df") + 0.5) / (col("df") + 0.5) + 1)
     hits.join(broadcast(dfT), "w")
-      .join(dl.join(dead, Seq("doc_id"), "left_anti"), "doc_id")
+      .join(dl, "doc_id")
       .groupBy("doc_id")
       .agg(sum(idf * (col("tf") * (k1 + 1)) /
         (col("tf") + lit(k1) * (lit(1 - b) + lit(b) * col("dl") / lit(avgdl))))
         .as("score"))
   }
 
-  /** Rewrite the LIVE rows to a FRESH index (never in place), clearing
-    * tombstone debt and rebuilding the stats log from scratch — the
-    * compaction/repair tool of this family (also the recovery path the
-    * loud partial-append guards point at). */
+  /** Rewrite the LIVE rows to a FRESH index, clearing tombstone debt and
+    * rebuilding the stats log from scratch — the compaction/repair tool
+    * of this family (also the recovery path the loud partial-append
+    * guards point at). */
   def compactBm25Index(spark: org.apache.spark.sql.SparkSession,
                        table: String, path: String,
                        newTable: String, newPath: String,
-                       buckets: Int = 32): Unit = {
-    Tombstones.requireFreshPath(path, newPath, "compactBm25Index")
-    val (po, dl) = loadBm25Index(spark, table, path, buckets)
-    val dead = broadcast(bm25Tombstones(spark, path))
-    val liveDl = dl.join(dead, Seq("doc_id"), "left_anti")
-    // Postings additionally reconcile against the lengths table (the
-    // source of doc-ness): a crash between an append's postings and
-    // lengths writes leaves orphan postings that a plain tombstone
-    // filter would carry into the new index forever — this is the
-    // repair path the partial-append guards point at.
-    persistBm25Index(
-      (po.join(dead, Seq("doc_id"), "left_anti")
-        .join(liveDl.select(col("doc_id")), Seq("doc_id"), "left_semi"),
-        liveDl),
-      newTable, newPath, buckets)
-  }
+                       buckets: Int = 32): Unit =
+    IndexStore.compact(spark, IndexStore.bm25, table, path, newTable, newPath, buckets) {
+      // Postings additionally reconcile against the lengths table (the
+      // source of doc-ness): a crash between an append's postings and
+      // lengths writes leaves orphan postings that a plain tombstone
+      // filter would carry into the new index forever.
+      case Seq(po, dl) => persistBm25Index(
+        (po.join(dl.select(col("doc_id")), Seq("doc_id"), "left_semi"), dl),
+        newTable, newPath, buckets)
+    }
 }
+

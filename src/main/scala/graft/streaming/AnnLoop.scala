@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
-import graft.ops.Ann
+import graft.ops.{Ann, IndexStore}
 
 /** Streaming ANN-index maintenance — the vector-ingest member of the
   * streaming state-loop family ([[DedupLoop]] folds fingerprints,
@@ -28,16 +28,12 @@ import graft.ops.Ann
   * recall, never correctness — watch the report; re-cluster offline
   * into a fresh (table, path) and swap).
   *
-  * TAKEDOWNS (`removedCol` non-empty): retraction events tombstone
-  * their id ([[graft.ops.Ann.deleteFromIvfIndex]]) BEFORE the batch's
-  * additions append — the doc stops being retrievable from this trigger
-  * on; an id both removed and added in one batch resolves to deleted.
-  * Tombstone debt is takedown-bounded; clear it offline with
-  * [[graft.ops.Ann.compactIvfIndex]] between runs.
-  *
-  * Crash posture: [[FoldLoop]]'s guarded-append commit — a replay
-  * recomputes the IDENTICAL report (prior counts always exclude the
-  * batch's own ids) and skips the append. */
+  * TAKEDOWNS (`removedCol` non-empty) and crash posture: [[FoldLoop]]'s
+  * prelude and guarded-append commit over the [[graft.ops.IndexStore]]
+  * — a retracted doc stops being retrievable from its trigger on, and a
+  * replay recomputes the IDENTICAL report (prior counts exclude the
+  * batch's own ids) and skips the append. Clear tombstone debt offline
+  * with [[graft.ops.Ann.compactIvfIndex]]. */
 object AnnLoop {
 
   /** Seed the index from a batch-era gallery before the stream starts. */
@@ -65,36 +61,26 @@ object AnnLoop {
       .localCheckpoint()
     lazy val phys = Ann.loadIvfIndex(spark, table, path, buckets)
     lazy val batchIds = newIdx.select(col("g_id")).distinct().localCheckpoint()
+    val appended = newIdx.groupBy("cid").agg(count(lit(1)).as("appended_n"))
     FoldLoop.appendCommit("AnnLoop", batchId, td, path)(
       retract = Ann.deleteFromIvfIndex(spark, table, path, _, buckets),
       genesis = () => {
         // The batch becomes the index; prior counts are all zero.
-        newIdx.groupBy("cid").agg(count(lit(1)).as("appended_n"))
-          .select(col("cid"), lit(0L).as("prior_n"), col("appended_n"),
-            lit(1.0).as("growth"))
+        Ann.ivfGrowth(appended, appended.select(col("cid"), lit(0L).as("prior_n")).limit(0))
           .write.mode(SaveMode.Overwrite).parquet(out)
         Ann.persistIvfIndex(newIdx, table, path, buckets, mode = SaveMode.Overwrite)
       },
-      present = () => phys.select(col("g_id"))
-        .join(batchIds, Seq("g_id"), "left_semi").count(),
+      present = () => IndexStore.present(IndexStore.ivf, phys, batchIds),
       emit = fresh => {
         // Prior counts EXCLUDE the batch's own ids so a replay that finds
         // the batch appended still reports pre-batch state.
         val prior = phys.select(col("cid"), col("g_id"))
           .join(broadcast(batchIds), Seq("g_id"), "left_anti")
           .groupBy("cid").agg(count(lit(1)).as("prior_n"))
-        newIdx.groupBy("cid").agg(count(lit(1)).as("appended_n"))
-          .join(prior, Seq("cid"), "full_outer")
-          .select(col("cid"),
-            coalesce(col("prior_n"), lit(0L)).as("prior_n"),
-            coalesce(col("appended_n"), lit(0L)).as("appended_n"),
-            (coalesce(col("appended_n"), lit(0L)) /
-              (coalesce(col("prior_n"), lit(0L)) +
-                coalesce(col("appended_n"), lit(0L)))).as("growth"))
+        Ann.ivfGrowth(appended, prior)
           .localCheckpoint()
           .write.mode(SaveMode.Overwrite).parquet(out)
-        if (fresh)
-          graft.sources.Bucketed.appendRegistered(newIdx, table, "cid", buckets)
+        if (fresh) IndexStore.append(IndexStore.ivf, Seq(newIdx), table, buckets)
       })
   }
 

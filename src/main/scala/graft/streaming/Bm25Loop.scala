@@ -17,11 +17,9 @@ import graft.ops.SketchOps
   * tokenization is narrow, appends add one file per bucket, the stats
   * delta is one tiny row.
   *
-  * TAKEDOWNS (`removedCol` non-empty): retraction events tombstone
-  * their id ([[graft.ops.SketchOps.deleteFromBm25Index]]) BEFORE the
-  * batch's additions append — the doc leaves the ranking AND the
-  * df/avgdl statistics from this trigger on; an id both removed and
-  * added in one batch resolves to deleted.
+  * TAKEDOWNS (`removedCol` non-empty): [[FoldLoop]]'s prelude — a
+  * retracted doc leaves the ranking AND the df/avgdl statistics from
+  * its trigger on ([[graft.ops.SketchOps.deleteFromBm25Index]]).
   *
   * Crash posture: [[FoldLoop]]'s guarded-append commit, wrapped in a
   * per-batch marker dir — the index append, the stats delta, and the
@@ -52,8 +50,6 @@ object Bm25Loop {
                                    table: String, path: String,
                                    outDir: String, buckets: Int = 32): Unit = {
     val spark = batch.sparkSession
-    // appendBm25Index refuses tombstoned ids, so without the prelude's
-    // tombstone filter a mixed batch would throw on every replay.
     val td = FoldLoop.takedowns("Bm25Loop", batch, batchId, idCol, removedCol,
       "doc_id", SketchOps.bm25Tombstones(spark, path))
     val additions = td.additions
@@ -82,8 +78,8 @@ object Bm25Loop {
         },
         emit = fresh =>
           if (fresh)
-            SketchOps.appendBm25Index(spark, table, path, additions,
-              col(idCol), col(textCol), buckets)
+            SketchOps.bm25Fold(spark, table, path, buckets, additions,
+              col(idCol), col(textCol))
           else {
             // Replay-only audit of the one silent crash window: the
             // batch's lengths landed but its stats delta may not have

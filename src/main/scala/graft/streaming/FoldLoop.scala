@@ -63,8 +63,8 @@ private[streaming] object FoldLoop {
     * of [[appendCommit]] on a mixed batch — re-ingest under a new id, or
     * compact the index first. Ids cast with `try_cast`: a malformed
     * removal id can never match an index row, so it nets to a no-op.
-    * The additions must carry one non-NULL, unique, long-castable id per
-    * row, or the batch fails loudly — the index keys on long ids. */
+    * The additions pass the [[graft.ops.IndexStore]] id guard with long
+    * ids, or the batch fails loudly. */
   def takedowns(loop: String, batch: DataFrame, batchId: Long, idCol: String,
                 removedCol: String, idName: String,
                 tombstones: DataFrame): Takedowns = {
@@ -77,18 +77,8 @@ private[streaming] object FoldLoop {
       .join(removals.select(col(idName).as("__rmid")), id === col("__rmid"), "left_anti")
       .join(tombstones.select(col(idName).as("__dead")), id === col("__dead"), "left_anti")
       .localCheckpoint()
-    val Array(nRows, nIds, nDistinct, nLong) = additions
-      .agg(count(lit(1)), count(col(idCol)), countDistinct(col(idCol)), count(id))
-      .head().toSeq.map(_.asInstanceOf[Long]).toArray
-    require(nRows == nIds,
-      s"$loop: ${nRows - nIds} NULL id row(s) in batch $batchId")
-    require(nIds == nDistinct,
-      s"$loop: ${nIds - nDistinct} duplicate id value(s) in batch $batchId")
-    require(nIds == nLong,
-      s"$loop: ${nIds - nLong} id value(s) in batch $batchId not castable " +
-        "to long — the persisted index keys on integer ids; map string ids " +
-        "to a stable long upstream")
-    Takedowns(removals, additions, nDistinct)
+    Takedowns(removals, additions, graft.ops.IndexStore.requireIds(loop, additions,
+      col(idCol), longIds = true, s" in batch $batchId"))
   }
 
   /** The guarded-append commit of batch `batchId` into the index whose
@@ -105,8 +95,9 @@ private[streaming] object FoldLoop {
     * `present` counts the batch ids the physical index already holds —
     * all or none: only the last batch replays and a job commit is
     * atomic, so a partial count means an out-of-band writer and fails
-    * loudly. `emit(fresh)` then writes the output and appends the batch
-    * iff `fresh` (no id present). */
+    * loudly. `emit(fresh)` then runs the family's append body: output
+    * materialized, the batch appended iff `fresh` (no id present), the
+    * output written. */
   def appendCommit(loop: String, batchId: Long, td: Takedowns, indexRoot: String)(
       retract: DataFrame => Unit, genesis: () => Unit,
       present: () => Long, emit: Boolean => Unit): Unit = {

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
-import graft.ops.DedupOps
+import graft.ops.{DedupOps, IndexStore}
 
 /** Streaming THRESHOLD near-dup maintenance — the missing streaming
   * member of the near-dup family ([[DedupLoop]] folds EXACT-signature
@@ -29,24 +29,14 @@ import graft.ops.DedupOps
   * and emits its internal pairs; [[seedIndex]] seeds from a batch-era
   * corpus instead so batch 0 already pairs against it.
   *
-  * TAKEDOWNS (`removedCol` non-empty): rows whose boolean marker is
-  * true are retraction events carrying the REMOVED doc's id — the doc
-  * is tombstoned ([[graft.ops.DedupOps.deleteFromNearDupIndex]]) BEFORE
-  * the batch's additions pair, so retracted docs stop generating
-  * candidates from this batch on; an id both removed and added in the
-  * same batch resolves to deleted (the delete-then-append race
-  * contract). Honest scope: admission control — pairs already emitted
-  * against the doc are downstream state (retract their cluster edges
-  * via [[ClusterLoop]]'s own `removedCol`).
-  *
-  * Crash posture: [[FoldLoop]]'s guarded-append commit — a replay
-  * that finds the batch already in the index recomputes IDENTICAL pairs
-  * (the old side always excludes the batch's own ids) and skips the
-  * append. Unlike the versioned-state loops there is no in-loop
-  * compaction: tombstone debt is bounded by takedown volume; clear it
-  * offline with [[graft.ops.DedupOps.compactNearDupIndex]] between runs
-  * (a fresh path swap — the loop then points at the compacted (table,
-  * path)). */
+  * TAKEDOWNS (`removedCol` non-empty) and crash posture: [[FoldLoop]]'s
+  * prelude and guarded-append commit over the [[graft.ops.IndexStore]]
+  * — a retracted doc stops generating candidates from its batch on
+  * (pairs already emitted against it are downstream state: retract
+  * their cluster edges via [[ClusterLoop]]'s own `removedCol`), and a
+  * replay recomputes IDENTICAL pairs (the old side excludes the batch's
+  * own ids) and skips the append. Clear tombstone debt offline with
+  * [[graft.ops.DedupOps.compactNearDupIndex]] (a fresh path swap). */
 object NearDupLoop {
 
   /** Seed the index from a batch-era corpus before the stream starts
@@ -73,14 +63,11 @@ object NearDupLoop {
       "doc_id", DedupOps.nearDupTombstones(spark, path))
     val additions = td.additions
     val out = s"$outDir/batch=$batchId"
-    lazy val (physKeys, physToks) = DedupOps.loadNearDupIndex(spark, table, path, buckets)
+    lazy val phys = DedupOps.loadNearDupIndex(spark, table, path, buckets)
     lazy val batchIds = additions.select(col(idCol).cast("long").as("doc_id"))
       .distinct().localCheckpoint()
-    lazy val (newKeys, newToks) = {
-      val (keys, toks) = DedupOps.buildNearDupIndex(
-        additions, col(idCol), col(textCol), k, bands)
-      (keys.localCheckpoint(), toks.localCheckpoint())
-    }
+    lazy val (newKeys, newToks) =
+      DedupOps.nearDupBatch(additions, col(idCol), col(textCol), k, bands)
     FoldLoop.appendCommit("NearDupLoop", batchId, td, s"${path}_tk")(
       retract = DedupOps.deleteFromNearDupIndex(spark, table, path, _, buckets),
       genesis = () => {
@@ -94,27 +81,10 @@ object NearDupLoop {
         DedupOps.persistNearDupIndex((newKeys, newToks), table, path, buckets,
           mode = SaveMode.Overwrite)
       },
-      present = () => physToks.select(col("doc_id"))
-        .join(batchIds, Seq("doc_id"), "left_semi").count(),
-      emit = fresh => {
-        // Tombstones are read AFTER this batch's retraction so they hide
-        // its takedowns too; the old side also excludes the batch's own
-        // ids so a replay that finds the batch appended still computes
-        // pre-batch-state pairs.
-        val deadNow = broadcast(
-          DedupOps.nearDupTombstones(spark, path).select(col("doc_id")))
-        val oldKeys = physKeys.join(deadNow, Seq("doc_id"), "left_anti")
-          .join(broadcast(batchIds), Seq("doc_id"), "left_anti")
-        val oldToks = physToks.join(deadNow, Seq("doc_id"), "left_anti")
-          .join(broadcast(batchIds), Seq("doc_id"), "left_anti")
-        DedupOps.nearDupPairsCore(oldKeys, oldToks, newKeys, newToks, threshold)
-          .localCheckpoint()
-          .write.mode(SaveMode.Overwrite).parquet(out)
-        if (fresh) {
-          graft.sources.Bucketed.appendRegistered(newKeys, s"${table}_bk", "bk", buckets)
-          graft.sources.Bucketed.appendRegistered(newToks, s"${table}_tk", "doc_id", buckets)
-        }
-      })
+      present = () => IndexStore.present(IndexStore.nearDup, phys._2, batchIds),
+      emit = fresh => DedupOps.nearDupFold(phys, table, path, buckets, (newKeys, newToks),
+        threshold, Some(batchIds), append = fresh)
+        .write.mode(SaveMode.Overwrite).parquet(out))
   }
 
   /** Start the loop over a document stream carrying `idCol`/`textCol`

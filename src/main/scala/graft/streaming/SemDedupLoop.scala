@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
-import graft.ops.Ann
+import graft.ops.{Ann, IndexStore}
 
 /** Streaming SEMANTIC dedup maintenance — the embedding-space member of
   * the streaming dedup family ([[DedupLoop]] folds EXACT-signature
@@ -32,21 +32,13 @@ import graft.ops.Ann
   * out-of-order id would retroactively drop an already-emitted
   * verdict), which is the natural crawl-ingest shape.
   *
-  * TAKEDOWNS (`removedCol` non-empty): rows whose boolean marker is
-  * true are retraction events carrying the REMOVED doc's id — the doc
-  * is tombstoned ([[graft.ops.Ann.deleteFromSemDedupState]]) BEFORE the
-  * batch's additions are judged, so retracted docs stop dominating from
-  * this batch on (a fresh copy of taken-down content is admitted
-  * instead of dropping against a ghost); an id both removed and added
-  * in one batch resolves to deleted. Honest scope: admission control —
-  * verdicts already emitted are downstream state and never retract.
-  *
-  * Crash posture: [[FoldLoop]]'s guarded-append commit — a replay
-  * that finds the batch already in the state recomputes IDENTICAL
-  * verdicts (the old side always excludes the batch's own ids) and
-  * skips the append. No in-loop compaction: tombstone debt is
-  * takedown-bounded; clear it offline with
-  * [[graft.ops.Ann.compactSemDedupState]] between runs. */
+  * TAKEDOWNS (`removedCol` non-empty) and crash posture: [[FoldLoop]]'s
+  * prelude and guarded-append commit over the [[graft.ops.IndexStore]]
+  * — a retracted doc stops dominating from its batch on (a fresh copy
+  * of taken-down content is admitted instead of dropping against a
+  * ghost), and a replay recomputes IDENTICAL verdicts (the old side
+  * excludes the batch's own ids) and skips the append. Clear tombstone
+  * debt offline with [[graft.ops.Ann.compactSemDedupState]]. */
 object SemDedupLoop {
 
   /** Seed the state from a batch-era corpus before the stream starts
@@ -72,9 +64,6 @@ object SemDedupLoop {
                                    outDir: String, threshold: Double,
                                    buckets: Int = 32): Unit = {
     val spark = batch.sparkSession
-    // The prelude's long-cast guard mirrors appendSemDedup's:
-    // buildSemDedupState silently drops cast-null ids, so non-numeric
-    // string ids would otherwise yield an empty state and no verdicts.
     val td = FoldLoop.takedowns("SemDedupLoop", batch, batchId, idCol, removedCol,
       "doc_id", Ann.semDedupTombstones(spark, path))
     val out = s"$outDir/batch=$batchId"
@@ -91,33 +80,14 @@ object SemDedupLoop {
         Ann.persistSemDedupState(batchState, table, path, buckets,
           mode = SaveMode.Overwrite)
       },
-      present = () => physState.select(col("doc_id"))
-        .join(batchIds, Seq("doc_id"), "left_semi").count(),
+      present = () => IndexStore.present(IndexStore.semDedup, physState, batchIds),
       emit = fresh => {
-        if (fresh) {
-          // First delivery only: the replay case has the batch inside the
-          // physical max, which the monotone contract tolerates because
-          // the ids are the batch's own (excluded from the probe below).
-          val maxOld = physState.agg(max(col("doc_id"))).head()
-          val minNew = batchIds.agg(min(col("doc_id"))).head()
-          if (!maxOld.isNullAt(0) && !minNew.isNullAt(0))
-            require(minNew.getLong(0) > maxOld.getLong(0),
-              s"SemDedupLoop: batch $batchId min id ${minNew.getLong(0)} <= " +
-                s"state max ${maxOld.getLong(0)} — ids must be monotone across " +
-                "batches (an out-of-order id would retroactively drop an " +
-                "already-emitted verdict)")
-        }
-        // The old side excludes the batch's own ids so a replay that
-        // finds the batch appended still computes pre-batch-state
-        // verdicts; live filter so tombstoned docs stop dominating now.
-        val oldState = physState
-          .join(broadcast(Ann.semDedupTombstones(spark, path)), Seq("doc_id"), "left_anti")
-          .join(broadcast(batchIds), Seq("doc_id"), "left_anti")
-        Ann.semDedupDropsCore(oldState, batchState, threshold)
-          .localCheckpoint()
+        // First delivery only: a replay has the batch inside the physical
+        // max, which is its own ids (excluded from the probe).
+        if (fresh) Ann.requireMonotone("SemDedupLoop", physState, batchIds, s" $batchId")
+        Ann.semDedupFold(physState, table, path, buckets, batchState, threshold,
+          Some(batchIds), append = fresh)
           .write.mode(SaveMode.Overwrite).parquet(out)
-        if (fresh)
-          graft.sources.Bucketed.appendRegistered(batchState, table, "cid", buckets)
       })
   }
 

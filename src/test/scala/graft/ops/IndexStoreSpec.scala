@@ -1,0 +1,58 @@
+package graft.ops
+
+import java.io.File
+import java.nio.file.Files
+
+import org.apache.commons.io.FileUtils
+import org.apache.spark.sql.functions._
+import org.scalatest.funsuite.AnyFunSuite
+
+import graft.TestSpark
+
+/** The id guard every long-keyed append shares through [[IndexStore]]. */
+class IndexStoreSpec extends AnyFunSuite {
+
+  private lazy val spark = TestSpark.spark
+
+  test("the four long-keyed appends reject a non-numeric id with the shared guard's message") {
+    val s = spark
+    import s.implicits._
+    val root = Files.createTempDirectory("graft-indexstore-badid").toString
+    val docs = TestSpark.table("documents").where(col("doc_id") < 20)
+      .select("doc_id", "text").localCheckpoint()
+    val emb = TestSpark.table("embeddings").where(col("vec_id") < 20)
+      .select("vec_id", "embedding").localCheckpoint()
+    val cents = emb.where(col("vec_id") < 2)
+    val cb = Pq.pqTrain(emb, col("vec_id"), col("embedding"), m = 8, k = 4, iters = 1)
+    val badDocs = Seq(("7", "alpha beta gamma"), ("x9", "beta gamma delta"))
+      .toDF("doc_id", "text")
+    val badVecs = emb.where(col("vec_id") < 2)
+      .select(when(col("vec_id") === 0, lit("7")).otherwise(lit("x9")).as("vec_id"),
+        col("embedding"))
+    DedupOps.persistNearDupIndex(DedupOps.buildNearDupIndex(docs, col("doc_id"),
+      col("text"), 8, 4), "is_nd", s"$root/nd", buckets = 2)
+    SketchOps.persistBm25Index(SketchOps.buildBm25Index(docs, col("doc_id"), col("text")),
+      "is_bm", s"$root/bm", buckets = 2)
+    Pq.persistPqIndex(Pq.pqIvfIndex(emb, cents, cb), "is_pq", s"$root/pq", buckets = 2)
+    Ann.persistSemDedupState(Ann.buildSemDedupState(emb, cents), "is_sd", s"$root/sd",
+      buckets = 2)
+    val appends: Seq[(String, () => Any)] = Seq(
+      "appendNearDup" -> (() => DedupOps.appendNearDup(spark, "is_nd", s"$root/nd",
+        badDocs, col("doc_id"), col("text"), 8, 4, 0.8, buckets = 2)),
+      "appendBm25Index" -> (() => SketchOps.appendBm25Index(spark, "is_bm", s"$root/bm",
+        badDocs, col("doc_id"), col("text"), buckets = 2)),
+      "appendPqIndex" -> (() => Pq.appendPqIndex(spark, "is_pq", s"$root/pq", badVecs,
+        cents, cb, buckets = 2)),
+      "appendSemDedup" -> (() => Ann.appendSemDedup(spark, "is_sd", s"$root/sd", badVecs,
+        cents, 0.9, buckets = 2)))
+    try appends.foreach { case (op, append) =>
+      val e = intercept[IllegalArgumentException](append())
+      assert(e.getMessage.contains(s"$op: 1 id value(s)") &&
+        e.getMessage.contains("not castable to long"), s"$op: ${e.getMessage}")
+    } finally {
+      Seq("is_nd_bk", "is_nd_tk", "is_bm_po", "is_bm_dl", "is_pq", "is_sd")
+        .foreach(t => spark.sql(s"DROP TABLE IF EXISTS `$t`"))
+      FileUtils.deleteQuietly(new File(root))
+    }
+  }
+}

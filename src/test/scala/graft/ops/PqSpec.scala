@@ -265,6 +265,27 @@ class PqSpec extends AnyFunSuite {
     }
   }
 
+  test("appendPqIndex: a tombstoned clash names compactPqIndex") {
+    val cb = Pq.pqTrain(patCorpus, col("vec_id"), col("embedding"), m = 2, k = 3, iters = 4)
+    val cents = patCorpus.where(col("vec_id") < 2)
+    val root = java.nio.file.Files.createTempDirectory("graft-pqclash").toString
+    try {
+      Pq.persistPqIndex(Pq.pqIvfIndex(patCorpus, cents, cb), "pq_cl", s"$root/idx",
+        buckets = 2)
+      val v3 = patCorpus.where(col("vec_id") === 3)
+      assert(Pq.deleteFromPqIndex(spark, "pq_cl", s"$root/idx", v3.select("vec_id"),
+        buckets = 2) == 1L)
+      val e = intercept[IllegalArgumentException] {
+        Pq.appendPqIndex(spark, "pq_cl", s"$root/idx", v3, cents, cb, buckets = 2)
+      }
+      assert(e.getMessage.contains("tombstoned") && e.getMessage.contains("compactPqIndex"),
+        e.getMessage)
+    } finally {
+      spark.sql("DROP TABLE IF EXISTS `pq_cl`")
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(root))
+    }
+  }
+
   test("loud and drop contracts: ragged vectors throw, nulls drop, bad params refuse") {
     val cb = Pq.pqTrain(patCorpus, col("vec_id"), col("embedding"), m = 2, k = 4, iters = 2)
     // Ragged vector: encode fails loudly (silent truncation would corrupt
