@@ -86,6 +86,13 @@ object Bench {
       root
     }
     def docs = spark.table("documents")
+    // An entry with a fixture builds it on its first call, so naming one
+    // entry (XProbe, PlanDump) synthesizes one fixture; the warm call of
+    // the median protocol absorbs the build.
+    def onFirstCall(build: => () => DataFrame): () => DataFrame = {
+      lazy val thunk = build
+      () => thunk()
+    }
     val entries = Seq(
       "x_minhash_dedup_keep" -> (() =>
         graft.ops.DedupOps.minhashDedupKeepFast(docs, col("doc_id"), col("text"))
@@ -139,7 +146,7 @@ object Bench {
       // (rendered once through the JDK encoder, persisted outside the
       // timed thunk); the timed pass decodes every pixel and average-pools
       // features — the per-asset cost model for multimodal curation.
-      "x_image_decode" -> {
+      "x_image_decode" -> onFirstCall {
         val assets = graft.ops.MediaCodecs.syntheticImageAssets(
           docs.select(col("doc_id")), col("doc_id")).persist()
         assets.count() // materialize: the bench times decode, not encode
@@ -151,7 +158,7 @@ object Bench {
       // fixture work (outside the thunk); the timed pass is gunzip +
       // record framing + HTTP split + HTML→text over every document —
       // the per-archive cost model of the crawl front door.
-      "x_warc_ingest" -> {
+      "x_warc_ingest" -> onFirstCall {
         val archives = graft.ops.Warc.syntheticArchives(
           docs, col("doc_id"), col("text")).persist()
         archives.count() // materialize: the bench times ingestion, not synthesis
@@ -163,7 +170,7 @@ object Bench {
       // x_warc_ingest, but HTML runs the jusText-lite block segmenter
       // (link density + length gates) instead of whole-page htmlToText —
       // guards the added per-page cost of the chrome-free ingest path.
-      "x_warc_main" -> {
+      "x_warc_main" -> onFirstCall {
         val archives = graft.ops.Warc.syntheticArchives(
           docs, col("doc_id"), col("text")).persist()
         archives.count()
@@ -176,7 +183,7 @@ object Bench {
       // carry three anchors each (absolute-with-entity, relative, and a
       // host-varying absolute so the edge agg has real cardinality);
       // synthesis is outside the timed thunk, same as x_warc_ingest.
-      "x_warc_links" -> {
+      "x_warc_links" -> onFirstCall {
         val linky = docs.select(col("doc_id"), concat(
           col("text"),
           lit("<a href=\"https://hub.example.org/x?a=1&amp;b=2\">h</a>"),
@@ -194,7 +201,7 @@ object Bench {
       // Learned quality gate (round 12): training happens once outside
       // the timed thunk (the labeled-sample side); the timed pass is the
       // 100 TB side — one stateless broadcast-model scoring pass.
-      "x_classifier_score" -> {
+      "x_classifier_score" -> onFirstCall {
         val junk = docs.select(col("doc_id") + 1000000L as "doc_id",
           md5(col("text")).as("text"))
         val model = graft.api.Pipelines.trainQualityClassifier(
@@ -209,7 +216,7 @@ object Bench {
       // amortized over every probe); the timed pass is plan-from-manifest
       // + scan of only the surviving files — the steady-state cost of a
       // selective range probe on a sorted lake.
-      "x_manifest_prune" -> {
+      "x_manifest_prune" -> onFirstCall {
         import graft.sources.{ColumnBounds, FileStats}
         val dir = java.nio.file.Files.createTempDirectory(fixtureRoot, "manifest")
           .toString + "/orders"
@@ -229,7 +236,7 @@ object Bench {
       // is table maintenance (outside the thunk, amortized); the timed
       // pass is the lm_score native expression over every document —
       // guards the scan-speed contract of the round-8 LM gate.
-      "x_lm_score" -> {
+      "x_lm_score" -> onFirstCall {
         val model = graft.ops.TextOps.ngramModel(docs, col("text")).persist()
         model.count() // materialize: the bench times scoring, not training
         val bytes = graft.ops.TextOps.ngramModelBytes(model)
@@ -249,7 +256,7 @@ object Bench {
       // timed pass classifies every document under k=4 frozen models in
       // ONE text walk — guards against regressing to the composed
       // k-×-lm_score form (k full scans; measured ~3x this at k=4).
-      "x_lang_classify" -> {
+      "x_lang_classify" -> onFirstCall {
         val models = (0 until 4).map { m =>
           val slice = docs.where(col("doc_id") % 4 === m)
           val tbl = graft.ops.TextOps.ngramModel(slice, col("text")).persist()
@@ -267,7 +274,7 @@ object Bench {
       // candidate coarse budget — codebook training is maintenance
       // (outside the thunk); the timed pass is cell pick + ADC lookups +
       // float re-rank.
-      "x_pq_ivf" -> {
+      "x_pq_ivf" -> onFirstCall {
         val e = spark.table("embeddings")
         val norm = e.select(col("vec_id"),
           graft.ops.Pq.l2normalize(col("embedding")).as("embedding")).persist()
@@ -288,7 +295,7 @@ object Bench {
       // pays. The pair kernel is side-effect-free, so the median-of-3
       // protocol can re-run it (the append itself is an O(batch) bucketed
       // file write).
-      "x_neardup_fold" -> {
+      "x_neardup_fold" -> onFirstCall {
         val dir = java.nio.file.Files.createTempDirectory(fixtureRoot, "ndidx")
           .toString + "/idx"
         // 2000-doc index / 500-doc batch: the synthetic corpus is near-dup
@@ -315,7 +322,7 @@ object Bench {
       // appendSemDedup/SemDedupLoop — batch assignment under frozen
       // centroids + drop verdicts against the persisted cid-bucketed
       // state. Clustering + state build are maintenance (outside).
-      "x_semdedup_fold" -> {
+      "x_semdedup_fold" -> onFirstCall {
         val e = spark.table("embeddings")
         val n = e.agg(max(col("vec_id"))).head().getLong(0) + 1
         val cents = graft.ops.Ann.kmeans(
@@ -336,7 +343,7 @@ object Bench {
       // HITS hubs/authorities (round 13): the production L1-normalized
       // alternating matvecs over the part→supplier co-occurrence graph —
       // guards the q184 family's wide-plan shape (keyed joins + aggs only).
-      "x_hits" -> {
+      "x_hits" -> onFirstCall {
         val edges = spark.table("lineitem")
           .select(col("l_partkey").as("src"), col("l_suppkey").as("dst"))
         () => graft.ops.GraphOps.hits(edges, iterations = 3)
@@ -345,7 +352,7 @@ object Bench {
       // DSIR importance scoring (round 13): model fit is maintenance
       // (two bounded group-bys, outside); the timed pass is the 100 TB
       // side — ONE map-only broadcast-ratio projection over every doc.
-      "x_dsir_score" -> {
+      "x_dsir_score" -> onFirstCall {
         val b = 1 << 14
         val ratios = graft.ops.ImportanceSampling.logRatios(
           graft.ops.ImportanceSampling.bucketProbs(
@@ -359,7 +366,7 @@ object Bench {
       // eval leaks against the full corpus — the cross-set LSH path.
       // Fixture synthesis is outside the thunk; the timed pass is band
       // keys both sides + the cross-set candidate equi join + verify.
-      "x_fuzzy_decontam" -> {
+      "x_fuzzy_decontam" -> onFirstCall {
         val eval = docs.where(col("doc_id") % 250 === 0)
           .select(array_join(reverse(split(col("text"), " ")), " ").as("text"))
           .persist()
@@ -399,7 +406,7 @@ object Bench {
       // ClusterLoop kernel): the pair table is fold output, built once
       // outside the thunk — the timed pass is the label-propagation +
       // pointer-jump loop itself.
-      "x_cc" -> {
+      "x_cc" -> onFirstCall {
         val pairs = graft.ops.DedupOps.minhashLshDocs(
             docs.where(col("doc_id") < 1000), col("doc_id"), col("text"),
             k = 8, bands = 4, threshold = 0.8)

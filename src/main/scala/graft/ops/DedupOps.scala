@@ -298,6 +298,85 @@ object DedupOps {
       .select(col("d1"), col("d2"), round(j, 4).as("j"))
   }
 
+  /** The doc-level MinHash kernel's doc projection `(doc_id, toks, sig)`.
+    * Every doc-table near-dup and dedup operator composes the kernel's
+    * pieces — [[minhashLshDocs]], [[crossNearDup]], [[buildNearDupIndex]]
+    * and its fold, the fingerprint family, and the streaming filters and
+    * loops — so each format and null rule below is stated and
+    * implemented once:
+    *
+    *  - DOC PROJECTION (this): `toks` is the text's sorted-distinct token
+    *    array (the merge-walk verify's input), `sig` its native
+    *    `minhash_sig`, k 48-bit minima. Null text gives null `toks` and
+    *    `sig`.
+    *  - BAND KEY [[bandKey]]: band `b` (0-based) of `r = k / bands` rows
+    *    is the string `b:m1:…:mr` of its minima in decimal — the value a
+    *    persisted near-dup index stores in `_bk`. `k` must be a positive
+    *    multiple of `bands` ([[requireBanding]]). A NULL signature forms
+    *    NO key (`concat_ws` would skip its null minima and give every
+    *    null-text doc the same bare keys `0`…`bands-1`, pairing them all
+    *    with each other); the doc keeps its token row.
+    *  - VERIFY [[verifyPairs]]: `jaccard_sorted` over the attached
+    *    arrays, `j >= threshold`, `j` rounded to `digits`.
+    *  - FINGERPRINT KEY [[sigKey]]: the k minima `|`-joined. Null text
+    *    maps to the key `null`, which no real signature (digits and `|`
+    *    only) can equal, so degenerate docs cluster among themselves on
+    *    every dedup path, one-shot, incremental and streaming alike.
+    *  - FINGERPRINT FOLD [[fingerprintFold]]: min `keep_id` per
+    *    `sigkey`. */
+  private def docSigs(docs: DataFrame, id: Column, text: Column, k: Int): DataFrame =
+    docs.select(id.as("doc_id"), array_sort(array_distinct(TextOps.tokens(text))).as("toks"))
+      .withColumn("sig", minhashSig(col("toks"), k))
+
+  private def minhashSig(toks: Column, k: Int): Column =
+    call_function("minhash_sig", toks, lit(k))
+
+  /** A k not divisible by bands would silently drop trailing signature
+    * rows; bands > k would give 0 rows per band — every doc in ONE
+    * bucket, the all-pairs blowup banding exists to avoid. */
+  private def requireBanding(k: Int, bands: Int): Unit =
+    require(bands >= 1 && k >= 1 && k % bands == 0,
+      s"k ($k) must be a positive multiple of bands ($bands)")
+
+  /** The band keys `bk` of a [[docSigs]] row's `sig`, one row each (see
+    * [[docSigs]] for the format and the null rule). */
+  private def bandKey(k: Int, bands: Int): Column = {
+    requireBanding(k, bands)
+    val r = k / bands
+    val sig = col("sig")
+    explode(when(sig.isNotNull, array((0 until bands).map { b =>
+      concat_ws(":", lit(b) +: (0 until r).map(i => sig(b * r + i).cast("string")): _*)
+    }: _*))).as("bk")
+  }
+
+  /** Candidate `(d1, d2)` pairs with `toks1`'s array attached to `d1` and
+    * `toks2`'s to `d2`, kept at `j >= threshold`: `(d1, d2, j)`. */
+  private def verifyPairs(cand: DataFrame, toks1: DataFrame, toks2: DataFrame,
+                          threshold: Double, digits: Int): DataFrame = {
+    val j = call_function("jaccard_sorted", col("t1"), col("t2"))
+    cand
+      .join(toks1.select(col("doc_id").as("d1"), col("toks").as("t1")), Seq("d1"))
+      .join(toks2.select(col("doc_id").as("d2"), col("toks").as("t2")), Seq("d2"))
+      .where(j >= threshold)
+      .select(col("d1"), col("d2"), round(j, digits).as("j"))
+  }
+
+  /** The fingerprint key of `text` (see [[docSigs]]). */
+  private[graft] def sigKey(text: Column, k: Int): Column =
+    coalesce(array_join(transform(minhashSig(TextOps.tokens(text), k), _.cast("string")), "|"),
+      lit("null"))
+
+  /** Fingerprint state `(sigkey, keep_id)` of batch `keys` `(doc_id,
+    * sigkey)`, union-min folded into `prior` state when given. */
+  private[graft] def fingerprintFold(keys: DataFrame,
+                                     prior: Option[DataFrame] = None): DataFrame = {
+    def minPer(df: DataFrame, id: String) =
+      df.groupBy("sigkey").agg(min(col(id)).as("keep_id"))
+    val batch = minPer(keys, "doc_id")
+    prior.fold(batch)(p =>
+      minPer(p.select(col("sigkey"), col("keep_id")).unionByName(batch), "keep_id"))
+  }
+
   /** The full MinHash+LSH near-dup pipeline (q55): signature → bands →
     * bucket-join candidates → exact-Jaccard verify.
     *
@@ -318,11 +397,7 @@ object DedupOps {
     * pipeline on the dense bench slice (round-12 MinHash-LSH
     * decomposition, SURVEY §6). */
   def minhashLsh(tokens: DataFrame, k: Int, bands: Int, threshold: Double): DataFrame = {
-    // bands > k would give 0 rows per band — every doc in ONE bucket, the
-    // all-pairs quadratic blowup this operator exists to avoid; a k not
-    // divisible by bands would silently drop trailing signature rows.
-    require(bands >= 1 && k >= 1 && k % bands == 0,
-      s"k ($k) must be a positive multiple of bands ($bands)")
+    requireBanding(k, bands)
     val sig = minhashSignatures(tokens, k)
     val cand = lshCandidates(lshBandKeys(sig, bands, k / bands))
     jaccardVerify(tokens, cand, threshold)
@@ -348,37 +423,21 @@ object DedupOps {
     * corpus×token. The doc projection (split + sort + signature) is
     * referenced by both the band side and the verify side; at corpus scale
     * persist it (or feed this from a materialized doc table) so the scan
-    * runs once. */
+    * runs once. Built from the doc-level MinHash kernel ([[docSigs]]):
+    * doc projection, band keys, [[lshCandidates]], verify at 4 dp. */
   def minhashLshDocs(docs: DataFrame, id: Column, text: Column,
                      k: Int, bands: Int, threshold: Double): DataFrame = {
-    require(bands >= 1 && k >= 1 && k % bands == 0,
-      s"k ($k) must be a positive multiple of bands ($bands)")
-    val r = k / bands
-    val base = SkewOps.fanOutScan(docs).select(id.as("doc_id"),
-        array_sort(array_distinct(TextOps.tokens(text))).as("toks"))
-      .withColumn("sig", call_function("minhash_sig", col("toks"), lit(k)))
-    val bandCols = (0 until bands).map { b =>
-      concat_ws(":", lit(b) +: (0 until r).map(i => col("sig")(b * r + i).cast("string")): _*)
-    }
-    val keys = base.select(col("doc_id"), explode(array(bandCols: _*)).as("bk"))
-    val cand = keys.select(col("doc_id").as("d1"), col("bk"))
-      .join(keys.select(col("doc_id").as("d2"), col("bk").as("bk2")),
-        col("bk") === col("bk2") && col("d1") < col("d2"))
-      .select("d1", "d2").distinct()
-    val j = call_function("jaccard_sorted", col("t1"), col("t2"))
-    cand
-      .join(base.select(col("doc_id").as("d1"), col("toks").as("t1")), Seq("d1"))
-      .join(base.select(col("doc_id").as("d2"), col("toks").as("t2")), Seq("d2"))
-      .where(j >= threshold)
-      .select(col("d1"), col("d2"), round(j, 4).as("j"))
+    val base = docSigs(SkewOps.fanOutScan(docs), id, text, k)
+    val cand = lshCandidates(base.select(col("doc_id"), bandKey(k, bands)))
+    verifyPairs(cand, base, base, threshold, 4)
   }
 
   /** CROSS-SET near-dup ids: the corpus docs whose token set is
     * near-duplicate (Jaccard ≥ `threshold`) of ANY row in `other` —
     * the fuzzy-decontamination kernel (a paraphrased or lightly-edited
     * eval leak shares its token SET while sharing few exact n-grams,
-    * so the q82-style exact-overlap gate misses it). Same machinery as
-    * [[minhashLshDocs]] (native `minhash_sig` signatures,
+    * so the q82-style exact-overlap gate misses it). Same kernel as
+    * [[minhashLshDocs]] (doc projection and band keys of [[docSigs]],
     * threshold-derived banding via [[minhashParamsFor]], merge-walk
     * `jaccard_sorted` verify) with the candidate join RESTRICTED to
     * cross-set pairs: corpus×corpus pairs never form, so the corpus's
@@ -393,16 +452,9 @@ object DedupOps {
                    threshold: Double, targetRecall: Double = 0.9,
                    maxK: Int = 32): DataFrame = {
     val (k, bands) = minhashParamsFor(threshold, targetRecall, maxK)
-    val r = k / bands
-    def side(df: DataFrame, idc: Column, tc: Column): DataFrame = df
-      .select(idc.as("doc_id"),
-        array_sort(array_distinct(TextOps.tokens(tc))).as("toks"))
-      .where(col("doc_id").isNotNull && col("toks").isNotNull)
-      .withColumn("sig", call_function("minhash_sig", col("toks"), lit(k)))
-    val bandCols = (0 until bands).map { b =>
-      concat_ws(":",
-        lit(b) +: (0 until r).map(i => col("sig")(b * r + i).cast("string")): _*)
-    }
+    // Null-text rows form no band key, so only null ids need filtering.
+    def side(df: DataFrame, idc: Column, tc: Column): DataFrame =
+      docSigs(df, idc, tc, k).where(col("doc_id").isNotNull)
     val corp = side(SkewOps.fanOutScan(corpus), corpusId, corpusText)
     val ev = side(other, md5(otherText.cast("string")), otherText)
       .dropDuplicates("doc_id")
@@ -429,10 +481,9 @@ object DedupOps {
     // Both broadcast sides are eval-scale — an eval
     // benchmark is small by contract (the reason cross-set LSH beats
     // corpus×corpus in the first place).
-    val ek = ev.select(col("doc_id").as("__eid"), explode(array(bandCols: _*)).as("bk"))
-      .distinct()
+    val ek = ev.select(col("doc_id").as("__eid"), bandKey(k, bands)).distinct()
     val j = call_function("jaccard_sorted", col("toks"), col("t2"))
-    corp.select(col("doc_id"), col("toks"), explode(array(bandCols: _*)).as("bk"))
+    corp.select(col("doc_id"), col("toks"), bandKey(k, bands))
       .join(broadcast(ek), Seq("bk"))
       .join(broadcast(ev.select(col("doc_id").as("__eid"), col("toks").as("t2"))),
         Seq("__eid"))
@@ -507,16 +558,12 @@ object DedupOps {
       .select("doc_id", "keep_id", "is_dup")
   }
 
-  /** (doc_id, sigkey) via the single-pass native `minhash_sig` expression
-    * — the shared front end of the linear dedup decision and the cross-run
-    * incremental path: a pure projection, no token explode, no signature
-    * aggregation. Requires a graft session (extension-registered
-    * function). */
+  /** (doc_id, sigkey), the key being [[sigKey]] — the shared front end
+    * of the linear dedup decision and the cross-run incremental path: a
+    * pure projection, no token explode, no signature aggregation.
+    * Requires a graft session (extension-registered function). */
   def sigKeysFast(docs: DataFrame, id: Column, text: Column, k: Int = 8): DataFrame =
-    SkewOps.fanOutScan(docs).select(id.as("doc_id"),
-      array_join(transform(
-        call_function("minhash_sig", TextOps.tokens(text), lit(k)),
-        _.cast("string")), "|").as("sigkey"))
+    SkewOps.fanOutScan(docs).select(id.as("doc_id"), sigKey(text, k).as("sigkey"))
 
   /** Expression-based linear dedup decision: like [[minhashDedupKeep]] but
     * the signature comes from [[sigKeysFast]]; the ONLY shuffle is the
@@ -535,8 +582,7 @@ object DedupOps {
     * corpus ([[incrementalDedup]]); fold the batch back in with
     * [[updatedFingerprints]]. */
   def fingerprintTable(docs: DataFrame, id: Column, text: Column, k: Int = 8): DataFrame =
-    sigKeysFast(docs, id, text, k)
-      .groupBy("sigkey").agg(min(col("doc_id")).as("keep_id"))
+    fingerprintFold(sigKeysFast(docs, id, text, k))
 
   /** Keep/drop for a NEW batch against a persisted prior-run fingerprint
     * table, sig-agnostic core: `newKeys` = (doc_id, sigkey) of the batch,
@@ -551,12 +597,11 @@ object DedupOps {
     * never hit this); [[updatedFingerprints]] still converges the state to
     * the true min for all later runs. */
   def incrementalDedupKeys(newKeys: DataFrame, prior: DataFrame): DataFrame = {
-    val newMin = newKeys.groupBy("sigkey").agg(min(col("doc_id")).as("new_min"))
-    val keeper = newMin
+    // least skips a null, so a signature new to the state keeps its batch min.
+    val keeper = fingerprintFold(newKeys)
       .join(prior.select(col("sigkey").as("psig"), col("keep_id").as("prior_keep")),
         col("sigkey") === col("psig"), "left")
-      .select(col("sigkey"),
-        least(col("new_min"), coalesce(col("prior_keep"), col("new_min"))).as("keep_id"))
+      .select(col("sigkey"), least(col("keep_id"), col("prior_keep")).as("keep_id"))
     newKeys.join(keeper, "sigkey")
       .select(col("doc_id"), col("keep_id"),
         (col("doc_id") =!= col("keep_id")).as("is_dup"))
@@ -573,9 +618,7 @@ object DedupOps {
     * nothing). */
   def updatedFingerprints(prior: DataFrame, newDocs: DataFrame,
                           id: Column, text: Column, k: Int = 8): DataFrame =
-    prior.select(col("sigkey"), col("keep_id"))
-      .unionByName(fingerprintTable(newDocs, id, text, k))
-      .groupBy("sigkey").agg(min(col("keep_id")).as("keep_id"))
+    fingerprintFold(sigKeysFast(newDocs, id, text, k), Some(prior))
 
   /** Retract taken-down docs from a batch-era fingerprint state — the
     * [[graft.streaming.DedupLoop]] takedown semantics for the
@@ -627,21 +670,12 @@ object DedupOps {
     * `persistIvfIndex` posture applied to [[minhashLshDocs]]'s banded
     * pipeline, so a GROWING corpus pays O(new batch) per near-dup
     * sweep instead of re-running the full self-join. Storage: tokens
-    * once per doc (never per band); band keys are short strings. */
+    * once per doc (never per band); band keys are short strings (format
+    * and null rule: [[docSigs]]). */
   def buildNearDupIndex(docs: DataFrame, id: Column, text: Column,
                         k: Int, bands: Int): (DataFrame, DataFrame) = {
-    require(bands >= 1 && k >= 1 && k % bands == 0,
-      s"k ($k) must be a positive multiple of bands ($bands)")
-    val r = k / bands
-    val base = docs.select(id.cast("long").as("doc_id"),
-        array_sort(array_distinct(TextOps.tokens(text))).as("toks"))
-      .where(col("doc_id").isNotNull)
-      .withColumn("sig", call_function("minhash_sig", col("toks"), lit(k)))
-    val bandCols = (0 until bands).map { b =>
-      concat_ws(":", lit(b) +: (0 until r).map(i => col("sig")(b * r + i).cast("string")): _*)
-    }
-    (base.select(col("doc_id"), explode(array(bandCols: _*)).as("bk")),
-      base.select(col("doc_id"), col("toks")))
+    val base = docSigs(docs, id.cast("long"), text, k).where(col("doc_id").isNotNull)
+    (base.select(col("doc_id"), bandKey(k, bands)), base.select(col("doc_id"), col("toks")))
   }
 
   /** Persist a [[buildNearDupIndex]] pair under `<table>_bk`/`<path>_bk`
@@ -790,27 +824,18 @@ object DedupOps {
     if (batchDocs <= broadcastMaxBatchDocs) {
       val bKeys = broadcast(newKeys)
       val tNew = broadcast(newToks)
-      val vsOld = bKeys.select(col("doc_id").as("n"), col("bk"))
-        .join(oldKeys.select(col("doc_id").as("o"), col("bk")), Seq("bk"))
-        .select(col("n"), col("o")).distinct()
-      val jo = call_function("jaccard_sorted", col("tn"), col("to"))
-      val oldPairs = vsOld
-        .join(oldToks.select(col("doc_id").as("o"), col("toks").as("to")), Seq("o"))
-        .join(tNew.select(col("doc_id").as("n"), col("toks").as("tn")), Seq("n"))
-        .where(jo >= threshold)
-        .select(least(col("n"), col("o")).as("d1"),
-          greatest(col("n"), col("o")).as("d2"), round(jo, 6).as("j"))
+      // Old doc as d1, new as d2: old tokens attach first, where they live.
+      val vsOld = bKeys.select(col("doc_id").as("d2"), col("bk"))
+        .join(oldKeys.select(col("doc_id").as("d1"), col("bk")), Seq("bk"))
+        .select(col("d1"), col("d2")).distinct()
+      val oldPairs = verifyPairs(vsOld, oldToks, tNew, threshold, 6)
+        .select(least(col("d1"), col("d2")).as("d1"),
+          greatest(col("d1"), col("d2")).as("d2"), col("j"))
       val vsNew = newKeys.select(col("doc_id").as("d1"), col("bk"))
         .join(bKeys.select(col("doc_id").as("d2"), col("bk").as("bk2")),
           col("bk") === col("bk2") && col("d1") < col("d2"))
         .select("d1", "d2").distinct()
-      val jn = call_function("jaccard_sorted", col("t1"), col("t2"))
-      val newPairs = vsNew
-        .join(tNew.select(col("doc_id").as("d1"), col("toks").as("t1")), Seq("d1"))
-        .join(tNew.select(col("doc_id").as("d2"), col("toks").as("t2")), Seq("d2"))
-        .where(jn >= threshold)
-        .select(col("d1"), col("d2"), round(jn, 6).as("j"))
-      return oldPairs.unionByName(newPairs)
+      return oldPairs.unionByName(verifyPairs(vsNew, tNew, tNew, threshold, 6))
     }
     // Candidates: batch × index (probe side shuffles, bucketed side
     // doesn't) + batch × batch; both orientations normalize to d1 < d2.
@@ -832,12 +857,7 @@ object DedupOps {
       .distinct()
     val toks = newToks.unionByName(
       oldToks.join(candDocs, Seq("doc_id"), "left_semi"))
-    val j = call_function("jaccard_sorted", col("t1"), col("t2"))
-    cand
-      .join(toks.select(col("doc_id").as("d1"), col("toks").as("t1")), Seq("d1"))
-      .join(toks.select(col("doc_id").as("d2"), col("toks").as("t2")), Seq("d2"))
-      .where(j >= threshold)
-      .select(col("d1"), col("d2"), round(j, 6).as("j"))
+    verifyPairs(cand, toks, toks, threshold, 6)
   }
 
   /** Typed mergeable MinHash sketch (the `Aggregator` path of SURVEY.md

@@ -24,7 +24,8 @@ import graft.sources.{Bucketed, LakeFs}
   *    layout — and every Exchange-free probe join over it — survives.
   *  - [[delete]] returns the batch's ids live in the PHYSICAL index
   *    (none = no-op); marks are recorded regardless, so
-  *    delete-then-append races resolve to deleted. NULL ids drop.
+  *    delete-then-append races resolve to deleted. NULL ids drop, and
+  *    so do ids a long-keyed family cannot cast.
   *  - The append guard checks PHYSICAL rows: a tombstoned twin is
   *    invisible live, but re-appending its id would leave two physical
   *    rows the live filter then kills BOTH of.
@@ -120,7 +121,9 @@ private[graft] object IndexStore {
              ids: DataFrame, buckets: Int): DataFrame = {
     require(ids.columns.length == 1, "ids must be a single id column")
     val c0 = col(ids.columns.head)
-    val batch = ids.select((if (lay.longIds) c0.cast("long") else c0).as(lay.idCol))
+    // try_cast: a malformed id can never match an index row, so it drops
+    // with the nulls (the FoldLoop.takedowns rule), never a cast error.
+    val batch = ids.select((if (lay.longIds) c0.try_cast("long") else c0).as(lay.idCol))
       .where(col(lay.idCol).isNotNull).distinct().localCheckpoint()
     val phys = attach(spark, lay, table, path, buckets).last.select(col(lay.idCol))
     // Collected: takedown batches are small, and the driver-side

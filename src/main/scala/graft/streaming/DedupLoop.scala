@@ -98,8 +98,7 @@ object DedupLoop {
       manifest.foreach { case (statsCols, manifestStateDir) =>
         ManifestLoop.foldDirStats(spark, outDir, batchId, statsCols, manifestStateDir)
       }
-      Some(priorLive.unionByName(keys.groupBy("sigkey").agg(min(col("doc_id")).as("keep_id")))
-        .groupBy("sigkey").agg(min(col("keep_id")).as("keep_id")))
+      Some(DedupOps.fingerprintFold(keys, Some(priorLive)))
     }
   }
 

@@ -112,21 +112,17 @@ object StreamOps {
     else events.dropDuplicates(keyCols)
 
   /** Streaming NEAR-duplicate filter: keep the first document seen per
-    * MinHash signature. The signature is the single-pass `minhash_sig`
-    * expression (no shuffle to compute), so the only state is
-    * dropDuplicates' per-signature key. Keep-first-FOREVER semantics means
-    * that state is deliberately unbounded (one entry per distinct signature
-    * ever seen) — a lifetime dedup needs lifetime memory; bound it by
-    * keying the upstream with a time bucket if per-epoch dedup is enough.
+    * MinHash fingerprint key ([[graft.ops.DedupOps.sigKey]], a projection
+    * — no shuffle to compute), so the only state is dropDuplicates'
+    * per-key entry. Keep-first-FOREVER semantics means that state is
+    * deliberately unbounded (one entry per distinct signature ever seen)
+    * — a lifetime dedup needs lifetime memory; bound it by keying the
+    * upstream with a time bucket if per-epoch dedup is enough.
     * Works identically on batch frames. */
-  def nearDupFilter(docs: DataFrame, textCol: String, k: Int = 8): DataFrame = {
-    import graft.ops.TextOps
-    docs
-      .withColumn("__sigkey",
-        array_join(transform(TextOps.minhashSig(col(textCol), k), _.cast("string")), "|"))
+  def nearDupFilter(docs: DataFrame, textCol: String, k: Int = 8): DataFrame =
+    docs.withColumn("__sigkey", graft.ops.DedupOps.sigKey(col(textCol), k))
       .dropDuplicates("__sigkey")
       .drop("__sigkey")
-  }
 
   /** CROSS-RUN streaming dedup — the streaming twin of the q91 incremental
     * operator (DedupOps.incrementalDedup): a document passes only if its
@@ -142,15 +138,11 @@ object StreamOps {
     * id smaller than a prior keeper — cannot arise there). Works
     * identically on batch frames. */
   def incrementalDedupFilter(docs: DataFrame, textCol: String,
-                             prior: DataFrame, k: Int = 8): DataFrame = {
-    import graft.ops.TextOps
-    docs
-      .withColumn("__sigkey",
-        array_join(transform(TextOps.minhashSig(col(textCol), k), _.cast("string")), "|"))
+                             prior: DataFrame, k: Int = 8): DataFrame =
+    docs.withColumn("__sigkey", graft.ops.DedupOps.sigKey(col(textCol), k))
       .join(prior.select(col("sigkey").as("__sigkey")), Seq("__sigkey"), "left_anti")
       .dropDuplicates("__sigkey")
       .drop("__sigkey")
-  }
 
   /** Streaming eval-set contamination filter: drop documents sharing ANY
     * word `n`-gram with a STATIC held-out set (`probeShingles`). The probe

@@ -55,4 +55,42 @@ class IndexStoreSpec extends AnyFunSuite {
       FileUtils.deleteQuietly(new File(root))
     }
   }
+
+  test("the four long-keyed deletes drop a non-numeric id: 0 live, no tombstone") {
+    val s = spark
+    import s.implicits._
+    val root = Files.createTempDirectory("graft-indexstore-baddel").toString
+    val docs = TestSpark.table("documents").where(col("doc_id") < 20)
+      .select("doc_id", "text").localCheckpoint()
+    val emb = TestSpark.table("embeddings").where(col("vec_id") < 20)
+      .select("vec_id", "embedding").localCheckpoint()
+    val cents = emb.where(col("vec_id") < 2)
+    val cb = Pq.pqTrain(emb, col("vec_id"), col("embedding"), m = 8, k = 4, iters = 1)
+    DedupOps.persistNearDupIndex(DedupOps.buildNearDupIndex(docs, col("doc_id"),
+      col("text"), 8, 4), "isd_nd", s"$root/nd", buckets = 2)
+    SketchOps.persistBm25Index(SketchOps.buildBm25Index(docs, col("doc_id"), col("text")),
+      "isd_bm", s"$root/bm", buckets = 2)
+    Pq.persistPqIndex(Pq.pqIvfIndex(emb, cents, cb), "isd_pq", s"$root/pq", buckets = 2)
+    Ann.persistSemDedupState(Ann.buildSemDedupState(emb, cents), "isd_sd", s"$root/sd",
+      buckets = 2)
+    val bad = Seq("abc").toDF("id")
+    val deletes: Seq[(String, IndexStore.Layout, String, () => Long)] = Seq(
+      ("deleteFromNearDupIndex", IndexStore.nearDup, s"$root/nd",
+        () => DedupOps.deleteFromNearDupIndex(spark, "isd_nd", s"$root/nd", bad, buckets = 2)),
+      ("deleteFromBm25Index", IndexStore.bm25, s"$root/bm",
+        () => SketchOps.deleteFromBm25Index(spark, "isd_bm", s"$root/bm", bad, buckets = 2)),
+      ("deleteFromPqIndex", IndexStore.pq, s"$root/pq",
+        () => Pq.deleteFromPqIndex(spark, "isd_pq", s"$root/pq", bad, buckets = 2)),
+      ("deleteFromSemDedupState", IndexStore.semDedup, s"$root/sd",
+        () => Ann.deleteFromSemDedupState(spark, "isd_sd", s"$root/sd", bad, buckets = 2)))
+    try deletes.foreach { case (op, lay, path, delete) =>
+      assert(delete() == 0L, s"$op: a malformed id is never live")
+      assert(IndexStore.tombstones(spark, lay, path).count() == 0L,
+        s"$op: a malformed id leaves no tombstone")
+    } finally {
+      Seq("isd_nd_bk", "isd_nd_tk", "isd_bm_po", "isd_bm_dl", "isd_pq", "isd_sd")
+        .foreach(t => spark.sql(s"DROP TABLE IF EXISTS `$t`"))
+      FileUtils.deleteQuietly(new File(root))
+    }
+  }
 }

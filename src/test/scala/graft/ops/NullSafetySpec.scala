@@ -73,4 +73,50 @@ class NullSafetySpec extends AnyFunSuite {
     // doc passes unless it collides with the fixture probe (it doesn't).
     assert(kept == Set(1L, 2L, 3L, 4L))
   }
+
+  test("near-dup band keys: a null-text doc forms no key, keeps its token row, pairs nothing") {
+    val s = spark
+    import s.implicits._
+    val docs = TestSpark.table("documents").where(col("doc_id") < 60)
+      .select("doc_id", "text").localCheckpoint()
+    val withNulls = docs.unionByName(
+      Seq((1000L, null: String), (1001L, null: String)).toDF("doc_id", "text"))
+    val (keys, toks) = DedupOps.buildNearDupIndex(withNulls, col("doc_id"), col("text"), 8, 4)
+    assert(keys.where(col("doc_id") >= 1000).count() == 0, "a null text forms no band key")
+    assert(toks.where(col("doc_id") >= 1000).count() == 2, "the doc keeps its token row")
+    assert(DedupOps.lshCandidates(keys).where(col("d2") >= 1000).count() == 0)
+    def pairs(df: org.apache.spark.sql.DataFrame) =
+      DedupOps.minhashLshDocs(df, col("doc_id"), col("text"), 8, 4, 0.8)
+        .collect().map(_.toString).toSet
+    val base = pairs(docs)
+    assert(base.nonEmpty, "the fixture slice must hold near-dup pairs")
+    assert(pairs(withNulls) == base)
+  }
+
+  test("dedupAgainst: one decision per batch doc, a null-text doc included") {
+    val s = spark
+    import s.implicits._
+    val prior = Pipelines.dedupState(degenerate.where(col("doc_id") === 1L),
+      col("doc_id"), col("text"))
+    val batch = Seq((10L, "the quick brown fox"), (11L, null: String), (12L, "jumps over"))
+      .toDF("doc_id", "text")
+    val rows = Pipelines.dedupAgainst(batch, col("doc_id"), col("text"), prior)
+      .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getBoolean(2))).toMap
+    assert(rows == Map(10L -> (1L, true), 11L -> (11L, false), 12L -> (12L, false)))
+  }
+
+  test("dedupAgainst: a null-text doc is a dup of a prior one, as in the one-shot") {
+    val s = spark
+    import s.implicits._
+    val prior = Pipelines.dedupState(degenerate, col("doc_id"), col("text"))
+    val batch = Seq((20L, null: String), (21L, "a fresh document")).toDF("doc_id", "text")
+    def decisions(df: org.apache.spark.sql.DataFrame) =
+      df.where(col("doc_id") >= 20).collect()
+        .map(r => r.getLong(0) -> (r.getLong(1), r.getBoolean(2))).toMap
+    val incremental = decisions(
+      Pipelines.dedupAgainst(batch, col("doc_id"), col("text"), prior))
+    assert(incremental(20L) == (2L, true), "the prior null-text doc keeps the cluster")
+    assert(incremental == decisions(Pipelines.dedupDecision(
+      degenerate.unionByName(batch), col("doc_id"), col("text"))))
+  }
 }
