@@ -5,14 +5,16 @@ import org.apache.spark.sql.catalyst.QueryPlanningTracker
 
 /** The ad-hoc diagnosis driver: run selected bench entries — headline
   * [[Bench.suite]] queries or [[Bench.extras]] — in isolation with the
-  * bench's warm + median-of-N protocol. Per name it prints the median
-  * wall seconds, the median shuffle read/write MB ([[ShuffleMeter]]) and
-  * the median analysis / optimization / planning ms that Spark's own
-  * `QueryPlanningTracker` recorded for each timed run. The phases are
-  * those of the entry's final DataFrame: actions an entry runs while
-  * building it (an iterative loop's checkpoints) are in the seconds and
-  * the shuffle bytes but not in the phase times. Diagnosis tooling, not
-  * driver contract; [[PlanDump]] is its plan-text twin.
+  * bench's median-of-N protocol, after warm runs until two consecutive
+  * ones agree within 10% (at most 5). Per name it prints the median
+  * wall seconds, the number of warm runs, the median shuffle read/write
+  * MB ([[ShuffleMeter]]) and the median analysis / optimization /
+  * planning ms that Spark's own `QueryPlanningTracker` recorded for each
+  * timed run. The phases are those of the entry's final DataFrame:
+  * actions an entry runs while building it (an iterative loop's
+  * checkpoints) are in the seconds and the shuffle bytes but not in the
+  * phase times. Diagnosis tooling, outside the `SparkEntry` contract;
+  * [[PlanDump]] is its plan-text twin.
   *
   * Usage: runMain graft.XProbe <name[,name...]> [samples]
   * (the scale directory comes from SPARK_GRAFT_SF_DIR, as for [[Bench]])
@@ -20,6 +22,7 @@ import org.apache.spark.sql.catalyst.QueryPlanningTracker
 object XProbe {
   private val phases = Seq(QueryPlanningTracker.ANALYSIS,
     QueryPlanningTracker.OPTIMIZATION, QueryPlanningTracker.PLANNING)
+  private val maxWarm = 5
 
   def main(args: Array[String]): Unit = {
     val suite = Bench.suite.toMap
@@ -46,9 +49,24 @@ object XProbe {
         case Some(sql) => () => spark.sql(sql)
         case None => extras(name)
       }
-      val rows = thunk().collect() // warm + result echo
+      val t0 = System.nanoTime()
+      val rows = thunk().collect() // first warm run + result echo
       println(s"XPROBE $name first-run ${rows.length} rows: " +
         rows.take(5).map(_.toString).mkString("; "))
+      // Warm until two consecutive runs agree within 10% (at most
+      // maxWarm runs), so the timed median does not depend on how much
+      // JIT warm-up the entries before this one left behind.
+      var last = (System.nanoTime() - t0) / 1e9
+      var warm = 1
+      var settled = false
+      while (!settled && warm < maxWarm) {
+        val t = System.nanoTime()
+        thunk().collect()
+        val s = (System.nanoTime() - t) / 1e9
+        settled = math.abs(s - last) <= 0.1 * math.max(s, last)
+        last = s
+        warm += 1
+      }
       val timed = Seq.fill(samples) {
         ShuffleMeter.measure(spark) {
           val t0 = System.nanoTime()
@@ -62,7 +80,7 @@ object XProbe {
       val (runs, reads, writes) = timed.unzip3
       val ts = runs.map(_._1)
       val phaseMs = phases.indices.map(i => f"${phases(i)} ${median(runs.map(_._2(i)))}%.0f ms")
-      println(f"XPROBE $name median ${median(ts)}%.3f s (samples ${ts.map(t => f"$t%.3f").mkString(",")}) " +
+      println(f"XPROBE $name median ${median(ts)}%.3f s (samples ${ts.map(t => f"$t%.3f").mkString(",")}, warm runs $warm) " +
         f"shuffle read ${median(reads)}%.1f MB written ${median(writes)}%.1f MB " +
         phaseMs.mkString(" "))
     }

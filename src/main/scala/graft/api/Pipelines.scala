@@ -11,9 +11,11 @@ import graft.streaming.{AggLoop, DistinctLoop, TopKLoop}
   * user calls without learning each operator's plumbing. These are lazy
   * plan builders — nothing executes until an action — EXCEPT the
   * iterative ones, which run cluster jobs at call time: [[trainTokenizer]]
-  * and [[trainCentroids]] (training rounds), and [[canonicalDocs]] /
-  * [[curate]] (the connected-components closure iterates to convergence
-  * while the plan is being built).
+  * and [[trainCentroids]] (training rounds), [[canonicalDocs]] (the
+  * connected-components closure iterates to convergence while the plan is
+  * being built), and [[curate]], which runs each heavy stage of its funnel
+  * once at call time and cuts compact id sets that its two lazy result
+  * frames read.
   */
 object Pipelines {
 
@@ -709,7 +711,13 @@ object Pipelines {
   }
 
   def mixSources(df: DataFrame, sourceCol: String, idCol: String,
-                 rates: Map[String, Double], seed: String = "mix"): DataFrame = {
+                 rates: Map[String, Double], seed: String = "mix"): DataFrame =
+    df.where(mixKeep(sourceCol, idCol, rates, seed))
+
+  /** [[mixSources]]' per-row acceptance test, which [[curate]]'s mixture
+    * stage uses as a flag. */
+  private def mixKeep(sourceCol: String, idCol: String, rates: Map[String, Double],
+                      seed: String = "mix"): Column = {
     require(rates.nonEmpty, "empty mixture spec drops everything — say so explicitly")
     rates.foreach { case (s, r) =>
       require(r >= 0.0 && r <= 1.0, s"rate for '$s' must be in [0,1], got $r") }
@@ -720,7 +728,7 @@ object Pipelines {
     // the declared q160 SQL drops them too via concat's null poisoning).
     // Without the filter, concat_ws would silently SKIP the null and
     // collapse every null-id row in a source onto one shared draw.
-    df.where(col(idCol).isNotNull && hashDraw(seed, idCol) < thr)
+    col(idCol).isNotNull && hashDraw(seed, idCol) < thr
   }
 
   /** Per-DOMAIN cap — the web-crawl balance step: keep at most `k`
@@ -1087,8 +1095,9 @@ object Pipelines {
     rows.toDF("family", "live_removed")
   }
 
-  /** [[curate]]'s result: the surviving rows (input schema preserved) and
-    * a per-stage audit of the funnel — both lazy plans. */
+  /** [[curate]]'s result: `curated`, the surviving rows (input schema
+    * preserved), and `audit`, the per-stage funnel counts — two lazy
+    * reads of the one funnel frame and the id sets [[curate]] cut. */
   final case class CurationResult(curated: DataFrame, audit: DataFrame)
 
   /** Config for [[curate]]'s host-authority prior stage — the reason
@@ -1120,23 +1129,32 @@ object Pipelines {
                                       targetCluster: Int = 256,
                                       iters: Int = 5)
 
-  /** ONE-CALL corpus curation — the full pre-training funnel as a single
-    * lazy composition over a conventional (doc_id, text[, source]) table:
+  /** ONE-CALL corpus curation — the full pre-training funnel over a
+    * conventional (doc_id, text[, source]) table, stages in this order:
     *
+    *   0. optional C4 cleaning (`c4Clean`): line-level boilerplate
+    *      removal plus the page gates; it REWRITES `text`, so every
+    *      later signal sees the cleaned text;
     *   1. quality + language gate (per-row scalars, no shuffle);
+    *   1b. optional HOST-AUTHORITY prior ([[HostAuthorityGate]]): docs
+    *      whose URL's host ranks below the floor in a maintained
+    *      web-graph authority table drop — the link-farm gate, one
+    *      host-scale equi join placed before the per-doc model stages;
     *   2. optional LM gate (`lmScoreFloor`): a char-trigram model is
-    *      trained on the stage-1 survivors (self-distribution — the
+    *      trained on the stage-1b survivors (self-distribution — the
     *      CCNet-style arrangement) and documents whose mean gram
     *      log-probability falls below the floor are dropped; gibberish
     *      and wrong-charset text sit far below in-distribution text
     *      (measured ≈ -12.6 vs ≈ -5.4 on the fixtures), so a floor
     *      around -8 separates them with a wide margin;
-    *   2b. optional HOST-AUTHORITY prior ([[HostAuthorityGate]]): docs
-    *      whose URL's host ranks below the floor in a maintained
-    *      web-graph authority table drop — the link-farm gate, one
-    *      host-scale equi join placed before the per-doc model stages;
+    *   2b. optional learned gate: `classifierFloor` (a hand-picked
+    *      (model, floor)) or `classifierCalibration` (the production
+    *      shape: [[graft.ops.LinearClassifier.calibrateFloor]]'s pick at
+    *      a target precision on a held-out split — the audit then records
+    *      the chosen floor and its held-out operating point in the
+    *      stage's `detail`);
     *   3. near-dup CLUSTER canonicalization ([[canonicalDocs]]: banded
-    *      LSH → components → best representative per cluster);
+    *      LSH → transitive closure → best representative per cluster);
     *   3b. optional SEMANTIC dedup ([[SemanticDedupStage]]): SemDeDup's
     *      cluster-then-prune over a (vec_id, embedding) side table —
     *      removes "same meaning, different words" redundancy the
@@ -1145,7 +1163,8 @@ object Pipelines {
     *      verify pays for docs that are still alive); docs without an
     *      embedding row are kept (unscorable ≠ redundant);
     *   4. optional eval-set decontamination (Bloom-prefiltered exact
-    *      3-gram overlap, contaminated docs dropped);
+    *      3-gram overlap, plus the fuzzy near-dup pass with `fuzzyEval`;
+    *      contaminated docs dropped);
     *   5. optional deterministic per-source cap ([[sampleExactK]] —
     *      reproducible across runs and retries);
     *   6. optional weighted source MIXTURE (`mixtureRates` —
@@ -1154,19 +1173,34 @@ object Pipelines {
     *      before dedup would let duplicate-heavy sources claw back
     *      share through their removed copies).
     *
-    * The learned gate runs from `classifierFloor` (a hand-picked
-    * (model, floor)) or `classifierCalibration` (the production shape:
-    * [[graft.ops.LinearClassifier.calibrateFloor]]'s pick at a target
-    * precision on a held-out split — the audit then records the chosen
-    * floor and its held-out operating point in the stage's `detail`).
+    * What runs at call time: every heavy stage, once, cut as a COMPACT
+    * table — never as a text-wide copy of the corpus. These are the host
+    * rank table, the LM model (one collect), stage 3's near-dup pairs and
+    * its transitive closure (iterates cluster jobs to convergence), the
+    * SemDeDup drop ids, and one id verdict: each canonical survivor id
+    * with its semantic, decontamination and cap outcome. A compact table
+    * that fits the broadcast threshold is broadcast to the joins that
+    * read it. The per-row gates (C4, quality/lang, host authority, LM,
+    * classifier, mixture draw) stay flags on one per-row funnel frame,
+    * checked in stage order so a row pays only for the gates it
+    * reaches.
     *
-    * `audit` is the funnel report — (stage, n_docs, detail), one row per
-    * stage in order — so a curation run documents what each stage
-    * removed (and, where calibrated, why the gate sits where it sits)
-    * instead of emitting one unexplained survivor set. NOT fully lazy: stage 2's
-    * transitive closure iterates cluster jobs to convergence during THIS
-    * call (see [[canonicalDocs]]); the returned frames are then lazy and
-    * execute as separate actions. */
+    * What the two frames read: each action on either is ONE pass from
+    * the input through the per-row gates, joined to the id verdict —
+    * the heavy stages never run again. `curated` is the funnel frame
+    * filtered on every stage: input schema preserved, with the
+    * C4-rewritten text. `audit` is one conditional-count aggregate over
+    * the same frame: (stage_no, stage, n_docs, detail), one row per
+    * stage that ran, in order, `n_docs` the rows that passed every stage
+    * up to it — so a curation run documents what each stage removed
+    * (and, where calibrated, why the gate sits where it sits).
+    *
+    * Key contract: `doc_id` keys the id-keyed stages. Canonicalization,
+    * semantic dedup and decontamination decide per id, so rows sharing a
+    * `doc_id` there survive or drop together; a null `doc_id` never
+    * survives canonicalization. The cap needs unique non-null ids
+    * ([[sampleExactK]]'s precondition). Every other stage decides per
+    * row. */
   def curate(docs: DataFrame, dedupThreshold: Double = 0.8,
              lang: Option[String] = Some("en"),
              evalSet: Option[DataFrame] = None,
@@ -1193,119 +1227,136 @@ object Pipelines {
     // gate's placement unexplained.
     val clsGate = classifierFloor.orElse(
       classifierCalibration.map(c => (c.model, c.floor)))
+    val spark = docs.sparkSession
     val id = col("doc_id"); val text = col("text")
     // Optional C4 stage FIRST: it REWRITES text (line-level boilerplate
     // removal + page gates), and every downstream signal — quality
     // ratios, the LM model trained on survivors, dedup shingles — must
-    // see the cleaned text, not nav bars and cookie banners.
+    // see the cleaned text, not nav bars and cookie banners. Every row
+    // stays in the frame; its page verdict is the first flag.
     val base =
       if (!c4Clean) docs
       else docs.withColumn("__clean", TextOps.c4CleanLines(text))
-        .where(TextOps.c4PageKeep(col("__clean"), text))
+        .withColumn("__c4", TextOps.c4PageKeep(col("__clean"), text))
         .withColumn("text", col("__clean")).drop("__clean")
-    val quality = base.where(TextOps.qualityVerdict(text) === "keep" &&
-      lang.map(l => TextOps.langGuess(text) === l).getOrElse(lit(true)))
-    // Host-authority PRIOR right after the cheap scalar gates: one equi
-    // join against the host-scale rank table (broadcast under AQE at
-    // realistic sizes — hosts ≪ docs) drops link-farm documents before
-    // the LM/classifier/dedup stages pay per-doc model cost for them.
-    // Schema rides through untouched; unknown hosts keep (see
-    // [[HostAuthorityGate]]).
-    val hostKept = hostAuthorityGate match {
+    // Host-authority PRIOR: one equi join against the host-scale rank
+    // table (broadcast under AQE at realistic sizes — hosts ≪ docs),
+    // cut once because every pass over the funnel reads it. Unknown
+    // hosts keep (see [[HostAuthorityGate]]).
+    val withHost = hostAuthorityGate match {
       case Some(g) =>
         // Collapse duplicate host rows deterministically (keep the best
         // score) — rank tables assembled from unioned snapshots carry
         // them, and a left join would DUPLICATE every doc on that host
         // through the rest of the funnel (the Robots.frontierFilter
         // hazard, same fix).
-        val ranks = g.ranks.select(g.hostCol.cast("string").as("__ah"),
+        val ranks = cutCompact(g.ranks.select(g.hostCol.cast("string").as("__ah"),
           g.scoreCol.cast("double").as("__ascore"))
-          .groupBy("__ah").agg(max(col("__ascore")).as("__ascore"))
-        quality
-          .withColumn("__ahost", urlHost(g.url, g.byRegisteredDomain))
+          .groupBy("__ah").agg(max(col("__ascore")).as("__ascore")))
+        base.withColumn("__ahost", urlHost(g.url, g.byRegisteredDomain))
           .join(ranks, col("__ahost") === col("__ah"), "left")
-          .where(col("__ascore").isNull || col("__ascore") >= g.floor)
-          .drop("__ahost", "__ah", "__ascore")
-      case None => quality
+      case None => base
     }
-    val lmKept = lmScoreFloor match {
-      case Some(floor) =>
-        // One-pass lm_score gate (bitwise-equal to the ngramScore
-        // explode+join+agg lowering it replaced — StreamLmSpec): the
-        // frozen model folds into the filter as a literal, so the gate
-        // is a projection, not a corpus-wide join.
-        val model = TextOps.ngramModel(hostKept, text)
-        graft.streaming.StreamOps.lmFilter(hostKept, "text", model, floor)
-      case None => hostKept
+    val preLm: Seq[(String, Column)] =
+      (if (c4Clean) Seq("c4_clean" -> col("__c4")) else Nil) ++
+        Seq("quality_lang" -> (TextOps.qualityVerdict(text) === "keep" &&
+          lang.map(l => TextOps.langGuess(text) === l).getOrElse(lit(true)))) ++
+        hostAuthorityGate.map(g => "host_authority" ->
+          (col("__ascore").isNull || col("__ascore") >= g.floor)).toSeq
+    // One-pass lm_score gate (StreamOps.lmFilter's predicate): the
+    // frozen model, trained on the rows that pass every earlier stage,
+    // folds into the gate as a literal — a projection, not a join.
+    val lmGate = lmScoreFloor.fold(lit(true)) { floor =>
+      val trainOn = withHost.where(
+        preLm.map { case (_, g) => coalesce(g, lit(false)) }.reduce(_ && _))
+      val model = TextOps.ngramModelBytes(TextOps.ngramModel(trainOn, text))
+      TextOps.lmScore(text, model).getField("score") >= floor
     }
     // The LEARNED gate (when a trained model exists): unlike the
     // self-trained LM stage above it carries external supervision, so
     // it runs after the cheap gates and before dedup pays for docs the
-    // classifier would drop anyway.
-    val clsKept = clsGate match {
-      case Some((model, floor)) => classifierFilter(lmKept, id, text, model, floor)
-      case None => lmKept
+    // classifier would drop anyway. Scored per row with the model
+    // broadcast once ([[classifierScores]]' scoring).
+    val clsRow = clsGate.map { case (model, floor) =>
+      val bm = spark.sparkContext.broadcast(model)
+      val score = udf((t: String) => graft.ops.LinearClassifier.scoreText(bm.value, t))
+      "classifier" -> (id.isNotNull && score(text) >= floor)
     }
-    val canon = clsKept.join(
-      canonicalDocs(clsKept, id, text, dedupThreshold)
-        .select(col("doc_id").as("__keep")),
-      id === col("__keep"), "left_semi")
-    val sem = semanticDedup match {
-      case Some(stg) =>
-        // Embeddings restricted to the CANONICAL survivors first: the
-        // within-cluster verify only pays for docs still alive, and a
-        // token-dropped doc never semantically dominates a survivor
-        // (its content survives through its cluster's canonical rep).
-        // Checkpoint: emb's lineage is the WHOLE funnel (via the canon
-        // semi join) — without the cut, the sizing count, every kmeans
-        // iteration, and the drop verify would each re-execute it.
-        val emb = stg.embeddings.join(canon.select(id.as("__sid")),
-          col("vec_id") === col("__sid"), "left_semi").localCheckpoint()
-        val cents = stg.centroids.getOrElse(
-          graft.ops.Ann.kmeans(emb,
-            graft.ops.Ann.semDedupKFor(emb.count(), stg.targetCluster), stg.iters))
-        canon.join(
-          graft.ops.Ann.semDedupDrops(emb, cents, stg.threshold)
-            .select(col("vec_id").as("__sdrop")),
-          id === col("__sdrop"), "left_anti")
-      case None => canon
+    val rowGates = preLm ++ Seq("lm_gate" -> lmGate) ++ clsRow
+    val nRow = rowGates.size
+    val framed = withHost.withColumn("__row", gatesPassed(rowGates.map(_._2), 0))
+    val pool = framed.where(col("__row") === nRow)
+    // Cut only when two consumers read it (the semantic stage and the cap
+    // each add one); otherwise the verdict cut below computes it once.
+    val canonIds = {
+      val ids = canonicalDocs(pool, id, text, dedupThreshold).select(col("doc_id").as("__canon"))
+      if (semanticDedup.isDefined || perSourceCap.isDefined) cutCompact(ids) else ids
     }
-    val clean = evalSet match {
-      case Some(es) =>
-        // Exact 3-gram overlap always; the fuzzy near-dup pass joins in
-        // when asked (verbatim leaks die either way — the fuzzy set is
-        // the paraphrased remainder the n-gram gate cannot see).
-        val exact = contaminatedDocs(sem, id, text, es, col("text"))
-          .select(col("doc_id").as("__dirty"))
-        val dirty = fuzzyEval match {
-          case Some(th) => exact.unionByName(
-            fuzzyContaminatedDocs(sem, id, text, es, col("text"), th)
-              .select(col("doc_id").as("__dirty"))).distinct()
-          case None => exact
-        }
-        sem.join(dirty, id === col("__dirty"), "left_anti")
-      case None => sem
+    val drops = semanticDedup.map { stg =>
+      // Embeddings restricted to the CANONICAL survivors first: the
+      // within-cluster verify only pays for docs still alive, and a
+      // token-dropped doc never semantically dominates a survivor
+      // (its content survives through its cluster's canonical rep).
+      // Cut, or the sizing count, every kmeans iteration and the drop
+      // verify would each re-run the semi join.
+      val emb = stg.embeddings.join(canonIds, col("vec_id") === col("__canon"),
+        "left_semi").localCheckpoint()
+      val cents = stg.centroids.getOrElse(
+        graft.ops.Ann.kmeans(emb,
+          graft.ops.Ann.semDedupKFor(emb.count(), stg.targetCluster), stg.iters))
+      cutCompact(graft.ops.Ann.semDedupDrops(emb, cents, stg.threshold)
+        .select(col("vec_id").as("__sdrop")))
     }
-    val capped = perSourceCap match {
-      case Some(k) => sampleExactK(clean, "source", "doc_id", k)
-      case None => clean
+    val dirty = evalSet.map { es =>
+      // Exact 3-gram overlap always; the fuzzy near-dup pass joins in
+      // when asked (verbatim leaks die either way — the fuzzy set is
+      // the paraphrased remainder the n-gram gate cannot see). Probed
+      // over the whole pool, not only the semantic survivors: the
+      // verdict reads an id's dirty flag only when every earlier id-keyed
+      // stage kept that id, and then every pool row of the id survived
+      // them — so the outcome is the same, without a shuffle join of the
+      // pool against the survivor ids.
+      val exact = contaminatedDocs(pool, id, text, es, col("text"))
+        .select(col("doc_id").as("__dirty"))
+      fuzzyEval.fold(exact)(th => exact.unionByName(
+        fuzzyContaminatedDocs(pool, id, text, es, col("text"), th)
+          .select(col("doc_id").as("__dirty"))))
     }
-    val mixed = mixtureRates match {
-      case Some(rates) => mixSources(capped, "source", "doc_id", rates)
-      case None => capped
+    val capped = perSourceCap.map { k =>
+      val clean = (drops.toSeq.map(_ -> "__sdrop") ++ dirty.toSeq.map(_ -> "__dirty"))
+        .foldLeft(pool.join(canonIds, id === col("__canon"), "left_semi")) {
+          case (rows, (ids, key)) => rows.join(ids, id === col(key), "left_anti") }
+      sampleExactK(clean.select(col("source"), id), "source", "doc_id", k)
+        .select(col("doc_id").as("__cap"))
     }
-    // The audit mirrors the funnel that actually ran: the c4 row only
-    // appears when the stage does (default audits keep their shape).
-    val stages = (("input" -> docs) +:
-      (if (c4Clean) Seq("c4_clean" -> base) else Nil)) ++
-      Seq("quality_lang" -> quality) ++
-      (if (hostAuthorityGate.isDefined) Seq("host_authority" -> hostKept) else Nil) ++
-      Seq("lm_gate" -> lmKept) ++
-      (if (clsGate.isDefined) Seq("classifier" -> clsKept) else Nil) ++
-      Seq("canonical" -> canon) ++
-      (if (semanticDedup.isDefined) Seq("semantic" -> sem) else Nil) ++
-      Seq("decontaminated" -> clean, "capped" -> capped,
-      "mixed" -> mixed)
+    // The id verdict: per canonical id, how many id-keyed stages it
+    // passes (canonical itself counts one). Each id set contributes one
+    // bit (canonical 1, semantic drop 2, dirty 4, cap keep 8); one
+    // aggregation folds them per id, which also collapses the duplicate
+    // ids a set may hold. Id-sized, cut once.
+    def bit(b: Int): Column = (col("__f") bitwiseAND b) =!= 0
+    val idGates: Seq[(String, Column)] =
+      drops.map(_ => "semantic" -> !bit(2)).toSeq ++ Seq(
+        "decontaminated" -> !bit(4),
+        "capped" -> capped.fold(lit(true))(_ => bit(8)))
+    val verdict = cutCompact(
+      (Seq(canonIds -> 1) ++ drops.map(_ -> 2) ++ dirty.map(_ -> 4) ++ capped.map(_ -> 8))
+        .map { case (ids, b) => ids.select(col(ids.columns.head).as("__canon"), lit(b).as("__f")) }
+        .reduce(_.unionByName(_))
+        .groupBy("__canon").agg(bit_or(col("__f")).as("__f"))
+        .where(bit(1))
+        .select(col("__canon"), gatesPassed(idGates.map(_._2), 1).as("__v")))
+    val nId = 1 + idGates.size
+    val mixGate = mixtureRates.fold(lit(true))(mixKeep("source", "doc_id", _))
+    // Stages passed: the per-row gates, then the id verdict, then the
+    // mixture draw.
+    val funnel = framed.join(verdict, id === col("__canon"), "left")
+      .withColumn("__reached", when(col("__row") < nRow, col("__row"))
+        .when(col("__v").isNull, lit(nRow))
+        .when(col("__v") < nId || !coalesce(mixGate, lit(false)), lit(nRow) + col("__v"))
+        .otherwise(lit(nRow + nId + 1)))
+    val stages = ("input" +: rowGates.map(_._1)) ++
+      ("canonical" +: idGates.map(_._1)) :+ "mixed"
     // Per-stage detail (nullable, appended last so positional readers of
     // the classic (stage_no, stage, n_docs) shape keep working): today
     // only the calibrated classifier stage carries one — its chosen
@@ -1322,13 +1373,47 @@ object Pipelines {
         Double.box(c.floor), Double.box(c.precision), Double.box(c.recall),
         Double.box(c.f1), Double.box(c.targetPrecision))
     }.toMap
-    val audit = stages.zipWithIndex.map { case ((name, df), i) =>
-      df.agg(count(lit(1)).as("n_docs"))
-        .select(lit(i).as("stage_no"), lit(name).as("stage"), col("n_docs"),
-          lit(details.get(name).orNull).cast("string").as("detail"))
-    }.reduce(_.unionByName(_)).orderBy("stage_no")
-    CurationResult(mixed, audit)
+    // Every stage is a subset of the one before it, so one conditional
+    // count per stage over the one funnel pass gives the whole audit.
+    val audit = funnel
+      .agg(count(lit(1)).as("__n0"), stages.indices.tail.map(i =>
+        count(when(col("__reached") >= i, lit(1))).as(s"__n$i")): _*)
+      .select(explode(array(stages.zipWithIndex.map { case (name, i) =>
+        struct(lit(i).as("stage_no"), lit(name).as("stage"), col(s"__n$i").as("n_docs"),
+          lit(details.get(name).orNull).cast("string").as("detail")) }: _*)).as("__a"))
+      .select("__a.*")
+    val curated = funnel.where(col("__reached") === stages.size - 1)
+      .select(docs.columns.map(c => col("`" + c.replace("`", "``") + "`")): _*)
+    CurationResult(curated, audit)
   }
+
+  /** Cut a compact table (an id set, a host-rank table) once: one job
+    * materializes it in the executors' block stores and, in the same
+    * pass, counts its rows. The cut inherits the size estimate of the
+    * lineage it replaces, so the planner would shuffle every join that
+    * reads it; the count marks it for broadcast instead when it fits the
+    * session's broadcast threshold. */
+  private def cutCompact(df: DataFrame): DataFrame = {
+    val observed = df.observe("__cut_rows", count(lit(1)))
+    val cut = observed.localCheckpoint()
+    val conf = df.sparkSession.conf.get("spark.sql.autoBroadcastJoinThreshold").trim
+    val threshold =
+      if (conf.startsWith("-")) -1L // broadcasting switched off
+      else org.apache.spark.network.util.JavaUtils.byteStringAsBytes(conf)
+    val bytes = observed.queryExecution.observedMetrics.get("__cut_rows")
+      .map(_.getLong(0) * (8L + df.schema.defaultSize))
+    if (bytes.exists(_ <= threshold)) broadcast(cut) else cut
+  }
+
+  /** How many of `gates` a row passes in a row, plus `from`: one CASE
+    * whose branches run in order, so a gate is evaluated only for rows
+    * that passed every gate before it. A NULL verdict fails, as in
+    * `where`. */
+  private def gatesPassed(gates: Seq[Column], from: Int): Column =
+    gates.zipWithIndex.foldLeft(Option.empty[Column]) { case (acc, (g, i)) =>
+      val fail = !coalesce(g, lit(false))
+      Some(acc.fold(when(fail, lit(from + i)))(_.when(fail, lit(from + i))))
+    }.fold(lit(from))(_.otherwise(lit(from + gates.size)))
 
   /** Vocabulary census: n-grams occurring at least `minCount` times, with
     * EXACT counts (count-min prefilter — the shuffle carries candidates

@@ -559,7 +559,8 @@ object Ann {
         sum(when(col("__new"), 1L).otherwise(0L)).as("__clashes"))
       .localCheckpoint()
     IndexStore.requireNew("appendIvfIndex", IndexStore.ivf, table, path, existing, newIds,
-      Some(prior.agg(sum(col("__clashes"))).head().getLong(0)))
+      // coalesce: the sum over an empty index is NULL, not 0.
+      Some(prior.agg(coalesce(sum(col("__clashes")), lit(0L))).head().getLong(0)))
     val gal = newVectors.select(col(id).as("g_id"), col(vec).as("g_emb"))
     // Same arg-min key as ivfAssign/ivfIndex — identical cid per vector —
     // with the winning similarity kept for the drift report.

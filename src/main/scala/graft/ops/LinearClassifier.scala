@@ -148,13 +148,17 @@ object LinearClassifier {
     in.mapPartitions { rows =>
       val m = bm.value
       rows.map { r =>
-        val feats = featurize(if (r.isNullAt(1)) null else r.getString(1), m.dim)
-        var z = m.bias.toDouble
-        feats.foreach { case (i, v) => z += m.weights(i) * v }
         Row(if (r.isNullAt(0)) null else java.lang.Long.valueOf(r.getLong(0)),
-          sigmoid(z))
+          scoreText(m, if (r.isNullAt(1)) null else r.getString(1)))
       }
     }(enc)
+  }
+
+  /** One text's score under `m` — the scoring [[score]] maps over rows. */
+  private[graft] def scoreText(m: Model, text: String): Double = {
+    var z = m.bias.toDouble
+    featurize(text, m.dim).foreach { case (i, v) => z += m.weights(i) * v }
+    sigmoid(z)
   }
 
   /** Held-out EVALUATION over a labeled `(text, label∈{0,1})` frame: the

@@ -1,6 +1,10 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import java.nio.charset.StandardCharsets
+
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{AnalysisException, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Bucketed persisted STATE tables — the steady-state answer to the
   * recurring shuffle (VERDICT r4 "What's missing" #2).
@@ -60,7 +64,37 @@ object Bucketed {
       .sortBy(bucketCol)
       .format("parquet")
       .saveAsTable(table)
+    // Nullable, as a schema inferred from the parquet files would be.
+    writeSchema(df.sparkSession, path,
+      StructType(df.schema.map(_.copy(nullable = true))))
   }
+
+  /** Sidecar holding the table schema as JSON. Zero rows write no data
+    * file, so [[register]] could not infer the schema of an empty table
+    * from its files; the `_` prefix keeps Spark's file index (and so
+    * the bucketed scan) blind to it. */
+  private val schemaFile = "_graft_schema.json"
+
+  private def writeSchema(spark: SparkSession, path: String, schema: StructType): Unit = {
+    val p = new Path(path, schemaFile)
+    val out = p.getFileSystem(spark.sparkContext.hadoopConfiguration).create(p, true)
+    try out.write(schema.json.getBytes(StandardCharsets.UTF_8)) finally out.close()
+  }
+
+  /** The schema of the parquet files at `path`, or the [[write]] sidecar
+    * when the directory holds no data file to infer it from. */
+  private def readSchema(spark: SparkSession, path: String): StructType =
+    try spark.read.parquet(path).schema
+    catch {
+      case e: AnalysisException if e.getCondition == "UNABLE_TO_INFER_SCHEMA" =>
+        val p = new Path(path, schemaFile)
+        val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        if (!fs.exists(p)) throw e
+        val in = fs.open(p)
+        try DataType.fromJson(new String(in.readAllBytes(), StandardCharsets.UTF_8))
+          .asInstanceOf[StructType]
+        finally in.close()
+    }
 
   /** APPEND rows to an existing bucketed state table under the SAME
     * bucket layout — the O(new-rows) maintenance path for append-mostly
@@ -131,7 +165,7 @@ object Bucketed {
     // identifier (same guard Catalog.registerAnalyzed applies).
     require(!table.contains("`"), s"illegal table name: $table")
     require(!bucketCol.contains("`"), s"illegal bucket column name: $bucketCol")
-    val schema = spark.read.parquet(path).schema.toDDL
+    val schema = readSchema(spark, path).toDDL
     spark.sql(
       s"""CREATE TABLE IF NOT EXISTS `$table` ($schema)
          |USING PARQUET

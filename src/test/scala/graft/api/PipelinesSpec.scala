@@ -575,6 +575,189 @@ class PipelinesSpec extends AnyFunSuite {
       "fixture failed: junk should pass the scalar quality gate")
   }
 
+  /** The all-stages curate fixture: c4 boilerplate around every page (one
+    * brace page the c4 gate kills), a URL per doc (farm hosts below the
+    * authority floor, a hub above it, unknown hosts and no URL), and
+    * heuristic-passing gibberish for the LM gate. */
+  private lazy val curateDocs: org.apache.spark.sql.DataFrame = {
+    val stop = Seq("the", "a", "of", "and", "to", "in", "is", "it")
+    val real = TestSpark.table("documents")
+    val junk = TestSpark.table("documents").where(col("doc_id") < 20)
+      .select((col("doc_id") + 1000000L).as("doc_id"),
+        concat_ws(" ", (1 to 35).flatMap(i => Seq(
+          lit(stop(i % stop.size)),
+          substring(md5(concat(col("text"), lit(i))), 1, 7))): _*).as("text"),
+        col("lang"), col("source"), col("n_chars"))
+    real.unionByName(junk)
+      .withColumn("text", concat(lit("Home | About | Contact\n"), col("text"),
+        lit(".\nAccept all cookies\n"),
+        when(col("doc_id") === 7L, "var cfg = {a: 1}").otherwise(curateTail)))
+      .withColumn("url",
+        when(col("doc_id") % 5 === 0, concat(lit("https://hub.org/d/"), col("doc_id")))
+          .when(col("doc_id") % 5 === 1,
+            concat(lit("https://farm"), (col("doc_id") % 7).cast("string"),
+              lit(".spam/d/"), col("doc_id")))
+          .when(col("doc_id") % 5 === 2,
+            concat(lit("https://fresh.example/d/"), col("doc_id"))))
+      .localCheckpoint()
+  }
+
+  // Five sentences for the c4 page gate, three distinct tokens: a tail
+  // every page shares must not make the pages near-duplicates.
+  private val curateTail = "Yes it is. Yes it is. Yes it is. Yes it is. Yes it is."
+
+  /** The side inputs of every optional stage: a rank table with a
+    * duplicated host row, a classifier that learned src0-9 from the rest,
+    * embedding twins (ids 2k and 2k+1) under one centroid, an eval slice
+    * with two word-reversed pages (exact-gate blind), mixture rates that
+    * leave two sources out. */
+  private lazy val curateSides = {
+    import scala.jdk.CollectionConverters._
+    val spark2 = spark
+    import spark2.implicits._
+    val ranks = (Seq(("hub.org", 2.0), ("hub.org", 1.5)) ++
+      (0 until 7).map(i => (s"farm$i.spam", 0.1))).toDF("host", "nrank")
+    val labeled = curateDocs.select(col("text").as("t"),
+      when(col("source").isin((0 until 10).map(i => s"src$i"): _*), 1.0)
+        .otherwise(0.0).as("y"))
+    val model = graft.ops.LinearClassifier.train(labeled, col("t"), col("y"),
+      dim = 1 << 12, iters = 8)
+    val at = (deg: Double) => Seq(math.cos(math.toRadians(deg)).toFloat,
+      math.sin(math.toRadians(deg)).toFloat)
+    val embSchema = org.apache.spark.sql.types.StructType(Seq(
+      org.apache.spark.sql.types.StructField("vec_id", org.apache.spark.sql.types.LongType),
+      org.apache.spark.sql.types.StructField("embedding",
+        org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.FloatType))))
+    val emb = spark.createDataFrame((0L until 500L).map(i =>
+      org.apache.spark.sql.Row(i, at((i / 2) * 0.7 + (i % 2) * 0.1))).asJava, embSchema)
+    val cents = spark.createDataFrame(
+      Seq(org.apache.spark.sql.Row(0L, at(0))).asJava, embSchema)
+    val eval = TestSpark.table("documents").where(col("doc_id") < 5).select(col("text"))
+      .unionByName(curateDocs.where(col("doc_id").isin(30L, 31L))
+        .select(array_join(reverse(split(graft.ops.TextOps.c4CleanLines(col("text")), " ")),
+          " ").as("text")))
+      .localCheckpoint()
+    val rates = (0 until 15).map(i => s"src$i" -> 0.6).toMap ++
+      (15 until 18).map(i => s"src$i" -> 1.0)
+    (ranks, model, emb, cents, eval, rates)
+  }
+
+  private def curateAll(docs: org.apache.spark.sql.DataFrame,
+                        cap: Option[Int]): Pipelines.CurationResult = {
+    val (ranks, model, emb, cents, eval, rates) = curateSides
+    Pipelines.curate(docs, evalSet = Some(eval), perSourceCap = cap,
+      lmScoreFloor = Some(-8.0), mixtureRates = Some(rates), c4Clean = true,
+      classifierFloor = Some((model, 0.5)),
+      hostAuthorityGate = Some(Pipelines.HostAuthorityGate(ranks, 0.5, col("url"))),
+      semanticDedup = Some(Pipelines.SemanticDedupStage(emb, threshold = 0.99999,
+        centroids = Some(cents))),
+      fuzzyEval = Some(0.8))
+  }
+
+  /** [[curateAll]]'s funnel composed stage by stage from the public
+    * operators, each stage counted on its own: the survivors as (doc_id,
+    * text) and the audit rows. */
+  private def curateReference(docs: org.apache.spark.sql.DataFrame, cap: Option[Int])
+      : (Seq[(Long, String)], Seq[(Int, String, Long, String)]) = {
+    import graft.ops.TextOps
+    val (ranks, model, emb, cents, eval, rates) = curateSides
+    val (id, text) = (col("doc_id"), col("text"))
+    val c4 = docs.withColumn("__clean", TextOps.c4CleanLines(text))
+      .where(TextOps.c4PageKeep(col("__clean"), text))
+      .withColumn("text", col("__clean")).drop("__clean")
+    val quality = c4.where(TextOps.qualityVerdict(text) === "keep" &&
+      TextOps.langGuess(text) === "en")
+    val bestRank = ranks.groupBy(col("host").as("__ah"))
+      .agg(max(col("nrank")).as("__ascore"))
+    val hostKept = quality.withColumn("__ahost", Pipelines.urlHost(col("url")))
+      .join(bestRank, col("__ahost") === col("__ah"), "left")
+      .where(col("__ascore").isNull || col("__ascore") >= 0.5)
+      .drop("__ahost", "__ah", "__ascore")
+    val lmKept = graft.streaming.StreamOps.lmFilter(hostKept, "text",
+      TextOps.ngramModel(hostKept, text), -8.0)
+    val clsKept = Pipelines.classifierFilter(lmKept, id, text, model, 0.5)
+    val canon = clsKept.join(Pipelines.canonicalDocs(clsKept, id, text, 0.8)
+      .select(col("doc_id").as("__keep")), id === col("__keep"), "left_semi")
+    val canonEmb = emb.join(canon.select(id.as("__sid")), col("vec_id") === col("__sid"),
+      "left_semi")
+    val sem = canon.join(graft.ops.Ann.semDedupDrops(canonEmb, cents, 0.99999)
+      .select(col("vec_id").as("__sdrop")), id === col("__sdrop"), "left_anti")
+    val dirty = Pipelines.contaminatedDocs(sem, id, text, eval, col("text"))
+      .unionByName(Pipelines.fuzzyContaminatedDocs(sem, id, text, eval, col("text"), 0.8))
+      .distinct().select(col("doc_id").as("__dirty"))
+    val clean = sem.join(dirty, id === col("__dirty"), "left_anti")
+    val capped = cap.fold(clean)(k => Pipelines.sampleExactK(clean, "source", "doc_id", k))
+    val mixed = Pipelines.mixSources(capped, "source", "doc_id", rates)
+    val stages = Seq("input" -> docs, "c4_clean" -> c4, "quality_lang" -> quality,
+      "host_authority" -> hostKept, "lm_gate" -> lmKept, "classifier" -> clsKept,
+      "canonical" -> canon, "semantic" -> sem, "decontaminated" -> clean,
+      "capped" -> capped, "mixed" -> mixed)
+    (survivorRows(mixed), stages.zipWithIndex.map { case ((name, df), i) =>
+      (i, name, df.count(), null: String) })
+  }
+
+  private def survivorRows(df: org.apache.spark.sql.DataFrame): Seq[(Long, String)] =
+    df.select(col("doc_id"), col("text")).collect()
+      .map(r => (r.getLong(0), r.getString(1))).toSeq.sorted
+
+  private def auditRows(res: Pipelines.CurationResult): Seq[(Int, String, Long, String)] =
+    res.audit.collect()
+      .map(r => (r.getInt(0), r.getString(1), r.getLong(2), r.getString(3))).toSeq
+
+  test("curate ≡ its stage frames composed one by one, every optional stage on") {
+    val res = curateAll(curateDocs, cap = Some(2))
+    val (rows, audit) = curateReference(curateDocs, cap = Some(2))
+    assert(survivorRows(res.curated) == rows)
+    assert(auditRows(res) == audit)
+    assert(res.curated.schema == curateDocs.schema)
+    // Every stage of the fixture does work, so the equality is not vacuous.
+    val ns = audit.map(_._3)
+    assert(ns.zip(ns.tail).forall { case (a, b) => b < a }, s"a stage removed nothing: $audit")
+  }
+
+  test("curate ≡ its stage frames when two rows share a doc_id and only one passes quality") {
+    // Same id, a page that passes the c4 gate but is too short for the
+    // quality gate.
+    val twin = curateDocs.where(col("doc_id") === 12L)
+      .withColumn("text", lit(s"Home | About\n$curateTail"))
+    val docs = curateDocs.unionByName(twin)
+    val res = curateAll(docs, cap = None)
+    val (rows, audit) = curateReference(docs, cap = None)
+    assert(survivorRows(res.curated) == rows)
+    assert(auditRows(res) == audit)
+    val byStage = audit.map(a => a._2 -> a._3).toMap
+    assert(byStage("c4_clean") == byStage("input") - 1 &&
+      byStage("quality_lang") < byStage("c4_clean"), s"twin fixture inert: $audit")
+  }
+
+  test("curate's result is cut: collecting the audit or the survivors never re-runs the funnel") {
+    // Every stage but the host gate, whose rank table adds one broadcast
+    // job to each collect.
+    val (_, model, emb, cents, eval, rates) = curateSides
+    val res = Pipelines.curate(curateDocs, evalSet = Some(eval), perSourceCap = Some(2),
+      lmScoreFloor = Some(-8.0), mixtureRates = Some(rates), c4Clean = true,
+      classifierFloor = Some((model, 0.5)),
+      semanticDedup = Some(Pipelines.SemanticDedupStage(emb, threshold = 0.99999,
+        centroids = Some(cents))),
+      fuzzyEval = Some(0.8))
+    def jobs(f: => Any): Int = {
+      val sc = spark.sparkContext
+      val n = new java.util.concurrent.atomic.AtomicInteger
+      val l = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          n.incrementAndGet()
+      }
+      org.apache.spark.graft.ListenerBusDrain(sc)
+      sc.addSparkListener(l)
+      try { f; org.apache.spark.graft.ListenerBusDrain(sc); n.get }
+      finally sc.removeSparkListener(l)
+    }
+    val auditJobs = jobs(res.audit.collect())
+    val curatedJobs = jobs(res.curated.collect())
+    assert(auditJobs <= 3, s"audit collect ran $auditJobs jobs")
+    assert(curatedJobs <= 4, s"curated collect ran $curatedJobs jobs")
+  }
+
   test("sampleExactK: exact size per stratum, deterministic across layouts") {
     val docs = TestSpark.table("documents").select("source", "doc_id")
     val k = 5

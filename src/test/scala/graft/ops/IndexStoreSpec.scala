@@ -93,4 +93,39 @@ class IndexStoreSpec extends AnyFunSuite {
       FileUtils.deleteQuietly(new File(root))
     }
   }
+
+  test("an index persisted from an empty frame attaches again, and appending fills it like a build") {
+    val root = Files.createTempDirectory("graft-indexstore-empty").toString
+    val docs = TestSpark.table("documents").where(col("doc_id") < 20)
+      .select("doc_id", "text").localCheckpoint()
+    val emb = TestSpark.table("embeddings").where(col("vec_id") < 20)
+      .select("vec_id", "embedding").localCheckpoint()
+    val cents = emb.where(col("vec_id") < 2)
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+      df.collect().map(_.toSeq.map {
+        case a: scala.collection.Seq[_] => a.mkString("[", ",", "]")
+        case v => String.valueOf(v)
+      }.mkString("|")).toSeq.sorted
+    try {
+      Ann.persistIvfIndex(Ann.ivfIndex(emb.where(lit(false)), cents), "ise_ivf",
+        s"$root/ivf", buckets = 2)
+      assert(Ann.loadIvfIndex(spark, "ise_ivf", s"$root/ivf", 2).count() == 0)
+      Ann.appendIvfIndex(spark, "ise_ivf", s"$root/ivf", emb, cents, buckets = 2).collect()
+      assert(rows(Ann.loadIvfIndex(spark, "ise_ivf", s"$root/ivf", 2)) ==
+        rows(Ann.ivfIndex(emb, cents)))
+
+      DedupOps.persistNearDupIndex(DedupOps.buildNearDupIndex(docs.where(lit(false)),
+        col("doc_id"), col("text"), 8, 4), "ise_nd", s"$root/nd", buckets = 2)
+      val (k0, t0) = DedupOps.loadNearDupIndex(spark, "ise_nd", s"$root/nd", 2)
+      assert(k0.count() == 0 && t0.count() == 0)
+      DedupOps.appendNearDup(spark, "ise_nd", s"$root/nd", docs, col("doc_id"),
+        col("text"), 8, 4, 0.8, buckets = 2).collect()
+      val (keys, toks) = DedupOps.loadNearDupIndex(spark, "ise_nd", s"$root/nd", 2)
+      val (bk, bt) = DedupOps.buildNearDupIndex(docs, col("doc_id"), col("text"), 8, 4)
+      assert(rows(keys) == rows(bk) && rows(toks) == rows(bt) && rows(keys).nonEmpty)
+    } finally {
+      Seq("ise_ivf", "ise_nd_bk", "ise_nd_tk").foreach(t => spark.sql(s"DROP TABLE IF EXISTS `$t`"))
+      FileUtils.deleteQuietly(new File(root))
+    }
+  }
 }
