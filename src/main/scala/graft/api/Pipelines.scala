@@ -1392,17 +1392,10 @@ object Pipelines {
     * pass, counts its rows. The cut inherits the size estimate of the
     * lineage it replaces, so the planner would shuffle every join that
     * reads it; the count marks it for broadcast instead when it fits the
-    * session's broadcast threshold. */
+    * session's broadcast threshold ([[graft.ops.SizeGate]]). */
   private def cutCompact(df: DataFrame): DataFrame = {
-    val observed = df.observe("__cut_rows", count(lit(1)))
-    val cut = observed.localCheckpoint()
-    val conf = df.sparkSession.conf.get("spark.sql.autoBroadcastJoinThreshold").trim
-    val threshold =
-      if (conf.startsWith("-")) -1L // broadcasting switched off
-      else org.apache.spark.network.util.JavaUtils.byteStringAsBytes(conf)
-    val bytes = observed.queryExecution.observedMetrics.get("__cut_rows")
-      .map(_.getLong(0) * (8L + df.schema.defaultSize))
-    if (bytes.exists(_ <= threshold)) broadcast(cut) else cut
+    val c = graft.ops.SizeGate.cut(df)
+    if (c.fits) broadcast(c.df) else c.df
   }
 
   /** How many of `gates` a row passes in a row, plus `from`: one CASE

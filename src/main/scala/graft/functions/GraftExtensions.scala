@@ -75,6 +75,10 @@ object GraftFunctions {
       info(classOf[WordShingles], "word_shingles",
         "word_shingles(text, n) - word n-gram shingles as zero-copy substrings, one byte walk per row"),
       (e: Seq[Expression]) => { checkArity("word_shingles", 2, e); WordShingles(e.head, e(1)) }),
+    (FunctionIdentifier("char_shingles"),
+      info(classOf[CharShingles], "char_shingles",
+        "char_shingles(text, n) - character n-gram shingles, one byte walk per row"),
+      (e: Seq[Expression]) => { checkArity("char_shingles", 2, e); CharShingles(e.head, e(1)) }),
     (FunctionIdentifier("jaccard_sorted"),
       info(classOf[JaccardSorted], "jaccard_sorted",
         "jaccard_sorted(a, b) - exact Jaccard of two sorted-distinct string arrays, one merge walk per pair"),

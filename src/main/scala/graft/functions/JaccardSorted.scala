@@ -17,9 +17,11 @@ import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, StringType}
   * OpenHashSet for EVERY candidate pair, which at LSH-candidate volumes
   * (363k pairs / 1k docs on the dense sf0.1 corpus) is the dominant verify
   * cost. The merge walk does |A|+|B| binary UTF8String comparisons and
-  * allocates nothing — Spark's string ordering IS the byte-wise
-  * `UTF8String.compareTo` that `array_sort` sorted by, so the walk is
-  * order-compatible by construction.
+  * allocates nothing. The walk compares with `UTF8String.binaryCompare`,
+  * the unsigned byte order that `array_sort` sorts UTF8_BINARY strings
+  * by, so it is order-compatible by construction. (Not `compareTo`: in
+  * Spark 4 that looks up `SPARK_TESTING`/`spark.testing` on every call
+  * and throws when either is set.)
   *
   * Null elements sort last under `array_sort` and are ignored (a token SET
   * has no null member — `collect_set`/`array_distinct` of split output
@@ -63,7 +65,7 @@ object JaccardSortedUtil {
     var j = 0
     var inter = 0
     while (i < na && j < nb) {
-      val c = a.getUTF8String(i).compareTo(b.getUTF8String(j))
+      val c = a.getUTF8String(i).binaryCompare(b.getUTF8String(j))
       if (c == 0) { inter += 1; i += 1; j += 1 }
       else if (c < 0) i += 1
       else j += 1

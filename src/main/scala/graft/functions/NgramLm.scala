@@ -440,7 +440,7 @@ object NgramLmUtil {
           val score = sums(m) / grams.toDouble
           val lang = p.langsUtf8(idx(m))
           if (bestLang == null || score > bestScore ||
-              (score == bestScore && lang.compareTo(bestLang) > 0)) {
+              (score == bestScore && lang.binaryCompare(bestLang) > 0)) {
             bestScore = score; bestLang = lang
           }
           m += 1

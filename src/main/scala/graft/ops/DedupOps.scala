@@ -1,7 +1,10 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, LongType, StructType}
 
 /** Deduplication pipelines for training data (SURVEY.md §2.2 q33/q34 and
   * q54–q57): exact dup groups, pairwise Jaccard, MinHash signatures,
@@ -877,16 +880,37 @@ object DedupOps {
 
   /** Connected components over a near-dup pair list — the transitive
     * closure that turns pairwise matches into dedup CLUSTERS (a~b, b~c ⇒
-    * {a,b,c} even when a,c were never compared). Distributed min-label
-    * propagation WITH POINTER JUMPING: every node starts as its own label;
-    * each round takes the min of its own and its neighbors' labels, then
-    * jumps `label(u) ← label(label(u))` (label values are always node ids,
-    * so the jump is a self-join of the label table). The jump doubles how
-    * far the component minimum has travelled each round, so convergence is
+    * {a,b,c} even when a,c were never compared). Min-label propagation
+    * WITH POINTER JUMPING: every node starts as its own label; each round
+    * takes the min of its own and its neighbors' labels, then jumps
+    * `label(u) ← label(label(u))` (label values are always node ids, so
+    * the jump is a self-lookup of the label table), and stops at the
+    * first round that changes no label. The jump doubles how far the
+    * component minimum has travelled each round, so convergence is
     * O(log diameter) rounds, not O(diameter) — a 1000-link chain closes in
     * ~10 rounds instead of 1000 (plain propagation THREW at the default
-    * maxIter on exactly that shape). Each round is two joins + one
-    * aggregation; lineage is cut per round so plans stay bounded.
+    * maxIter on exactly that shape).
+    *
+    * Two regimes run those same rounds. The symmetric edge cut is
+    * materialized once either way; its own job counts its rows and its
+    * null endpoints ([[SizeGate]]).
+    *  - DRIVER (small graphs): when `checkpointDir` is None, the ids are
+    *    `LongType` or `IntegerType` (the seed labels too), no endpoint is
+    *    null and the cut's rows × row width fit
+    *    `spark.sql.autoBroadcastJoinThreshold` (-1: never), the cut is
+    *    collected and the rounds run over primitive arrays indexed by the
+    *    dense rank of the sorted ids — the minimum label is the minimum
+    *    rank, so every round's labels are the distributed round's. The
+    *    result is a local relation with exact size statistics, so a join
+    *    that reads it broadcasts it. About 3 Spark jobs in all, where the
+    *    distributed loop pays about 5 per round in scheduling alone.
+    *  - DISTRIBUTED (everything else): each round is two joins + one
+    *    aggregation plus a change count; lineage is cut per round so plans
+    *    stay bounded.
+    * Both regimes share the round count per `maxIter`, the output schema
+    * (column names, types and nullability), the warm-start seed and both
+    * errors below. No option chooses the regime: it follows from the
+    * facts above.
     *
     * If the labels have not provably converged within `maxIter` rounds this
     * THROWS — a silent exit would return split labels for any component
@@ -898,7 +922,8 @@ object DedupOps {
     * (executor-local blocks — fast, but on a real cluster an executor loss
     * kills the job mid-iteration). Pass a reliable directory (HDFS/S3) to
     * cut each round via an explicit parquet round-trip instead — the
-    * 100 TB posture. (Deliberately NOT `df.checkpoint()`: that requires
+    * 100 TB posture; such a call always takes the distributed regime.
+    * (Deliberately NOT `df.checkpoint()`: that requires
     * mutating the SparkContext-GLOBAL checkpoint dir, and the pre-mutation
     * value is unrecoverable — `getCheckpointDir` returns a UUID-suffixed
     * subdirectory, so a save/restore silently repoints unrelated jobs'
@@ -949,79 +974,166 @@ object DedupOps {
         val ck = df.localCheckpoint()
         (spark.createDataFrame(ck.rdd, ck.schema), None)
     }
-    def cutRaw(df: DataFrame): (DataFrame, Option[String]) = runDir match {
-      case Some(_) => cut(df)
-      case None    => (df.localCheckpoint(), None)
-    }
     def drop(path: Option[String]): Unit = path.foreach { p =>
       val hp = new org.apache.hadoop.fs.Path(p)
       hp.getFileSystem(spark.sparkContext.hadoopConfiguration).delete(hp, true)
     }
-    val (e, ePath) = cutRaw(pairs.select(col("d1").as("u"), col("d2").as("v"))
+    val edges = pairs.select(col("d1").as("u"), col("d2").as("v"))
       .unionAll(pairs.select(col("d2").as("u"), col("d1").as("v")))
-      .distinct())
-    var (labels, labelsPath) = cut(warmStart match {
+      .distinct()
+    val (e, ePath, small) = runDir match {
+      case Some(_) =>
+        val (c, path) = cut(edges)
+        (c, path, false)
+      case None =>
+        val c = SizeGate.cut(edges,
+          count(when(col("u").isNull || col("v").isNull, lit(1))))
+        (c.df, None, c.fits && c.metrics.exists(_.getLong(1) == 0L))
+    }
+    val seeded = warmStart match {
       case None => e.select(col("u")).distinct().withColumn("label", col("u"))
       case Some(prior) =>
         e.select(col("u")).distinct()
           .join(prior.select(col("doc").as("u"), col("label").as("__pl")),
             Seq("u"), "left")
           .select(col("u"), coalesce(col("__pl"), col("u")).as("label"))
-    })
-    // GraphOps' loop gate on the label-side frames; min/least label
-    // propagation is plan-order independent, so q72/q189 stay hash-exact.
-    val bc = GraphOps.loopGate(labels.count())
+    }
+    val idType = seeded.schema("u").dataType
+    if (small && (idType == LongType || idType == IntegerType) &&
+        seeded.schema("label").dataType == idType)
+      ccOnDriver(e, seeded, warmStart.isDefined, maxIter)
+    else {
+      var (labels, labelsPath) = cut(seeded)
+      // GraphOps' loop gate on the label-side frames; min/least label
+      // propagation is plan-order independent, so q72/q189 stay hash-exact.
+      val bc = GraphOps.loopGate(labels.count())
+      var converged = false
+      var i = 0
+      try {
+        while (!converged && i < maxIter) {
+          val prop = e.join(bc(labels.select(col("u").as("v"), col("label"))), "v")
+            .groupBy("u").agg(min(col("label")).as("nlabel"))
+          val stepped = labels.join(bc(prop), Seq("u"), "left")
+            .select(col("u"),
+              least(col("label"), coalesce(col("nlabel"), col("label"))).as("label"))
+          // Pointer jump: label(u) ← label(label(u)). Every label value is a
+          // node id of the same component (values only ever copy existing
+          // labels, which start as node ids), so the lookup is a self-join;
+          // labels only decrease, so the grand-label can only improve.
+          val (next, nextPath) = cut(stepped
+            .join(bc(stepped.select(col("u").as("gu"), col("label").as("gl"))),
+              col("label") === col("gu"), "left")
+            .select(col("u"),
+              least(col("label"), coalesce(col("gl"), col("label"))).as("label")))
+          val changed = next.select(col("u"), col("label").as("nl"))
+            .join(bc(labels), "u").where(col("nl") =!= col("label")).limit(1).count()
+          drop(labelsPath)
+          labels = next
+          labelsPath = nextPath
+          converged = changed == 0
+          i += 1
+        }
+        if (!converged) throw ccNotConverged(maxIter)
+        // Warm-start premise check (append-only edge set): labels only ever
+        // DECREASE, so a stale seed label from a node no longer in the graph
+        // survives to the fixpoint looking exactly like a correct answer —
+        // one node-scale anti-join catches the common violation (a rewritten
+        // or shrunk pair set). A label that is still a node but no longer
+        // the component min (an edge REMOVED between runs) is undetectable
+        // short of a cold recompute; append-only remains the caller contract.
+        // Runs before the `finally`: with a `checkpointDir` that deletes the
+        // edge cut's files.
+        if (warmStart.isDefined) {
+          val ghost = labels.select(col("label").as("u")).distinct()
+            .join(e.select(col("u")).distinct(), Seq("u"), "left_anti")
+            .limit(1).count()
+          require(ghost == 0L, ccGhostLabels)
+        }
+      } finally drop(ePath)
+      labels.select(col("u").as("doc"), col("label"))
+    }
+  }
+
+  private def ccNotConverged(maxIter: Int) = new IllegalStateException(
+    s"connectedComponents: labels still changing after $maxIter rounds — " +
+      "a component with diameter > maxIter would get silently split " +
+      "labels; raise maxIter (rounds needed ~ worst component diameter)")
+
+  private val ccGhostLabels =
+    "connectedComponents: warmStart labels reference node ids absent " +
+      "from `pairs` — the edge set is not a superset of the prior " +
+      "run's (warm start requires append-only edges); re-run cold"
+
+  /** [[connectedComponents]]' driver regime: the same rounds over the
+    * collected edge cut `e` (u, v — both directions, distinct, no null).
+    * Ids become dense ranks of the sorted union of node ids and seed
+    * labels, so min/least over ranks is min/least over ids; a seed label
+    * that is no node (a warm-start ghost) keeps a rank, has no label of
+    * its own and, as in the distributed self-join, is never jumped
+    * through. `seeded` is the distributed loop's seed frame (u, label);
+    * only the rows whose label is not the node itself are collected. */
+  private def ccOnDriver(e: DataFrame, seeded: DataFrame, warm: Boolean,
+                         maxIter: Int): DataFrame = {
+    val isInt = seeded.schema("u").dataType == IntegerType
+    // One job: each partition packs its edges into one long array.
+    val uv = Array.concat(e.queryExecution.toRdd.mapPartitions { rows =>
+      val b = Array.newBuilder[Long]
+      rows.foreach { r =>
+        if (isInt) { b += r.getInt(0); b += r.getInt(1) }
+        else { b += r.getLong(0); b += r.getLong(1) }
+      }
+      Iterator.single(b.result())
+    }.collect(): _*)
+    val seeds = if (!warm) Map.empty[Long, Long] else
+      seeded.where(col("label") =!= col("u")).collect()
+        .map(r => if (isInt) (r.getInt(0).toLong, r.getInt(1).toLong) else (r.getLong(0), r.getLong(1)))
+        .groupMapReduce(_._1)(_._2)(math.min)
+    val ids = {
+      val all = Array.concat(uv, seeds.values.toArray)
+      java.util.Arrays.sort(all)
+      var w = 0
+      all.foreach(x => if (w == 0 || all(w - 1) != x) { all(w) = x; w += 1 })
+      java.util.Arrays.copyOf(all, w)
+    }
+    def rank(id: Long): Int = java.util.Arrays.binarySearch(ids, id)
+    val m = uv.length / 2
+    val src = Array.tabulate(m)(k => rank(uv(2 * k)))
+    val dst = Array.tabulate(m)(k => rank(uv(2 * k + 1)))
+    val isNode = new Array[Boolean](ids.length)
+    src.foreach(isNode(_) = true)
+    val nodes = ids.indices.filter(isNode).toArray
+    var lab = Array.tabulate(ids.length)(identity)
+    seeds.foreach { case (u, l) => lab(rank(u)) = rank(l) }
+    val nl = new Array[Int](ids.length)
+    val st = new Array[Int](ids.length)
+    var next = new Array[Int](ids.length)
     var converged = false
     var i = 0
-    try {
-      while (!converged && i < maxIter) {
-        val prop = e.join(bc(labels.select(col("u").as("v"), col("label"))), "v")
-          .groupBy("u").agg(min(col("label")).as("nlabel"))
-        val stepped = labels.join(bc(prop), Seq("u"), "left")
-          .select(col("u"),
-            least(col("label"), coalesce(col("nlabel"), col("label"))).as("label"))
-        // Pointer jump: label(u) ← label(label(u)). Every label value is a
-        // node id of the same component (values only ever copy existing
-        // labels, which start as node ids), so the lookup is a self-join;
-        // labels only decrease, so the grand-label can only improve.
-        val (next, nextPath) = cut(stepped
-          .join(bc(stepped.select(col("u").as("gu"), col("label").as("gl"))),
-            col("label") === col("gu"), "left")
-          .select(col("u"),
-            least(col("label"), coalesce(col("gl"), col("label"))).as("label")))
-        val changed = next.select(col("u"), col("label").as("nl"))
-          .join(bc(labels), "u").where(col("nl") =!= col("label")).limit(1).count()
-        drop(labelsPath)
-        labels = next
-        labelsPath = nextPath
-        converged = changed == 0
-        i += 1
+    while (!converged && i < maxIter) {
+      java.util.Arrays.fill(nl, Int.MaxValue)
+      var k = 0
+      while (k < m) {
+        if (lab(dst(k)) < nl(src(k))) nl(src(k)) = lab(dst(k))
+        k += 1
       }
-      if (!converged)
-        throw new IllegalStateException(
-          s"connectedComponents: labels still changing after $maxIter rounds — " +
-            "a component with diameter > maxIter would get silently split " +
-            "labels; raise maxIter (rounds needed ~ worst component diameter)")
-      // Warm-start premise check (append-only edge set): labels only ever
-      // DECREASE, so a stale seed label from a node no longer in the graph
-      // survives to the fixpoint looking exactly like a correct answer —
-      // one node-scale anti-join catches the common violation (a rewritten
-      // or shrunk pair set). A label that is still a node but no longer
-      // the component min (an edge REMOVED between runs) is undetectable
-      // short of a cold recompute; append-only remains the caller contract.
-      // Runs before the `finally`: with a `checkpointDir` that deletes the
-      // edge cut's files.
-      if (warmStart.isDefined) {
-        val ghost = labels.select(col("label").as("u")).distinct()
-          .join(e.select(col("u")).distinct(), Seq("u"), "left_anti")
-          .limit(1).count()
-        require(ghost == 0L,
-          "connectedComponents: warmStart labels reference node ids absent " +
-            "from `pairs` — the edge set is not a superset of the prior " +
-            "run's (warm start requires append-only edges); re-run cold")
+      nodes.foreach(r => st(r) = math.min(lab(r), nl(r)))
+      var changed = false
+      nodes.foreach { r =>
+        val s = st(r)
+        next(r) = if (isNode(s)) math.min(s, st(s)) else s
+        if (next(r) != lab(r)) changed = true
       }
-    } finally drop(ePath)
-    labels.select(col("u").as("doc"), col("label"))
+      val prev = lab; lab = next; next = prev
+      converged = !changed
+      i += 1
+    }
+    if (!converged) throw ccNotConverged(maxIter)
+    require(!warm || nodes.forall(r => isNode(lab(r))), ccGhostLabels)
+    val rows = nodes.toSeq.map { r =>
+      if (isInt) Row(ids(r).toInt, ids(lab(r)).toInt) else Row(ids(r), ids(lab(r)))
+    }
+    e.sparkSession.createDataFrame(rows.asJava, StructType(Seq(
+      seeded.schema("u").copy(name = "doc"), seeded.schema("label"))))
   }
 
   /** Deletion-aware [[connectedComponents]] maintenance — the fold for

@@ -7,9 +7,13 @@ import org.apache.spark.sql.functions._
   * shingling, language-ID heuristics, quality scoring, token counting and
   * document fingerprinting (SURVEY.md §2.2 q50–q53).
   *
-  * Everything here is a pure Column expression (Catalyst HOFs — no UDFs, no
-  * serialization wall), so these stay inside whole-stage codegen'd
-  * projections and scale per-row with zero shuffle.
+  * Everything here is a pure Column expression — Catalyst HOFs or graft's
+  * native Catalyst expressions, no UDFs, no serialization wall — so these
+  * stay inside whole-stage codegen'd projections and scale per-row with
+  * zero shuffle. The two shingle builders ride native one-byte-walk
+  * expressions registered by graft.functions.GraftExtensions
+  * (`word_shingles`, `char_shingles`); their HOF spellings stay as the
+  * cross-proof twins [[wordShinglesHof]] and [[charShinglesHof]].
   */
 object TextOps {
 
@@ -39,14 +43,26 @@ object TextOps {
       i => concat_ws(" ", slice(toks, i, lit(n))))
   }
 
-  /** Character n-gram shingles, one per start position. Null text yields
-    * [NULL] — deliberately NOT coalesced to '': the declared q57 SQL uses
-    * bare substr, whose NULL shingles never equi-join, so null-text docs
-    * form no near-dup pairs; coalescing here would pair every null/empty
-    * doc with Jaccard 1.0 and diverge from the contract (TextOpsEdgeSpec
-    * pins the no-pairs behavior). Filters built over char shingles must
+  /** Character n-gram shingles, one per start position (at least one,
+    * the whole text, for texts shorter than `n`). Rides the native
+    * `char_shingles` expression (graft.functions.CharShingles): one byte
+    * walk per row, value-identical to [[charShinglesHof]] (FunctionsSpec
+    * proves it), whose every `substr` re-walks the string from its start.
+    * Null text yields [NULL] — deliberately NOT coalesced to '': the
+    * declared q57 SQL uses bare substr, whose NULL shingles never
+    * equi-join, so null-text docs form no near-dup pairs; coalescing here
+    * would pair every null/empty doc with Jaccard 1.0 and diverge from the
+    * contract (TextOpsEdgeSpec pins the no-pairs behavior). The bare
+    * registered function is null-safe (null in, null out); the coalesce
+    * restores the HOF's [NULL]. Filters built over char shingles must
     * treat a null hit as no-match. */
   def charShingles(text: Column, n: Int): Column =
+    coalesce(call_function("char_shingles", text, lit(n)),
+      array(lit(null).cast("string")))
+
+  /** The declared-SQL HOF lowering of [[charShingles]] — kept as the
+    * cross-proof twin. */
+  def charShinglesHof(text: Column, n: Int): Column =
     transform(
       sequence(lit(1), greatest(length(text) - lit(n - 1), lit(1))),
       i => text.substr(i, lit(n)))

@@ -177,6 +177,18 @@ class PipelinesSpec extends AnyFunSuite {
     assert(rows.map(r => r._2 -> r._1).toMap == expect)
   }
 
+  test("canonicalDocs joins its connected-components labels with a broadcast hash join") {
+    import spark.implicits._
+    val text = "the quick brown fox jumps over the lazy dog near the river bank today"
+    val near = Seq((1L, text), (2L, text + " again"), (3L, text),
+      (4L, "an entirely different page about something else with other words")).toDF("doc_id", "text")
+    val kept = Pipelines.canonicalDocs(near, col("doc_id"), col("text"))
+    val plan = kept.queryExecution.executedPlan.toString
+    assert(plan.contains("BroadcastHashJoin") && !plan.contains("SortMergeJoin") &&
+      !plan.contains("ShuffledHashJoin"), plan)
+    assert(kept.collect().map(r => r.getLong(0) -> r.getLong(2)).toMap.values.sum == 4L)
+  }
+
   test("curate: monotone funnel, audit matches, cap respected, schema preserved") {
     val docs = TestSpark.table("documents")
     val eval = TestSpark.table("documents").where(col("doc_id") < 5)

@@ -94,6 +94,53 @@ class FunctionsSpec extends AnyFunSuite {
     assert(en.getMessage.contains("must not be null"))
   }
 
+  test("char_shingles ≡ the HOF lowering on the corpus and every width/encoding edge case") {
+    import spark.implicits._
+    val corpus = TestSpark.table("documents").select(col("text"))
+    // "", shorter than n, exactly n, and 2-, 3- and 4-byte characters
+    // (é, 日本, 😀) inside, at the ends and as the whole text.
+    val edges = Seq(null, "", "a", "ab", "abc", "abcdef", "é", "éa", "aé",
+      "日本語のテキスト", "x日y本z", "😀", "a😀b😀c", "😀😀😀😀😀😀",
+      "mixé日😀 text with spaces", " ").toDF("text")
+    for (n <- Seq(1, 3, 5)) {
+      val df = corpus.unionAll(edges).select(
+        graft.ops.TextOps.charShingles(col("text"), n).as("nat"),
+        graft.ops.TextOps.charShinglesHof(col("text"), n).as("hof"))
+      val bad = df.where(not(col("nat") <=> col("hof"))).count()
+      assert(bad == 0, s"n=$n: native char shingles diverge from the HOF lowering")
+    }
+    // NULL text keeps the HOF's [NULL] (null shingles never equi-join);
+    // the bare registered function is null-safe (null in, null out).
+    val nulls = Seq((1, null: String)).toDF("i", "text")
+      .select(graft.ops.TextOps.charShingles(col("text"), 3).as("nat")).head()
+    assert(nulls.getSeq[String](0) == Seq(null))
+    assert(spark.sql("select char_shingles(cast(null as string), 3) n").head().isNullAt(0))
+    for (w <- Seq(0, -1)) {
+      val e = intercept[org.apache.spark.sql.AnalysisException] {
+        spark.sql(s"select char_shingles('abc', $w)").collect()
+      }
+      assert(e.getMessage.contains("width must be >= 1"), s"w=$w: ${e.getMessage}")
+    }
+  }
+
+  test("jaccard_sorted's merge walk and lang_classify's tie-break work under Spark's test mode") {
+    // UTF8String.compareTo throws once `spark.testing` is set (and looks
+    // the setting up on every call); both kernels order by binaryCompare.
+    import org.apache.spark.sql.catalyst.util.GenericArrayData
+    import org.apache.spark.unsafe.types.UTF8String
+    def arr(xs: String*) = new GenericArrayData(xs.map(UTF8String.fromString).toArray[Any])
+    val m = LmModelCodec.serialize(3, -5.0, Seq("hel" -> -1.0, "ell" -> -1.0))
+    val pack = LmModelCodec.serializePack(Seq("de" -> m, "en" -> m))
+    val key = "spark.testing"
+    val old = Option(System.getProperty(key))
+    System.setProperty(key, "true")
+    try {
+      assert(JaccardSortedUtil.jaccard(arr("a", "b", "c", "é"), arr("b", "c", "d", "é")) == 0.6)
+      // Two identical models tie on every text: the binary-larger lang wins.
+      assert(NgramLmUtil.classify(pack, UTF8String.fromString("hello")).toString == "en")
+    } finally old.fold(System.clearProperty(key))(System.setProperty(key, _))
+  }
+
   test("dot_f32 is bit-identical to the HOF dot fold") {
     val df = pairs.select(
       VectorOps.dot(col("ea"), col("eb")).as("hof"),

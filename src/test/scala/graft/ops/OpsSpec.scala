@@ -14,6 +14,22 @@ class OpsSpec extends AnyFunSuite {
   private def documents = TestSpark.table("documents")
   private def embeddings = TestSpark.table("embeddings")
 
+  private def withBroadcastThreshold[T](v: String)(f: => T): T = {
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val old = spark.conf.getOption(key)
+    spark.conf.set(key, v)
+    try f finally old.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
+  /** A connected-components case, registered twice: at the session's
+    * broadcast threshold (small graphs take the driver regime) and with
+    * broadcasting off (every graph takes the distributed loop). Both runs
+    * assert the same labels, throws and messages. */
+  private def ccTest(name: String)(body: => Unit): Unit = {
+    test(name)(body)
+    test(s"$name [distributed regime]")(withBroadcastThreshold("-1")(body))
+  }
+
   test("MinHash+LSH near-dups are a subset of exact Jaccard near-dups (no false positives)") {
     val toks = DedupOps.tokenSet(documents, col("doc_id"), col("text"))
     val exact = DedupOps.pairwiseJaccard(toks, "w", 0.8)
@@ -750,7 +766,7 @@ class OpsSpec extends AnyFunSuite {
     assert(DedupOps.pairwiseJaccard(toks, "w", 0.5, maxDocs = 4).count() == 6)
   }
 
-  test("connectedComponents: labels are a fixpoint and equal component minima") {
+  ccTest("connectedComponents: labels are a fixpoint and equal component minima") {
     val toks = DedupOps.tokenSet(documents, col("doc_id"), col("text"))
     val pairs = DedupOps.pairwiseJaccard(toks, "w", 0.8)
       .collect().map(r => (r.getLong(0), r.getLong(1)))
@@ -765,7 +781,7 @@ class OpsSpec extends AnyFunSuite {
     }
   }
 
-  test("connectedComponents warm start: ≡ cold after a merging append; cheap at the fixpoint") {
+  ccTest("connectedComponents warm start: ≡ cold after a merging append; cheap at the fixpoint") {
     import spark.implicits._
     // Two far-apart components (a 40-link chain and a clique-ish blob),
     // then ONE appended edge merges them — the maintenance case.
@@ -947,7 +963,7 @@ class OpsSpec extends AnyFunSuite {
     }
   }
 
-  test("connectedComponentsInc: deletions split, adds merge, untouched components ride") {
+  ccTest("connectedComponentsInc: deletions split, adds merge, untouched components ride") {
     import spark.implicits._
     // Components: chain 100..120 (label 100), blob {0,1,2,3} (label 0),
     // pairs (500,501) and (600,601); the last is never touched — it must
@@ -988,7 +1004,7 @@ class OpsSpec extends AnyFunSuite {
     assert(m(DedupOps.connectedComponentsInc(prior, old, empty, empty)) == pm)
   }
 
-  test("connectedComponents: throws on non-convergence instead of returning split labels") {
+  ccTest("connectedComponents: throws on non-convergence instead of returning split labels") {
     import spark.implicits._
     // Path graph 0-1-...-64: pointer jumping reaches distance ~2^t after t
     // rounds, so maxIter=3 covers only ~7 hops and must THROW (a silent
@@ -1000,7 +1016,7 @@ class OpsSpec extends AnyFunSuite {
     assert(e.getMessage.contains("maxIter"))
   }
 
-  test("connectedComponents: a 1000-link chain converges in O(log n) rounds") {
+  ccTest("connectedComponents: a 1000-link chain converges in O(log n) rounds") {
     import spark.implicits._
     // Plain min-label propagation needs O(diameter) = 1000 rounds here and
     // threw at maxIter=30; pointer jumping doubles the propagated distance
@@ -1010,6 +1026,64 @@ class OpsSpec extends AnyFunSuite {
     val labels = DedupOps.connectedComponents(chain, maxIter = 14)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(labels.size == 1001 && labels.values.forall(_ == 0L))
+  }
+
+  test("connectedComponents regimes: same labels and schema; the gate reads id type, nulls and the threshold") {
+    import spark.implicits._
+    def onDriver(df: org.apache.spark.sql.DataFrame) =
+      df.queryExecution.analyzed.isInstanceOf[org.apache.spark.sql.catalyst.plans.logical.LocalRelation]
+    def m(df: org.apache.spark.sql.DataFrame) = df.collect().map(r => r.get(0) -> r.get(1)).toMap
+    /** Both regimes' labels (equal, with equal schemas); `driver` is
+      * whether the default threshold took the driver regime. */
+    def both(pairs: org.apache.spark.sql.DataFrame, driver: Boolean): Map[Any, Any] = {
+      val small = DedupOps.connectedComponents(pairs)
+      val dist = withBroadcastThreshold("-1")(DedupOps.connectedComponents(pairs))
+      assert(onDriver(small) == driver && !onDriver(dist))
+      assert(small.schema == dist.schema, s"${small.schema} vs ${dist.schema}")
+      assert(small.columns.toSeq == Seq("doc", "label"))
+      assert(m(small) == m(dist))
+      m(small)
+    }
+    val longs = both(Seq((2L, 1L), (2L, 3L), (11L, 10L), (4L, 4L)).toDF("d1", "d2"), driver = true)
+    assert(longs == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 10L -> 10L, 11L -> 10L, 4L -> 4L))
+    val ints = both(Seq((2, 1), (2, 3), (11, 10)).toDF("d1", "d2"), driver = true)
+    assert(ints == Map(1 -> 1, 2 -> 1, 3 -> 1, 10 -> 10, 11 -> 10))
+    // Nullable long columns with no null take the driver regime too.
+    val boxed = both(Seq[(java.lang.Long, java.lang.Long)]((2L, 1L), (3L, 2L)).toDF("d1", "d2"),
+      driver = true)
+    assert(boxed == Map(1L -> 1L, 2L -> 1L, 3L -> 1L))
+    // String ids and a null endpoint keep the distributed loop.
+    val strs = both(Seq(("b", "a"), ("c", "b"), ("y", "x")).toDF("d1", "d2"), driver = false)
+    assert(strs == Map("a" -> "a", "b" -> "a", "c" -> "a", "x" -> "x", "y" -> "x"))
+    val withNull = both(Seq[(java.lang.Long, java.lang.Long)]((2L, 1L), (2L, null), (4L, 3L))
+      .toDF("d1", "d2"), driver = false)
+    assert(withNull.filter(_._1 != null) == Map(1L -> 1L, 2L -> 1L, 3L -> 3L, 4L -> 3L))
+    // No edges at all: an empty result in both regimes.
+    assert(both(Seq.empty[(Long, Long)].toDF("d1", "d2"), driver = true).isEmpty)
+  }
+
+  test("connectedComponents' driver regime: a 1k-edge long-id graph in at most 3 Spark jobs") {
+    import spark.implicits._
+    // 1000 edges over 1500 nodes: a 500-link chain plus 500 pairs.
+    val pairs = ((0L until 500L).map(i => (i, i + 1)) ++
+      (1000L until 1500L).map(i => (i, i + 1000L))).toDF("d1", "d2")
+    val sc = spark.sparkContext
+    val n = new java.util.concurrent.atomic.AtomicInteger
+    val l = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        n.incrementAndGet()
+    }
+    org.apache.spark.graft.ListenerBusDrain(sc)
+    sc.addSparkListener(l)
+    val labels = try {
+      val r = DedupOps.connectedComponents(pairs).collect()
+      org.apache.spark.graft.ListenerBusDrain(sc)
+      r
+    } finally sc.removeSparkListener(l)
+    assert(n.get <= 3, s"connectedComponents ran ${n.get} jobs")
+    val got = labels.map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(got.size == 1501)
+    assert((0L to 500L).forall(got(_) == 0L) && (1000L until 1500L).forall(i => got(i + 1000L) == i))
   }
 
   test("connectedComponents: reliable checkpoint directory variant produces the same labels") {
